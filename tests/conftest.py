@@ -14,7 +14,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = build_session("bigdata_imgprocessing_spark-tests", cpus=8)
+    s = build_session("bigdata_imgprocessing_spark-tests")
     s.conf.set("spark.sql.shuffle.partitions", "8")
     yield s
     s.stop()

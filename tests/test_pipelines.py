@@ -6,18 +6,24 @@ cross-check key values against direct computation."""
 from __future__ import annotations
 
 import glob
+import json
+import pstats
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from bigdata_imgprocessing_spark.images.codec import encode_image
+from bigdata_imgprocessing_spark.images.color import _avg_color, _kmeans_dominant
 from bigdata_imgprocessing_spark.images.detect import SCORE_THRESHOLD, _detections_for_id
+from bigdata_imgprocessing_spark.images.jpeg import encode_jpeg
 from bigdata_imgprocessing_spark.pipelines import (
     run_color_pipeline,
     run_detection_pipeline,
     run_stats_pipeline,
 )
+
+CENTROIDS = [(0, 0, 0), (255, 0, 0), (0, 255, 0), (0, 0, 255), (255, 255, 255), (128, 128, 128)]
 
 
 @pytest.fixture(scope="module")
@@ -77,8 +83,7 @@ def test_detection_pipeline(spark, corpus, dims, tmp_path):
 def test_color_pipeline(spark, corpus, tmp_path):
     root, n = corpus
     out = str(tmp_path / "color_out")
-    centroids = [(0, 0, 0), (255, 0, 0), (0, 255, 0), (0, 0, 255), (255, 255, 255), (128, 128, 128)]
-    colors, hist, primary = run_color_pipeline(spark, str(root / "images"), out, centroids)
+    colors, hist, primary = run_color_pipeline(spark, str(root / "images"), out, CENTROIDS)
     assert colors.count() == n
     assert hist.agg(F.sum("count")).collect()[0][0] == n
     prim = primary.collect()
@@ -153,6 +158,119 @@ def test_stats_golden_file_shapes(spark, corpus, dims, tmp_path):
     ppl = _csv_lines(f"{out}/people_in_places_with_people")
     assert ppl[0] == "files considered;avg_detections"
     assert {l.split(";")[0] for l in ppl[1:]} == {"avg_all", "avg_people_places"}
+
+
+def _job_count(spark, group: str, fn) -> int:
+    """Spark jobs that ``fn`` started, run under its own job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _decode_count(spark, dump_dir: str, fn) -> int:
+    """``decode_image`` calls made inside Python UDFs while ``fn`` ran,
+    summed over every Python worker (the perf UDF profiler's stats)."""
+    spark.profile.clear()
+    spark.conf.set("spark.sql.pyspark.udf.profiler", "perf")
+    try:
+        fn()
+    finally:
+        spark.conf.unset("spark.sql.pyspark.udf.profiler")
+    spark.profile.dump(dump_dir, type="perf")
+    spark.profile.clear()
+    return sum(
+        ncalls
+        for path in glob.glob(f"{dump_dir}/*.pstats")
+        for (_, _, func), (_, ncalls, *_) in pstats.Stats(path).stats.items()
+        if func == "decode_image"
+    )
+
+
+def test_stats_pipeline_job_count(spark, corpus, dims, tmp_path):
+    """The stats base is materialized once and its five sinks read it,
+    instead of each sink re-running the detection lineage (56 jobs)."""
+    (root, n), (labels, names) = corpus, dims
+    _, per_landmark = run_detection_pipeline(
+        spark, str(root / "images"), labels, str(tmp_path / "det")
+    )
+    jobs = _job_count(
+        spark,
+        "test_stats_pipeline_job_count",
+        lambda: run_stats_pipeline(
+            spark, per_landmark, names, str(tmp_path / "stats"), keywords=["spark", "people"]
+        ),
+    )
+    assert jobs <= 15
+
+
+def test_color_pipeline_decodes_each_image_once(spark, corpus, tmp_path):
+    """One decode per image feeds both colour features and all three
+    sinks (four per image when each sink re-ran both feature UDFs)."""
+    root, n = corpus
+    decodes = _decode_count(
+        spark,
+        str(tmp_path / "profile"),
+        lambda: run_color_pipeline(spark, str(root / "images"), str(tmp_path / "out"), CENTROIDS),
+    )
+    assert decodes == n
+
+
+def test_color_features_match_single_feature_helpers(spark, tmp_path):
+    """results_dominant carries exactly the per-image helpers' values,
+    for colour and grayscale (2-D decode) images alike."""
+    img_dir = tmp_path / "images"
+    img_dir.mkdir()
+    rng = np.random.default_rng(7)
+    bufs = {
+        f"rgb{i}": encode_image(rng.integers(0, 256, size=(6, 5, 3), dtype=np.uint8))
+        for i in range(4)
+    }
+    bufs["jpeg"] = encode_jpeg(rng.integers(0, 256, size=(16, 16, 3), dtype=np.uint8))
+    gray = np.tile(np.arange(0, 256, 16, dtype=np.uint8), (16, 1))
+    bufs["gray"] = encode_jpeg(gray)
+    for name, buf in bufs.items():
+        (img_dir / f"{name}.fimg").write_bytes(buf)
+    out = str(tmp_path / "out")
+    run_color_pipeline(spark, str(img_dir), out, CENTROIDS)
+    rows = [line.split(";") for line in _csv_lines(f"{out}/results_dominant")]
+    assert rows[0] == ["id", "average_color", "dominant_color"]
+    got = {r[0]: (json.loads(r[1]), json.loads(r[2])) for r in rows[1:]}
+    assert got == {k: (_avg_color(b), _kmeans_dominant(b)) for k, b in bufs.items()}
+
+
+def test_returned_frames_survive_clear_cache(spark, corpus, dims, tmp_path):
+    """The pipelines' returned frames read materialized results that a
+    harness-level clearCache() + JVM GC between operations must not
+    drop; stats runs on a per_landmark from a detect call made before."""
+    (root, n), (labels, names) = corpus, dims
+    images = str(root / "images")
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    def run_stats(per_landmark, out):
+        stats = run_stats_pipeline(
+            spark, per_landmark, names, str(tmp_path / out), keywords=["spark", "people"]
+        )
+        return {k: rows(v) for k, v in stats.items()}
+
+    frames = [
+        *run_detection_pipeline(spark, images, labels, str(tmp_path / "det")),
+        *run_color_pipeline(spark, images, str(tmp_path / "color"), CENTROIDS),
+    ]
+    before = [rows(df) for df in frames]
+    stats_before = run_stats(frames[1], "stats_before")
+
+    spark.catalog.clearCache()
+    spark.sparkContext._jvm.System.gc()
+
+    assert [rows(df) for df in frames] == before
+    assert run_stats(frames[1], "stats_after") == stats_before
 
 
 def test_cache_root_tracks_every_table(tmp_path, monkeypatch):
