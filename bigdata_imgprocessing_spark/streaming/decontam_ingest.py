@@ -9,12 +9,10 @@ them; clean documents' distinct grams extend the index for subsequent
 waves.
 
 This is the decontamination analog of ``streaming/lsh_ingest.py``:
-per-batch probes are arrivals-sized, the accumulated index is never
-re-joined against itself, and batch replays are idempotent by the same
-three invariants as streaming/lsh_ingest.py: mode=overwrite into
-per-batch-id subdirs, state reads filtered to STRICTLY-earlier batch
-ids (``_prior_extensions``), and deterministic per-batch recompute —
-so the two per-batch writes need no ordering and run concurrently.
+per-batch probes are arrivals-sized and the accumulated index is never
+re-joined against itself. Stores: ``res`` and ``idx``, under the layout
+and replay rule of streaming/ingest.py — a replayed batch probing its
+own clean docs' grams would flip previously clean verdicts.
 
 Reference parity: the reference has no streaming engine — this is the
 Structured Streaming extension of the decontamination surface
@@ -24,20 +22,12 @@ module contract as the other streaming/ jobs.
 
 from __future__ import annotations
 
-import glob
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import ingest
 
-def _prior_extensions(state_root: str, bid: int) -> list[str]:
-    """Index-extension dirs from batches STRICTLY BEFORE ``bid`` — the
-    shared strictly-before replay rule (streaming/batchstate.py): a
-    replayed batch probing its own clean docs' grams would flip
-    previously clean verdicts."""
-    from .batchstate import prior_batch_dirs
-
-    return prior_batch_dirs(state_root, "idx", bid)
+_RES = "doc_id bigint, lang string, contaminated boolean, wave bigint"
 
 
 def run_decontam_ingest(
@@ -47,31 +37,25 @@ def run_decontam_ingest(
     checking each micro-batch against ``base_index_dir`` (the fixed
     train-gram index) plus the clean-doc gram extensions of every
     earlier batch under ``state_root/idx``."""
-    from concurrent.futures import ThreadPoolExecutor
-
     from ..queries.curation import _wordgram_5h
 
-    def step(batch: DataFrame, bid: int) -> None:
+    def step(batch: DataFrame, state: ingest.BatchState) -> None:
         # no isEmpty() guard: one Spark job per batch saved; an empty
         # batch overwrites its subdirs with empty frames, harmless to
         # every reader
-        spark = batch.sparkSession
         batch = batch.cache()
         grams_b = _wordgram_5h(batch).cache()
-        ext = _prior_extensions(state_root, bid)
         # explicit schema: the base index and every extension land as
-        # (gram_h string); inference re-reads parquet footers on every
-        # micro-batch otherwise (the r12 lsh_ingest rule)
-        idx = spark.read.schema("gram_h string").parquet(
-            base_index_dir, *ext
+        # (gram_h string); one scan over the base and the extensions
+        idx = state.spark.read.schema("gram_h string").parquet(
+            base_index_dir, *state.dirs("idx")
         )
         # the probe result is CACHED as the small contaminated-doc-id
         # frame: both per-batch writes derive from it, so the index
         # probe executes once per batch (the r9 version re-read the
         # landed res file to get the same effect — deriving clean_grams
         # from the res LINEAGE would re-execute the probe, measured
-        # ~2x per-batch cost — but the read-back also serialized the
-        # two writes; the cache keeps them independent)
+        # ~2x per-batch cost)
         contaminated = (
             grams_b.join(idx, "gram_h", "left_semi")
             .select("doc_id")
@@ -86,7 +70,7 @@ def run_decontam_ingest(
                 "doc_id",
                 "lang",
                 F.coalesce("contaminated", F.lit(False)).alias("contaminated"),
-                F.lit(bid).cast("bigint").alias("wave"),
+                F.lit(state.bid).cast("bigint").alias("wave"),
             )
         )
         clean_grams = (
@@ -94,55 +78,23 @@ def run_decontam_ingest(
             .select("gram_h")
             .distinct()
         )
-        # force-materialize the shared caches ONCE before the
-        # concurrent writes — Spark does not synchronize cold-cache
-        # materialization across simultaneous jobs, so both threads
-        # would re-run the index probe (the very duplication the cache
-        # exists to prevent)
-        contaminated.count()
-        # independent writes (replay safety rests on overwrite-per-
-        # subdir + the strictly-before read filter + deterministic
-        # recompute, not on write order — same invariants as
-        # streaming/lsh_ingest.py), so overlap them
-        with ThreadPoolExecutor(2) as pool:
-            futs = [
-                pool.submit(
-                    lambda df=df, p=p: df.coalesce(2)
-                    .write.mode("overwrite")
-                    .parquet(p)
-                )
-                for df, p in (
-                    (res, f"{state_root}/res/b{bid}"),
-                    (clean_grams, f"{state_root}/idx/b{bid}"),
-                )
-            ]
-            for f in futs:
-                f.result()
+        # the res write is the cache barrier: its lineage fills batch,
+        # grams_b and contaminated, so the idx write reads them warm
+        state.land({"res": res.coalesce(2)}, {"idx": clean_grams.coalesce(2)})
         contaminated.unpersist()
         grams_b.unpersist()
         batch.unpersist()
 
-    (
-        stream_df.writeStream.foreachBatch(step)
-        .option("checkpointLocation", f"{state_root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    ingest.drain(stream_df, state_root, step)
 
 
 def read_results(spark: SparkSession, state_root: str) -> DataFrame:
     """Per-document admission verdicts across the drained waves, each
     tagged with the wave that checked it."""
-    dirs = sorted(glob.glob(f"{state_root}/res/b*"))
-    if not dirs:
-        return spark.createDataFrame(
-            [], "doc_id bigint, lang string, contaminated boolean, wave bigint"
-        )
-    return spark.read.parquet(*dirs)
+    return ingest.read_store(spark, state_root, "res", _RES)
 
 
 def n_index_versions(state_root: str) -> int:
     """How many micro-batches extended the gram index — the
     multi-batch-exercised assertion hook."""
-    return len(glob.glob(f"{state_root}/idx/b*"))
+    return ingest.n_versions(state_root, "idx")

@@ -30,10 +30,8 @@ stats row is built from three 1-row aggregates. The accumulated
 postings store is never re-read by the loop at all — it exists for
 downstream probes.
 
-Batch replays are idempotent by the same three invariants as
-streaming/lsh_ingest.py: mode=overwrite into per-batch-id subdirs,
-state reads filtered to STRICTLY-earlier batch ids
-(batchstate.prior_batch_dirs), and deterministic per-batch recompute.
+Stores: ``postings``, ``occ`` and ``stats``, under the layout and
+replay rule of streaming/ingest.py.
 
 Reference parity: the reference has no streaming engine — this extends
 the ANN surface the same way streaming/paragraph_ingest.py extends the
@@ -42,13 +40,19 @@ paragraph-dedup surface (same module contract).
 
 from __future__ import annotations
 
-import glob
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import ingest
+
 _CB_SCHEMA = "cell int, cv array<double>"
 _OCC_SCHEMA = "cell int, n bigint"
+_POSTINGS_SCHEMA = "cell int, vec_id bigint, dist double"
+_STATS_SCHEMA = (
+    "wave bigint, n_vecs bigint, n_cells bigint, n_foreign bigint,"
+    " max_cell_n bigint, avg_dist_e6 bigint, max_dist double,"
+    " occ_drift_e6 bigint"
+)
 
 
 def write_codebook(emb: DataFrame, state_root: str) -> None:
@@ -111,8 +115,6 @@ def run_ivf_assign_ingest(
     ``state_root``; write it first — `write_codebook`), landing per
     batch: ``postings/b{bid}`` (cell, vec_id, dist), ``occ/b{bid}``
     (cell, n — k rows), and one ``stats/b{bid}`` row."""
-    from .batchstate import prior_batch_dirs
-
     cb_root = codebook_root or state_root
     # the pinned codebook fixes the dimensionality for the whole drain:
     # read it ONCE (k rows, driver-side bounded) so every batch gets the
@@ -125,22 +127,14 @@ def run_ivf_assign_ingest(
     )
     dim = _cb_head.d if _cb_head is not None else None
 
-    def step(batch: DataFrame, bid: int) -> None:
+    def step(batch: DataFrame, state: ingest.BatchState) -> None:
         # no isEmpty() guard: one Spark job per batch saved; an empty
         # batch overwrites its subdirs with empty frames, harmless
-        spark = batch.sparkSession
-        # explicit schema: fixed layout, skip per-batch footer
-        # inference (the r12 lsh_ingest rule)
+        # explicit schema: fixed layout, skip per-batch footer inference
         cb = F.broadcast(
-            spark.read.schema(_CB_SCHEMA).parquet(f"{cb_root}/codebook")
+            state.spark.read.schema(_CB_SCHEMA).parquet(f"{cb_root}/codebook")
         )
         a = _assign(batch, cb, dim=dim).coalesce(4).cache()
-        # the postings write doubles as the cache materialization
-        # barrier for `a` — occ and stats then read the cache warm
-        # (the lsh_ingest bands-barrier rule)
-        a.select("cell", "vec_id", "dist").write.mode("overwrite").parquet(
-            f"{state_root}/postings/b{bid}"
-        )
         # deliberately UNCACHED (r15): occ has three consumers (its
         # write, the drift join, the max-cell aggregate), but caching it
         # forced the occ write to run synchronously as the cache barrier
@@ -151,21 +145,14 @@ def run_ivf_assign_ingest(
         # postings + max(occ, stats), not the sum of three jobs
         # (adjacent-window mins 11.6 -> 7.6 s for the 4-wave drain at
         # sf0.1 on a noisy host; the saved wave is one serialized job
-        # per micro-batch). Replay safety is write-order-independent
-        # (module invariants ii+iii).
+        # per micro-batch).
         occ = a.groupBy("cell").agg(
             F.count("*").cast("bigint").alias("n")
         ).coalesce(1)
-        prior = prior_batch_dirs(state_root, "occ", bid)
         # prior occupancy: k rows PER PRIOR BATCH read back, summed to
         # k rows — the drift compare never touches the postings store
-        p = (
-            spark.read.schema(_OCC_SCHEMA)
-            .parquet(*prior)
-            .groupBy("cell")
-            .agg(F.sum("n").alias("np"))
-            if prior
-            else spark.createDataFrame([], "cell int, np bigint")
+        p = state.prior("occ", _OCC_SCHEMA).groupBy("cell").agg(
+            F.sum("n").alias("np")
         )
         go = (
             occ.select("cell", F.col("n").alias("nb"))
@@ -209,7 +196,7 @@ def run_ivf_assign_ingest(
             st.crossJoin(mx)
             .crossJoin(dr)
             .select(
-                F.lit(bid).cast("bigint").alias("wave"),
+                F.lit(state.bid).cast("bigint").alias("wave"),
                 "n_vecs",
                 "n_cells",
                 "n_foreign",
@@ -226,76 +213,33 @@ def run_ivf_assign_ingest(
                 ).alias("occ_drift_e6"),
             )
         )
-        from concurrent.futures import ThreadPoolExecutor
-
-        # inheritable_thread_target keeps the two concurrent write jobs
-        # in the foreachBatch thread's job group under pinned-thread
-        # mode, so query.stop() cancellation reaches them and the UI
-        # attributes them to the batch (ADVICE r15). Crash asymmetry
-        # (ADVICE r15): a terminally-failed drain can leave
+        # the postings write is the cache barrier for `a`. Crash
+        # asymmetry (ADVICE r15): a terminally-failed drain can leave
         # stats/b{bid} without occ/b{bid} (or vice versa) — no reader
         # pairs the two stores (read_stats reads only stats; the drift
-        # compare reads only strictly-earlier occ), and a replayed
-        # batch overwrites both deterministically.
-        from pyspark.util import inheritable_thread_target
-
-        with ThreadPoolExecutor(2) as pool:
-            futs = [
-                pool.submit(
-                    inheritable_thread_target(
-                        lambda df=df, p=p: df.write.mode(
-                            "overwrite"
-                        ).parquet(p)
-                    )
-                )
-                for df, p in (
-                    (occ, f"{state_root}/occ/b{bid}"),
-                    (stats, f"{state_root}/stats/b{bid}"),
-                )
-            ]
-            for f in futs:
-                f.result()
+        # compare reads only strictly-earlier occ).
+        state.land(
+            {"postings": a.select("cell", "vec_id", "dist")},
+            {"occ": occ, "stats": stats},
+        )
         a.unpersist()
 
-    (
-        stream_df.writeStream.foreachBatch(step)
-        .option("checkpointLocation", f"{state_root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-
-_STATS_SCHEMA = (
-    "wave bigint, n_vecs bigint, n_cells bigint, n_foreign bigint,"
-    " max_cell_n bigint, avg_dist_e6 bigint, max_dist double,"
-    " occ_drift_e6 bigint"
-)
+    ingest.drain(stream_df, state_root, step)
 
 
 def read_stats(spark: SparkSession, state_root: str) -> DataFrame:
     """One stats row per drained micro-batch."""
-    dirs = sorted(glob.glob(f"{state_root}/stats/b*"))
-    if not dirs:
-        return spark.createDataFrame([], _STATS_SCHEMA)
-    return spark.read.schema(_STATS_SCHEMA).parquet(*dirs)
+    return ingest.read_store(spark, state_root, "stats", _STATS_SCHEMA)
 
 
 def read_postings(spark: SparkSession, state_root: str) -> DataFrame:
     """The accumulated incremental IVF index: (cell, vec_id, dist)
     across every drained batch. Per-batch dirs are disjoint by vec_id
     (each arrival lands once), so no distinct on read."""
-    dirs = sorted(glob.glob(f"{state_root}/postings/b*"))
-    if not dirs:
-        return spark.createDataFrame([], "cell int, vec_id bigint, dist double")
-    return spark.read.schema("cell int, vec_id bigint, dist double").parquet(
-        *dirs
-    )
+    return ingest.read_store(spark, state_root, "postings", _POSTINGS_SCHEMA)
 
 
 def n_store_versions(state_root: str) -> int:
     """How many micro-batches extended the postings store — the
     multi-batch-exercised assertion hook."""
-    import os
-
-    return len(glob.glob(os.path.join(state_root, "postings", "b*")))
+    return ingest.n_versions(state_root, "postings")

@@ -42,16 +42,18 @@ def event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_event_ts(s)
 
 
-#: memory-sink tables registered by prior run_to_memory calls. Each new
-#: drain drops them first (r16): a memory sink holds its rows on the
-#: driver for the SESSION lifetime, so a 274-query bench accumulated
-#: dozens of append-mode sinks (some corpus-sized) as unreclaimable
-#: heap — visible as erratic multi-second GC slowdowns on whichever
-#: streaming query ran late in the suite. Every consumer materializes
+#: memory-sink tables registered by prior run_to_memory calls, keyed by
+#: session UUID (temp views are session-scoped, so one session's drain
+#: must not pop another's names). Each new drain drops its session's
+#: stale sinks first (r16): a memory sink holds its rows on the driver
+#: for the SESSION lifetime, so a 274-query bench accumulated dozens of
+#: append-mode sinks (some corpus-sized) as unreclaimable heap — visible
+#: as erratic multi-second GC slowdowns on whichever streaming query
+#: ran late in the suite. Every consumer materializes
 #: its result before the next drain starts (bench noop / driver hash /
 #: test collect), so dropping stale sinks is safe; a caller that needs
 #: two live sinks reads the first before creating the second.
-_SINKS: list[str] = []
+_SINKS: dict[str, list[str]] = {}
 
 
 def run_to_memory(
@@ -69,13 +71,14 @@ def run_to_memory(
     first start(). The session conf is restored afterwards so batch
     queries in the same session keep their own shuffle sizing."""
     spark = streaming_df.sparkSession
-    while _SINKS:
-        spark.catalog.dropTempView(_SINKS.pop())
+    sinks = _SINKS.setdefault(spark._jsparkSession.sessionUUID(), [])
+    while sinks:
+        spark.catalog.dropTempView(sinks.pop())
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     try:
         name = f"sink_{uuid.uuid4().hex[:12]}"
-        _SINKS.append(name)
+        sinks.append(name)
         q = (
             streaming_df.writeStream.format("memory")
             .queryName(name)
@@ -120,7 +123,7 @@ def file_feed_stream(spark: SparkSession, feed: str) -> DataFrame:
     """File-source stream over a staged mtime-ordered feed, one file
     per micro-batch (schema sniffed from the staged parquet) — the
     reader half of the `_stage_feed` slicing discipline, shared by the
-    stateful drains (quota / EWMA / tws)."""
+    stateful drains (quota / EWMA)."""
     schema = spark.read.parquet(feed).schema
     return (
         spark.readStream.schema(schema)

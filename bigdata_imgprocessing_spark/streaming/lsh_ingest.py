@@ -22,25 +22,12 @@ Per micro-batch (foreachBatch):
   4. append the verified pairs (tagged with the discovering batch id)
      and the batch's bands/shingles to the state stores.
 
-State layout under ``state_root``: ``bands/b{N}``, ``shingles/b{N}``,
-``pairs/b{N}`` — one subdir per micro-batch. Replay idempotence rests
-on three invariants: (i) every write is mode=overwrite into its own
-batch-id subdir, (ii) a batch reads only STRICTLY-earlier batches'
-state (numeric batch-id filter — a replayed batch must not probe its
-own bands/shingles, or the duplicated set rows would duplicate its
-verified pairs), and (iii) the per-batch derivation is deterministic,
-so a replay overwrites each subdir with identical content. Because
-(ii)+(iii) hold regardless of write order, the first synchronous
-write per batch is whichever job's lineage materializes every
-multiply-consumed cache (capped: the acct landing, whose census
-lineage fills batch + new_bands + census; uncapped: the bands write),
-and every remaining store write then runs CONCURRENTLY (driver
-threads, one Spark job each) — per-batch wall is barrier +
-max(remaining writes), two job waves, not the sum of four jobs,
-which matters for a query whose cost is stage count,
-not data volume (161 stages/drain, VERDICT r9; the r12 rewrite also
-moved plan construction to F.expr strings and pinned explicit schemas
-on the per-batch state reads).
+Stores: ``bands``, ``shingles``, ``pairs`` (and ``acct`` when capped),
+under the layout and replay rule of streaming/ingest.py. A replayed
+batch must not probe its own bands/shingles, or the duplicated set rows
+would duplicate its verified pairs. Per-batch wall is the barrier write
++ max(remaining writes), two job waves, which matters for a query whose
+cost is stage count, not data volume (161 stages/drain, VERDICT r9).
 
 Reference parity: the reference has no streaming engine — this is the
 Structured Streaming extension of its dedup surface, same contract as
@@ -49,19 +36,15 @@ the other streaming/ modules.
 
 from __future__ import annotations
 
-import glob
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import ingest
 
-def _prior_state(state_root: str, store: str, bid: int) -> list[str]:
-    """Strictly-earlier batch state dirs (the shared replay rule,
-    streaming/batchstate.py)."""
-    from .batchstate import prior_batch_dirs
-
-    return prior_batch_dirs(state_root, store, bid)
+_BANDS = "doc_id bigint, band int, bkey string"
+_SHINGLES = "doc_id bigint, ss array<string>"
+_PAIRS = "doc_a bigint, doc_b bigint, inter int, uni int, wave bigint"
+_ACCT = "wave bigint, n_buckets_cut bigint, n_band_rows_cut bigint"
 
 
 def run_lsh_ingest(
@@ -86,46 +69,21 @@ def run_lsh_ingest(
     bucket is within the cap at the later doc's batch; the census is
     deterministic from strictly-earlier state + the batch, so the
     replay invariants hold unchanged."""
-    from concurrent.futures import ThreadPoolExecutor
+    from ..queries.dedup import _band_frame, _minhash_signatures, _shingles_sql
 
-    from ..queries.dedup import (
-            _band_frame,
-            _minhash_signatures,
-            _shingles_sql,
-        )
-
-    def step(batch: DataFrame, bid: int) -> None:
+    def step(batch: DataFrame, state: ingest.BatchState) -> None:
         # no isEmpty() guard: it costs one Spark job per batch, and an
         # empty batch just overwrites its subdirs with empty frames —
         # harmless to every reader (availableNow over a staged feed
         # does not emit empty batches in practice anyway)
-        spark = batch.sparkSession
         batch = batch.coalesce(4).cache()
         new_bands = _band_frame(_minhash_signatures(batch)).coalesce(4).cache()
         new_sh = batch.select(
             "doc_id",
             F.expr(f"array_distinct({_shingles_sql('text')})").alias("ss"),
         )
-        # Explicit schemas on the state reads: the store layouts are
-        # fixed by this module, and schema inference re-reads parquet
-        # footers on EVERY micro-batch otherwise (~100 ms/read of pure
-        # listing+footer latency at steady state, paid twice per batch).
-        old_b = _prior_state(state_root, "bands", bid)
-        all_bands = (
-            spark.read.schema("doc_id bigint, band int, bkey string")
-            .parquet(*old_b)
-            .union(new_bands)
-            if old_b
-            else new_bands
-        )
-        old_s = _prior_state(state_root, "shingles", bid)
-        all_sh = (
-            spark.read.schema("doc_id bigint, ss array<string>")
-            .parquet(*old_s)
-            .union(new_sh)
-            if old_s
-            else new_sh
-        )
+        all_bands = state.prior("bands", _BANDS).union(new_bands)
+        all_sh = state.prior("shingles", _SHINGLES).union(new_sh)
         census = None
         probe = new_bands
         if max_bucket is not None:
@@ -196,112 +154,57 @@ def run_lsh_ingest(
                 "doc_b",
                 inter.alias("inter"),
                 uni.alias("uni"),
-                F.lit(bid).cast("bigint").alias("wave"),
+                F.lit(state.bid).cast("bigint").alias("wave"),
             )
             .where(F.col("inter") * 1.0 / F.col("uni") >= 0.5)
         )
-        # Wave structure (r16, one serialized job wave cut per capped
-        # micro-batch — guide §2.6): the FIRST synchronous write must be
-        # the one whose lineage materializes every multiply-consumed
-        # cache, because Spark does not synchronize simultaneous
-        # cold-cache fills (racing threads would each recompute the
-        # signature derivation). For a capped batch that job is the
-        # ACCT landing: census's lineage scans new_bands (both the
-        # broadcast build and the union side), which in turn scans the
-        # batch cache — one job fills batch + new_bands + census. The
-        # bands / pairs / shingles writes then all run warm and
-        # CONCURRENTLY: per-batch wall = acct + max(bands, pairs,
-        # shingles), two waves instead of the former three
-        # (bands barrier; acct census barrier; pairs ∥ shingles).
-        # Uncapped there is no census, so the bands write stays the
-        # barrier and pairs ∥ shingles follow — two waves as before.
-        # Replay safety does not depend on write order (module
-        # docstring invariants ii+iii): every store lands
-        # mode=overwrite into its own b{bid} subdir from deterministic
-        # strictly-earlier state. A crash between the two waves can
-        # leave acct/b{bid} present without its bands/pairs/shingles
-        # siblings; the replayed batch overwrites all four, and no
-        # reader pairs acct with the other stores mid-drain.
-        if census is not None:
+        # The barrier (r16, one serialized job wave cut per capped
+        # micro-batch — guide §2.6). For a capped batch it is the ACCT
+        # landing: census's lineage scans new_bands (both the broadcast
+        # build and the union side), which in turn scans the batch
+        # cache — one job fills batch + new_bands + census, and the
+        # bands / pairs / shingles writes then all run warm. Uncapped
+        # there is no census, so the bands write is the barrier and
+        # pairs ∥ shingles follow. A crash between the two waves can
+        # leave acct/b{bid} without its siblings; no reader pairs acct
+        # with the other stores mid-drain.
+        rest = {"pairs": pairs, "shingles": new_sh}
+        if census is None:
+            state.land({"bands": new_bands}, rest)
+        else:
             # Always lands exactly one row, so an un-cut batch reads
             # as explicit zeros.
-            census.where(F.col("k") > max_bucket).agg(
-                F.lit(bid).cast("bigint").alias("wave"),
+            acct = census.where(F.col("k") > max_bucket).agg(
+                F.lit(state.bid).cast("bigint").alias("wave"),
                 F.count("*").cast("bigint").alias("n_buckets_cut"),
                 F.coalesce(F.sum("k"), F.lit(0))
                 .cast("bigint")
                 .alias("n_band_rows_cut"),
-            ).write.mode("overwrite").parquet(f"{state_root}/acct/b{bid}")
-            writes = [
-                (new_bands, f"{state_root}/bands/b{bid}"),
-                (pairs, f"{state_root}/pairs/b{bid}"),
-                (new_sh, f"{state_root}/shingles/b{bid}"),
-            ]
-        else:
-            new_bands.write.mode("overwrite").parquet(
-                f"{state_root}/bands/b{bid}"
             )
-            writes = [
-                (pairs, f"{state_root}/pairs/b{bid}"),
-                (new_sh, f"{state_root}/shingles/b{bid}"),
-            ]
-        # inheritable_thread_target keeps the concurrent write jobs in
-        # the foreachBatch thread's job group under pinned-thread mode
-        # (streaming cancellation + UI attribution — ADVICE r15).
-        from pyspark.util import inheritable_thread_target
-
-        with ThreadPoolExecutor(len(writes)) as pool:
-            futs = [
-                pool.submit(
-                    inheritable_thread_target(
-                        lambda df=df, p=p: df.write.mode(
-                            "overwrite"
-                        ).parquet(p)
-                    )
-                )
-                for df, p in writes
-            ]
-            for f in futs:
-                f.result()
+            state.land({"acct": acct}, {"bands": new_bands, **rest})
         for frame in (sets, cand, new_bands, batch):
             frame.unpersist()
         if census is not None:
             census.unpersist()
 
-    (
-        stream_df.writeStream.foreachBatch(step)
-        .option("checkpointLocation", f"{state_root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    ingest.drain(stream_df, state_root, step)
 
 
 def read_final_pairs(spark: SparkSession, state_root: str) -> DataFrame:
     """All pairs discovered across the drained batches, each tagged
     with its discovering batch id (``wave``)."""
-    dirs = sorted(glob.glob(f"{state_root}/pairs/b*"))
-    if not dirs:
-        return spark.createDataFrame(
-            [], "doc_a bigint, doc_b bigint, inter int, uni int, wave bigint"
-        )
-    return spark.read.parquet(*dirs)
+    return ingest.read_store(spark, state_root, "pairs", _PAIRS)
 
 
 def read_acct(spark: SparkSession, state_root: str) -> DataFrame:
     """Per-batch cut accounting landed by a ``max_bucket``-capped drain:
     one (wave, n_buckets_cut, n_band_rows_cut) row per micro-batch —
     zeros when nothing was cut."""
-    dirs = sorted(glob.glob(f"{state_root}/acct/b*"))
-    if not dirs:
-        return spark.createDataFrame(
-            [], "wave bigint, n_buckets_cut bigint, n_band_rows_cut bigint"
-        )
-    return spark.read.parquet(*dirs)
+    return ingest.read_store(spark, state_root, "acct", _ACCT)
 
 
 def n_state_versions(state_root: str) -> int:
     """How many micro-batches extended the band index — the
     multi-batch-exercised assertion hook (>= 2 means the incremental
     probe really ran against a pre-existing index)."""
-    return len(glob.glob(os.path.join(state_root, "bands", "b*")))
+    return ingest.n_versions(state_root, "bands")

@@ -15,12 +15,10 @@ LSH/simhash ingests — no verification stage exists (exact hash equality
 IS the verdict), so counts fold map-side and the per-batch stats row is
 one crossJoin of two 1-row aggregates.
 
-Batch replays are idempotent by the same three invariants as
-streaming/lsh_ingest.py: mode=overwrite into per-batch-id subdirs,
-state reads filtered to STRICTLY-earlier batch ids
-(batchstate.prior_batch_dirs), and deterministic per-batch recompute.
-The store extension lands batch-distinct-minus-prior, so the unit
-dirs are DISJOINT by construction and readers never need a distinct.
+Stores: ``units`` and ``stats``, under the layout and replay rule of
+streaming/ingest.py. The store extension lands batch-distinct-minus-
+prior, so the unit dirs are DISJOINT by construction and readers never
+need a distinct.
 
 Reference parity: the reference has no streaming engine — this extends
 the paragraph-dedup surface the same way streaming/lsh_ingest.py
@@ -30,10 +28,15 @@ jobs).
 
 from __future__ import annotations
 
-import glob
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from . import ingest
+
+_STATS = (
+    "wave bigint, n_docs bigint, n_units bigint,"
+    " n_dup_units bigint, n_new_units bigint"
+)
 
 
 def _units(batch: DataFrame) -> DataFrame:
@@ -56,22 +59,14 @@ def run_paragraph_ingest(stream_df: DataFrame, state_root: str) -> None:
     """Drain a (doc_id, text) stream with availableNow, maintaining the
     seen-unit store under ``state_root/units`` and one per-wave stats
     row under ``state_root/stats``."""
-    from .batchstate import prior_batch_dirs
 
-    def step(batch: DataFrame, bid: int) -> None:
+    def step(batch: DataFrame, state: ingest.BatchState) -> None:
         # no isEmpty() guard: one Spark job per batch saved; an empty
         # batch overwrites its subdirs with empty frames, harmless
-        spark = batch.sparkSession
         ch = _units(batch).coalesce(4).cache()
-        prior = prior_batch_dirs(state_root, "units", bid)
-        # explicit schema: fixed layout, skip per-batch footer
-        # inference (the r12 lsh_ingest rule). Prior dirs are disjoint
-        # (each lands only its NEW hashes), so no distinct on read.
-        seen = (
-            spark.read.schema("h bigint").parquet(*prior)
-            if prior
-            else spark.createDataFrame([], "h bigint")
-        )
+        # prior dirs are disjoint (each lands only its NEW hashes), so
+        # no distinct on read
+        seen = state.prior("units", "h bigint")
         bd = (
             ch.select("h")
             .distinct()
@@ -80,12 +75,6 @@ def run_paragraph_ingest(stream_df: DataFrame, state_root: str) -> None:
             .cache()
         )
         new_units = bd.where(F.col("seen").isNull()).select("h")
-        # the units write doubles as the cache materialization barrier
-        # for bd (and, through its lineage, ch) — the stats write then
-        # reads both caches warm (the lsh_ingest bands-barrier rule)
-        new_units.write.mode("overwrite").parquet(
-            f"{state_root}/units/b{bid}"
-        )
         inst = ch.agg(
             F.count("*").cast("bigint").alias("n_units"),
             F.count_distinct("doc_id").cast("bigint").alias("n_docs"),
@@ -96,10 +85,10 @@ def run_paragraph_ingest(stream_df: DataFrame, state_root: str) -> None:
             .cast("bigint")
             .alias("n_seen"),
         )
-        (
+        stats = (
             inst.crossJoin(dis)
             .select(
-                F.lit(bid).cast("bigint").alias("wave"),
+                F.lit(state.bid).cast("bigint").alias("wave"),
                 "n_docs",
                 "n_units",
                 # dup instances = all instances minus the first
@@ -110,37 +99,23 @@ def run_paragraph_ingest(stream_df: DataFrame, state_root: str) -> None:
                 ).alias("n_dup_units"),
                 (F.col("n_distinct") - F.col("n_seen")).alias("n_new_units"),
             )
-            .write.mode("overwrite")
-            .parquet(f"{state_root}/stats/b{bid}")
         )
+        # the units write is the cache barrier for bd (and, through its
+        # lineage, ch) — the stats write then reads both caches warm
+        state.land({"units": new_units}, {"stats": stats})
         bd.unpersist()
         ch.unpersist()
 
-    (
-        stream_df.writeStream.foreachBatch(step)
-        .option("checkpointLocation", f"{state_root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    ingest.drain(stream_df, state_root, step)
 
 
 def read_stats(spark: SparkSession, state_root: str) -> DataFrame:
     """One (wave, n_docs, n_units, n_dup_units, n_new_units) row per
     drained micro-batch."""
-    dirs = sorted(glob.glob(f"{state_root}/stats/b*"))
-    if not dirs:
-        return spark.createDataFrame(
-            [],
-            "wave bigint, n_docs bigint, n_units bigint,"
-            " n_dup_units bigint, n_new_units bigint",
-        )
-    return spark.read.parquet(*dirs)
+    return ingest.read_store(spark, state_root, "stats", _STATS)
 
 
 def n_store_versions(state_root: str) -> int:
     """How many micro-batches extended the seen-unit store — the
     multi-batch-exercised assertion hook."""
-    import os
-
-    return len(glob.glob(os.path.join(state_root, "units", "b*")))
+    return ingest.n_versions(state_root, "units")

@@ -17,16 +17,12 @@ Per micro-batch (foreachBatch):
      blocks BITWISE via the shared first-equal-block rule
      (operators/hamming.first_equal_block) + an is_new flag for the
      new x new join-order mirror — no distinct() exchange,
-  4. write the verified pairs (tagged with the discovering batch id)
-     and the batch's fingerprints concurrently.
+  4. land the batch's fingerprints (the cache barrier: its lineage
+     fills the new_fp cache), then the verified pairs tagged with the
+     discovering batch id.
 
-Replay idempotence rests on the round-10 invariants (same as the LSH
-and decontam loops): mode=overwrite into per-batch-id subdirs, state
-reads filtered to STRICTLY-earlier batch ids, deterministic per-batch
-recompute — so write order inside a batch is free and the two writes
-overlap on driver threads (measured in round 11: sequential writes
-cost ~2.4 s/drain more even with one fewer job — the overlap pays for
-the extra count() materializer).
+Stores: ``fps`` and ``pairs``, under the layout and replay rule of
+streaming/ingest.py.
 
 Join strategy: the PROBE side (the batch's banded keys, 4 rows per
 arriving doc — bounded by micro-batch size at any deployment) is
@@ -43,21 +39,15 @@ contract as the other streaming/ jobs.
 
 from __future__ import annotations
 
-import glob
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import ingest
+
 _BITS = 64
 _K = 3
-
-
-def _prior_state(state_root: str, store: str, bid: int) -> list[str]:
-    """Strictly-earlier batch state dirs (the shared replay rule,
-    streaming/batchstate.py)."""
-    from .batchstate import prior_batch_dirs
-
-    return prior_batch_dirs(state_root, store, bid)
+_FPS = "doc_id bigint, fp bigint"
+_PAIRS = "doc_a bigint, doc_b bigint, dist int, wave bigint"
 
 
 def _band_keys(df: DataFrame) -> DataFrame:
@@ -73,12 +63,10 @@ def _band_keys(df: DataFrame) -> DataFrame:
 def run_simhash_ingest(stream_df: DataFrame, state_root: str) -> None:
     """Drain a (doc_id, text) stream with availableNow, maintaining the
     fingerprint index and discovered-pairs store under ``state_root``."""
-    from concurrent.futures import ThreadPoolExecutor
-
+    from ..operators.hamming import first_equal_block
     from ..queries.dedup import _simhash64_frame
 
-    def step(batch: DataFrame, bid: int) -> None:
-        spark = batch.sparkSession
+    def step(batch: DataFrame, state: ingest.BatchState) -> None:
         # batch is read exactly once (through new_fp, which has its own
         # cache), so caching/coalescing it here would pay a MemoryStore
         # copy for zero reuse — and _simhash64_frame repartitions by
@@ -89,15 +77,6 @@ def run_simhash_ingest(stream_df: DataFrame, state_root: str) -> None:
             .coalesce(4)
             .cache()
         )
-        # force the cache to materialize ONCE before the concurrent
-        # writes: Spark does not synchronize InMemoryRelation
-        # materialization across simultaneous jobs, so two threads
-        # hitting a cold cache each recompute the whole derivation
-        # (profiled: three 2.4 s copies of the vote agg in one batch)
-        new_fp.count()
-        from ..operators.hamming import first_equal_block
-
-        old = _prior_state(state_root, "fps", bid)
         # is_new distinguishes the b-side's two populations: a new x new
         # pair appears in BOTH join orders (each doc takes the a-side
         # once), a new x old pair only as (new, old) — keeping old rows
@@ -107,16 +86,9 @@ def run_simhash_ingest(stream_df: DataFrame, state_root: str) -> None:
         # bitwise (round 11: this replaces a per-batch distinct()
         # exchange — pure driver-latency cost on an arrivals-sized set).
         news = new_fp.withColumn("is_new", F.lit(True))
-        # explicit schema on the state read: the fps store layout is
-        # fixed by this module, and inference re-reads footers per
-        # micro-batch (the r12 lsh_ingest rule)
         all_fp = (
-            spark.read.schema("doc_id bigint, fp bigint")
-            .parquet(*old)
-            .withColumn("is_new", F.lit(False))
+            state.prior("fps", _FPS).withColumn("is_new", F.lit(False))
             .unionByName(news)
-            if old
-            else news
         )
         # broadcast the arrivals-sized probe side: the banded a-side is
         # 4 rows per arriving doc (bounded by micro-batch size at any
@@ -149,45 +121,21 @@ def run_simhash_ingest(stream_df: DataFrame, state_root: str) -> None:
                 & (F.col("blk") == first_equal_block(F.col("x"), _BITS, _K))
             )
             .select("doc_a", "doc_b", "dist")
-            .withColumn("wave", F.lit(bid).cast("bigint"))
+            .withColumn("wave", F.lit(state.bid).cast("bigint"))
         )
-        with ThreadPoolExecutor(2) as pool:
-            futs = [
-                pool.submit(
-                    lambda df=df, p=p: df.coalesce(2)
-                    .write.mode("overwrite")
-                    .parquet(p)
-                )
-                for df, p in (
-                    (pairs, f"{state_root}/pairs/b{bid}"),
-                    (new_fp, f"{state_root}/fps/b{bid}"),
-                )
-            ]
-            for f in futs:
-                f.result()
+        state.land({"fps": new_fp.coalesce(2)}, {"pairs": pairs.coalesce(2)})
         new_fp.unpersist()
 
-    (
-        stream_df.writeStream.foreachBatch(step)
-        .option("checkpointLocation", f"{state_root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    ingest.drain(stream_df, state_root, step)
 
 
 def read_pairs(spark: SparkSession, state_root: str) -> DataFrame:
     """All pairs discovered across the drained batches, each tagged
     with its discovering batch id (``wave``)."""
-    dirs = sorted(glob.glob(f"{state_root}/pairs/b*"))
-    if not dirs:
-        return spark.createDataFrame(
-            [], "doc_a bigint, doc_b bigint, dist int, wave bigint"
-        )
-    return spark.read.parquet(*dirs)
+    return ingest.read_store(spark, state_root, "pairs", _PAIRS)
 
 
 def n_index_versions(state_root: str) -> int:
     """How many micro-batches extended the fingerprint index — the
     multi-batch-exercised assertion hook."""
-    return len(glob.glob(f"{state_root}/fps/b*"))
+    return ingest.n_versions(state_root, "fps")

@@ -335,3 +335,25 @@ def test_bench_compare_adjudication(tmp_path, capsys):
     assert "removed (1): gone" in out
     assert "a " in out and "b " in out
     assert "c " not in out.split("movers")[1]
+
+
+def test_ingest_loops_use_the_skeleton():
+    """The five foreachBatch ingest loops keep only their derivations:
+    state listing, drains and concurrent landing live in
+    streaming/ingest.py, so no loop lists paths, owns a thread pool or
+    starts a stream itself."""
+    import pathlib
+    import re
+
+    import bigdata_imgprocessing_spark.streaming as streaming
+
+    loops = sorted(pathlib.Path(streaming.__file__).parent.glob("*_ingest.py"))
+    assert len(loops) == 5
+    banned = re.compile(r"\bglob\b|os\.path|ThreadPoolExecutor|\.foreachBatch\(|writeStream")
+    hits = [
+        f"{p.name}:{i}: {line.strip()}"
+        for p in loops
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if banned.search(line)
+    ]
+    assert hits == []

@@ -790,6 +790,176 @@ def test_streaming_lsh_ingest_discovers_once_and_restarts(spark, tmp_path):
     assert got2 == {**got, (3, 4): 3, (3, 5): 3}
 
 
+def _doc_stream(spark, tmp_path, waves, cols="doc_id bigint, text string"):
+    """A maxFilesPerTrigger=1 stream over one mtime-ordered parquet file
+    per wave of (doc_id, text[, ...]) rows — one micro-batch per wave."""
+    import shutil
+
+    feed = tmp_path / "feed"
+    feed.mkdir(parents=True)
+    for i, rows in enumerate(waves):
+        stage = str(tmp_path / f"stage_w{i}")
+        spark.createDataFrame(rows, cols).coalesce(1).write.parquet(stage)
+        dst = str(feed / f"w{i}.parquet")
+        shutil.copy(glob.glob(f"{stage}/part-*.parquet")[0], dst)
+        os.utime(dst, (1_700_000_000 + 60 * i,) * 2)
+    return (
+        spark.readStream.schema(cols)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(feed))
+    )
+
+
+_A_TEXT = "q w e r t y u i o p k j"
+_B_TEXT = "m n b v c x z l h g f d"
+
+
+def test_streaming_lsh_ingest_file_uri_state_root(spark, tmp_path):
+    """The discovers-once contract with a scheme-qualified state root:
+    a ``file://`` root must see the same prior state as a bare path
+    (listing through the root's Hadoop FileSystem). A local-only lister
+    finds nothing under a URI, so every batch would see empty prior
+    state and no cross-batch pair would ever be discovered."""
+    from bigdata_imgprocessing_spark.streaming.lsh_ingest import (
+        n_state_versions,
+        read_final_pairs,
+        run_lsh_ingest,
+    )
+
+    stream = _doc_stream(
+        spark,
+        tmp_path,
+        [[(0, _A_TEXT), (4, _B_TEXT)], [(1, _A_TEXT), (5, _B_TEXT)], [(2, _A_TEXT)]],
+    )
+    state = f"file://{tmp_path}/state"
+    run_lsh_ingest(stream, state)
+    got = {
+        (r.doc_a, r.doc_b): r.wave
+        for r in read_final_pairs(spark, state).collect()
+    }
+    assert got == {(0, 1): 1, (4, 5): 1, (0, 2): 2, (1, 2): 2}
+    assert n_state_versions(state) == 3
+
+
+def test_ingest_readers_ignore_bak_sibling(spark, tmp_path):
+    """An operator's ``b1.bak`` copy next to the batch dirs is not
+    data: the store readers and version counters list batch dirs
+    through the skeleton's numeric filter, so the copy neither
+    duplicates pairs nor counts as an index version."""
+    import shutil
+
+    from bigdata_imgprocessing_spark.streaming.lsh_ingest import (
+        n_state_versions,
+        read_final_pairs,
+        run_lsh_ingest,
+    )
+
+    stream = _doc_stream(
+        spark, tmp_path, [[(0, _A_TEXT)], [(1, _A_TEXT), (2, _A_TEXT)]]
+    )
+    state = str(tmp_path / "state")
+    run_lsh_ingest(stream, state)
+    for store in ("pairs", "bands"):
+        shutil.copytree(f"{state}/{store}/b1", f"{state}/{store}/b1.bak")
+    got = sorted(
+        (r.doc_a, r.doc_b, r.wave)
+        for r in read_final_pairs(spark, state).collect()
+    )
+    assert got == [(0, 1, 1), (0, 2, 1), (1, 2, 1)]
+    assert n_state_versions(state) == 2
+
+
+def test_ingest_drains_leave_no_job_without_group(spark, tmp_path):
+    """Every job a simhash or decontam drain submits runs in a job
+    group — the streaming batch's own, inherited by the concurrent
+    store writes — so query.stop() cancellation and UI attribution
+    reach all of them. The test thread sets its own group first, so
+    any new ungrouped job came from a write thread that lost it."""
+    from bigdata_imgprocessing_spark.queries.curation import _wordgram_5h
+    from bigdata_imgprocessing_spark.streaming.decontam_ingest import (
+        run_decontam_ingest,
+    )
+    from bigdata_imgprocessing_spark.streaming.simhash_ingest import (
+        run_simhash_ingest,
+    )
+
+    sc = spark.sparkContext
+    keys = ("spark.jobGroup.id", "spark.job.description",
+            "spark.job.interruptOnCancel")
+    saved = {k: sc.getLocalProperty(k) for k in keys}
+    sc.setJobGroup("ingest-job-group-test", "test thread")
+    try:
+        ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
+        run_simhash_ingest(
+            _doc_stream(
+                spark, tmp_path / "sh", [[(0, _A_TEXT)], [(1, _A_TEXT)]]
+            ),
+            str(tmp_path / "sh" / "state"),
+        )
+        base_idx = str(tmp_path / "base_idx")
+        train = spark.createDataFrame(
+            [(1, "alpha beta gamma delta epsilon")], "doc_id bigint, text string"
+        )
+        _wordgram_5h(train).select("gram_h").distinct().write.parquet(base_idx)
+        run_decontam_ingest(
+            _doc_stream(
+                spark,
+                tmp_path / "dc",
+                [[(10, "en", "zeta eta theta iota kappa")],
+                 [(20, "de", "alpha beta gamma delta epsilon")]],
+                cols="doc_id bigint, lang string, text string",
+            ),
+            str(tmp_path / "dc" / "state"),
+            base_idx,
+        )
+        new = set(sc.statusTracker().getJobIdsForGroup(None)) - ungrouped
+        assert new == set()
+    finally:
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)
+
+
+def test_run_to_memory_drops_stale_sinks_per_session(spark, tmp_path, monkeypatch):
+    """Stale memory sinks are tracked per session: a drain in session B
+    must not pop session A's sink name (B cannot drop A's temp view, so
+    A's sink would leak), and A's next drain drops exactly its own
+    stale sink — one dropTempView per stale sink."""
+    from pyspark.sql.catalog import Catalog
+
+    from bigdata_imgprocessing_spark.streaming.jobs import run_to_memory
+
+    feed = str(tmp_path / "feed")
+    spark.range(3).write.parquet(feed)
+    a, b = spark, spark.newSession()
+
+    def sinks(sess):
+        return {
+            t.name for t in sess.catalog.listTables() if t.name.startswith("sink_")
+        }
+
+    def drain(sess):
+        before = sinks(sess)
+        s = sess.readStream.schema("id bigint").parquet(feed)
+        assert run_to_memory(s.groupBy().count()).collect()[0][0] == 3
+        (name,) = sinks(sess) - before
+        return name
+
+    a1 = drain(a)
+    b1 = drain(b)
+    dropped = []
+    real_drop = Catalog.dropTempView
+
+    def counting_drop(self, name):
+        dropped.append(name)
+        return real_drop(self, name)
+
+    monkeypatch.setattr(Catalog, "dropTempView", counting_drop)
+    a2 = drain(a)
+    assert dropped == [a1]
+    assert sinks(a) >= {a2} and a1 not in sinks(a)
+    assert b1 in sinks(b)
+
+
 def test_streaming_lsh_ingest_capped_cuts_hot_bucket(spark, tmp_path):
     """max_bucket mode of the streaming LSH ingest (VERDICT r12 item
     3): identical-text docs share every band bucket, so the bucket's
@@ -989,22 +1159,39 @@ def test_streaming_decontam_order_dependent_carry(spark, tmp_path):
     assert n_index_versions(f"/tmp/bdip_dci_{token}/state") >= 2
 
 
-def test_decontam_prior_extensions_strict_and_numeric(tmp_path):
-    """The replay-safety filter: a batch's probe index includes only
-    STRICTLY-earlier batches' extensions, in numeric (not lexicographic)
-    order — idx/b10 sorts after idx/b2, and idx/b{bid} itself is
-    excluded so a crash-replay sees the pre-batch state."""
-    from bigdata_imgprocessing_spark.streaming.decontam_ingest import (
-        _prior_extensions,
+def test_ingest_batch_dirs_strict_numeric_filtered(spark, tmp_path):
+    """The skeleton's state listing (streaming/ingest.py): a batch's
+    prior state is STRICTLY-earlier batches only, in numeric (not
+    lexicographic) order — b10 sorts after b2, b{bid} itself is
+    excluded so a crash-replay sees the pre-batch state — and
+    non-numeric siblings (an operator's b3.bak copy) are never read as
+    data. A file:// root lists the same dirs, in the caller's form."""
+    from bigdata_imgprocessing_spark.streaming.ingest import (
+        BatchState,
+        batch_dirs,
+        n_versions,
     )
 
     root = tmp_path / "state"
-    for b in (0, 2, 10, 11):
-        (root / "idx" / f"b{b}").mkdir(parents=True)
-    got = _prior_extensions(str(root), 11)
-    assert [d.rsplit("/b", 1)[1] for d in got] == ["0", "2", "10"]
-    assert _prior_extensions(str(root), 2) == [str(root / "idx" / "b0")]
-    assert _prior_extensions(str(root), 0) == []
+    for name in ("b0", "b2", "b10", "b11", "b3.bak", "bx", "b", "tmp"):
+        (root / "idx" / name).mkdir(parents=True)
+
+    def ids(dirs):
+        return [d.rsplit("/b", 1)[1] for d in dirs]
+
+    assert ids(batch_dirs(spark, str(root), "idx")) == ["0", "2", "10", "11"]
+    assert ids(batch_dirs(spark, str(root), "idx", before=11)) == ["0", "2", "10"]
+    assert batch_dirs(spark, str(root), "idx", before=2) == [
+        str(root / "idx" / "b0")
+    ]
+    assert batch_dirs(spark, str(root), "idx", before=0) == []
+    assert batch_dirs(spark, str(root), "missing") == []
+    assert n_versions(str(root), "idx") == 4
+    uri = f"file://{root}"
+    assert BatchState(spark, uri, 10).dirs("idx") == [
+        f"{uri}/idx/b0",
+        f"{uri}/idx/b2",
+    ]
 
 
 def test_streaming_decontam_replay_is_idempotent(spark, tmp_path):
@@ -1081,6 +1268,20 @@ def test_streaming_decontam_replay_is_idempotent(spark, tmp_path):
         for r in read_results(spark, state).collect()
     }
     assert replayed == first
+    # partial crash: the res write (the cache barrier) landed, but the
+    # idx extension and the commit did not — the replay regenerates
+    # idx/b1 from strictly-earlier state and converges
+    shutil.rmtree(f"{state}/idx/b1")
+    os.remove(f"{state}/ckpt/commits/1")
+    if os.path.exists(crc):
+        os.remove(crc)
+    drain()
+    partial = {
+        r.doc_id: (r.contaminated, r.wave)
+        for r in read_results(spark, state).collect()
+    }
+    assert partial == first
+    assert os.path.isdir(f"{state}/idx/b1")
     shutil.rmtree(state, ignore_errors=True)
 
 
@@ -1096,18 +1297,9 @@ def test_streaming_lsh_ingest_crash_replay_is_idempotent(spark, tmp_path):
     import duckdb as _duck
 
     from bigdata_imgprocessing_spark.streaming.lsh_ingest import (
-        _prior_state,
         read_final_pairs,
         run_lsh_ingest,
     )
-
-    # unit check of the filter itself: strict <, numeric order
-    root = tmp_path / "fs"
-    for b in (0, 2, 10):
-        (root / "bands" / f"b{b}").mkdir(parents=True)
-    got = _prior_state(str(root), "bands", 10)
-    assert [d.rsplit("/b", 1)[1] for d in got] == ["0", "2"]
-    assert _prior_state(str(root), "bands", 0) == []
 
     a_text = "q w e r t y u i o p k j"
     b_text = "m n b v c x z l h g f d"
@@ -1302,6 +1494,21 @@ def test_streaming_simhash_ingest_crash_replay_is_idempotent(spark, tmp_path):
         for r in read_pairs(spark, state).collect()
     )
     assert replayed == first
+    # partial crash: the fps write (the cache barrier) landed, but the
+    # pairs write and the commit did not — the replay must not probe
+    # its own landed fingerprints
+    import shutil as _sh
+
+    _sh.rmtree(f"{state}/pairs/b1")
+    _os.remove(f"{state}/ckpt/commits/1")
+    if _os.path.exists(crc):
+        _os.remove(crc)
+    drain()
+    partial = sorted(
+        (r.doc_a, r.doc_b, r.dist, r.wave)
+        for r in read_pairs(spark, state).collect()
+    )
+    assert partial == first
 
 
 def test_streaming_ewma_cross_batch_jumps_and_tail(spark, tmp_path):
@@ -1367,52 +1574,6 @@ def test_streaming_ewma_cross_batch_jumps_and_tail(spark, tmp_path):
     assert got2["a"] == (5, 2, fold([10.0, 20.0, 300.0, 310.0, 100.0]))
     assert got2["b"] == (2, 1, fold([5.0, 400.0]))
     assert got2["c"] == got["c"]
-
-
-def test_tws_user_inventory_gated(spark, tmp_path):
-    """transformWithStateInPandas inventory (streaming/tws.py): full
-    drain vs a pandas recomputation of all three typed state variables.
-    GATED on google.protobuf — the state-server protocol needs it and
-    this container doesn't ship it (module docstring documents the
-    repro); the first environment that can run the API checks it here."""
-    pytest.importorskip("google.protobuf")
-    import os as _os
-
-    import duckdb as _duck
-
-    from bigdata_imgprocessing_spark.streaming.tws import user_inventory
-
-    feed = tmp_path / "feed"
-    feed.mkdir()
-    con = _duck.connect()
-
-    def write_wave(i, rows):
-        vals = ", ".join(
-            f"({u}, make_timestamp({1_700_000_000_000_000 + t * 1_000_000}),"
-            f" {eid}, '{et}')"
-            for u, t, eid, et in rows
-        )
-        dst = str(feed / f"w{i}.parquet")
-        con.execute(
-            f"COPY (SELECT * FROM (VALUES {vals})"
-            f" v(user_id, ts, event_id, event_type)) TO '{dst}'"
-            f" (FORMAT PARQUET)"
-        )
-        _os.utime(dst, (1_700_000_000 + 60 * i,) * 2)
-
-    write_wave(0, [(1, 0, 10, "click"), (1, 1, 11, "view"),
-                   (2, 0, 20, "view")])
-    write_wave(1, [(1, 2, 12, "click"), (2, 3, 21, "view")])
-    got = {
-        r.user_id: (r.n_events, r.n_types, r.top_type, r.top_type_n,
-                    r.penult_event_id)
-        for r in user_inventory(spark, str(feed)).collect()
-    }
-    # user 1: 3 events, 2 types, top=(click,2); last two ids (11, 12)
-    # span the wave boundary -> penult 11 pins cross-batch ListState
-    assert got[1] == (3, 2, "click", 2, 11)
-    # user 2: ties view=2 only type; penult = 20 (ids 20, 21)
-    assert got[2] == (2, 1, "view", 2, 20)
 
 
 def test_streaming_lsh_ingest_capped_crash_replay(spark, tmp_path):

@@ -103,7 +103,7 @@ def part_b(spark, n: int = 500_000, cap: int = 64):
     # byte-for-byte the drain's census plan.
     # Numeric b<N> order (ADVICE r14): lexicographic sorts b10 < b2,
     # which would leak LATER batches into `prior` on drains with >=10
-    # batches — matching streaming/batchstate.prior_batch_dirs.
+    # batches — matching streaming/ingest.batch_dirs.
     bdirs = sorted(
         glob.glob(f"{state}/bands/b*"),
         key=lambda d: int(d.rsplit("/b", 1)[1]),
