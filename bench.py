@@ -1,358 +1,87 @@
 #!/usr/bin/env python
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+"""Benchmark harness: the repo's one measurement tool.
 
-Prints ONE compact JSON summary line LAST on stdout:
-    {"metric": "...", "value": N, "unit": "sec", "n_queries": N,
-     "queries": {...}, "sf": ...}
+    python bench.py [q ...]             time the named queries, or the
+                                        whole registry when none are named
+    python bench.py --plans [q ...]     formatted plan of the frame bench
+                                        times, plus operator and per-table
+                                        scan counts; no names = every batch
+                                        query
+    python bench.py --ab REF q ...      interleaved same-session A/B of the
+                                        working tree against git REF
+    python bench.py --compare PREV [CUR]
+                                        per-query drift table between two
+                                        BENCH_DETAIL files
 
-The full per-query timing map is also written to BENCH_DETAIL.json next
-to this script. The stdout line stays small (r2 lesson: the driver
-captures only the output tail, and a 65-entry inline map front-truncated
-the JSON, losing the perf signal — BENCH_r02.json `parsed: null`).
+Queries read $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
+local[$SPARK_GRAFT_CPUS]; $BENCH_REPEATS sets the runs per query (default
+2, keeping the min) or the pairs per query under --ab (default 5).
 
-Each query is timed end-to-end (logical plan → execution → full
+A timed run prints ONE compact JSON summary line LAST on stdout. A
+whole-registry run also writes the per-query map to BENCH_DETAIL.json
+and BENCH_DETAIL_c{cores}.json next to this script; a run over named
+queries writes no file and prints its detail to stdout instead. The
+stdout summary stays small because a bounded tail capture must always
+end with one complete JSON object.
+
+Each query is timed end to end (logical plan → execution → full
 materialization via the no-op sink, so sink I/O doesn't pollute the
-number and nothing short-circuits to the driver).
+number and nothing short-circuits to the driver), under a Spark job
+group named after the query; the detail records the jobs each run
+started.
+
+--ab extracts REF's package with `git archive` into a temp dir under a
+second top-level name. The package imports itself only relatively, so
+both copies load side by side with separate registries, and the temp
+dir goes on PYTHONPATH before the session starts so Python workers can
+import REF's UDFs. Both sides share the marker-keyed /tmp fixtures: to
+measure a change to a fixture builder, time two checkouts instead.
 """
 
 from __future__ import annotations
 
+import importlib
+import io
 import json
 import os
+import re
+import shutil
+import statistics
+import subprocess
 import sys
+import tarfile
+import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
 
 from bigdata_imgprocessing_spark.core.session import build_session
-from bigdata_imgprocessing_spark.queries import QUERIES
+from bigdata_imgprocessing_spark.queries import CONTRACT_BATCHES, QUERIES, family
 
-# Headline set: since round 12 this is the FULL query registry (the
-# list is grouped by the round that added each query; main() asserts
-# set-equality with QUERIES so bench coverage and the driver-contract
-# surface cannot drift apart — VERDICT r11 item 3).
-HEADLINE = [
-    "pricing_summary",
-    "alphabet_stats",
-    "top_orders",
-    "region_revenue",
-    "semi_join_customers",
-    "outer_join_order_counts",
-    "distinct_counts",
-    "json_map_extract",
-    "pivot_event_counts",
-    "window_topk_orders",
-    "moving_avg_orders",
-    "rollup_revenue",
-    "set_ops_customers",
-    "time_bucket_agg",
-    "session_windows",
-    "asof_purchase_click",
-    "range_join_funnel",
-    "doc_token_stats",
-    "lang_id_confusion",
-    "dedup_exact",
-    "minhash_band_stats",
-    "ngram_jaccard_hist",
-    "simhash_fingerprints",
-    "knn_bruteforce",
-    "ann_ivf_topk",
-    "embedding_lsh_neardup",
-    "image_avg_color",
-    "image_detection_counts",
-    "map_measure_rollup",
-    "percentile_stats",
-    "streaming_event_counts",
-    "image_letterbox_stats",
-    "video_frame_sample",
-    "cluster_profile",
-    "image_predictions",
-    "exists_late_orders",
-    "small_quantity_revenue",
-    "inactive_rich_customers",
-    "full_outer_nation_counts",
-    "daily_counts_gapfilled",
-    "audio_feature_extract",
-    "embedding_model_scores",
-    "tfidf_top_terms",
-    "event_transition_counts",
-    "customer_balance_deciles",
-    "priority_multiset_diff",
-    "doc_chunk_windows",
-    "doc_pack_stats",
-    # round 2 additions
-    "stats_pipeline_e2e",
-    "jsonl_roundtrip_stats",
-    "stratified_sample_stats",
-    "vocab_top_terms",
-    "repetition_ngram_stats",
-    "streaming_stateful_totals",
-    "approx_balance_deciles",
-    "minhash_lsh_pairs",
-    "bucketed_join_revenue",
-    "streaming_foreachbatch_counts",
-    "dedup_keep_best",
-    "doc_embedding_join_stats",
-    "report_text_roundtrip",
-    "salted_event_sum",
-    "cached_predictions_stats",
-    "dedup_incremental_stats",
-    "range_window_counts",
-    # round 3 additions
-    "streaming_kafka_roundtrip",
-    "streaming_upsert_latest",
-    "ann_ivf_learned",
-    "decontam_ngram_overlap",
-    "quantized_ann_recall",
-    "streaming_replay_dedup",
-    "image_phash_neardup",
-    "orc_roundtrip_stats",
-    "streaming_enriched_counts",
-    "market_share_by_year",
-    "variant_props_stats",
-    # round 4 additions
-    "heatmap_chart_data",
-    "ivf_search_served",
-    "pii_scrub_stats",
-    "fuzzy_match_stats",
-    "lone_problem_supplier",
-    "neardup_component_dedup",
-    "mixture_sample_stats",
-    "bm25_search",
-    "table_profile_stats",
-    "zorder_pruned_scan",
-    "funnel_conversion_stats",
-    "jsonl_corrupt_handling",
-    "lateral_topk_customers",
-    "schema_evolution_union",
-    "outlier_order_stats",
-    "locf_daily_values",
-    "pmi_collocations",
-    # round 5 additions
-    "bar_chart_data",
-    "color_chart_data",
-    "image_format_ingest",
-    "embedding_batch_scores",
-    "scd2_user_history",
-    "order_value_position",
-    "udtf_sentence_stats",
-    "pq_ann_recall",
-    "winnowing_fingerprints",
-    "user_erasure_audit",
-    "user_erasure_apply",
-    "key_skew_profile",
-    "fixed_size_group_sample",
-    "null_safe_reconcile",
-    "streaming_erasure_feed",
-    "image_corrupt_quarantine",
-    # round 5 second-pass additions
-    "filter_funnel_stats",
-    "unigram_logprob_filter",
-    "source_mixture_drift",
-    "mad_event_outliers",
-    "merge_into_orders",
-    "ann_rerank_topk",
-    "dup_ngram_coverage",
-    "sliding_distinct_users",
-    "cohort_retention",
-    "split_leakage_audit",
-    "epoch_shuffle_order",
-    "backfill_partition_overwrite",
-    "sliding_users_sketch",
-    "corpus_diff_stats",
-    "streaming_sketch_rollup",
-    "hard_negative_mining",
-    "bloom_prefilter_stats",
-    "ab_test_zscore",
-    "neardup_triangle_stats",
-    "bm25_ndcg_eval",
-    "score_calibration_bins",
-    # round 5 third-pass additions
-    "semdedup_prune",
-    "bpe_merge_pairs",
-    "pagerank_neardup",
-    "cogroup_order_fill",
-    "heavy_hitters_topk",
-    "streaming_outer_join",
-    "dsir_select",
-    "streaming_pysource_counts",
-    "doc_entropy_stats",
-    "try_arithmetic_audit",
-    "streaming_dedup_within_watermark",
-    "grouped_agg_udaf",
-    "sql_udf_price_bands",
-    "recursive_calendar_revenue",
-    "pipe_syntax_summary",
-    "pit_join_features",
-    "dq_expectations",
-    # round 6 additions
-    "listagg_order_lines",
-    "collation_group_names",
-    "mode_per_group",
-    "bitmap_distinct_users",
-    "m4_downsample",
-    "pareto_front_orders",
-    "chi2_lang_source",
-    "ks_score_drift",
-    "gini_revenue_concentration",
-    "cusum_changepoint",
-    "interval_merge_coverage",
-    "rfm_segmentation",
-    "weighted_doc_sample",
-    "ngram_containment_hist",
-    "bpe_apply_stats",
-    "freq_event_pairs",
-    "pair_rouge_stats",
-    "minhash_estimate_error",
-    "mmr_diverse_topk",
-    "session_funnel_stats",
-    # round 7 additions
-    "label_prop_communities",
-    "kll_quantile_drift",
-    "equidepth_price_buckets",
-    "lsh_incremental_pairs",
-    # round 8 additions
-    "equidepth_approx_audit",
-    "gopher_quality_rules",
-    "psi_release_drift",
-    "kcore_neardup",
-    "component_safe_split",
-    "hyperball_reach",
-    "sorted_neighbor_lcp",
-    "dim_truncation_recall",
-    "k_anonymity_audit",
-    "vocab_growth_curve",
-    "streaming_lsh_ingest",
-    "cdc_chunk_dedup",
-    "attribution_touchpoints",
-    "kmeans_lloyd_rounds",
-    "dpp_partition_join",
-    "streaming_quota_admission",
-    "er_golden_record",
-    "hll_intersection_audit",
-    # round 9 additions
-    "hamming1_neighbor_pairs",
-    "decontam_bloom_prefilter",
-    "streaming_decontam_ingest",
-    # round 10 additions
-    "simhash64_neardup",
-    "shard_rendezvous_stability",
-    "kcenter_coreset",
-    "streaming_simhash_ingest",
-    "cms_frequency_audit",
-    "embedding_centroid_drift",
-    "video_scene_cuts",
-    "audio_silence_runs",
-    "seasonal_naive_mase",
-    # round 11 additions
-    "kaplan_meier_churn",
-    "benford_amount_audit",
-    "mannwhitney_price_shift",
-    "ols_revenue_trend",
-    "decontam_store_prefilter",
-    "streaming_ewma_anomaly",
-    "jackknife_revenue_variance",
-    "zipf_law_fit",
-    "observed_scan_metrics",
-    "simhash64_neardup_capped",
-    # round 11 continuation-session additions
-    "roc_auc_eval",
-    "dbscan_core_points",
-    "spearman_rank_corr",
-    "theilsen_revenue_trend",
-    "logrank_survival_test",
-    "acf_daily_revenue",
-    "exact_deciles_no_sort",
-    "mixture_epoch_plan",
-    "image_patch_tokens",
-    "cross_source_dup_rate",
-    "pinball_quantile_eval",
-    "trimmed_mean_no_sort",
-    "kendall_tau_trend",
-    "runs_test_randomness",
-    "poisson_dispersion_check",
-    "weekday_seasonality_strength",
-    "isotonic_calibration",
-    "mcnemar_filter_agreement",
-    # round 12: the 28 queries that were registered but outside the
-    # headline (VERDICT r11 item 3) — the headline is now the FULL
-    # registry, enforced by the assertion in main(), so bench coverage
-    # can never silently diverge from the driver-contract surface.
-    "anti_join_customers",
-    "approx_sketch_stats",
-    "compaction_file_stats",
-    "conditional_agg_ratio",
-    "cube_order_stats",
-    "detection_class_names",
-    "doc_chain_components",
-    "doc_fingerprints",
-    "doc_quality_filter",
-    "doc_quality_scores",
-    "doc_split_stats",
-    "embedding_norm_stats",
-    "event_histogram",
-    "grouping_sets_revenue",
-    "image_dominant_hist",
-    "keyword_doc_stats",
-    "keyword_lang_stats",
-    "lag_order_gaps",
-    "name_length_buckets",
-    "nearest_centroid_counts",
-    "regex_token_stats",
-    "sliding_window_agg",
-    "streaming_dedup_counts",
-    "streaming_interval_join",
-    "streaming_session_windows",
-    "streaming_windowed_counts",
-    "unpivot_event_counts",
-    "xml_roundtrip_stats",
-    # round 12 additions
-    "welch_ttest_price",
-    "cramers_v_association",
-    "topk_capture_eval",
-    "minhash_lsh_capped",
-    "hot_bucket_rep_dedup",
-    "kruskal_wallis_price",
-    "poisson_bootstrap_ci",
-    "blocklist_safety_filter",
-    # round 13 additions
-    "streaming_lsh_ingest_capped",
-    "blocklist_lexicon_filter",
-    "bh_fdr_price_tests",
-    "conformal_coverage_eval",
-    # round 14 additions
-    "paragraph_dedup_stats",
-    "wasserstein_source_drift",
-    "streaming_paragraph_ingest",
-    # round 15 additions
-    "streaming_ivf_assign_ingest",
-    "decontam_semantic_audit",
-]
+PACKAGE = "bigdata_imgprocessing_spark"
+REF_PACKAGE = "graft_ref"
+STREAMING = "streaming_queries"
 
-
-# Streaming queries whose wall time is dominated by contract-REQUIRED
-# multi-micro-batch machinery (N mtime-ordered feed files drained under
-# maxFilesPerTrigger=1, or trailing sentinel batches for watermark
-# flush). Their cost is a FIXED number of trigger/state-commit cycles
-# pinned by the correctness contract — cross-batch state carry,
-# exactly-once discovery, watermark eviction — not a per-row term, so
-# it does not scale with data volume and should not be read as plan
-# cost. BENCH_DETAIL records their subtotal as `by_contract_sec` so a
-# reviewer can separate fixed contract cost from data-dependent cost
-# (VERDICT r8 item 7).
-MULTI_BATCH_CONTRACT = [
-    "streaming_decontam_ingest",  # 3 waves: order-dependent index growth
-    "streaming_dedup_within_watermark",  # 2 batches: cross-batch dedup state
-    "streaming_lsh_ingest",  # 4 waves: exactly-once incremental discovery
-    "streaming_lsh_ingest_capped",  # 4 waves: capped probe + accounting
-    "streaming_outer_join",  # real + 2 sentinel batches: watermark flush
-    "streaming_ivf_assign_ingest",  # 4 waves: pinned-codebook occupancy drift
-    "streaming_paragraph_ingest",  # 4 waves: first-occurrence unit state
-    "streaming_quota_admission",  # 3 ts-tertiles: quota carry across batches
-    "streaming_simhash_ingest",  # 3 waves: exactly-once banded discovery
-    "streaming_sketch_rollup",  # 3 files: segmentation-independent merge
-    "streaming_ewma_anomaly",  # 3 ts-tertiles: cross-batch jump/EWMA state
+# Physical operators counted per plan by --plans.
+PLAN_OPS = [
+    "Exchange",
+    "Window",
+    "Sort",
+    "Generate",
+    "Union",
+    "BroadcastHashJoin",
+    "SortMergeJoin",
+    "ShuffledHashJoin",
+    "BroadcastNestedLoopJoin",
+    "CartesianProduct",
+    "BatchEvalPython",
+    "ArrowEvalPython",
+    "MapInArrow",
+    "FlatMapGroupsInPandas",
+    "HashAggregate",
+    "SortAggregate",
+    "ObjectHashAggregate",
 ]
 
 
@@ -366,8 +95,7 @@ def compare(prev_path: str, cur_path: str | None = None) -> None:
     added/removed query sets, and every >1.5x mover in either
     direction with its sample spread (a large spread says busy box,
     a small spread with a moved min says the plan changed)."""
-    here = os.path.dirname(os.path.abspath(__file__))
-    cur_path = cur_path or os.path.join(here, "BENCH_DETAIL.json")
+    cur_path = cur_path or os.path.join(HERE, "BENCH_DETAIL.json")
     with open(prev_path) as fh:
         prev = json.load(fh)
     with open(cur_path) as fh:
@@ -426,179 +154,301 @@ def compare(prev_path: str, cur_path: str | None = None) -> None:
         print(">1.5x movers: none")
 
 
-def main() -> None:
-    if len(sys.argv) >= 3 and sys.argv[1] == "--compare":
-        compare(sys.argv[2], sys.argv[3] if len(sys.argv) > 3 else None)
-        return
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+def select(names: list[str], registry=QUERIES) -> list[str]:
+    """The queries a run covers: ``names`` in order, or the whole
+    registry when none are given. An unknown name exits non-zero
+    instead of silently shrinking the run."""
+    unknown = [n for n in names if n not in registry]
+    if unknown:
+        sys.exit(f"bench: unknown queries: {', '.join(unknown)}")
+    return names or list(registry)
+
+
+def parse_sf(sf_dir: str) -> float | None:
+    """Scale factor from a ``.../sfN`` directory name; None otherwise."""
+    m = re.fullmatch(r"sf(\d+(?:\.\d+)?)", os.path.basename(sf_dir.rstrip("/")))
+    return float(m.group(1)) if m else None
+
+
+def data_dir() -> str:
+    return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+
+def repeats(default: int) -> int:
+    return max(1, int(os.environ.get("BENCH_REPEATS", str(default))))
+
+
+def session():
     spark = build_session("bench")
     spark.sparkContext.setLogLevel("ERROR")
+    return spark
 
-    # Warm up engine machinery outside the timed region so its one-time
-    # cost (JIT, codegen classloading, shuffle/broadcast infra, Arrow
-    # Python worker pool) isn't charged to whichever query runs first.
-    # Steady-state per-query time is the quantity of interest — a real
-    # cluster pays these once per executor lifetime, not per query.
+
+def warm_up(spark, sf_dir: str) -> None:
+    """Untimed engine warm-up and fixture staging."""
+    # One-time engine cost (JIT, codegen classloading, shuffle/broadcast
+    # infra, Arrow Python worker pool) isn't charged to whichever query
+    # runs first: a real cluster pays it once per executor lifetime.
     from pyspark.sql import functions as F
+    from pyspark.sql.functions import pandas_udf
+
+    from bigdata_imgprocessing_spark.queries.streaming_queries import (
+        prestage_feeds,
+    )
 
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     li.groupBy("l_returnflag").count().collect()  # shuffle + codegen
     sup = spark.read.parquet(f"{sf_dir}/supplier.parquet")
     li.join(F.broadcast(sup), li.l_suppkey == sup.s_suppkey).count()  # broadcast
-    from pyspark.sql.functions import pandas_udf
-
     _warm = pandas_udf(lambda s: s, "long")
     spark.range(1000).select(_warm("id")).count()  # Arrow worker pool
-
-    # Stage the per-corpus streaming wave feeds ONCE, untimed (r16,
-    # VERDICT r15 item 2): the fixtures are idempotent (marker-keyed on
-    # the corpus fingerprint), so the timed drains hit the marker and
-    # start cold only on their own state — fixture construction (ntile
-    # slicing, codebook, gram index) is bench setup, not operator cost.
-    # Harness addition only: the timed region below is unchanged.
-    from bigdata_imgprocessing_spark.queries.streaming_queries import (
-        prestage_feeds,
-    )
-
+    # The streaming wave feeds are marker-keyed on the corpus
+    # fingerprint, so staging them once here leaves the timed drains
+    # cold only on their own state.
     spark.sparkContext.setJobDescription("warmup: prestage streaming feeds")
     prestage_feeds(spark, sf_dir)
     spark.sparkContext.setJobDescription(None)
 
-    names = [n for n in HEADLINE if n in QUERIES]
-    # The headline IS the full registry (VERDICT r11 item 3): a query
-    # registered without a headline entry (or vice versa) fails loudly
-    # here instead of silently shrinking bench coverage.
-    missing = sorted(set(QUERIES) - set(HEADLINE))
-    stale = sorted(set(HEADLINE) - set(QUERIES))
-    assert not missing and not stale, (
-        f"bench headline out of sync: missing={missing} stale={stale}"
-    )
-    extra = os.environ.get("BENCH_QUERIES")
-    if extra:
-        names = [n for n in extra.split(",") if n in QUERIES]
 
-    # Repeat each query and keep the MIN (VERDICT r6: three unchanged
-    # queries swung +17 s in a single-run driver bench that the
-    # same-code committed run didn't reproduce — single samples on a
-    # shared box charge one-off GC/scheduling spikes to whichever query
-    # they land on; the min of two back-to-back runs is the steady-state
-    # signal). Cache-clear + GC run between EVERY execution so each
-    # repeat sees the same cold-cache semantics as a lone run.
-    repeats = max(1, int(os.environ.get("BENCH_REPEATS", "2")))
+def run_once(spark, name: str, fn, sf_dir: str) -> tuple[float, int]:
+    """Build and fully execute one query under a job group named after
+    it; return its wall seconds and the number of jobs it started."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    seen = set(tracker.getJobIdsForGroup(name))
+    sc.setJobGroup(name, name)
+    try:
+        t0 = time.perf_counter()
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        wall = time.perf_counter() - t0
+    finally:
+        sc._jsc.clearJobGroup()
+    # Untimed between runs: drop cached frames (queries that cache and
+    # never unpersist otherwise leave storage blocks that surface as
+    # erratic outliers in later queries) and force a GC so collection
+    # pauses land in the harness gap, not mid-query.
+    spark.catalog.clearCache()
+    sc._jvm.System.gc()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return wall, len(set(tracker.getJobIdsForGroup(name)) - seen)
+
+
+def time_queries(spark, sf_dir: str, names: list[str], runs: int) -> dict:
+    """Run each query ``runs`` times back to back and keep the min: single
+    samples on a shared box charge one-off GC/scheduling spikes to
+    whichever query they land on. Records every wall, its job count and
+    the 1-min loadavg around it, so an artifact carries its own
+    busy-box evidence."""
     times: dict[str, float] = {}
     spreads: dict[str, float] = {}
     walls: dict[str, list[float]] = {}
+    jobs: dict[str, list[int]] = {}
     loads: dict[str, list[list[float]]] = {}
-    # Host-load telemetry (VERDICT r14 item 2): two rounds in a row the
-    # headline number needed manual loaded-host-vs-regression
-    # adjudication (r13 365.9s, r14 372.5s — both host load). Record
-    # 1-min loadavg around every repeat and for the whole run so the
-    # artifact carries its own verdict: on a quiet local[32] box the
-    # bench itself drives load, so sustained loadavg far above the
-    # bench's own steady state (or a high START load) says "busy box"
-    # without a judge re-run.
     run_load_start = [round(v, 2) for v in os.getloadavg()]
     for name in names:
         samples: list[float] = []
-        rep_loads: list[list[float]] = []
-        for _ in range(repeats):
+        walls[name], jobs[name], loads[name] = [], [], []
+        for _ in range(runs):
             l0 = os.getloadavg()[0]
-            t0 = time.perf_counter()
-            df = QUERIES[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            samples.append(time.perf_counter() - t0)
-            rep_loads.append([round(l0, 2), round(os.getloadavg()[0], 2)])
-            # Untimed between runs: drop cached frames (the LSH queries
-            # cache fan-out frames and never unpersist — 68 queries of
-            # accumulated storage blocks showed up as erratic
-            # multi-second outliers in otherwise sub-2s queries) and
-            # force a GC so collection pauses land in the harness gap,
-            # not mid-query (the multi-second spike wandered to a
-            # different query each run before this).
-            spark.catalog.clearCache()
-            spark.sparkContext._jvm.System.gc()
+            wall, n_jobs = run_once(spark, name, QUERIES[name], sf_dir)
+            samples.append(wall)
+            walls[name].append(round(wall, 3))
+            jobs[name].append(n_jobs)
+            loads[name].append([round(l0, 2), round(os.getloadavg()[0], 2)])
         times[name] = round(min(samples), 3)
-        # Per-query sample spread (max - min): lets a reviewer separate
-        # noise from regression without rerunning — a large spread says
-        # the box was busy, a small spread with a larger min says the
-        # plan itself changed (VERDICT r7 item 5).
+        # A large spread says the box was busy; a small spread with a
+        # larger min says the plan itself changed.
         spreads[name] = round(max(samples) - min(samples), 3)
-        # Raw per-repeat walls (VERDICT r11 item 4): the robust
-        # statistic (min) AND every shared-box wall are both recorded,
-        # so the next round's drift-vs-regression adjudication compares
-        # mins directly instead of re-running an isolated audit.
-        walls[name] = [round(s, 3) for s in samples]
-        loads[name] = rep_loads
 
-    total = round(sum(times.values()), 3)
-    # Streaming entries are dominated by fixed micro-batch drain latency
-    # (trigger polls, state-store commits), not data volume — tag them
-    # separately so batch-query regression tracking isn't muddied by
-    # ~1.5-2 s of constant per-query overhead that won't change with
-    # plan quality (VERDICT r4 item 7).
-    streaming = {n: t for n, t in times.items() if n.startswith("streaming_")}
+    # Streaming drains are dominated by fixed micro-batch latency
+    # (trigger polls, state-store commits), not data volume; the
+    # contract drains are the ones whose batch count is fixed by their
+    # correctness contract (registry ``contract_batches``).
+    streaming = {n: t for n, t in times.items() if family(n) == STREAMING}
     batch = {n: t for n, t in times.items() if n not in streaming}
-    detail = {
+    by_contract = sorted(n for n in times if CONTRACT_BATCHES[n] > 1)
+    return {
         "metric": "headline_queries_total",
-        "value": total,
+        "value": round(sum(times.values()), 3),
         "unit": "sec",
         "queries": times,
         "spread": spreads,
         "walls": walls,
+        "jobs": jobs,
         "batch_total": round(sum(batch.values()), 3),
         "batch_n": len(batch),
         "streaming_total": round(sum(streaming.values()), 3),
         "streaming_n": len(streaming),
         "streaming_queries": sorted(streaming),
-        "by_contract_sec": round(
-            sum(t for n, t in times.items() if n in MULTI_BATCH_CONTRACT), 3
-        ),
-        "by_contract_queries": sorted(
-            n for n in times if n in MULTI_BATCH_CONTRACT
-        ),
-        "repeats": repeats,
-        "sf": float(sf),
+        "by_contract_sec": round(sum(times[n] for n in by_contract), 3),
+        "by_contract_queries": by_contract,
+        "repeats": runs,
         "loads": loads,
         "run_loadavg": {
             "start": run_load_start,
             "end": [round(v, 2) for v in os.getloadavg()],
         },
-        "ncpus": os.cpu_count(),
     }
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
-    )
-    with open(detail_path, "w") as fh:
-        json.dump(detail, fh, indent=1)
-        fh.write("\n")
-    # Core-count-suffixed copy (r16, VERDICT r15 item 8): the driver's
-    # low-core scaling run would otherwise silently overwrite the
-    # 32-core close in the one mutable file, costing the next round its
-    # per-query comparison baseline.
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)
-    with open(detail_path.replace(".json", f"_c{cpus}.json"), "w") as fh:
-        json.dump(detail, fh, indent=1)
-        fh.write("\n")
-    # Per-query map goes to stderr (logs/humans) and the detail file; the
-    # ONLY stdout line is the compact summary, so a bounded tail capture
-    # always ends with one complete JSON object.
-    print(json.dumps(detail), file=sys.stderr)
+
+
+def bench(names: list[str]) -> None:
+    selected = select(names)
+    sf_dir = data_dir()
+    sf = parse_sf(sf_dir)
+    spark = session()
+    warm_up(spark, sf_dir)
+    detail = time_queries(spark, sf_dir, selected, repeats(2))
+    detail["sf"] = sf
+    detail["ncpus"] = spark.sparkContext.defaultParallelism
+    spark.stop()
+
+    path = None
+    if names:
+        print(json.dumps(detail))
+    else:
+        # The core-count-suffixed copy keeps a low-core run from
+        # overwriting another host's baseline in the one mutable file.
+        path = os.path.join(HERE, "BENCH_DETAIL.json")
+        for p in (path, path.replace(".json", f"_c{detail['ncpus']}.json")):
+            with open(p, "w") as fh:
+                json.dump(detail, fh, indent=1)
+                fh.write("\n")
+        print(json.dumps(detail), file=sys.stderr)
     summary = {
         "metric": "headline_queries_total",
-        "value": total,
+        "value": detail["value"],
         "unit": "sec",
-        "n_queries": len(times),
-        "batch_sec": round(sum(batch.values()), 3),
-        "streaming_sec": round(sum(streaming.values()), 3),
-        "sf": float(sf),
-        "detail": "BENCH_DETAIL.json",
+        "n_queries": len(detail["queries"]),
+        "batch_sec": detail["batch_total"],
+        "streaming_sec": detail["streaming_total"],
+        "sf": sf,
+        "detail": path and os.path.basename(path),
     }
     line = json.dumps(summary)
     assert len(line) < 512, "summary line must stay tail-safe"
     print(line)
+
+
+def plan_counts(plan: str) -> dict:
+    """Operator counts, parquet scans per table and SinglePartition
+    exchanges in a formatted physical plan."""
+    rec = {
+        op: len(re.findall(rf"^\(\d+\) {re.escape(op)}\b", plan, re.M))
+        for op in PLAN_OPS
+    }
+    rec = {k: v for k, v in rec.items() if v}
+    scans: dict[str, int] = {}
+    for m in re.finditer(r"^Location: \S+ ?\[\w+:([^\]]+)\]", plan, re.M):
+        t = os.path.basename(m.group(1)).replace(".parquet", "")
+        scans[t] = scans.get(t, 0) + 1
+    rec["scans"] = scans
+    rec["single_partition"] = plan.count("SinglePartition")
+    return rec
+
+
+def plans(names: list[str]) -> None:
+    """Print each query's formatted plan and its counts, then one JSON
+    line with every query's counts. Nothing executes beyond what the
+    builders run eagerly."""
+    selected = select(names) if names else [
+        n for n in QUERIES if family(n) != STREAMING
+    ]
+    sf_dir = data_dir()
+    spark = session()
+    sc = spark.sparkContext
+    mode = sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "formatted"
+    )
+    audit: dict[str, dict] = {}
+    for name in selected:
+        sc.setJobGroup(name, name)
+        try:
+            df = QUERIES[name](spark, sf_dir)
+            plan = df._jdf.queryExecution().explainString(mode)
+        except Exception as exc:  # noqa: BLE001 - the audit covers the rest
+            audit[name] = {"error": str(exc)[:200]}
+            print(f"== {name}: error: {audit[name]['error']}", flush=True)
+            continue
+        finally:
+            sc._jsc.clearJobGroup()
+            spark.catalog.clearCache()
+        audit[name] = plan_counts(plan)
+        print(f"== {name}\n{plan}\ncounts: {json.dumps(audit[name])}", flush=True)
     spark.stop()
+    print(json.dumps(audit, sort_keys=True))
+
+
+def load_ref(ref: str, dest: str):
+    """Extract ``ref``'s package into ``dest`` as REF_PACKAGE and
+    return its query registry, loaded beside the working tree's."""
+    tar = subprocess.run(
+        ["git", "-C", HERE, "archive", ref, PACKAGE],
+        check=True,
+        capture_output=True,
+    ).stdout
+    with tarfile.open(fileobj=io.BytesIO(tar)) as tf:
+        tf.extractall(dest, filter="data")
+    os.rename(os.path.join(dest, PACKAGE), os.path.join(dest, REF_PACKAGE))
+    if dest not in sys.path:
+        sys.path.insert(0, dest)
+    return importlib.import_module(f"{REF_PACKAGE}.queries").QUERIES
+
+
+def ab(ref: str, names: list[str]) -> None:
+    """Alternate REF and the working tree per query, swapping which side
+    goes first every pair, and print each side's walls, median, IQR and
+    jobs per run."""
+    if not names:
+        sys.exit("bench: --ab needs a git ref and at least one query")
+    select(names)
+    dest = tempfile.mkdtemp(prefix="bench-ab-")
+    try:
+        ref_queries = load_ref(ref, dest)
+        select(names, ref_queries)
+        # Python workers inherit the JVM's environment, fixed at launch.
+        os.environ["PYTHONPATH"] = os.pathsep.join(
+            p for p in (dest, os.environ.get("PYTHONPATH")) if p
+        )
+        sides = {ref: ref_queries, "tree": QUERIES}
+        sf_dir = data_dir()
+        spark = session()
+        warm_up(spark, sf_dir)
+        pairs = max(2, repeats(5))
+        for name in names:
+            res = {side: ([], []) for side in sides}
+            for i in range(pairs):
+                order = list(sides) if i % 2 == 0 else list(sides)[::-1]
+                for side in order:
+                    wall, n_jobs = run_once(spark, name, sides[side][name], sf_dir)
+                    res[side][0].append(wall)
+                    res[side][1].append(n_jobs)
+            print(f"{name}  ({pairs} pairs, load {os.getloadavg()[0]:.1f})")
+            for side, (walls, jobs) in res.items():
+                q1, med, q3 = statistics.quantiles(walls, n=4)
+                print(
+                    f"  {side:>8s} median {med:7.3f}"
+                    f"  iqr {q3 - q1:6.3f}  walls "
+                    + " ".join(f"{w:.3f}" for w in walls)
+                    + "  jobs " + " ".join(map(str, jobs)),
+                    flush=True,
+                )
+        spark.stop()
+    finally:
+        shutil.rmtree(dest, ignore_errors=True)
+
+
+def main(argv: list[str]) -> None:
+    if argv[:1] in (["-h"], ["--help"]):
+        print(__doc__)
+    elif argv[:1] == ["--compare"] and len(argv) >= 2:
+        compare(argv[1], argv[2] if len(argv) > 2 else None)
+    elif argv[:1] == ["--plans"]:
+        plans(argv[1:])
+    elif argv[:1] == ["--ab"] and len(argv) >= 2:
+        ab(argv[1], argv[2:])
+    else:
+        bench(argv)
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

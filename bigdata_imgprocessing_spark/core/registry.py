@@ -20,20 +20,38 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
+CONTRACT_BATCHES: dict[str, int] = {}
 
 
-def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
+def query(
+    name: str, oracle: str | None = None, contract_batches: int = 1
+) -> Callable[[QueryFn], QueryFn]:
     """Register ``fn`` as a named query; ``oracle`` is DuckDB SQL over the
     pre-registered views (region nation customer supplier part orders
     lineitem events documents embeddings). ``oracle=None`` marks a
-    genuinely non-SQL-expressible op (driver falls back to rows-only)."""
+    genuinely non-SQL-expressible op (driver falls back to rows-only).
+
+    ``contract_batches`` is the number of micro-batches a streaming
+    drain's correctness contract requires (feed waves drained under
+    maxFilesPerTrigger=1, or trailing sentinel batches for a watermark
+    flush): cross-batch state carry, exactly-once discovery, eviction.
+    That cost is a fixed count of trigger/state-commit cycles, not a
+    per-row term, so bench reports the drains with more than one batch
+    apart as ``by_contract_sec``."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
             raise ValueError(f"duplicate query name: {name}")
         QUERIES[name] = fn
+        CONTRACT_BATCHES[name] = contract_batches
         if oracle is not None:
             ORACLES[name] = oracle
         return fn
 
     return deco
+
+
+def family(name: str) -> str:
+    """The query's family: the module of ``queries/`` defining it
+    (``relational``, ``dedup``, ``streaming_queries``, ...)."""
+    return QUERIES[name].__module__.rsplit(".", 1)[-1]

@@ -88,7 +88,7 @@ def hamming1_neighbor_join(
     # optimizer), then OOMs building the broadcast relation. Measured:
     # 1M distinct 64-bit fingerprints = a 64M-row index per side ->
     # "Not enough memory to build and broadcast" without the hint
-    # (tools_scale_r9.py); with it, a plain two-sided shuffle whose
+    # (SCALING.md, round 9); with it, a plain two-sided shuffle whose
     # <= 2-row buckets cannot skew.
     a = keys.alias("a").hint("merge")
     b = keys.alias("b")
@@ -122,7 +122,7 @@ def band_keys(df: DataFrame, fp_col: str, bits: int, k: int) -> DataFrame:
     pigeonhole block of the ``_block_layout(bits, k)`` split. THE single
     definition of the banded key derivation: the batch operator below,
     the streaming prober (streaming/simhash_ingest.py), and the scale
-    harness (tools_scale_r10.py) all key through here, so the
+    measurements (SCALING.md, round 10) all key through here, so the
     fingerprint bucketing cannot drift between deployment modes."""
     fp = F.col(fp_col).cast("long")
     keyed = df.select(

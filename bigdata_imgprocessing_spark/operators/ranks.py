@@ -22,7 +22,7 @@ with no data-sized single partition anywhere:
 Round 15 built this restructure, proved it hash-identical at 3 SFs,
 and measured it 2-4x SLOWER at driver sf — the extra dependent stage
 waves dominate frames this small (OPTIMIZATION_r15.md "Rejected with
-measurements"). It is therefore wired behind a SIZE SWITCH (VERDICT
+measurements", in git history at 752fc5a). It is therefore wired behind a SIZE SWITCH (VERDICT
 r15 item 6): the monitors keep the measured-faster window form below
 ``SPARK_GRAFT_RANK_PREFIX_BYTES`` (default 2 GiB) of input parquet and
 switch to this form above it, where the single-partition sort stalls.

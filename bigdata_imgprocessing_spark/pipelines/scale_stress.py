@@ -12,17 +12,17 @@ the 0.5 verify threshold), giving the LSH pipeline a non-empty,
 ground-truthed answer to find.
 
 Everything runs distributed (crossJoin against a tiny replica dim,
-per-row HOF token edits); the driver only writes parquet. Results are
-recorded in SCALING.md; tests/test_operators.py pins the planted-pair
-recall/precision on a small build.
+per-row HOF token edits); the driver only writes parquet. The scale
+measurements this builder fed are recorded in SCALING.md;
+tests/test_operators.py pins the planted-pair recall/precision on a
+small build.
 """
 
 from __future__ import annotations
 
 import os
-import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..core.catalog import table
@@ -102,277 +102,3 @@ def build_scaled_documents(
         .collect()
     ]
     return sorted(pair_ids)
-
-
-def run_scale_stress(
-    spark: SparkSession, scaled_dir: str
-) -> dict[str, dict[str, float]]:
-    """Time the three LSH-path queries against a scaled corpus and pull
-    the bucket-size facts out of ``minhash_band_stats``' own output."""
-    from ..queries.dedup import (
-        minhash_band_stats,
-        minhash_lsh_pairs,
-        ngram_jaccard_hist,
-    )
-
-    metrics: dict[str, dict[str, float]] = {}
-
-    t0 = time.perf_counter()
-    band_rows = minhash_band_stats(spark, scaled_dir).collect()
-    metrics["minhash_band_stats"] = {
-        "secs": round(time.perf_counter() - t0, 2),
-        "max_bucket": max(r.max_bucket for r in band_rows),
-        "n_candidate_pairs": sum(r.n_candidate_pairs for r in band_rows),
-    }
-
-    t0 = time.perf_counter()
-    pairs = minhash_lsh_pairs(spark, scaled_dir).collect()
-    metrics["minhash_lsh_pairs"] = {
-        "secs": round(time.perf_counter() - t0, 2),
-        "n_pairs_found": len(pairs),
-    }
-
-    t0 = time.perf_counter()
-    hist = ngram_jaccard_hist(spark, scaled_dir).collect()
-    metrics["ngram_jaccard_hist"] = {
-        "secs": round(time.perf_counter() - t0, 2),
-        "n_pairs_scored": sum(r.n_pairs for r in hist),
-    }
-
-    from ..queries.curation import decontam_ngram_overlap
-
-    t0 = time.perf_counter()
-    dec = decontam_ngram_overlap(spark, scaled_dir).collect()
-    metrics["decontam_ngram_overlap"] = {
-        "secs": round(time.perf_counter() - t0, 2),
-        "n_test_docs": sum(r.n_test_docs for r in dec),
-        "n_contaminated": sum(r.n_contaminated for r in dec),
-    }
-
-    # The closure applied end-to-end: LSH pairs → connected components →
-    # survivor policy. Instrumented to verify the O(log diameter) claim:
-    # rounds should stay ~flat while the pair graph grows with the
-    # planted density, and wall time should track the LSH stage, not
-    # explode with corpus size.
-    from ..operators.components import connected_components
-    from ..queries.dedup import _lsh_verified_pairs, neardup_component_dedup
-
-    t0 = time.perf_counter()
-    nd = neardup_component_dedup(spark, scaled_dir).collect()
-    nd_secs = round(time.perf_counter() - t0, 2)
-    cc_stats: dict = {}
-    connected_components(
-        _lsh_verified_pairs(spark, scaled_dir).select("doc_a", "doc_b"),
-        "doc_a",
-        "doc_b",
-        stats=cc_stats,
-    ).count()
-    metrics["neardup_component_dedup"] = {
-        "secs": nd_secs,
-        "n_removed": sum(r.n_removed for r in nd),
-        "cc_edges": cc_stats.get("n_edges", 0),
-        "cc_rounds": cc_stats.get("rounds", 0),
-    }
-
-    # Ranked retrieval: posting lists of 3 literal query terms — time
-    # should scale with the matching postings, not the corpus.
-    from ..queries.text import bm25_search
-
-    t0 = time.perf_counter()
-    bm = bm25_search(spark, scaled_dir).collect()
-    metrics["bm25_search"] = {
-        "secs": round(time.perf_counter() - t0, 2),
-        "n_results": len(bm),
-    }
-    # Quality surface over the scaled corpus: duplicated-n-gram span
-    # coverage (gram-keyed shuffle + islands over hit positions only)
-    # and the self-trained unigram-LM filter (wordcount + occurrence
-    # join). Both should grow near-linearly with corpus size; coverage
-    # additionally RISES with planted near-dups (they are cross-doc
-    # duplicated text by construction) — a built-in sanity signal.
-    from ..queries.dedup import dup_ngram_coverage
-    from ..queries.quality import unigram_logprob_filter
-
-    t0 = time.perf_counter()
-    dc = dup_ngram_coverage(spark, scaled_dir).collect()
-    metrics["dup_ngram_coverage"] = {
-        "secs": round(time.perf_counter() - t0, 2),
-        "n_docs_with_dup": sum(r.n_docs_with_dup for r in dc),
-    }
-
-    t0 = time.perf_counter()
-    ug = unigram_logprob_filter(spark, scaled_dir).collect()
-    metrics["unigram_logprob_filter"] = {
-        "secs": round(time.perf_counter() - t0, 2),
-        "n_flagged": sum(r.n_flagged for r in ug),
-    }
-
-    # Graph analytics over the pair graph: triangle census cost must
-    # track the SPARSE edge set (wedges bounded by out-degree under the
-    # sorted orientation), not the corpus — the same bound as the CC
-    # closure above.
-    from ..queries.dedup import neardup_triangle_stats
-
-    t0 = time.perf_counter()
-    tr = neardup_triangle_stats(spark, scaled_dir).collect()[0]
-    metrics["neardup_triangle_stats"] = {
-        "secs": round(time.perf_counter() - t0, 2),
-        "n_edges": tr.n_edges,
-        "n_triangles": tr.n_triangles,
-    }
-    return metrics
-
-
-def run_scale_stress_r5c(
-    spark: SparkSession, scaled_dir: str
-) -> dict[str, dict[str, float]]:
-    """Round-5 third-pass growth curves over the scaled DOCUMENT corpus:
-    PageRank (per-iteration cost must track the sparse pair graph, like
-    the CC closure and triangle census) and BPE pair counting (cost must
-    track |vocab|, which the suffixed replicas inflate by ~factor —
-    the harness's worst case; real corpora grow vocab sublinearly)."""
-    from ..queries.dedup import pagerank_neardup
-    from ..queries.text import bpe_merge_pairs
-
-    metrics: dict[str, dict[str, float]] = {}
-
-    t0 = time.perf_counter()
-    pr = pagerank_neardup(spark, scaled_dir).collect()
-    metrics["pagerank_neardup"] = {
-        "secs": round(time.perf_counter() - t0, 2),
-        # collect() does not guarantee rank order — take max/any, not [0]
-        "n_nodes": pr[0].n_nodes if pr else 0,
-        "top_pr": max(r.pr for r in pr) if pr else 0,
-    }
-
-    t0 = time.perf_counter()
-    bp = bpe_merge_pairs(spark, scaled_dir).collect()
-    metrics["bpe_merge_pairs"] = {
-        "secs": round(time.perf_counter() - t0, 2),
-        "top_pair_occ": max((r.n_occ for r in bp), default=0),
-    }
-    return metrics
-
-
-def build_scaled_embeddings(
-    spark: SparkSession,
-    sf_dir: str,
-    out_dir: str,
-    factor: int = 10,
-    plant_every: int = 20,
-    dim: int = 64,
-) -> int:
-    """Write ``out_dir/embeddings.parquet`` at ``factor``× the base
-    corpus: replica r=0 keeps the original vector; r>0 replicas are
-    FRESH deterministic pseudo-random vectors (xxhash64(vec_id, rep, d)
-    mapped to [-0.5, 0.5] — covering the base marginal, near-zero
-    expected cosine to everything, so scaled-corpus neighbor structure
-    mirrors the base instead of degenerating into clone balls). Every
-    ``plant_every``-th base vector additionally gets ONE planted
-    near-dup (vector + 1% of itself on the first dim → cosine ≈ 1).
-    Labels hash-distribute over the base label alphabet. Returns the
-    scaled row count."""
-    emb = table(spark, sf_dir, "embeddings")
-    stride = factor + 1
-    reps = spark.range(factor).select(F.col("id").cast("int").alias("rep"))
-    dims = F.sequence(F.lit(0), F.lit(dim - 1))
-    fresh = F.transform(
-        dims,
-        lambda d: (
-            (F.xxhash64(F.col("vec_id"), F.col("rep"), d) % 50001) / 100000.0
-        ).cast("float"),
-    )
-    scaled = emb.crossJoin(F.broadcast(reps)).select(
-        (F.col("vec_id") * stride + F.col("rep")).alias("vec_id"),
-        F.when(F.col("rep") == 0, F.col("embedding")).otherwise(fresh).alias(
-            "embedding"
-        ),
-        F.when(F.col("rep") == 0, F.col("label"))
-        .otherwise((F.abs(F.xxhash64(F.col("vec_id"), F.col("rep"))) % 10).cast("int"))
-        .alias("label"),
-    )
-    planted = emb.where(F.col("vec_id") % plant_every == 0).select(
-        (F.col("vec_id") * stride + F.lit(factor)).alias("vec_id"),
-        F.transform(
-            F.col("embedding"),
-            lambda x, i: F.when(i == 0, (x * 1.01).cast("float")).otherwise(x),
-        ).alias("embedding"),
-        "label",
-    )
-    out = scaled.unionByName(planted)
-    path = os.path.join(out_dir, "embeddings.parquet")
-    out.write.mode("overwrite").parquet(path)
-    # count the WRITTEN files (footer metadata) — re-counting `out`
-    # would re-execute the whole generation DAG a second time
-    return spark.read.parquet(path).count()
-
-
-def run_semdedup_scale(
-    spark: SparkSession, emb_dir: str, k_cells: int
-) -> dict[str, float]:
-    """SemDeDup prune cost on a (scaled) embeddings corpus with a
-    LEARNED k-cell quantizer — the k ~ sqrt(N) knob is the whole scale
-    story: per-cell pair work is (N/k)^2 * k = N^2/k, so growing k with
-    the corpus keeps the quadratic bounded while fixed k lets it
-    explode. Returns wall seconds plus the prune ledger facts."""
-    from ..operators.ivf import build_ivf_index
-    from ..queries.similarity import semdedup_ledger
-
-    emb = spark.read.parquet(os.path.join(emb_dir, "embeddings.parquet"))
-    t0 = time.perf_counter()
-    indexed, _model = build_ivf_index(emb, k=k_cells)
-    indexed = indexed.select("vec_id", "cell", "embedding")
-    ledger = semdedup_ledger(indexed).collect()
-    secs = round(time.perf_counter() - t0, 2)
-    return {
-        "secs": secs,
-        "k_cells": k_cells,
-        "n_vecs": sum(r.n_vecs for r in ledger),
-        "n_removed": sum(r.n_removed for r in ledger),
-        "max_cell": max(r.n_vecs for r in ledger),
-    }
-
-
-def build_scaled_facts(
-    spark: SparkSession, sf_dir: str, out_dir: str, factor: int = 10
-) -> None:
-    """Write a ``factor``×-replicated copy of the FACT tables (lineitem,
-    orders, events) with remapped primary keys; dimension tables copy
-    through unchanged — the realistic growth shape (more transactions
-    per customer/part/supplier, not more customers). Gives the
-    relational/window/as-of headline queries an sf1-equivalent corpus:
-    orderkey → okey*stride+rep keeps orders⋈lineitem referential
-    integrity WITHIN each replica; event ts shifts by rep·7s so
-    windows/sessions see denser, interleaved activity, not clones."""
-    import shutil as _sh
-
-    stride = factor + 1
-    reps = spark.range(factor).select(F.col("id").cast("int").alias("rep"))
-    os.makedirs(out_dir, exist_ok=True)
-    for t in ("region", "nation", "customer", "supplier", "part",
-              "documents", "embeddings"):
-        src = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(src):
-            _sh.copyfile(src, os.path.join(out_dir, f"{t}.parquet"))
-
-    o = table(spark, sf_dir, "orders")
-    o.crossJoin(F.broadcast(reps)).select(
-        (F.col("o_orderkey") * stride + F.col("rep")).alias("o_orderkey"),
-        "o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate",
-        "o_orderpriority",
-    ).write.mode("overwrite").parquet(os.path.join(out_dir, "orders.parquet"))
-
-    li = table(spark, sf_dir, "lineitem")
-    li.crossJoin(F.broadcast(reps)).select(
-        (F.col("l_orderkey") * stride + F.col("rep")).alias("l_orderkey"),
-        "l_partkey", "l_suppkey", "l_linenumber", "l_quantity",
-        "l_extendedprice", "l_discount", "l_tax", "l_returnflag",
-        "l_linestatus", "l_shipdate",
-    ).write.mode("overwrite").parquet(os.path.join(out_dir, "lineitem.parquet"))
-
-    e = table(spark, sf_dir, "events")
-    e.crossJoin(F.broadcast(reps)).select(
-        (F.col("event_id") * stride + F.col("rep")).alias("event_id"),
-        (F.col("ts") + F.make_interval(secs=F.col("rep") * 7)).alias("ts"),
-        "user_id", "event_type", "value", "props",
-    ).write.mode("overwrite").parquet(os.path.join(out_dir, "events.parquet"))

@@ -1,19 +1,12 @@
 """Named, oracle-checked queries — the driver-contract surface.
 
 Importing this package registers every query into
-``core.registry.QUERIES`` / ``ORACLES``.
+``core.registry.QUERIES`` / ``ORACLES`` / ``CONTRACT_BATCHES``, in
+module import order.
 """
 
-from ..core.registry import ORACLES, QUERIES
+from ..core.registry import CONTRACT_BATCHES, ORACLES, QUERIES, family
 
-# Import order feeds registration; the explicit priority list below is
-# the driver check order (dict insertion order). The driver checks ~50
-# entries per round: (1) queries NEW this round with zero driver
-# history, (2) queries whose code or oracle CHANGED after their last
-# driver row, (3) the oldest-driver-row cohort in its original order
-# (staleness refresh rotation), (4) everything else in registration
-# order. tests/test_layout.py::test_priority_rotation_names_valid
-# enforces that every name resolves, is unique, and leads iteration.
 from . import advanced  # noqa: F401
 from . import analytics  # noqa: F401
 from . import curation  # noqa: F401
@@ -28,50 +21,4 @@ from . import streaming_queries  # noqa: F401
 from . import text  # noqa: F401
 from . import timeseries  # noqa: F401  (registration side effect)
 
-_PRIORITY = [
-    # (2) queries whose CODE/PLAN changed in the round-16 OPTIMIZATION
-    # pass (no new queries this round) — every one proven
-    # hash-identical at sf0.001/0.01/0.1 + full driver-sim before
-    # landing; the driver's own row is the final re-check.
-    # OPTIMIZATION_r16.md has the per-query evidence.
-    # (2a) scan-diet redos (customer/part-sized caches dropped for
-    # pruned partial-agg scans) + the selection-operator stage diet:
-    "kaplan_meier_churn", "logrank_survival_test",
-    "poisson_dispersion_check", "priority_multiset_diff",
-    "fuzzy_match_stats", "exact_deciles_no_sort", "trimmed_mean_no_sort",
-    "conformal_coverage_eval",
-    # (2b) size-conditional rank pass (default plan = the r15 window
-    # form; the prefix twin is env-gated — operators/ranks.py):
-    "mannwhitney_price_shift", "kruskal_wallis_price",
-    "spearman_rank_corr", "roc_auc_eval",
-    # (2c) streaming: the capped-lsh wave diet, the ivf codebook
-    # fixture + pinned-thread writes, the staged-feed builders
-    # (byte-identical feeds, staging code moved), and the memory-sink
-    # lifecycle canaries (stale sinks dropped per drain — jobs.py):
-    "streaming_lsh_ingest_capped", "streaming_lsh_ingest",
-    "streaming_ivf_assign_ingest", "streaming_decontam_ingest",
-    "streaming_quota_admission", "streaming_ewma_anomaly",
-    "streaming_simhash_ingest", "streaming_paragraph_ingest",
-    "streaming_outer_join", "streaming_dedup_within_watermark",
-    "streaming_sketch_rollup", "streaming_replay_dedup",
-    "streaming_kafka_roundtrip", "streaming_stateful_totals",
-    # (3) staleness refresh, oldest-first: the r9 tail (from
-    # doc_entropy_stats), in r9 driver-file order (VERDICT r15 item 9)...
-    "doc_entropy_stats", "dq_expectations", "dsir_select",
-    "dup_ngram_coverage", "embedding_batch_scores", "epoch_shuffle_order",
-    "filter_funnel_stats", "grouped_agg_udaf", "hard_negative_mining",
-    "heavy_hitters_topk", "key_skew_profile", "mad_event_outliers",
-    "merge_into_orders", "neardup_triangle_stats", "order_value_position",
-    # ...then the head of the r10 cohort, in r10 driver-file order,
-    # filling the ~50-slot window (26 changed + 15 r9 + 9 r10 = 50).
-    # The r10 tail (from pagerank_neardup) leads round 17, then r11/r12.
-    "simhash64_neardup", "shard_rendezvous_stability", "kcenter_coreset",
-    "cms_frequency_audit", "embedding_centroid_drift", "video_scene_cuts",
-    "audio_silence_runs", "seasonal_naive_mase",
-]
-_ordered = {n: QUERIES[n] for n in _PRIORITY if n in QUERIES}
-_ordered.update({n: q for n, q in QUERIES.items() if n not in _ordered})
-QUERIES.clear()
-QUERIES.update(_ordered)
-
-__all__ = ["QUERIES", "ORACLES"]
+__all__ = ["QUERIES", "ORACLES", "CONTRACT_BATCHES", "family"]

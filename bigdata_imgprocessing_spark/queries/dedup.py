@@ -2753,7 +2753,7 @@ def minhash_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONLY through a hot bucket.
 
     Why the cap is the scale path: the r12 10M-doc measurement
-    (tools_scale_r12.py, SCALING.md) shows a natural corpus needs no
+    (SCALING.md, round 12) shows a natural corpus needs no
     cap (max bucket 3 at 10M docs — candidates stay linear), but ONE
     syndicated/boilerplate cohort concentrates ~70% of its docs on a
     single (band, bkey) per band — 14k-deep buckets at 1M docs, 4e8

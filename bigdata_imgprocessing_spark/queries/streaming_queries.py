@@ -559,6 +559,7 @@ def _sketch_rollup_feed(spark: SparkSession, sf_dir: str) -> str:
 
 @query(
     "streaming_sketch_rollup",
+    contract_batches=3,
     oracle="""
     WITH ud AS (
         SELECT DISTINCT user_id, date_trunc('day', ts) AS d FROM events
@@ -656,6 +657,7 @@ def _outer_join_feed(spark: SparkSession, sf_dir: str) -> str:
 
 @query(
     "streaming_outer_join",
+    contract_batches=3,
     oracle="""
     SELECT c.event_id AS click_id, p.event_id AS purchase_id,
            CAST(floor(epoch(date_trunc('second', p.ts))) -
@@ -798,6 +800,7 @@ def _ddww_feed(spark: SparkSession, sf_dir: str) -> str:
 
 @query(
     "streaming_dedup_within_watermark",
+    contract_batches=2,
     oracle="""
     SELECT event_type, count(*) AS n_events,
            round(sum(value), 2) AS sum_value
@@ -882,6 +885,7 @@ def _paragraph_ingest_feed(spark: SparkSession, sf_dir: str) -> str:
 
 @query(
     "streaming_lsh_ingest",
+    contract_batches=4,
     oracle=f"""
     WITH {_DUCK_PAIRS_CTES}
     SELECT greatest(doc_a % 4, doc_b % 4) AS wave,
@@ -951,6 +955,7 @@ def streaming_lsh_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "streaming_lsh_ingest_capped",
+    contract_batches=4,
     oracle=f"""
     WITH {_DUCK_PAIRS_CTES},
     wb AS (
@@ -1032,7 +1037,7 @@ def streaming_lsh_ingest_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the census semi-join reads the same band rows the probe
     join touches, folded to counts; per-batch cost is bounded by
     arrivals x cap instead of arrivals x hot-depth (measured in
-    tools_scale_r13.py against the streamed syndicated cohort:
+    SCALING.md, round 13, against the streamed syndicated cohort:
     capped beats uncapped already at 200k docs, 47 vs 67 s, while
     cutting 7.26M quadratic cohort pairs to the 2,006 real ones).
     Residue routing needs NO extra state: bucket depth is MONOTONE
@@ -1119,6 +1124,7 @@ def _decontam_ingest_feed(spark: SparkSession, sf_dir: str) -> str:
 
 @query(
     "streaming_decontam_ingest",
+    contract_batches=3,
     oracle="""
     WITH assigned AS (
         SELECT doc_id, lang, string_split(text, ' ') AS toks,
@@ -1259,6 +1265,7 @@ def _ewma_feed(spark: SparkSession, sf_dir: str) -> str:
 
 @query(
     "streaming_quota_admission",
+    contract_batches=3,
     oracle="""
     WITH r AS (
         SELECT user_id, value,
@@ -1351,7 +1358,11 @@ def _simhash64_ingest_oracle() -> str:
     """
 
 
-@query("streaming_simhash_ingest", oracle=_simhash64_ingest_oracle())
+@query(
+    "streaming_simhash_ingest",
+    contract_batches=3,
+    oracle=_simhash64_ingest_oracle(),
+)
 def streaming_simhash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup detection as a CONTINUOUS ingest loop — the
     fingerprint-space sibling of `streaming_lsh_ingest` and the
@@ -1406,6 +1417,7 @@ def streaming_simhash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "streaming_ewma_anomaly",
+    contract_batches=3,
     oracle="""
     WITH ordered AS (
         SELECT event_type, value,
@@ -1470,6 +1482,7 @@ def streaming_ewma_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "streaming_paragraph_ingest",
+    contract_batches=4,
     oracle=f"""
     WITH w AS (
         SELECT doc_id, string_split(text, ' ') AS ws,
@@ -1573,6 +1586,7 @@ def _ivf_ingest_feed(spark: SparkSession, sf_dir: str) -> str:
 
 @query(
     "streaming_ivf_assign_ingest",
+    contract_batches=4,
     oracle="""
     WITH flat AS (
         SELECT label, i AS pos, embedding[i+1]::DOUBLE AS x

@@ -259,51 +259,6 @@ def test_backfill_overwrites_only_target_partition(spark, sf_dir):
     assert "PartitionFilters" in plan and "day" in plan
 
 
-def test_priority_rotation_names_valid():
-    """_PRIORITY drives which queries get driver CORRECTNESS rows this
-    round; a typo'd or stale name silently drops a front-loaded query
-    from the window (the rotation bug class). Every name must resolve
-    to a registered query, be unique, and actually lead the registry
-    iteration order."""
-    import bigdata_imgprocessing_spark.queries as q
-
-    names = q._PRIORITY
-    assert len(names) == len(set(names)), "duplicate _PRIORITY entries"
-    missing = [n for n in names if n not in q.QUERIES]
-    assert not missing, f"_PRIORITY names not registered: {missing}"
-    assert list(q.QUERIES)[: len(names)] == names, (
-        "registry iteration order must start with _PRIORITY"
-    )
-
-
-def test_bench_headline_names_valid_and_cover_new_queries():
-    """bench.py's HEADLINE list is the driver's perf surface; a typo'd
-    name raises at bench time (lost round signal) and a NEW query
-    missing from it silently never gets benchmarked. Every HEADLINE
-    name must resolve to a registered query, be unique, and every
-    front-loaded new query (the head of _PRIORITY before the stale
-    cohorts) must be benchmarked."""
-    import importlib.util
-    import os
-
-    import bigdata_imgprocessing_spark.queries as q
-
-    spec = importlib.util.spec_from_file_location(
-        "bench",
-        os.path.join(os.path.dirname(__file__), os.pardir, "bench.py"),
-    )
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
-    names = bench.HEADLINE
-    assert len(names) == len(set(names)), "duplicate HEADLINE entries"
-    missing = [n for n in names if n not in q.QUERIES]
-    assert not missing, f"HEADLINE names not registered: {missing}"
-    headline = set(names)
-    # contract lists must stay consistent too
-    stray = [n for n in bench.MULTI_BATCH_CONTRACT if n not in headline]
-    assert not stray, f"MULTI_BATCH_CONTRACT not in HEADLINE: {stray}"
-
-
 def test_bench_compare_adjudication(tmp_path, capsys):
     """bench.py --compare: the drift-vs-regression table from recorded
     per-query mins — common-subset ratio, added/removed sets, and only
@@ -357,3 +312,136 @@ def test_ingest_loops_use_the_skeleton():
         if banned.search(line)
     ]
     assert hits == []
+
+
+def test_repo_root_keeps_only_the_doc_generator_tools():
+    """bench.py is the one measurement tool: the only tools_*.py scripts
+    left at the repo root write tracked docs."""
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    tools = sorted(p.name for p in root.glob("tools_*.py"))
+    assert tools == ["tools_gen_plans.py", "tools_gen_querydoc.py"]
+
+
+def test_registry_derives_bench_query_sets():
+    """The streaming set is the streaming_queries family and the
+    by-contract set is contract_batches > 1; bench keeps no name lists."""
+    from bigdata_imgprocessing_spark.queries import CONTRACT_BATCHES, QUERIES, family
+
+    assert set(CONTRACT_BATCHES) == set(QUERIES)
+    streaming = {n for n in QUERIES if family(n) == "streaming_queries"}
+    assert streaming == {n for n in QUERIES if n.startswith("streaming_")}
+    contract = {n for n, k in CONTRACT_BATCHES.items() if k > 1}
+    assert contract and contract <= streaming
+
+
+def _fake_session():
+    """Stands in for a SparkSession with 3 cores."""
+    from types import SimpleNamespace
+
+    return SimpleNamespace(
+        sparkContext=SimpleNamespace(defaultParallelism=3), stop=lambda: None
+    )
+
+
+def _fake_bench(monkeypatch, tmp_path, sf_dir):
+    """bench.py with its Spark calls replaced, detail files under tmp_path."""
+    import bench
+
+    monkeypatch.setattr(bench, "HERE", str(tmp_path))
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", sf_dir)
+    monkeypatch.setattr(bench, "session", _fake_session)
+    monkeypatch.setattr(bench, "warm_up", lambda spark, sf_dir: None)
+    monkeypatch.setattr(bench, "run_once", lambda spark, name, fn, sf_dir: (0.5, 2))
+    return bench
+
+
+def test_bench_query_selection(monkeypatch, tmp_path, capsys):
+    """An unknown name exits non-zero and lists the names before any
+    session starts; a run over named queries leaves the baseline files
+    alone and prints its detail instead."""
+    import json as _json
+
+    bench = _fake_bench(monkeypatch, tmp_path, "/data/sf0.1")
+    monkeypatch.setattr(bench, "session", lambda: pytest.fail("session started"))
+    with pytest.raises(SystemExit) as exc:
+        bench.main(["pricing_summary", "pricing_sumary", "nope"])
+    assert exc.value.code == "bench: unknown queries: pricing_sumary, nope"
+
+    monkeypatch.setattr(bench, "session", _fake_session)
+    bench.main(["pricing_summary", "streaming_lsh_ingest"])
+    assert list(tmp_path.iterdir()) == []
+    detail, summary = map(_json.loads, capsys.readouterr().out.splitlines())
+    assert detail["queries"] == {"pricing_summary": 0.5, "streaming_lsh_ingest": 0.5}
+    assert detail["jobs"]["pricing_summary"] == [2, 2]
+    assert detail["streaming_queries"] == ["streaming_lsh_ingest"]
+    assert detail["by_contract_queries"] == ["streaming_lsh_ingest"]
+    assert summary["detail"] is None and summary["n_queries"] == 2
+
+
+def test_bench_run_metadata(monkeypatch, tmp_path):
+    """sf comes from an sfN directory name (null otherwise, never a
+    ValueError after the timed pass) and ncpus is the session's cores."""
+    import json as _json
+
+    import bench
+
+    assert bench.parse_sf("/data/testdata/sf0.1") == 0.1
+    assert bench.parse_sf("/data/testdata/sf10/") == 10.0
+    assert bench.parse_sf("/data/tpch") is None
+    assert bench.parse_sf("/data/sf0.1_copy") is None
+
+    monkeypatch.setattr(bench, "select", lambda names: ["pricing_summary"])
+    bench = _fake_bench(monkeypatch, tmp_path, "/data/tpch")
+    bench.main([])
+    detail = _json.loads((tmp_path / "BENCH_DETAIL_c3.json").read_text())
+    assert detail["sf"] is None and detail["ncpus"] == 3
+    assert (tmp_path / "BENCH_DETAIL.json").read_text() == (
+        tmp_path / "BENCH_DETAIL_c3.json"
+    ).read_text()
+
+
+def test_bench_runs_each_query_under_its_job_group(spark, sf_dir):
+    """Every job a timed run starts carries the query's job group, and
+    the reported job count is that group's new jobs."""
+    import bench
+    from bigdata_imgprocessing_spark.queries import QUERIES
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    keys = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+    saved = {k: sc.getLocalProperty(k) for k in keys}
+
+    def fence(group):
+        sc.setJobGroup(group, group)
+        spark.range(1).count()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return tracker.getJobIdsForGroup(group)
+
+    try:
+        name = "pricing_summary"
+        before = set(tracker.getJobIdsForGroup(name))
+        lo = max(fence("bench-fence-before"))
+        _, n_jobs = bench.run_once(spark, name, QUERIES[name], sf_dir)
+        hi = min(fence("bench-fence-after"))
+    finally:
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)
+    grouped = set(tracker.getJobIdsForGroup(name)) - before
+    assert n_jobs == len(grouped) >= 1
+    assert set(range(lo + 1, hi)) == grouped
+
+
+def test_bench_ab_loader_builds_a_second_registry(tmp_path):
+    """--ab loads git HEAD's package under a second top-level name with
+    its own registry holding the same query names."""
+    import bench
+    from bigdata_imgprocessing_spark.queries import QUERIES
+
+    ref = bench.load_ref("HEAD", str(tmp_path))
+    assert ref is not QUERIES
+    assert sorted(ref) == sorted(QUERIES)
+    fn = ref["pricing_summary"]
+    assert fn.__module__.startswith(bench.REF_PACKAGE + ".")
+    assert fn is not QUERIES["pricing_summary"]

@@ -110,12 +110,3 @@ def test_all_queries_have_entries():
     # queries graduated to hash-checked tolerance bounds — none left)
     allowed_weak: set[str] = set()
     assert missing_oracle <= allowed_weak, f"queries missing oracles: {missing_oracle}"
-
-
-def test_priority_list_names_exist():
-    """Every _PRIORITY entry must name a registered query — a typo here
-    silently drops a query from the driver's check order."""
-    from bigdata_imgprocessing_spark.queries import QUERIES, _PRIORITY
-
-    missing = [n for n in _PRIORITY if n not in QUERIES]
-    assert not missing, f"_PRIORITY names not registered: {missing}"
