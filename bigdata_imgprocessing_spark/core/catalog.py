@@ -7,13 +7,13 @@ ingest live in ``sources``/``images`` as ingest formats, not storage.
 
 from __future__ import annotations
 
-import os
 import re
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from . import fs
 
 TABLES = (
     "region",
@@ -90,16 +90,16 @@ def bucketed_table(
     by (sf_dir, table, key, buckets) so distinct scale factors coexist;
     repeat calls reuse the existing table (write-once, read-many).
     """
+    # the fs.store_root token fingerprints the source tables, so a
+    # regenerated testdata dir maps to a NEW table name instead of
+    # reattaching stale bucketed data
     token = re.sub(r"\W+", "_", sf_dir).strip("_")
-    # fingerprint the source parquet so a regenerated testdata dir maps
-    # to a NEW table name instead of reattaching stale bucketed data
-    st = os.stat(f"{sf_dir}/{name}.parquet")
-    src = f"{st.st_mtime_ns:x}{st.st_size:x}"[-10:]
-    tbl = f"bkt_{token}_{name}_v{src}_by_{key}_{buckets}b"
+    prefix = f"bkt_{token}_{name}_by_{key}_{buckets}b"
+    tbl = fs.store_root(spark, sf_dir, prefix).rsplit("/", 1)[1]
     if not spark.catalog.tableExists(tbl):
-        wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-        loc = os.path.join(wh, tbl)
-        if os.path.exists(os.path.join(loc, "_SUCCESS")):
+        wh = spark.conf.get("spark.sql.warehouse.dir")
+        loc = f"{wh}/{tbl}"
+        if fs.landed(spark, loc):
             # complete bucketed data from a previous session: the default
             # in-memory catalog forgot the table, but the files + bucket
             # layout are valid — REATTACH via an external table with the
@@ -121,20 +121,14 @@ def bucketed_table(
             # Also garbage-collect superseded versions of the same table
             # (older source fingerprints) so the warehouse doesn't grow
             # one copy per testdata regeneration.
-            import glob as _glob
-
-            for old in _glob.glob(
-                os.path.join(wh, f"bkt_{token}_{name}_v*_by_{key}_{buckets}b")
-            ):
-                if os.path.basename(old) != tbl:
+            for old in fs.glob(spark, f"{wh}/{prefix}_*"):
+                old_tbl = old.rsplit("/", 1)[1]
+                if old_tbl != tbl:
                     # drop the catalog entry FIRST so a registered table
                     # never points at files we are about to delete
-                    spark.sql(
-                        f"DROP TABLE IF EXISTS `{os.path.basename(old)}`"
-                    )
-                    shutil.rmtree(old, ignore_errors=True)
-            if os.path.exists(loc):
-                shutil.rmtree(loc)
+                    spark.sql(f"DROP TABLE IF EXISTS `{old_tbl}`")
+                    fs.delete(spark, old)
+            fs.delete(spark, loc)
             table(spark, sf_dir, name).write.bucketBy(buckets, key).sortBy(
                 key
             ).option("path", loc).saveAsTable(tbl)

@@ -21,12 +21,26 @@ iterative-algorithm failure mode on Spark). Convergence is detected
 by the per-round sum of labels: labels only ever decrease, so the
 sum is strictly monotone while anything changes — one tiny agg over
 the just-checkpointed partitions instead of an old-vs-new join.
+
+Size switch: a graph of at most ``LOCAL_EDGES`` symmetric edges (exact
+count of the checkpointed edge set) is closed by union-find on the
+driver instead; the module logger records which path ran and why.
 """
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+_log = logging.getLogger(__name__)
+
+#: symmetric-edge count at or below which the closure runs as union-find
+#: on the driver (1M edges ~ tens of MB collected — bounded driver
+#: traffic; a 100 TB near-dup graph exceeds it and never collects).
+#: Tests patch it to force the distributed path.
+LOCAL_EDGES = 1_000_000
 
 
 def connected_components(
@@ -71,14 +85,14 @@ def connected_components(
     # graph ran SEVEN rounds x several jobs each (~66 jobs/run, the
     # query's dominant cost at sf0.1). Union-find computes the
     # identical (node, comp = min node id) labeling in microseconds.
-    # The distributed loop below is unchanged and takes over past the
-    # threshold (env SPARK_GRAFT_CC_LOCAL_EDGES, default 1M symmetric
-    # edges ~ tens of MB collected — bounded driver traffic; a 100 TB
-    # near-dup graph exceeds it and never collects).
-    import os as _os
-
-    local_max = int(_os.environ.get("SPARK_GRAFT_CC_LOCAL_EDGES", 1_000_000))
-    if n_edges <= local_max:
+    # The distributed loop below is unchanged and takes over past
+    # LOCAL_EDGES.
+    local = n_edges <= LOCAL_EDGES
+    _log.info(
+        "connected_components %s path: %d symmetric edges, local at <= %d",
+        "local" if local else "distributed", n_edges, LOCAL_EDGES,
+    )
+    if local:
         rows = sym.collect()
         parent: dict = {}
 

@@ -22,20 +22,26 @@ with no data-sized single partition anywhere:
 Round 15 built this restructure, proved it hash-identical at 3 SFs,
 and measured it 2-4x SLOWER at driver sf — the extra dependent stage
 waves dominate frames this small (OPTIMIZATION_r15.md "Rejected with
-measurements", in git history at 752fc5a). It is therefore wired behind a SIZE SWITCH (VERDICT
-r15 item 6): the monitors keep the measured-faster window form below
-``SPARK_GRAFT_RANK_PREFIX_BYTES`` (default 2 GiB) of input parquet and
-switch to this form above it, where the single-partition sort stalls.
-Both forms produce bit-identical statistics (the doubled-rank identity
-keeps every intermediate an exact integer; tests pin equality).
+measurements", in git history at 752fc5a). It is therefore wired
+behind a SIZE SWITCH (VERDICT r15 item 6): ``use_prefix_ranks`` keeps
+the monitors on the measured-faster window form below
+``PREFIX_BYTES`` (2 GiB) of scanned input, by Spark's own size
+estimate of the frame, and switches to this form at or above it, where
+the single-partition sort stalls; an unknown size counts as large. A
+deployment with another crossover edits the constant (tests patch it).
+Both forms produce bit-identical statistics, NULLs included (the
+doubled-rank identity keeps every intermediate an exact integer; tests
+pin equality).
 """
 
 from __future__ import annotations
 
-import os
+import logging
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+_log = logging.getLogger(__name__)
 
 #: bucket count B for the two-level prefix: the offsets window and the
 #: broadcast join are bounded by B rows regardless of data volume; the
@@ -44,34 +50,24 @@ PREFIX_BUCKETS = 8192
 
 #: input-bytes crossover: below this the window form wins (measured at
 #: driver sf — stage-wave-bound); above it the fact-sized single
-#: partition is the bottleneck and the prefix form must take over. The
-#: local default keeps every test-SF plan on the window form; a cluster
-#: deployment sets the env to its measured crossover.
-DEFAULT_PREFIX_BYTES = 2 << 30
+#: partition is the bottleneck and the prefix form must take over. It
+#: keeps every test-SF plan on the window form.
+PREFIX_BYTES = 2 << 30
 
 
-def _input_bytes(sf_dir: str, table: str) -> int:
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    if os.path.isdir(path):
-        return sum(
-            os.path.getsize(os.path.join(d, f))
-            for d, _dirs, files in os.walk(path)
-            for f in files
-        )
-    try:
-        return os.path.getsize(path)
-    except OSError:
-        return 0
-
-
-def use_prefix_ranks(sf_dir: str, table: str) -> bool:
-    """True when ``table``'s parquet exceeds the rank-prefix crossover
-    (``SPARK_GRAFT_RANK_PREFIX_BYTES``, default 2 GiB) — a zero-job,
-    deterministic size estimate from the file footprint itself."""
-    thr = int(
-        os.environ.get("SPARK_GRAFT_RANK_PREFIX_BYTES", DEFAULT_PREFIX_BYTES)
+def use_prefix_ranks(scan: DataFrame) -> bool:
+    """True when Spark's size estimate of the scanned frame ``scan`` is
+    at least ``PREFIX_BYTES`` — a zero-job estimate from the file index
+    of its relation, whatever its storage URI. An unknown size is
+    Long.MaxValue, so it plans the prefix form."""
+    stats = scan._jdf.queryExecution().optimizedPlan().stats()
+    size = int(str(stats.sizeInBytes()))
+    prefix = size >= PREFIX_BYTES
+    _log.info(
+        "rank %s form: input %d bytes, prefix at >= %d",
+        "prefix" if prefix else "window", size, PREFIX_BYTES,
     )
-    return _input_bytes(sf_dir, table) >= thr
+    return prefix
 
 
 def doubled_tie_ranks(
@@ -82,7 +78,7 @@ def doubled_tie_ranks(
     one-row-per-distinct-value frame ``pv`` carrying multiplicity
     ``count_col``; no data-sized single partition (module docstring).
     ``dr = 2*cnt_lt + c + 1`` where cnt_lt counts rows with a strictly
-    smaller value."""
+    smaller value; NULL ranks first, as ``rank()`` orders it."""
     v, c = F.col(value_col), F.col(count_col)
     stats = pv.agg(
         F.min(value_col).alias("_lo"), F.max(value_col).alias("_hi")
@@ -91,8 +87,10 @@ def doubled_tie_ranks(
     # equal-width bucket id, clamped into [0, B-1]; floor of a monotone
     # float map is monotone, and ties land in one bucket — only the
     # ORDER of buckets matters, not their balance (skew inside a bucket
-    # is one partitioned-window partition, never a global sort)
-    b = F.when(span > 0, F.least(
+    # is one partitioned-window partition, never a global sort). NULL
+    # takes bucket -1, ahead of every value (least() would skip it and
+    # send it to the last bucket).
+    b = F.when(v.isNull(), F.lit(-1)).when(span > 0, F.least(
         F.floor((v - F.col("_lo")) / (span / n_buckets)).cast("int"),
         F.lit(n_buckets - 1),
     )).otherwise(F.lit(0))

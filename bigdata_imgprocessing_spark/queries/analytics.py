@@ -1527,8 +1527,8 @@ def mannwhitney_price_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie_term = sum(c^3 - c) stays far inside int64 (c <= corpus rows).
 
     Scale: SIZE-CONDITIONAL rank pass (r16, VERDICT r15 item 6). Below
-    the rank-prefix crossover (operators/ranks.py — default 2 GiB of
-    input parquet) the measured-faster window form runs: one global
+    the rank-prefix crossover (operators/ranks.py — 2 GiB of scanned
+    input) the measured-faster window form runs: one global
     rank (a total sort), tie sizes riding the same sorted run, then a
     single scalar aggregate; the r15 interleaved measurement (2.5 s vs
     1.1 s at sf0.1) showed the restructure's extra stage waves dominate
@@ -1549,7 +1549,7 @@ def mannwhitney_price_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     grp = F.when(
         F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1
     ).otherwise(0)
-    if use_prefix_ranks(sf_dir, "orders"):
+    if use_prefix_ranks(o):
         pv = o.groupBy(F.col("o_totalprice").alias("v")).agg(
             F.count("*").alias("c"), F.sum(grp).alias("c1")
         )
@@ -1835,7 +1835,7 @@ def spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem")
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
 
-    if use_prefix_ranks(sf_dir, "lineitem"):
+    if use_prefix_ranks(li):
         # SIZE-CONDITIONAL rank pass (r16, operators/ranks.py — see
         # mannwhitney_price_shift): one doubled-rank map per measure
         # (groupBy distinct value + bounded two-level prefix, no
@@ -2407,7 +2407,7 @@ def kruskal_wallis_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_utc(spark)
     o = table(spark, sf_dir, "orders")
     dd = "decimal(38,0)"
-    if use_prefix_ranks(sf_dir, "orders"):
+    if use_prefix_ranks(o):
         # SIZE-CONDITIONAL rank pass (r16, VERDICT r15 item 6 — see
         # mannwhitney_price_shift): per-(price, tier) counts, doubled
         # tie-averaged rank per distinct price from the bounded

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..core import fs
 from ..core.catalog import table
 from ..core.registry import query
 from ..functions.helpers import ordered_pairs
@@ -326,10 +327,10 @@ def _fingerprinted_store(
     this pattern existed as four inline copies, each independently
     responsible for the two safety rules). The rules, centralized:
 
-    1. the token fingerprints the CONSUMED table (mtime+size of
-       documents.parquet), so a regenerated corpus rebuilds instead of
-       reading stale rows (the r4 advisor lesson);
-    2. ``version`` must be BUMPED whenever the derivation code
+    1. the path is ``core/fs.store_root``'s, whose token fingerprints
+       every table of the corpus, so a regenerated corpus rebuilds
+       instead of reading stale rows (the r4 advisor lesson);
+    2. ``version`` is part of the store name and must be BUMPED whenever the derivation code
        changes — the fingerprint cannot see code, so a stale-version
        store on a long-lived machine would otherwise serve old rows
        while fresh-start CI passes.
@@ -360,15 +361,8 @@ def _fingerprinted_store(
     it from scratch — an expensive build like ``_lsh_verified_pairs``
     paid ~2x on every first landing. ``schema`` optionally pins the
     read schema (skips footer inference for fixed layouts)."""
-    import hashlib as _h
-    import os as _os
-
-    st = _os.stat(f"{sf_dir}/documents.parquet")
-    token = _h.md5(
-        f"{sf_dir}|{st.st_mtime_ns}|{st.st_size}|{version}".encode()
-    ).hexdigest()[:12]
-    path = f"/tmp/bdip_{name}_{token}"
-    if not _os.path.exists(_os.path.join(path, "_SUCCESS")):
+    path = fs.store_root(spark, sf_dir, f"bdip_{name}_{version}")
+    if not fs.landed(spark, path):
         df = build().persist()
         try:
             width = max(4, min(df.count() // 500_000 + 1, 4096))

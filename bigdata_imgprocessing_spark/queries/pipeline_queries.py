@@ -29,68 +29,19 @@ division keep the averages order-independent (exact parity).
 
 from __future__ import annotations
 
-import hashlib
-import os
-
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..core import fs
 from ..core.catalog import bucketed_table, table
 from ..core.registry import query
-from ..images.codec import encode_image
 from ..images.color import average_color_udf
 from ..images.detect import SCORE_THRESHOLD, detect_udf
 from ..sources.csv_io import read_semicolon_csv, write_semicolon_csv
+from ..sources.fimg_source import materialize_corpus
 
 _N_IMGS = 200  # bounded corpus slice — identical at every SF
 _CLASS = 16  # class-of-interest, mirroring pyspark_stats.py:69 "dog"
-
-
-def _root_dir(sf_dir: str) -> str:
-    """Per-(corpus-version) cache root: the token fingerprints EVERY
-    source parquet in the sf_dir (mtime+size of each), so regenerating
-    ANY table — not just embeddings — gives a FRESH cache instead of
-    stale materialized bytes (the cached corpus / Z-order layout /
-    corrupt-JSONL fixtures derive from embeddings, events, and
-    documents respectively)."""
-    parts = [sf_dir]
-    for name in sorted(os.listdir(sf_dir)):
-        if name.endswith(".parquet"):
-            st = os.stat(os.path.join(sf_dir, name))
-            parts.append(f"{name}|{st.st_mtime_ns}|{st.st_size}")
-    token = hashlib.md5("||".join(parts).encode()).hexdigest()[:12]
-    return f"/tmp/bdip_pipeline_{token}"
-
-
-def _materialize_corpus(spark: SparkSession, sf_dir: str) -> str:
-    """Write the FIMG corpus slice executor-side (idempotent: file bytes
-    are a pure function of the embeddings row; atomic rename per file)."""
-    img_dir = os.path.join(_root_dir(sf_dir), "images")
-    os.makedirs(img_dir, exist_ok=True)
-    e = (
-        table(spark, sf_dir, "embeddings")
-        .where(F.col("vec_id") < _N_IMGS)
-        .select("vec_id", "embedding")
-    )
-    # write-once: file bytes are a pure function of the (sf_dir-keyed)
-    # embeddings rows, so a complete corpus dir needs no rewrite
-    expected = e.count()
-    if len([f for f in os.listdir(img_dir) if f.endswith(".fimg")]) == expected:
-        return img_dir
-
-    def write_part(rows):
-        for r in rows:
-            v = np.asarray(r.embedding[:12], dtype=np.float64) * 1000.0
-            px = (np.abs(v.astype(np.int64)) % 256).astype(np.uint8).reshape(2, 2, 3)
-            path = os.path.join(img_dir, f"img{r.vec_id}.fimg")
-            tmp = f"{path}.{os.getpid()}.tmp"
-            with open(tmp, "wb") as f:
-                f.write(encode_image(px))
-            os.replace(tmp, path)
-
-    e.foreachPartition(write_part)
-    return img_dir
 
 
 def _duck_px(i: int) -> str:  # 1-based embedding index
@@ -136,7 +87,12 @@ def stats_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim join + first-letter grouped stats (J1/F1/A1-A3) → ``;``-CSV
     write (K1) → schema'd CSV re-read (S2). The RETURNED frame is the
     CSV re-read, so the sink format is inside the checked hash."""
-    img_dir = _materialize_corpus(spark, sf_dir)
+    img_dir = materialize_corpus(
+        table(spark, sf_dir, "embeddings")
+        .where(F.col("vec_id") < _N_IMGS)
+        .select("vec_id", "embedding"),
+        fs.store_root(spark, sf_dir, "bdip_fimg_corpus"),
+    )
 
     imgs = (
         spark.read.format("binaryFile")
@@ -187,7 +143,7 @@ def stats_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.sum("pixsum") / (12.0 * F.count("*")), 4).alias("avg_brightness"),
     )
 
-    out = os.path.join(_root_dir(sf_dir), "stats_out")
+    out = fs.store_root(spark, sf_dir, "bdip_stats_out")
     write_semicolon_csv(stat, out)
     return read_semicolon_csv(
         spark,
@@ -251,7 +207,7 @@ def jsonl_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     — both ends scale linearly; the aggregation is one low-cardinality
     shuffle."""
     d = table(spark, sf_dir, "documents").select("doc_id", "lang", "source", "text")
-    out = os.path.join(_root_dir(sf_dir), "docs_jsonl")
+    out = fs.store_root(spark, sf_dir, "bdip_docs_jsonl")
     d.write.mode("overwrite").json(out)
     back = spark.read.schema(
         "doc_id bigint, lang string, source string, text string"
@@ -288,7 +244,7 @@ def report_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     lines = agg.select(
         F.concat_ws(";", "priority", "n_orders", "sum_price").alias("value")
     )
-    out = os.path.join(_root_dir(sf_dir), "report_text")
+    out = fs.store_root(spark, sf_dir, "bdip_report_text")
     from ..sources.csv_io import write_single_text
 
     write_single_text(lines, out)
@@ -369,7 +325,7 @@ def cached_predictions_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").alias("cnt"))
         )
 
-    path = os.path.join(_root_dir(sf_dir), "cached_predictions.parquet")
+    path = fs.store_root(spark, sf_dir, "bdip_cached_predictions")
     counted = read_or_compute(spark, path, compute)
     return counted.groupBy("class_id").agg(
         F.sum("cnt").alias("n_detections"),
@@ -443,7 +399,7 @@ def orc_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
-    out = os.path.join(_root_dir(sf_dir), "events_orc")
+    out = fs.store_root(spark, sf_dir, "bdip_events_orc")
     e.write.mode("overwrite").orc(out)
     back = spark.read.orc(out)
     return back.groupBy("event_type").agg(
@@ -478,7 +434,7 @@ def xml_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    out = os.path.join(_root_dir(sf_dir), "docs_xml")
+    out = fs.store_root(spark, sf_dir, "bdip_docs_xml")
     d.write.mode("overwrite").option("rowTag", "doc").format("xml").save(out)
     back = spark.read.option("rowTag", "doc").schema(
         "doc_id bigint, text string, lang string, source string, n_chars bigint"
@@ -518,12 +474,12 @@ def compaction_file_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    frag_dir = os.path.join(_root_dir(sf_dir), "docs_fragmented")
-    compact_dir = os.path.join(_root_dir(sf_dir), "docs_compacted")
+    frag_dir = fs.store_root(spark, sf_dir, "bdip_docs_fragmented")
+    compact_dir = fs.store_root(spark, sf_dir, "bdip_docs_compacted")
     d.repartition(64).write.mode("overwrite").parquet(frag_dir)
 
     def _n_parts(path: str) -> int:
-        return len([f for f in os.listdir(path) if f.endswith(".parquet")])
+        return len(fs.glob(spark, f"{path}/*.parquet"))
 
     frag = spark.read.parquet(frag_dir)
     (
@@ -577,8 +533,8 @@ def zorder_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", F.unix_timestamp("ts").alias("ts_sec")
     )
-    zdir = os.path.join(_root_dir(sf_dir), "events_zorder_v2")
-    if not os.path.exists(os.path.join(zdir, "_SUCCESS")):
+    zdir = fs.store_root(spark, sf_dir, "bdip_events_zorder_v2")
+    if not fs.landed(spark, zdir):
         write_zordered(ev, zdir, "user_id", "ts_sec", n_files=16)
     z = spark.read.parquet(zdir)
     b = ev.agg(
@@ -626,8 +582,8 @@ def jsonl_corrupt_handling(spark: SparkSession, sf_dir: str) -> DataFrame:
     corrupted = F.when(
         F.col("doc_id") % 13 == 0, F.substring(line, 1, 10)
     ).otherwise(line)
-    out = os.path.join(_root_dir(sf_dir), "docs_jsonl_corrupt")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+    out = fs.store_root(spark, sf_dir, "bdip_docs_jsonl_corrupt")
+    if not fs.landed(spark, out):
         d.select(corrupted.alias("value")).write.mode("overwrite").text(out)
     back = spark.read.schema("doc_id bigint, lang string, text string").option(
         "mode", "PERMISSIVE"
@@ -710,7 +666,7 @@ def user_erasure_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     erased = e.join(
         F.broadcast(victims), e.user_id == victims.c_custkey, "left_anti"
     ).select("event_id", "user_id", "event_type", "value")
-    out = os.path.join(_root_dir(sf_dir), "events_erased")
+    out = fs.store_root(spark, sf_dir, "bdip_events_erased")
     erased.write.mode("overwrite").parquet(out)
     back = spark.read.parquet(out)
     return back.groupBy("event_type").agg(
@@ -815,14 +771,14 @@ def backfill_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..core.session import ensure_utc
 
     ensure_utc(spark)
-    out = os.path.join(_root_dir(sf_dir), "events_by_day")
+    out = fs.store_root(spark, sf_dir, "bdip_events_by_day")
     e = table(spark, sf_dir, "events").select(
         "user_id",
         "event_type",
         "value",
         F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
     )
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+    if not fs.landed(spark, out):
         e.write.partitionBy("day").mode("overwrite").parquet(out)
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
     try:
@@ -877,13 +833,13 @@ def dpp_partition_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..core.session import ensure_utc
 
     ensure_utc(spark)
-    out = os.path.join(_root_dir(sf_dir), "events_by_day_dpp")
+    out = fs.store_root(spark, sf_dir, "bdip_events_by_day_dpp")
     e = table(spark, sf_dir, "events").select(
         "event_type",
         "value",
         F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
     )
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+    if not fs.landed(spark, out):
         e.write.partitionBy("day").mode("overwrite").parquet(out)
     fact = spark.read.parquet(out)
     sel = (

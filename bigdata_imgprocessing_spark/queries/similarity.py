@@ -2191,7 +2191,7 @@ def roc_auc_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("label") < 5).cast("int").alias("pos"),
         score.alias("score"),
     )
-    if use_prefix_ranks(sf_dir, "embeddings"):
+    if use_prefix_ranks(e):
         pv = s.groupBy(F.col("score").alias("v")).agg(
             F.count("*").alias("c"), F.sum("pos").alias("c1")
         )

@@ -8,10 +8,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..core import fs
 from ..core.catalog import table
 from ..core.registry import query
 from ..core.session import ensure_utc
-from ..streaming.jobs import event_stream, run_to_memory
+from ..streaming.jobs import event_stream, file_feed_stream, run_to_memory
 from ..streaming.stateful import THRESHOLD, running_user_totals
 
 
@@ -212,48 +213,22 @@ def streaming_foreachbatch_counts(spark: SparkSession, sf_dir: str) -> DataFrame
     construction for non-transactional sinks), and the aggregation runs
     over the SINK's files re-read, so the oracle hash verifies the whole
     write path, not just the stream."""
-    import hashlib as _h
-    import os as _os
-    import shutil as _sh
-
     from ..streaming.jobs import run_foreachbatch_parquet
 
     ensure_utc(spark)
-    # Token fingerprints the source file (mtime+size, like
-    # pipeline_queries._root_dir): regenerated testdata gets a fresh sink
-    # dir. Belt-and-braces: also clear the dir before draining, so stale
-    # batch=* dirs from a prior run with different micro-batch
-    # segmentation can never pollute the glob re-read (ADVICE r2).
-    st = _os.stat(f"{sf_dir}/events.parquet")
-    token = _h.md5(
-        f"{sf_dir}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    out = f"/tmp/bdip_fob_{token}"
-    _sh.rmtree(out, ignore_errors=True)
+    # the store root fingerprints the corpus: regenerated testdata gets
+    # a fresh sink dir. Belt-and-braces: also clear the dir before
+    # draining, so stale batch=* dirs from a prior run with different
+    # micro-batch segmentation can never pollute the re-read (ADVICE r2).
+    out = fs.store_root(spark, sf_dir, "bdip_fob")
+    fs.delete(spark, out)
     s = event_stream(spark, sf_dir).select("event_type", "user_id")
     run_foreachbatch_parquet(s, out)
-    back = spark.read.parquet(*[
-        f"{out}/{d}" for d in _os.listdir(out) if d.startswith("batch=")
-    ])
+    back = spark.read.parquet(*fs.glob(spark, f"{out}/batch=*"))
     return back.groupBy("event_type").agg(
         F.count("*").alias("n_events"),
         F.count_distinct("user_id").alias("n_users"),
     )
-
-
-def _fingerprinted_tmp(sf_dir: str, prefix: str, src: str = "events") -> str:
-    """Per-corpus-version /tmp dir: token = source mtime+size, so
-    regenerated testdata never reads a stale sink. ``src`` is the table
-    the feed is actually staged from (fingerprint what you consume —
-    a documents-only scale corpus has no events.parquet)."""
-    import hashlib as _h
-    import os as _os
-
-    st = _os.stat(f"{sf_dir}/{src}.parquet")
-    token = _h.md5(
-        f"{sf_dir}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    return f"/tmp/{prefix}_{token}"
 
 
 #: name -> feed-builder callable (spark, sf_dir) -> staged feed path.
@@ -281,36 +256,29 @@ def prestage_feeds(spark: SparkSession, sf_dir: str) -> list[str]:
     return [fn(spark, sf_dir) for fn in _FEED_BUILDERS.values()]
 
 
-def _stage_feed(root: str, parts: list) -> str:
+def _stage_feed(spark: SparkSession, root: str, parts: list) -> str:
     """Stage an ORDERED multi-batch file feed under ``root/feed``:
     ``parts`` is [(name, DataFrame), ...]; each frame writes to one
     parquet file whose mtime encodes its batch order (the file source
     with maxFilesPerTrigger=1 picks files in mtime order). Idempotent
-    via a _STAGED marker keyed by the fingerprinted root. Shared by
-    streaming_outer_join (real + two sentinel batches) and
-    streaming_dedup_within_watermark (corpus + duplicated subset)."""
-    import os as _os
-    import shutil as _sh
-
+    via the feed's _SUCCESS marker under the fingerprinted root. Shared
+    by streaming_outer_join (real + two sentinel batches),
+    streaming_dedup_within_watermark (corpus + duplicated subset) and
+    the wave feeds."""
     feed = f"{root}/feed"
-    if not _os.path.exists(_os.path.join(feed, "_STAGED")):
-        _sh.rmtree(feed, ignore_errors=True)
-        _os.makedirs(feed, exist_ok=True)
+    if not fs.landed(spark, feed):
+        fs.delete(spark, feed)
         tmp = f"{root}/stage"
         try:
-            t0 = 1_700_000_000
+            t0 = 1_700_000_000_000
             for i, (name, df) in enumerate(parts):
                 df.coalesce(1).write.mode("overwrite").parquet(f"{tmp}/{name}")
-                src = next(
-                    f for f in _os.listdir(f"{tmp}/{name}")
-                    if f.endswith(".parquet")
-                )
-                dst = _os.path.join(feed, f"{i}_{name}.parquet")
-                _sh.copyfile(_os.path.join(tmp, name, src), dst)
-                _os.utime(dst, (t0 + 60 * i, t0 + 60 * i))  # mtime = order
+                src = fs.glob(spark, f"{tmp}/{name}/*.parquet")[0]
+                # mtime = order
+                fs.move(spark, src, f"{feed}/{i}_{name}.parquet", t0 + 60_000 * i)
         finally:
-            _sh.rmtree(tmp, ignore_errors=True)
-        open(_os.path.join(feed, "_STAGED"), "w").close()
+            fs.delete(spark, tmp)
+        fs.mark_landed(spark, feed)
     return feed
 
 
@@ -393,14 +361,13 @@ def streaming_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge → state versioning. Newest = max (second-truncated ts,
     event_id), a total order shared with the oracle, so the answer is
     independent of micro-batch segmentation."""
-    import shutil as _sh
 
     from ..streaming.kafka_shaped import parse_kafka_wire, to_kafka_wire
     from ..streaming.upsert import read_final_state, run_foreachbatch_upsert
 
     ensure_utc(spark)
-    out = _fingerprinted_tmp(sf_dir, "bdip_upsert")
-    _sh.rmtree(out, ignore_errors=True)
+    out = fs.store_root(spark, sf_dir, "bdip_upsert")
+    fs.delete(spark, out)
     parsed = parse_kafka_wire(
         to_kafka_wire(event_stream(spark, sf_dir), n_partitions=4)
     )
@@ -516,7 +483,6 @@ def streaming_erasure_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast anti join + a partition-parallel rewrite; at 100 TB only
     victim-bearing partitions rewrite (the `user_erasure_audit` pass
     picks them)."""
-    import shutil as _sh
 
     from ..streaming.erasure import (
         init_state,
@@ -525,8 +491,8 @@ def streaming_erasure_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ensure_utc(spark)
-    out = _fingerprinted_tmp(sf_dir, "bdip_erasure")
-    _sh.rmtree(out, ignore_errors=True)
+    out = fs.store_root(spark, sf_dir, "bdip_erasure")
+    fs.delete(spark, out)
     e = table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
@@ -545,12 +511,10 @@ def streaming_erasure_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_feed("streaming_sketch_rollup")
 def _sketch_rollup_feed(spark: SparkSession, sf_dir: str) -> str:
-    import os as _os
-
     ensure_utc(spark)
-    root = _fingerprinted_tmp(sf_dir, "bdip_skst3")
+    root = fs.store_root(spark, sf_dir, "bdip_skst3")
     feed = f"{root}/feed"
-    if not _os.path.exists(_os.path.join(feed, "_SUCCESS")):
+    if not fs.landed(spark, feed):
         table(spark, sf_dir, "events").select(
             "user_id", F.date_trunc("day", "ts").alias("d")
         ).repartition(3).write.mode("overwrite").parquet(feed)
@@ -591,9 +555,6 @@ def streaming_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``sliding_users_sketch``). A test additionally asserts the drain
     really produced >1 state version (cross-batch merge exercised, not
     vacuously one-shot)."""
-    import os
-    import shutil as _sh
-
     from ..streaming.sketch_state import (
         read_final_sketches,
         run_sketch_maintenance,
@@ -607,16 +568,11 @@ def streaming_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # trigger/state-commit cycle — the result is slicing-invariant by
     # design (union-merge associativity), so the driver hash is
     # unchanged (VERDICT r8 item 6).
-    root = _fingerprinted_tmp(sf_dir, "bdip_skst3")
+    root = fs.store_root(spark, sf_dir, "bdip_skst3")
     feed = _sketch_rollup_feed(spark, sf_dir)
     state = f"{root}/state"
-    _sh.rmtree(state, ignore_errors=True)
-    schema = spark.read.parquet(feed).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
+    fs.delete(spark, state)
+    stream = file_feed_stream(spark, feed)
     run_sketch_maintenance(stream, state)
     sk = read_final_sketches(spark, state)
 
@@ -638,7 +594,7 @@ def streaming_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_feed("streaming_outer_join")
 def _outer_join_feed(spark: SparkSession, sf_dir: str) -> str:
     ensure_utc(spark)
-    root = _fingerprinted_tmp(sf_dir, "bdip_soj")
+    root = fs.store_root(spark, sf_dir, "bdip_soj")
     real = (
         table(spark, sf_dir, "events")
         .where(F.col("event_type").isin("click", "purchase"))
@@ -651,7 +607,7 @@ def _outer_join_feed(spark: SparkSession, sf_dir: str) -> str:
     ).select("event_id", "user_id", "event_type",
              F.to_timestamp("ts_s").alias("ts"))
     return _stage_feed(
-        root, [("real", real), ("sent1", sent), ("sent2", sent)]
+        spark, root, [("real", real), ("sent1", sent), ("sent2", sent)]
     )
 
 
@@ -693,13 +649,7 @@ def streaming_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     test-harness-only (a production feed keeps advancing on its own)."""
     ensure_utc(spark)
     feed = _outer_join_feed(spark, sf_dir)
-    schema = spark.read.parquet(feed).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
+    stream = file_feed_stream(spark, feed)
     clicks = (
         stream.where(F.col("event_type") == "click")
         .select(
@@ -789,12 +739,12 @@ def streaming_pysource_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_feed("streaming_dedup_within_watermark")
 def _ddww_feed(spark: SparkSession, sf_dir: str) -> str:
     ensure_utc(spark)
-    root = _fingerprinted_tmp(sf_dir, "bdip_ddww")
+    root = fs.store_root(spark, sf_dir, "bdip_ddww")
     e = table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "ts", "value"
     )
     return _stage_feed(
-        root, [("full", e), ("dups", e.where(F.col("user_id") % 5 == 0))]
+        spark, root, [("full", e), ("dups", e.where(F.col("user_id") % 5 == 0))]
     )
 
 
@@ -823,13 +773,7 @@ def streaming_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFr
     size is (keys within delay), not (all keys ever)."""
     ensure_utc(spark)
     feed = _ddww_feed(spark, sf_dir)
-    schema = spark.read.parquet(feed).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
+    stream = file_feed_stream(spark, feed)
     deduped = stream.withWatermark("ts", "40 days").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
@@ -848,10 +792,10 @@ def _doc_wave_feed(
 ) -> str:
     """Shared wave-feed staging for the document-ingest drains: the
     corpus sliced doc_id % n_waves into mtime-ordered files."""
-    root = _fingerprinted_tmp(sf_dir, prefix, src="documents")
+    root = fs.store_root(spark, sf_dir, prefix)
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
     return _stage_feed(
-        root,
+        spark, root,
         [
             (f"wave{i}", docs.where(F.col("doc_id") % n_waves == i))
             for i in range(n_waves)
@@ -923,21 +867,15 @@ def streaming_lsh_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     on (band, bkey) for bucket-local probes; per-batch writes are
     mode=overwrite per batch-id subdir, so task retries and batch
     replays are idempotent."""
-    import shutil as _sh
 
     from ..streaming.lsh_ingest import read_final_pairs, run_lsh_ingest
 
     ensure_utc(spark)
-    root = _fingerprinted_tmp(sf_dir, "bdip_lshing", src="documents")
+    root = fs.store_root(spark, sf_dir, "bdip_lshing")
     feed = _lsh_ingest_feed(spark, sf_dir)
     state = f"{root}/state"
-    _sh.rmtree(state, ignore_errors=True)
-    schema = spark.read.parquet(feed).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
+    fs.delete(spark, state)
+    stream = file_feed_stream(spark, feed)
     run_lsh_ingest(stream, state)
     pairs = read_final_pairs(spark, state)
     return pairs.groupBy("wave").agg(
@@ -1045,7 +983,6 @@ def streaming_lsh_ingest_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     index's over-cap buckets — `hot_bucket_rep_dedup` run over the
     landed band state IS the residue consumer, the same division of
     labor as the batch pair."""
-    import shutil as _sh
 
     from ..streaming.lsh_ingest import (
         read_acct,
@@ -1054,16 +991,11 @@ def streaming_lsh_ingest_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ensure_utc(spark)
-    root = _fingerprinted_tmp(sf_dir, "bdip_lshcap", src="documents")
+    root = fs.store_root(spark, sf_dir, "bdip_lshcap")
     feed = _lsh_capped_feed(spark, sf_dir)
     state = f"{root}/state"
-    _sh.rmtree(state, ignore_errors=True)
-    schema = spark.read.parquet(feed).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
+    fs.delete(spark, state)
+    stream = file_feed_stream(spark, feed)
     run_lsh_ingest(stream, state, max_bucket=2)
     pairs = read_final_pairs(spark, state)
     acct = read_acct(spark, state)
@@ -1095,18 +1027,17 @@ def streaming_lsh_ingest_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _decontam_ingest_feed(spark: SparkSession, sf_dir: str) -> str:
     """Stages BOTH decontam fixtures: the train-gram base index (the
     pinned pre-drain state) and the 3-wave test-doc feed."""
-    import os as _os
 
     from .curation import _md5_bucket, _wordgram_5h
 
     ensure_utc(spark)
-    root = _fingerprinted_tmp(sf_dir, "bdip_dci", src="documents")
+    root = fs.store_root(spark, sf_dir, "bdip_dci")
     d = table(spark, sf_dir, "documents")
     h = _md5_bucket(
         F.concat(F.col("doc_id").cast("string"), F.lit("_split")), 100
     )
     base_idx = f"{root}/base_idx"
-    if not _os.path.exists(_os.path.join(base_idx, "_SUCCESS")):
+    if not fs.landed(spark, base_idx):
         _wordgram_5h(d.where(h < 90)).select(
             "gram_h"
         ).distinct().repartition(4, "gram_h").write.mode("overwrite").parquet(
@@ -1114,7 +1045,7 @@ def _decontam_ingest_feed(spark: SparkSession, sf_dir: str) -> str:
         )
     test_docs = d.where(h >= 95).select("doc_id", "lang", "text")
     return _stage_feed(
-        root,
+        spark, root,
         [
             (f"w{i}", test_docs.where(F.col("doc_id") % 3 == i))
             for i in range(3)
@@ -1195,23 +1126,17 @@ def streaming_decontam_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     `decontam_bloom_prefilter` in front of it); the accumulated index
     is append-only parquet never re-joined against itself; per-batch
     writes are idempotent overwrite-per-batch-id subdirs."""
-    import shutil as _sh
 
     from ..streaming.decontam_ingest import read_results, run_decontam_ingest
     from .curation import _md5_bucket, _wordgram_5h
 
     ensure_utc(spark)
-    root = _fingerprinted_tmp(sf_dir, "bdip_dci", src="documents")
+    root = fs.store_root(spark, sf_dir, "bdip_dci")
     feed = _decontam_ingest_feed(spark, sf_dir)
     base_idx = f"{root}/base_idx"
     state = f"{root}/state"
-    _sh.rmtree(state, ignore_errors=True)
-    schema = spark.read.parquet(feed).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
+    fs.delete(spark, state)
+    stream = file_feed_stream(spark, feed)
     run_decontam_ingest(stream, state, base_idx)
     res = read_results(spark, state)
     return res.groupBy("wave", "lang").agg(
@@ -1231,12 +1156,12 @@ def _ts_tertile_feed(
     order. The prefix encodes the slicing (t3): _stage_feed is
     marker-idempotent per root, so a slicing change must re-stage, not
     reuse stale files."""
-    root = _fingerprinted_tmp(sf_dir, prefix)
+    root = fs.store_root(spark, sf_dir, prefix)
     e = table(spark, sf_dir, "events").select(*cols)
     qtile = F.ntile(3).over(Window.orderBy("ts", "event_id"))
     staged = e.withColumn("q", qtile)
     return _stage_feed(
-        root,
+        spark, root,
         [
             (f"q{i}", staged.where(F.col("q") == i).drop("q"))
             for i in range(1, 4)
@@ -1390,21 +1315,15 @@ def streaming_simhash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch-id subdir, strictly-earlier state reads, deterministic
     recompute) so the two per-batch writes overlap on driver
     threads."""
-    import shutil as _sh
 
     from ..streaming.simhash_ingest import read_pairs, run_simhash_ingest
 
     ensure_utc(spark)
-    root = _fingerprinted_tmp(sf_dir, "bdip_shing", src="documents")
+    root = fs.store_root(spark, sf_dir, "bdip_shing")
     feed = _simhash_ingest_feed(spark, sf_dir)
     state = f"{root}/state"
-    _sh.rmtree(state, ignore_errors=True)
-    schema = spark.read.parquet(feed).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
+    fs.delete(spark, state)
+    stream = file_feed_stream(spark, feed)
     run_simhash_ingest(stream, state)
     pairs = read_pairs(spark, state)
     return pairs.groupBy("wave").agg(
@@ -1542,21 +1461,15 @@ def streaming_paragraph_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     member of the ingest family; the store grows by exactly the new
     distinct units (disjoint per-batch dirs, never re-distinct'd on
     read); replay invariants shared with streaming/lsh_ingest.py."""
-    import shutil as _sh
 
     from ..streaming.paragraph_ingest import read_stats, run_paragraph_ingest
 
     ensure_utc(spark)
-    root = _fingerprinted_tmp(sf_dir, "bdip_paraing", src="documents")
+    root = fs.store_root(spark, sf_dir, "bdip_paraing")
     feed = _paragraph_ingest_feed(spark, sf_dir)
     state = f"{root}/state"
-    _sh.rmtree(state, ignore_errors=True)
-    schema = spark.read.parquet(feed).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
+    fs.delete(spark, state)
+    stream = file_feed_stream(spark, feed)
     run_paragraph_ingest(stream, state)
     return read_stats(spark, state).orderBy("wave")
 
@@ -1567,19 +1480,18 @@ def _ivf_ingest_feed(spark: SparkSession, sf_dir: str) -> str:
     under the fixture root — marker-idempotent, the decontam base_idx
     pattern; deterministic per corpus, so re-deriving it per invocation
     was pure fixed cost) and the 4-wave embedding feed."""
-    import os as _os
 
     from ..streaming.ivf_ingest import write_codebook
 
     ensure_utc(spark)
-    root = _fingerprinted_tmp(sf_dir, "bdip_ivfing", src="embeddings")
+    root = fs.store_root(spark, sf_dir, "bdip_ivfing")
     emb = table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding", "label"
     )
-    if not _os.path.exists(_os.path.join(root, "codebook", "_SUCCESS")):
+    if not fs.landed(spark, f"{root}/codebook"):
         write_codebook(emb, root)
     return _stage_feed(
-        root,
+        spark, root,
         [(f"wave{i}", emb.where(F.col("vec_id") % 4 == i)) for i in range(4)],
     )
 
@@ -1695,23 +1607,17 @@ def streaming_ivf_assign_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrival shards split under AQE), a k-rows-per-prior-batch
     occupancy read (never the postings store), and three 1-row
     aggregates; replay invariants shared with streaming/lsh_ingest.py."""
-    import shutil as _sh
 
     from ..streaming.ivf_ingest import read_stats, run_ivf_assign_ingest
 
     ensure_utc(spark)
-    root = _fingerprinted_tmp(sf_dir, "bdip_ivfing", src="embeddings")
+    root = fs.store_root(spark, sf_dir, "bdip_ivfing")
     feed = _ivf_ingest_feed(spark, sf_dir)
     state = f"{root}/state"
-    _sh.rmtree(state, ignore_errors=True)
-    schema = spark.read.parquet(feed).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed)
-    )
+    fs.delete(spark, state)
+    stream = file_feed_stream(spark, feed)
     # the codebook is a pinned per-corpus fixture staged by the feed
     # builder (marker-idempotent, like decontam's base_idx) — the drain
-    # reads it from the fixture root, outside the rmtree'd state
+    # reads it from the fixture root, outside the cleared state
     run_ivf_assign_ingest(stream, state, codebook_root=root)
     return read_stats(spark, state).orderBy("wave")

@@ -30,6 +30,11 @@ downstream) + metadata extraction in the first Arrow UDF stage
 (images/codec.py); use THIS source when scan-time typed-metadata
 pushdown/manifest pruning is worth a Python scan — small/medium corpora
 or highly selective metadata predicates.
+
+Storage: FIMG files are read and written by Python workers with
+``open()``, so this module (with ``materialize_corpus``, which writes a
+corpus) works on local paths only; every other store goes through
+``core/fs.py``.
 """
 
 from __future__ import annotations
@@ -37,6 +42,8 @@ from __future__ import annotations
 import os
 import struct
 
+import numpy as np
+from pyspark.sql import DataFrame
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -47,6 +54,8 @@ from pyspark.sql.datasource import (
     LessThan,
     LessThanOrEqual,
 )
+
+from ..images.codec import encode_image
 
 _HEADER = struct.Struct(">4sHHB")
 
@@ -62,6 +71,31 @@ class _FileChunk(InputPartition):
 
 
 _MANIFEST = "_manifest.tsv"
+
+
+def materialize_corpus(rows: DataFrame, img_dir: str) -> str:
+    """Write one 2x2x3 FIMG file per ``(vec_id, embedding)`` row into the
+    local dir ``img_dir`` executor-side, pixel_i = abs(trunc(dim_i *
+    1000)) % 256 of the first 12 dims; returns ``img_dir``. Write-once:
+    file bytes are a pure function of the row, so a dir already holding
+    one file per row is kept, and each file lands by atomic rename."""
+    os.makedirs(img_dir, exist_ok=True)
+    expected = rows.count()
+    if len([f for f in os.listdir(img_dir) if f.endswith(".fimg")]) == expected:
+        return img_dir
+
+    def write_part(part):
+        for r in part:
+            v = np.asarray(r.embedding[:12], dtype=np.float64) * 1000.0
+            px = (np.abs(v.astype(np.int64)) % 256).astype(np.uint8).reshape(2, 2, 3)
+            path = os.path.join(img_dir, f"img{r.vec_id}.fimg")
+            tmp = f"{path}.{os.getpid()}.tmp"
+            with open(tmp, "wb") as f:
+                f.write(encode_image(px))
+            os.replace(tmp, path)
+
+    rows.foreachPartition(write_part)
+    return img_dir
 
 
 def write_manifest(corpus_dir: str) -> int:

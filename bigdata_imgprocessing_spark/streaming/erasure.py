@@ -7,8 +7,9 @@ victims (``DELETE FROM state WHERE key IN (SELECT key FROM requests)``
 parquet because no transactional format ships in this container).
 
 Deletion is idempotent by nature (re-deleting a key is a no-op), so
-replayed batches are harmless; version dirs keyed by batch id keep
-restarts monotone exactly like the upsert sink. Each batch's work is
+replayed batches are harmless; version dirs keyed by batch id (the
+ingest skeleton, ``streaming/ingest.py``) keep restarts monotone
+exactly like the upsert sink. Each batch's work is
 ONE broadcast anti join + a partition-parallel rewrite — at 100 TB the
 rewrite touches only the partitions the audit pass
 (``user_erasure_audit``) shows contain victims.
@@ -16,69 +17,42 @@ rewrite touches only the partitions the audit pass
 
 from __future__ import annotations
 
-import glob
-import os
-import re
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _versions(out_dir: str) -> list[tuple[int, str]]:
-    out = []
-    for d in glob.glob(os.path.join(out_dir, "state_v*")):
-        m = re.fullmatch(r"state_v(\d+)", os.path.basename(d))
-        if m and os.path.exists(os.path.join(d, "_SUCCESS")):
-            out.append((int(m.group(1)), d))
-    return sorted(out)
+from .ingest import BatchState, drain, last_landed
+from .jobs import STATE_PARTITIONS, pinned_state_partitions
 
 
-def init_state(df: DataFrame, out_dir: str, state_partitions: int = 8) -> None:
+def init_state(df: DataFrame, out_dir: str) -> None:
     """Materialize the pre-stream state table (the lake before any
     erasure requests arrive)."""
-    df.repartition(state_partitions).write.mode("overwrite").parquet(
-        os.path.join(out_dir, "state_init")
+    df.repartition(STATE_PARTITIONS).write.mode("overwrite").parquet(
+        f"{out_dir}/state_init"
     )
 
 
 def run_foreachbatch_erasure(
-    request_stream: DataFrame,
-    out_dir: str,
-    key: str = "user_id",
-    state_partitions: int = 8,
+    request_stream: DataFrame, out_dir: str, key: str = "user_id"
 ) -> None:
-    """Drain the victim-key stream, rewriting state minus victims per
-    micro-batch. Final state = highest ``state_v<id>`` dir."""
-    spark = request_stream.sparkSession
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    """Drain the victim-key stream on the ingest skeleton, rewriting
+    state minus victims per micro-batch into ``{out_dir}/state/b<id>``."""
 
-    def _erase(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
+    def _erase(batch_df: DataFrame, state: BatchState) -> None:
         victims = batch_df.select(key).distinct()
-        prev = [d for v, d in _versions(out_dir) if v < batch_id]
-        src = prev[-1] if prev else os.path.join(out_dir, "state_init")
-        state = s.read.parquet(src)
-        remaining = state.join(
-            F.broadcast(victims), state[key] == victims[key], "left_anti"
+        prev = state.dirs("state")
+        src = state.spark.read.parquet(prev[-1] if prev else f"{out_dir}/state_init")
+        remaining = src.join(
+            F.broadcast(victims), src[key] == victims[key], "left_anti"
         )
-        remaining.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"state_v{batch_id}")
-        )
+        state.land({"state": remaining}, {})
 
-    try:
-        (
-            request_stream.writeStream.foreachBatch(_erase)
-            .option("checkpointLocation", os.path.join(out_dir, "_chk"))
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    with pinned_state_partitions(request_stream.sparkSession):
+        drain(request_stream, out_dir, _erase)
 
 
 def read_final_state(spark: SparkSession, out_dir: str) -> DataFrame:
-    vs = _versions(out_dir)
-    path = vs[-1][1] if vs else os.path.join(out_dir, "state_init")
-    return spark.read.parquet(path)
+    """The newest completed state version, else the initial state."""
+    return spark.read.parquet(
+        last_landed(spark, out_dir, "state") or f"{out_dir}/state_init"
+    )

@@ -1,7 +1,8 @@
 """The foreachBatch skeleton shared by the five ingest state machines
-(lsh, simhash, decontam, paragraph, ivf). It is the only module that
-knows their state layout and replay rule; each ingest module keeps only
-its per-batch derivation and its store schemas.
+(lsh, simhash, decontam, paragraph, ivf) and the three versioned sinks
+(upsert, erasure, sketch state). It is the only module that knows their
+state layout and replay rule; each keeps only its per-batch derivation
+and its store schemas.
 
 State layout: ``{state_root}/{store}/b{N}``, one subdir per store per
 micro-batch N, and the stream checkpoint at ``{state_root}/ckpt``.
@@ -22,9 +23,9 @@ derivation). The remaining stores then land concurrently, one Spark job
 per Python thread, each in the foreachBatch thread's job group, so
 ``query.stop()`` cancellation and UI attribution reach them.
 
-Listing goes through the Hadoop FileSystem of the state root, so
-``hdfs://``, ``s3a://`` and ``file://`` roots see the same state as a
-bare local path; listed paths keep the caller's form of the root.
+Listing goes through ``core/fs.py``, so ``hdfs://``, ``s3a://`` and
+``file://`` roots see the same state as a bare local path; listed paths
+keep the caller's form of the root.
 """
 
 from __future__ import annotations
@@ -36,18 +37,18 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.util import inheritable_thread_target
 
+from ..core import fs
+
 
 def batch_dirs(
     spark: SparkSession, state_root: str, store: str, before: int | None = None
 ) -> list[str]:
     """``{state_root}/{store}/b{N}`` dirs in numeric N order, only
     N < ``before`` when given."""
-    path = spark._jvm.org.apache.hadoop.fs.Path(f"{state_root}/{store}/b*")
-    fs = path.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
     numbered = sorted(
         (int(name[1:]), f"{state_root}/{store}/{name}")
-        for status in fs.globStatus(path) or []
-        if (name := status.getPath().getName())[1:].isdecimal()
+        for path in fs.glob(spark, f"{state_root}/{store}/b*")
+        if (name := path.rsplit("/", 1)[1])[1:].isdecimal()
     )
     return [d for n, d in numbered if before is None or n < before]
 
@@ -68,6 +69,13 @@ def read_store(
     """Every drained batch of ``store`` (empty frame of ``schema`` when
     none has landed)."""
     return _read(spark, batch_dirs(spark, state_root, store), schema)
+
+
+def last_landed(spark: SparkSession, state_root: str, store: str) -> str | None:
+    """The newest ``store`` batch dir whose write completed (its
+    ``_SUCCESS``), or None."""
+    dirs = batch_dirs(spark, state_root, store)
+    return next((d for d in reversed(dirs) if fs.landed(spark, d)), None)
 
 
 def n_versions(state_root: str, store: str) -> int:

@@ -16,8 +16,11 @@ the logical plan is unchanged.
 from __future__ import annotations
 
 import uuid
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
+
 
 def event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events parquet.
@@ -56,11 +59,15 @@ def event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SINKS: dict[str, list[str]] = {}
 
 
-def run_to_memory(
-    streaming_df: DataFrame, mode: str = "complete", state_partitions: int = 8
-) -> DataFrame:
-    """Drain a streaming aggregation with trigger(availableNow) into a
-    uniquely-named memory sink; return the materialized table.
+#: shuffle partitions a drain's state and per-batch merges run on
+#: (``pinned_state_partitions``)
+STATE_PARTITIONS = 8
+
+
+@contextmanager
+def pinned_state_partitions(spark: SparkSession) -> Iterator[None]:
+    """Run a drain with ``spark.sql.shuffle.partitions`` pinned to
+    ``STATE_PARTITIONS``, restoring the session's value afterwards.
 
     Streaming state partitioning is pinned at the first checkpoint by
     spark.sql.shuffle.partitions and AQE never re-coalesces it, so every
@@ -68,44 +75,47 @@ def run_to_memory(
     bounded local drain 8 partitions is plenty (32 was measured ~1.8x
     slower on pure task overhead); a continuous 100 TB deployment sizes
     this to state volume/throughput instead — same knob, set before the
-    first start(). The session conf is restored afterwards so batch
-    queries in the same session keep their own shuffle sizing."""
+    first start(). Restoring it keeps batch queries in the same session
+    on their own shuffle sizing."""
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def run_to_memory(streaming_df: DataFrame, mode: str = "complete") -> DataFrame:
+    """Drain a streaming aggregation with trigger(availableNow) into a
+    uniquely-named memory sink, under ``pinned_state_partitions``;
+    return the materialized table."""
     spark = streaming_df.sparkSession
     sinks = _SINKS.setdefault(spark._jsparkSession.sessionUUID(), [])
     while sinks:
         spark.catalog.dropTempView(sinks.pop())
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        name = f"sink_{uuid.uuid4().hex[:12]}"
-        sinks.append(name)
-        q = (
+    name = f"sink_{uuid.uuid4().hex[:12]}"
+    sinks.append(name)
+    with pinned_state_partitions(spark):
+        (
             streaming_df.writeStream.format("memory")
             .queryName(name)
             .outputMode(mode)
             .trigger(availableNow=True)
             .start()
+            .awaitTermination()
         )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
     return spark.table(name)
 
 
-def run_foreachbatch_parquet(
-    streaming_df: DataFrame, out_dir: str, state_partitions: int = 8
-) -> None:
+def run_foreachbatch_parquet(streaming_df: DataFrame, out_dir: str) -> None:
     """Drain a stream through foreachBatch into per-batch parquet dirs —
     the arbitrary-sink surface (upserts, JDBC, multi-sink fan-out) that
     format sinks can't express. Idempotence contract: each micro-batch
     overwrites its OWN ``batch=<id>`` directory, so a restart that
     replays a batch rewrites the same path instead of duplicating it —
     the standard exactly-once construction for non-transactional sinks."""
-    spark = streaming_df.sparkSession
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
+    with pinned_state_partitions(streaming_df.sparkSession):
+        (
             streaming_df.writeStream.foreachBatch(
                 lambda df, batch_id: df.write.mode("overwrite").parquet(
                     f"{out_dir}/batch={batch_id}"
@@ -113,10 +123,8 @@ def run_foreachbatch_parquet(
             )
             .trigger(availableNow=True)
             .start()
+            .awaitTermination()
         )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def file_feed_stream(spark: SparkSession, feed: str) -> DataFrame:

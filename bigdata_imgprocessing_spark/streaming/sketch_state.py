@@ -7,9 +7,9 @@ Per micro-batch: the batch reduces to one HLL sketch per day
 sketch state (``hll_union_agg``) — the associative/commutative update
 that makes the result independent of how the stream was segmented into
 micro-batches (the stream≡batch contract the oracle checks). State is
-versioned per batch id exactly like ``upsert.py``: a replayed batch
-recomputes from the highest version BELOW its own id and overwrites its
-own dir, so restarts never double-merge a batch (idempotent sketch
+versioned per batch id on the ingest skeleton exactly like
+``upsert.py``: a replayed batch recomputes from the highest version
+BELOW its own id and overwrites its own dir, so restarts never double-merge a batch (idempotent sketch
 maintenance — the property that makes sketch state safe under
 at-least-once delivery).
 
@@ -22,58 +22,35 @@ incrementally at 100 TB/day ingest.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .upsert import _versions
+from .ingest import BatchState, drain, last_landed
+from .jobs import pinned_state_partitions
 
 
-def run_sketch_maintenance(
-    stream_df: DataFrame, out_dir: str, state_partitions: int = 8
-) -> None:
-    """Drain a (user_id, d) stream into versioned per-day HLL sketch
-    state; final state is the highest ``state_v<id>`` dir."""
-    spark = stream_df.sparkSession
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+def run_sketch_maintenance(stream_df: DataFrame, out_dir: str) -> None:
+    """Drain a (user_id, d) stream on the ingest skeleton into versioned
+    per-day HLL sketch state ``{out_dir}/sketch/b<id>``."""
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
+    def _merge(batch_df: DataFrame, state: BatchState) -> None:
         delta = batch_df.groupBy("d").agg(
             F.hll_sketch_agg("user_id").alias("sk")
         )
-        prev = [d for v, d in _versions(out_dir) if v < batch_id]
+        prev = state.dirs("sketch")
         if prev:
-            state = s.read.parquet(prev[-1])
-            merged = state.unionByName(delta).groupBy("d").agg(
+            old = state.spark.read.parquet(prev[-1])
+            delta = old.unionByName(delta).groupBy("d").agg(
                 F.hll_union_agg("sk").alias("sk")
             )
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"state_v{batch_id}")
-        )
+        state.land({"sketch": delta}, {})
 
-    try:
-        q = (
-            stream_df.writeStream.foreachBatch(_merge)
-            .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    with pinned_state_partitions(stream_df.sparkSession):
+        drain(stream_df, out_dir, _merge)
 
 
 def read_final_sketches(spark: SparkSession, out_dir: str) -> DataFrame:
-    versions = _versions(out_dir)
-    if not versions:
+    final = last_landed(spark, out_dir, "sketch")
+    if final is None:
         raise FileNotFoundError(f"no completed sketch state under {out_dir}")
-    return spark.read.parquet(versions[-1][1])
-
-
-def n_state_versions(out_dir: str) -> int:
-    return len(_versions(out_dir))
+    return spark.read.parquet(final)

@@ -14,10 +14,10 @@ Semantics per micro-batch (classic CDC compaction):
 order, so the result is independent of micro-batch segmentation and
 arrival interleaving (the stream≡batch contract the oracle checks).
 
-Exactly-once: state version dirs are keyed by batch id; a replayed
-batch recomputes from the highest version BELOW its own id and
-overwrites its own dir — rerunning batch N is idempotent and never
-double-applies. (Delta's MERGE gets this from the txn log; versioned
+Exactly-once: state version dirs are keyed by batch id on the ingest
+skeleton (``streaming/ingest.py``); a replayed batch recomputes from
+the highest version BELOW its own id and overwrites its own dir —
+rerunning batch N is idempotent and never double-applies. (Delta's MERGE gets this from the txn log; versioned
 dirs are the same construction by hand.)
 
 Scale: the merge is one shuffle per micro-batch on the upsert key, and
@@ -28,12 +28,11 @@ replaced by one MERGE INTO statement — the plan shape is identical.
 
 from __future__ import annotations
 
-import glob
-import os
-import re
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .ingest import BatchState, drain, last_landed
+from .jobs import pinned_state_partitions
 
 #: columns folded into the newest-wins struct, order matters: the
 #: leading (ts_sec, event_id) pair IS the recency total order.
@@ -50,57 +49,28 @@ def _latest_per_key(df: DataFrame, key: str) -> DataFrame:
     return packed.select(key, *[F.col(f"m.{c}").alias(c) for c in _STATE_COLS])
 
 
-def _versions(out_dir: str) -> list[tuple[int, str]]:
-    out = []
-    for d in glob.glob(os.path.join(out_dir, "state_v*")):
-        m = re.fullmatch(r"state_v(\d+)", os.path.basename(d))
-        if m and os.path.exists(os.path.join(d, "_SUCCESS")):
-            out.append((int(m.group(1)), d))
-    return sorted(out)
-
-
 def run_foreachbatch_upsert(
-    parsed_stream: DataFrame,
-    out_dir: str,
-    key: str = "user_id",
-    state_partitions: int = 8,
+    parsed_stream: DataFrame, out_dir: str, key: str = "user_id"
 ) -> None:
-    """Drain the stream through the MERGE upsert; final state is the
-    highest ``state_v<id>`` dir under ``out_dir``."""
-    spark = parsed_stream.sparkSession
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    """Drain the stream through the MERGE upsert on the ingest skeleton
+    (state ``{out_dir}/state/b<id>``, checkpoint under ``out_dir``: a
+    restarted drain continues batch numbering, so a replay overwrites
+    its own version and new data merges from the prior one)."""
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
+    def _merge(batch_df: DataFrame, state: BatchState) -> None:
         delta = _latest_per_key(batch_df.select(key, *_STATE_COLS), key)
-        prev = [d for v, d in _versions(out_dir) if v < batch_id]
+        prev = state.dirs("state")
         if prev:
-            state = s.read.parquet(prev[-1])
-            merged = _latest_per_key(state.unionByName(delta), key)
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"state_v{batch_id}")
-        )
+            old = state.spark.read.parquet(prev[-1])
+            delta = _latest_per_key(old.unionByName(delta), key)
+        state.land({"state": delta}, {})
 
-    try:
-        q = (
-            parsed_stream.writeStream.foreachBatch(_merge)
-            # checkpoint under the sink root: a restarted drain continues
-            # batch numbering (replay → same id → idempotent overwrite;
-            # new data → next id → merges from the prior version)
-            .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    with pinned_state_partitions(parsed_stream.sparkSession):
+        drain(parsed_stream, out_dir, _merge)
 
 
 def read_final_state(spark: SparkSession, out_dir: str) -> DataFrame:
-    versions = _versions(out_dir)
-    if not versions:
+    final = last_landed(spark, out_dir, "state")
+    if final is None:
         raise FileNotFoundError(f"no completed state version under {out_dir}")
-    return spark.read.parquet(versions[-1][1])
+    return spark.read.parquet(final)

@@ -65,6 +65,7 @@ def test_bucketed_table_helper_colocates_and_reuses(spark, sf_dir):
     """catalog.bucketed_table materializes once, reuses on repeat calls,
     and two facts bucketed on their join keys join with no Exchange."""
     from bigdata_imgprocessing_spark.core.catalog import bucketed_table
+    from bigdata_imgprocessing_spark.core.fs import store_root
 
     o = bucketed_table(spark, sf_dir, "orders", "o_orderkey", buckets=8)
     l = bucketed_table(spark, sf_dir, "lineitem", "l_orderkey", buckets=8)
@@ -96,13 +97,13 @@ def test_bucketed_table_reattaches_after_catalog_loss(spark, sf_dir):
     import re as _re
 
     from bigdata_imgprocessing_spark.core.catalog import bucketed_table
+    from bigdata_imgprocessing_spark.core.fs import store_root
 
     o = bucketed_table(spark, sf_dir, "orders", "o_orderkey", buckets=8)
     n_before = o.count()
     token = _re.sub(r"\W+", "_", sf_dir).strip("_")
-    st = _os.stat(f"{sf_dir}/orders.parquet")
-    src = f"{st.st_mtime_ns:x}{st.st_size:x}"[-10:]
-    tbl = f"bkt_{token}_orders_v{src}_by_o_orderkey_8b"
+    tbl = store_root(spark, sf_dir, f"bkt_{token}_orders_by_o_orderkey_8b")
+    tbl = tbl.rsplit("/", 1)[1]
     wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
     loc = _os.path.join(wh, tbl)
     files_before = {
@@ -228,9 +229,9 @@ def test_backfill_overwrites_only_target_partition(spark, sf_dir):
 
     from bigdata_imgprocessing_spark.queries.pipeline_queries import (
         _BACKFILL_DAY,
-        _root_dir,
         backfill_partition_overwrite,
     )
+    from bigdata_imgprocessing_spark.core.fs import store_root
     from bigdata_imgprocessing_spark.core.catalog import table
 
     rows = {
@@ -252,7 +253,7 @@ def test_backfill_overwrites_only_target_partition(spark, sf_dir):
     assert abs(rows[other]["sum_value"] - src[other]["s"]) < 0.05
     assert rows[other]["n_events"] == src[other]["n"]
 
-    out = f"{_root_dir(sf_dir)}/events_by_day"
+    out = store_root(spark, sf_dir, "bdip_events_by_day")
     pruned = spark.read.parquet(out).where(F.col("day") == F.lit(_BACKFILL_DAY))
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     plan = pruned._jdf.queryExecution().explainString(mode)
@@ -293,17 +294,19 @@ def test_bench_compare_adjudication(tmp_path, capsys):
 
 
 def test_ingest_loops_use_the_skeleton():
-    """The five foreachBatch ingest loops keep only their derivations:
-    state listing, drains and concurrent landing live in
-    streaming/ingest.py, so no loop lists paths, owns a thread pool or
-    starts a stream itself."""
+    """The five foreachBatch ingest loops and the three versioned sinks
+    (upsert, erasure, sketch state) keep only their derivations: state
+    listing, drains and concurrent landing live in streaming/ingest.py,
+    so none lists paths, owns a thread pool or starts a stream itself."""
     import pathlib
     import re
 
     import bigdata_imgprocessing_spark.streaming as streaming
 
-    loops = sorted(pathlib.Path(streaming.__file__).parent.glob("*_ingest.py"))
+    here = pathlib.Path(streaming.__file__).parent
+    loops = sorted(here.glob("*_ingest.py"))
     assert len(loops) == 5
+    loops += [here / f for f in ("upsert.py", "erasure.py", "sketch_state.py")]
     banned = re.compile(r"\bglob\b|os\.path|ThreadPoolExecutor|\.foreachBatch\(|writeStream")
     hits = [
         f"{p.name}:{i}: {line.strip()}"
@@ -312,6 +315,89 @@ def test_ingest_loops_use_the_skeleton():
         if banned.search(line)
     ]
     assert hits == []
+
+
+def test_only_the_storage_layer_touches_storage():
+    """Every store, fixture and state path goes through core/fs.py; only
+    the FIMG source, whose files Python workers open(), stays local."""
+    import ast
+    import pathlib
+
+    import bigdata_imgprocessing_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    allowed = {root / "core" / "fs.py", root / "sources" / "fimg_source.py"}
+    banned_mods = {"glob", "shutil"}
+    banned_os = {"stat", "listdir", "walk", "makedirs", "utime"}
+    banned_path = {"exists", "isdir", "getsize"}
+    hits = []
+    for p in sorted(root.rglob("*.py")):
+        if p in allowed:
+            continue
+        tree = ast.parse(p.read_text())
+        os_names, path_names = set(), set()
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                for a in node.names:
+                    name = a.asname or a.name
+                    if a.name in banned_mods:
+                        hits.append(f"{p.name}:{node.lineno} import {a.name}")
+                    elif a.name == "os":
+                        os_names.add(name)
+                    elif a.name == "os.path":
+                        (path_names if a.asname else os_names).add(name)
+            elif isinstance(node, ast.ImportFrom):
+                banned = {
+                    "os": banned_os | {"path"}, "os.path": banned_path,
+                }.get(node.module, set())
+                if node.module in banned_mods or banned & {
+                    a.name for a in node.names
+                }:
+                    hits.append(f"{p.name}:{node.lineno} from {node.module}")
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Attribute):
+                continue
+            v = node.value
+            if isinstance(v, ast.Name) and (
+                (v.id in os_names and node.attr in banned_os)
+                or (v.id in path_names and node.attr in banned_path)
+            ):
+                hits.append(f"{p.name}:{node.lineno} {v.id}.{node.attr}")
+            elif (
+                isinstance(v, ast.Attribute)
+                and isinstance(v.value, ast.Name)
+                and v.value.id in os_names
+                and v.attr == "path"
+                and node.attr in banned_path
+            ):
+                hits.append(f"{p.name}:{node.lineno} os.path.{node.attr}")
+    assert hits == []
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "zorder_pruned_scan",
+        "bucketed_join_revenue",
+        "neardup_component_dedup",
+        "streaming_upsert_latest",
+        "streaming_erasure_feed",
+        "streaming_sketch_rollup",
+        "streaming_outer_join",
+    ],
+)
+def test_queries_run_on_a_file_uri_corpus(spark, sf_dir, name):
+    """Stores, fixtures and state go through core/fs.py, so a
+    ``file://`` corpus returns the same rows as its bare path."""
+    import os
+
+    from bigdata_imgprocessing_spark.queries import QUERIES
+
+    def rows(d):
+        return sorted(map(tuple, QUERIES[name](spark, d).collect()), key=repr)
+
+    bare = rows(sf_dir)
+    assert bare and rows("file://" + os.path.abspath(sf_dir)) == bare
 
 
 def test_repo_root_keeps_only_the_doc_generator_tools():

@@ -443,12 +443,66 @@ def test_paragraph_unit_hash_collision_free_on_corpus(spark, sf_dir):
     )
 
 
+def test_doubled_tie_ranks_null_first_like_window(spark):
+    """The rank prefix form must rank NULL where ``rank()`` does: first.
+    NULL used to fall into the last bucket (least() skips NULL), so the
+    two forms disagreed on any nullable column."""
+    from pyspark.sql import Window
+
+    from bigdata_imgprocessing_spark.operators.ranks import doubled_tie_ranks
+
+    df = spark.createDataFrame(
+        [(None,), (None,), (1,), (2,), (2,), (5,)], "v bigint"
+    )
+    window = {
+        r.v: r.dr
+        for r in df.select(
+            "v",
+            (
+                2 * F.rank().over(Window.orderBy("v"))
+                + F.count("*").over(Window.partitionBy("v"))
+                - 1
+            ).alias("dr"),
+        ).collect()
+    }
+    pv = df.groupBy("v").agg(F.count("*").alias("c"))
+    prefix = {r.v: r.dr for r in doubled_tie_ranks(pv, "v").collect()}
+    assert window == {None: 3, 1: 6, 2: 9, 5: 12}
+    assert prefix == window
+
+
+def test_size_switches_log_their_choice(spark, sf_dir, monkeypatch, caplog):
+    """The rank and connected-components size switches each log the path
+    they took and the size that chose it."""
+    import logging
+
+    from bigdata_imgprocessing_spark.core.catalog import table
+    from bigdata_imgprocessing_spark.operators import components, ranks
+
+    orders = table(spark, sf_dir, "orders")
+    edges = spark.createDataFrame([(1, 2), (2, 3)], "src bigint, dst bigint")
+    with caplog.at_level(logging.INFO, logger="bigdata_imgprocessing_spark"):
+        assert not ranks.use_prefix_ranks(orders)
+        monkeypatch.setattr(ranks, "PREFIX_BYTES", 1)
+        assert ranks.use_prefix_ranks(orders)
+        components.connected_components(edges).collect()
+        monkeypatch.setattr(components, "LOCAL_EDGES", 0)
+        components.connected_components(edges).collect()
+    size = os.path.getsize(f"{sf_dir}/orders.parquet")
+    lines = [r.getMessage() for r in caplog.records]
+    assert f"rank window form: input {size} bytes, prefix at >= {2 << 30}" in lines
+    assert f"rank prefix form: input {size} bytes, prefix at >= 1" in lines
+    assert "connected_components local path: 4 symmetric edges, local at <= 1000000" in lines
+    assert "connected_components distributed path: 4 symmetric edges, local at <= 0" in lines
+
+
 def test_connected_components_stats_round_count(spark, monkeypatch):
     """Distributed path (forced below the r16 local-closure threshold):
     the stats hook must report >1 pointer-jumping rounds on a long
     chain (diameter >> 1) and exactly the deduped edge count. The
     size-conditional local path must produce the identical labeling
     with rounds=0."""
+    from bigdata_imgprocessing_spark.operators import components
     from bigdata_imgprocessing_spark.operators.components import (
         connected_components,
     )
@@ -457,7 +511,7 @@ def test_connected_components_stats_round_count(spark, monkeypatch):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "src bigint, dst bigint"
     )
-    monkeypatch.setenv("SPARK_GRAFT_CC_LOCAL_EDGES", "0")
+    monkeypatch.setattr(components, "LOCAL_EDGES", 0)
     stats: dict = {}
     comp = connected_components(edges, stats=stats)
     dist_rows = sorted((r.node, r.comp) for r in comp.collect())
@@ -466,7 +520,7 @@ def test_connected_components_stats_round_count(spark, monkeypatch):
     assert 1 < stats["rounds"] <= 8  # log2(63) ~ 6, + convergence confirm
     assert stats["width"] >= 1
 
-    monkeypatch.delenv("SPARK_GRAFT_CC_LOCAL_EDGES")
+    monkeypatch.undo()
     lstats: dict = {}
     lcomp = connected_components(edges, stats=lstats)
     assert sorted((r.node, r.comp) for r in lcomp.collect()) == dist_rows

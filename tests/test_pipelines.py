@@ -273,26 +273,26 @@ def test_returned_frames_survive_clear_cache(spark, corpus, dims, tmp_path):
     assert run_stats(frames[1], "stats_after") == stats_before
 
 
-def test_cache_root_tracks_every_table(tmp_path, monkeypatch):
-    """The /tmp cache token must change when ANY source parquet changes
+def test_cache_root_tracks_every_table(spark, tmp_path):
+    """The /tmp store root token must change when ANY source parquet changes
     (r4 advisor: the old token only fingerprinted embeddings, so a
     regenerated events table silently served a stale Z-order copy)."""
     import os
     import shutil
 
-    from bigdata_imgprocessing_spark.queries.pipeline_queries import _root_dir
+    from bigdata_imgprocessing_spark.core.fs import store_root
 
     sf = tmp_path / "sf"
     sf.mkdir()
     for name in ("embeddings", "events", "documents"):
         (sf / f"{name}.parquet").write_bytes(b"x" * 10)
-    t0 = _root_dir(str(sf))
+    t0 = store_root(spark, str(sf), "bdip_pipeline")
     # touch ONLY events (different mtime): token must move
     os.utime(sf / "events.parquet", (1, 1))
-    t1 = _root_dir(str(sf))
+    t1 = store_root(spark, str(sf), "bdip_pipeline")
     assert t0 != t1
     # size change on documents: token must move again
     (sf / "documents.parquet").write_bytes(b"y" * 11)
-    t2 = _root_dir(str(sf))
+    t2 = store_root(spark, str(sf), "bdip_pipeline")
     assert t2 not in (t0, t1)
     shutil.rmtree(sf)

@@ -977,6 +977,23 @@ def test_r15_scan_diet(spark, sf_dir, name, table, max_scans):
     )
 
 
+def test_rank_switch_sizes_a_file_uri_corpus(spark, sf_dir, monkeypatch):
+    """The rank switch sizes the scanned table with Spark's own estimate,
+    so a ``file://`` corpus whose table is just above the threshold
+    plans the prefix form (a local-path probe saw 0 bytes off-box and
+    kept the window form)."""
+    import os
+
+    from bigdata_imgprocessing_spark.operators import ranks
+
+    size = os.path.getsize(f"{sf_dir}/orders.parquet")
+    monkeypatch.setattr(ranks, "PREFIX_BYTES", size - 1)
+    df = QUERIES["mannwhitney_price_shift"](
+        spark, "file://" + os.path.abspath(sf_dir)
+    )
+    assert "rank(" not in _formatted(spark, df)
+
+
 @pytest.mark.parametrize(
     "name",
     [
@@ -988,19 +1005,20 @@ def test_r15_scan_diet(spark, sf_dir, name, table, max_scans):
 )
 def test_rank_prefix_forms_match(spark, sf_dir, name, monkeypatch):
     """r16 size-conditional rank pass (operators/ranks.py): below the
-    input-bytes crossover the monitors plan the window form (global
+    scanned-bytes crossover the monitors plan the window form (global
     rank — fastest at test SFs); forcing the threshold to 0 switches
     the SAME query to the bucketed-prefix form, whose plan contains NO
     rank() window anywhere (no data-sized single partition), and whose
     output rows are EXACTLY equal — the doubled-rank identity keeps
     every statistic an exact integer expression in both forms."""
-    monkeypatch.delenv("SPARK_GRAFT_RANK_PREFIX_BYTES", raising=False)
+    from bigdata_imgprocessing_spark.operators import ranks
+
     win_df = QUERIES[name](spark, sf_dir)
     win_plan = _formatted(spark, win_df)
     assert "rank(" in win_plan, f"{name}: expected window form below threshold"
     win_rows = sorted(map(tuple, win_df.collect()))
 
-    monkeypatch.setenv("SPARK_GRAFT_RANK_PREFIX_BYTES", "0")
+    monkeypatch.setattr(ranks, "PREFIX_BYTES", 0)
     pre_df = QUERIES[name](spark, sf_dir)
     pre_plan = _formatted(spark, pre_df)
     assert "rank(" not in pre_plan, (

@@ -210,15 +210,12 @@ def test_corpus_diff_partitions_both_versions(spark, sf_dir):
 
 def test_streaming_sketch_builds_multibatch_state(spark, sf_dir):
     rows = QUERIES["streaming_sketch_rollup"](spark, sf_dir).collect()
-    from bigdata_imgprocessing_spark.queries.streaming_queries import (
-        _fingerprinted_tmp,
-    )
-    from bigdata_imgprocessing_spark.streaming.sketch_state import (
-        n_state_versions,
-    )
+    from bigdata_imgprocessing_spark.core.fs import store_root
+    from bigdata_imgprocessing_spark.streaming.ingest import batch_dirs
 
     # cross-batch merge must actually have been exercised
-    assert n_state_versions(_fingerprinted_tmp(sf_dir, "bdip_skst3") + "/state") > 1
+    state = store_root(spark, sf_dir, "bdip_skst3") + "/state"
+    assert len(batch_dirs(spark, state, "sketch")) > 1
     assert all(r["within_tol"] for r in rows)
     # stream ≡ batch: exact counts agree with the batch twin
     batch = {
@@ -369,6 +366,7 @@ def test_lsh_pairs_store_matches_fresh(spark, sf_dir):
         _lsh_pairs_store,
         _lsh_verified_pairs,
     )
+    from bigdata_imgprocessing_spark.core.fs import store_root
 
     fresh = sorted(
         tuple(r) for r in _lsh_verified_pairs(spark, sf_dir).collect()
@@ -377,13 +375,7 @@ def test_lsh_pairs_store_matches_fresh(spark, sf_dir):
     assert stored == fresh and len(fresh) > 0
     # second call reads the same materialization (no rewrite): _SUCCESS
     # mtime unchanged
-    import hashlib
-
-    st = os.stat(f"{sf_dir}/documents.parquet")
-    token = hashlib.md5(
-        f"{sf_dir}|{st.st_mtime_ns}|{st.st_size}|pairs-v5".encode()
-    ).hexdigest()[:12]
-    marker = f"/tmp/bdip_pairs_{token}/_SUCCESS"
+    marker = store_root(spark, sf_dir, "bdip_pairs_pairs-v5") + "/_SUCCESS"
     m0 = os.stat(marker).st_mtime_ns
     again = sorted(tuple(r) for r in _lsh_pairs_store(spark, sf_dir).collect())
     assert again == fresh
@@ -394,13 +386,13 @@ def test_ngram_postings_store_matches_fresh(spark, sf_dir):
     """The materialized posting-list store must be row-identical to the
     fresh pipeline (sort_array-pinned list order) and key on the corpus
     fingerprint so a regenerated corpus cannot read stale postings."""
-    import hashlib
     import os
 
     from bigdata_imgprocessing_spark.queries.dedup import (
         _ngram_posting_lists,
         _ngram_postings_store,
     )
+    from bigdata_imgprocessing_spark.core.fs import store_root
 
     fresh = sorted(
         (r.s, tuple(r.ds))
@@ -410,11 +402,7 @@ def test_ngram_postings_store_matches_fresh(spark, sf_dir):
         (r.s, tuple(r.ds)) for r in _ngram_postings_store(spark, sf_dir).collect()
     )
     assert stored == fresh and len(fresh) > 0
-    st = os.stat(f"{sf_dir}/documents.parquet")
-    token = hashlib.md5(
-        f"{sf_dir}|{st.st_mtime_ns}|{st.st_size}|postings-v4".encode()
-    ).hexdigest()[:12]
-    marker = f"/tmp/bdip_postings_{token}/_SUCCESS"
+    marker = store_root(spark, sf_dir, "bdip_postings_postings-v4") + "/_SUCCESS"
     m0 = os.stat(marker).st_mtime_ns
     again = sorted(
         (r.s, tuple(r.ds)) for r in _ngram_postings_store(spark, sf_dir).collect()
@@ -426,24 +414,20 @@ def test_ngram_postings_store_matches_fresh(spark, sf_dir):
 def test_wordgram_store_matches_fresh(spark, sf_dir):
     """Word-gram store: row-identical to the fresh extraction,
     fingerprint-keyed, no rewrite on a second read."""
-    import hashlib
     import os
 
     from bigdata_imgprocessing_spark.queries.dedup import (
         _wordgram_occurrences,
         _wordgram_store,
     )
+    from bigdata_imgprocessing_spark.core.fs import store_root
 
     fresh = sorted(
         tuple(r) for r in _wordgram_occurrences(spark, sf_dir).collect()
     )
     stored = sorted(tuple(r) for r in _wordgram_store(spark, sf_dir).collect())
     assert stored == fresh and len(fresh) > 0
-    st = os.stat(f"{sf_dir}/documents.parquet")
-    token = hashlib.md5(
-        f"{sf_dir}|{st.st_mtime_ns}|{st.st_size}|wordgrams-v4".encode()
-    ).hexdigest()[:12]
-    marker = f"/tmp/bdip_wordgrams_{token}/_SUCCESS"
+    marker = store_root(spark, sf_dir, "bdip_wordgrams_wordgrams-v4") + "/_SUCCESS"
     m0 = os.stat(marker).st_mtime_ns
     again = sorted(tuple(r) for r in _wordgram_store(spark, sf_dir).collect())
     assert again == fresh

@@ -214,9 +214,9 @@ def test_upsert_sink_multibatch_and_restart(spark, tmp_path):
         3: (150, 13, "click", 4.0),
     }
     # ≥2 state versions exist: the cross-batch merge branch really ran
-    import glob as _glob
+    from bigdata_imgprocessing_spark.streaming.ingest import batch_dirs
 
-    assert len(_glob.glob(f"{out}/state_v*")) >= 2
+    assert len(batch_dirs(spark, out, "state")) >= 2
 
     # restart: new file appears; same checkpoint → continues numbering,
     # merges into existing state (tie on ts_sec for u2 → higher event_id)
@@ -1149,14 +1149,10 @@ def test_streaming_decontam_order_dependent_carry(spark, tmp_path):
         (1, "fr"): (1, 1),  # C: contaminated by the train corpus
         (2, "es"): (1, 1),  # D: A's gram still indexed two waves later
     }
-    import hashlib as _h
-    import os as _os
+    from bigdata_imgprocessing_spark.core.fs import store_root
 
-    st = _os.stat(str(tmp_path / "documents.parquet"))
-    token = _h.md5(
-        f"{tmp_path}|{st.st_mtime_ns}|{st.st_size}".encode()
-    ).hexdigest()[:12]
-    assert n_index_versions(f"/tmp/bdip_dci_{token}/state") >= 2
+    root = store_root(spark, str(tmp_path), "bdip_dci")
+    assert n_index_versions(f"{root}/state") >= 2
 
 
 def test_ingest_batch_dirs_strict_numeric_filtered(spark, tmp_path):
