@@ -55,7 +55,7 @@ def connected_components(
     union isolated nodes afterwards if needed. Pass a dict as ``stats``
     to receive {n_edges, width, rounds} — the scale-stress harness uses
     it to verify the O(log diameter) round-count claim empirically."""
-    from ..core.session import cache_parallelism
+    from ..core.session import cache_parallelism, local_frame
 
     # checkpointed partitioning is frozen for every later round — size it
     # to the DATA, capped at cores (a default-conf 200 would cost 200
@@ -120,17 +120,7 @@ def connected_components(
             stats.update(n_edges=n_edges, width=1, rounds=0)
         node_t = sym.schema["a"].dataType.simpleString()
         schema = f"node {node_t}, comp {node_t}"
-        if not out_rows:
-            return edges.sparkSession.createDataFrame([], schema)
-        # pandas transport: the list path parallelizes pickled Python
-        # partitions whose downstream coalesce/compute measured ~5 s of
-        # pure overhead per consumer; the pandas form lands as one
-        # local relation in milliseconds (measured 0.15 s end to end)
-        import pandas as _pd
-
-        return edges.sparkSession.createDataFrame(
-            _pd.DataFrame(out_rows, columns=["node", "comp"]), schema
-        )
+        return local_frame(edges.sparkSession, out_rows, schema)
     width = max(1, min(cores, n_edges // 50_000))
     sym = sym.coalesce(width)  # narrow on the checkpointed frame
     labels = (

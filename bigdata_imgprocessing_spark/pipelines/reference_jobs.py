@@ -17,33 +17,38 @@ its expensive frame once with an eager ``localCheckpoint()``, and every
 sink reads that result (the reference's ``--cached-pred`` flag avoids
 recomputing its predictions the same way, pyspark_yolox.py:115-119):
 
-- detection: the detector output per image, read by the counts, the
-  right join that keeps no-detection images and the label semi-join;
-  and ``per_landmark``, which is then written and returned;
+- detection: each image's class counts, computed by row-local array
+  functions over the detector output (no groupBy, no join back to the
+  id list), read by the per-image table and the one labels join; and
+  ``per_landmark``, which is then written and returned;
 - colour: one fused UDF per image (one decode for both features),
   read by the three sinks;
-- stats: ``base``, one row per landmark after the name join, read by
-  the five sinks, whatever lineage the caller's ``per_landmark`` has.
+- stats: one tagged aggregation, whatever lineage the caller's
+  ``per_landmark`` has. Each name row is exploded into the groups it
+  counts toward (its letter, its length bucket, all places, the
+  'people' places, each keyword it contains) and grouped by
+  (kind, key), and the five sinks filter that result without a
+  further shuffle.
 
 Local checkpoints are not cached tables, so a harness-level
 ``clearCache()`` leaves them in place, and the frames returned to the
 caller carry a short lineage. Jobs per call on six 120x160 JPEGs
-(perfbench ``image_pipeline``, 4 cores): detection 15 (12-13 before),
-stats 13 (55-56), colour 6 (5); the colour pipeline sends the corpus
-bytes to Python once (3.1x before).
+(perfbench ``image_pipeline``, 4 cores): detection 6, stats 8, colour
+6; the colour pipeline sends the corpus bytes to Python once.
 
 Differences by design (SURVEY.md §2.12): typed schemas instead of
 all-string CSV; real map/array columns serialized as sorted entry
-strings / JSON only at the CSV boundary; single groupBy per stat; no
+strings / JSON only at the CSV boundary; one groupBy for all stats; no
 collect-then-parallelize round trips; model inference is the
 deterministic stub slotting into predict_batch_udf.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..core.session import local_frame
 from ..functions import first_letter, length_bucket, zero_guard_div
 from ..images.color import color_features_udf
 from ..images.detect import SCORE_THRESHOLD, detect_udf
@@ -64,83 +69,77 @@ def _image_ids(spark: SparkSession, images_dir: str, ext: str = "fimg") -> DataF
     )
 
 
+def _class_totals(entries: Column, weight) -> Column:
+    """A per-row ``groupBy(class_id).sum(weight)`` over an array of
+    structs with a ``class_id``: ``array<struct<class_id, n>>`` sorted
+    by class id."""
+    return F.transform(
+        F.array_sort(F.array_distinct(F.transform(entries, lambda e: e.class_id))),
+        lambda k: F.struct(
+            k.alias("class_id"),
+            F.aggregate(
+                F.filter(entries, lambda e: e.class_id == k),
+                F.lit(0).cast("bigint"),
+                lambda acc, e: acc + weight(e),
+            ).alias("n"),
+        ),
+    )
+
+
+def _entries(totals: str, value) -> Column:
+    """``'k:v,k:v'`` over a ``_class_totals`` column."""
+    return F.array_join(
+        F.transform(totals, lambda s: F.concat_ws(":", s.class_id, value(s))), ","
+    )
+
+
 def run_detection_pipeline(
     spark: SparkSession, images_dir: str, labels: DataFrame, out_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     """pyspark_yolox.py end-to-end: detect → per-image counts table →
-    (semi-join prune) → per-landmark sums/averages. ``labels`` is the
-    (id, landmark_id) dimension (train_labels.csv shape)."""
-    # the one detector pass; the counts, the id list of the right join
-    # and the semi-join below all read it
-    dets = (
+    per-landmark sums/averages. ``labels`` is the (id, landmark_id)
+    dimension (train_labels.csv shape)."""
+    # the one detector pass, reduced to each image's class counts by
+    # row-local array functions (explode → threshold-filter → count,
+    # P6/P7); both tables below read it
+    counts = (
         _image_ids(spark, images_dir)
         .select("id", detect_udf("id").alias("dets"))
+        .select(
+            "id",
+            _class_totals(
+                F.filter("dets", lambda d: d.score > SCORE_THRESHOLD), lambda d: F.lit(1)
+            ).alias("counts"),
+        )
         .localCheckpoint()
-    )
-    ids = dets.select("id")
-    counted = (
-        dets.select("id", F.explode("dets").alias("det"))
-        .where(F.col("det.score") > SCORE_THRESHOLD)
-        .groupBy("id", F.col("det.class_id").alias("class_id"))
-        .agg(F.count("*").alias("cnt"))
     )
     # per-image predictions table (results_predictions,
     # pyspark_yolox.py:137-140); '' for no detections like the '{}' rows
-    per_image = (
-        counted.groupBy("id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("class_id", "cnt"))),
-                    lambda s: F.concat_ws(":", s.class_id, s.cnt),
-                ),
-                ",",
-            ).alias("predictions")
-        )
-        .join(ids, "id", "right")
-        .select("id", F.coalesce("predictions", F.lit("")).alias("predictions"))
+    per_image = counts.select(
+        "id", F.coalesce(_entries("counts", lambda s: s.n), F.lit("")).alias("predictions")
     )
     write_semicolon_csv(per_image, f"{out_dir}/results_predictions")
 
     # per-landmark aggregation (count_objects, pyspark_yolox.py:151-176):
-    # image_count + per-class sums + zero-guarded per-class averages,
-    # restricted to landmarks present in predictions (J3 semi-join prune)
-    labeled = counted.join(labels, "id")
-    image_counts = (
-        labels.join(ids, "id", "left_semi")
-        .groupBy("landmark_id")
-        .agg(F.count_distinct("id").alias("image_count"))
-    )
-    sums = labeled.groupBy("landmark_id", "class_id").agg(F.sum("cnt").alias("class_sum"))
+    # image_count (distinct scanned images) + per-class sums over every
+    # label row + zero-guarded per-class averages, for landmarks with at
+    # least one detection above the threshold
     per_landmark = (
-        sums.join(image_counts, "landmark_id")
-        .groupBy("landmark_id", "image_count")
+        counts.join(labels, "id")
+        .groupBy("landmark_id")
         .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("class_id", "class_sum"))),
-                    lambda s: F.concat_ws(":", s.class_id, s.class_sum),
-                ),
-                ",",
-            ).alias("predictions_sum"),
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct(
-                                "class_id",
-                                zero_guard_div(
-                                    F.col("class_sum"), F.col("image_count")
-                                ).alias("avg"),
-                            )
-                        )
-                    ),
-                    lambda s: F.concat_ws(":", s.class_id, s.avg),
-                ),
-                ",",
+            F.size(F.collect_set("id")).cast("bigint").alias("image_count"),
+            _class_totals(F.flatten(F.collect_list("counts")), lambda s: s.n).alias("sums"),
+        )
+        .where(F.size("sums") > 0)
+        .select(
+            "landmark_id",
+            "image_count",
+            _entries("sums", lambda s: s.n).alias("predictions_sum"),
+            _entries(
+                "sums", lambda s: zero_guard_div(s.n, F.col("image_count"))
             ).alias("averages"),
         )
-        .select("landmark_id", "image_count", "predictions_sum", "averages")
         .localCheckpoint()
     )
     write_semicolon_csv(per_landmark, f"{out_dir}/results_predictions_per_class")
@@ -202,7 +201,7 @@ def run_stats_pipeline(
     keywords: list[str],
     class_of_interest: int = 16,
 ) -> dict[str, DataFrame]:
-    """pyspark_stats.py's five stats, each as ONE query over the
+    """pyspark_stats.py's five stats as ONE grouped aggregation over the
     per-landmark table joined once to the broadcast name dim (J1).
     ``names`` is (landmark_id, name). The class measure is extracted
     from the sorted-entry predictions_sum string with .get(k, 0)
@@ -216,18 +215,56 @@ def run_stats_pipeline(
         ).try_cast("bigint"),
         F.lit(0),
     )
+    name = F.col("name")
+
+    def tag(kind: str, key: Column, keep: Column | None = None) -> Column:
+        keep = F.lit(True) if keep is None else keep
+        return F.struct(F.lit(kind).alias("kind"), key.alias("key"), keep.alias("keep"))
+
+    # each name row counts toward one group per stat it falls in: its
+    # first letter (stat 1, pyspark_stats.py:73-99), every keyword its
+    # name contains (stat 2, J5, :101-123), all places and the 'people'
+    # places, matched case-insensitively (stat 3, :125-153), and its
+    # name-length bucket (stat 4, :156-200). A NULL name has a NULL
+    # letter, matches no keyword and no 'people', and buckets over_20.
+    tags = F.filter(
+        F.array(
+            tag("letter", first_letter(name)),
+            tag("bucket", length_bucket(name, 10, 20)),
+            tag("people", F.lit("avg_all")),
+            tag("people", F.lit("avg_people_places"), name.rlike("(?i)people")),
+            *[tag("city", F.lit(k), name.contains(k)) for k in dict.fromkeys(keywords)],
+        ),
+        lambda t: t.keep,
+    )
+    # a NULL row per people measure: both are reported, NULL when no
+    # place qualifies, as a global aggregate over no rows reports them
+    seeds = local_frame(
+        spark,
+        [("people", "avg_all", None, None), ("people", "avg_people_places", None, None)],
+        "kind string, key string, files bigint, class_cnt bigint",
+    )
     # materialized here, whatever lineage the caller's per_landmark has:
-    # the five sinks below all read this one frame
-    base = (
+    # the five sinks below all read this one small frame
+    groups = (
         per_landmark.join(F.broadcast(names), "landmark_id")
         .select(
-            "landmark_id",
-            "name",
+            F.explode(tags).alias("t"),
             F.col("image_count").cast("bigint").alias("files"),
             cls.alias("class_cnt"),
         )
+        .select("t.kind", "t.key", "files", "class_cnt")
+        .unionByName(seeds)
+        .groupBy("kind", "key")
+        .agg(
+            F.sum("files").alias("files"),
+            zero_guard_div(F.sum("class_cnt"), F.sum("files")).alias("avg"),
+        )
         .localCheckpoint()
     )
+
+    def stat(kind: str, key: str, *cols) -> DataFrame:
+        return groups.where(F.col("kind") == kind).select(F.col("key").alias(key), *cols)
 
     # Sink schemas below are pinned BYTE-FOR-BYTE to the reference's
     # golden files (stats_bckp/ — asserted by tests/test_pipelines.py):
@@ -239,11 +276,8 @@ def run_stats_pipeline(
     # 16.csv:1-2), and the people stat is the long `files considered;
     # avg_detections` form (stats_bckp/people_in_places_with_people/
     # 0.csv:1-3). Returned DataFrames keep the richer combined schemas.
-
-    # stat 1: per first letter (pyspark_stats.py:73-99) — was 156 jobs
-    alphabet = base.groupBy(first_letter(F.col("name")).alias("letter")).agg(
-        F.sum("files").alias("count"),
-        zero_guard_div(F.sum("class_cnt"), F.sum("files")).alias("avg_count"),
+    alphabet = stat(
+        "letter", "letter", F.col("files").alias("count"), F.col("avg").alias("avg_count")
     )
     write_semicolon_csv(alphabet.select("letter", "count"), f"{out_dir}/alphabet_count")
     write_semicolon_csv(
@@ -251,36 +285,22 @@ def run_stats_pipeline(
         f"{out_dir}/alphabet_count_avg",
     )
 
-    # stat 2: per keyword/"city" substring (J5, :101-123)
-    kw_dim = F.broadcast(spark.createDataFrame([(k,) for k in keywords], "kw string"))
-    per_kw = (
-        base.crossJoin(kw_dim)
-        .where(F.col("name").contains(F.col("kw")))
-        .groupBy("kw")
-        .agg(zero_guard_div(F.sum("class_cnt"), F.sum("files")).alias("avg_detections"))
-    )
+    per_kw = stat("city", "kw", F.col("avg").alias("avg_detections"))
     write_semicolon_csv(
         per_kw.select(F.col("kw").alias("city"), "avg_detections"),
         f"{out_dir}/avg_obj_per_city",
     )
 
-    # stat 3: global vs 'people'-subset ratios in ONE pass (:125-153)
-    has = F.lower(F.col("name")).contains("people")
-    people = base.agg(
-        zero_guard_div(F.sum("class_cnt"), F.sum("files")).alias("avg_all"),
-        zero_guard_div(
-            F.sum(F.when(has, F.col("class_cnt"))), F.sum(F.when(has, F.col("files")))
-        ).alias("avg_people_places"),
-    )
-    people_long = people.unpivot(
-        [], ["avg_all", "avg_people_places"], "files considered", "avg_detections"
-    )
+    people_long = stat("people", "files considered", F.col("avg").alias("avg_detections"))
     write_semicolon_csv(people_long, f"{out_dir}/people_in_places_with_people")
-
-    # stat 4: name-length buckets (:156-200)
-    buckets = base.groupBy(length_bucket(F.col("name"), 10, 20).alias("bucket")).agg(
-        zero_guard_div(F.sum("class_cnt"), F.sum("files")).alias("avg_count")
+    people = people_long.agg(
+        *(
+            F.max(F.when(F.col("files considered") == k, F.col("avg_detections"))).alias(k)
+            for k in ("avg_all", "avg_people_places")
+        )
     )
+
+    buckets = stat("bucket", "bucket", F.col("avg").alias("avg_count"))
     write_semicolon_csv(
         buckets.select(
             F.concat("bucket", F.lit("_chars")).alias("length_of_landmark_name"),

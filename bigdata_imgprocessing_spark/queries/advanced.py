@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ..core.catalog import table
 from ..core.registry import query
+from ..core.session import local_frame
 
 # ---------------------------------------------------------------------------
 # A7 — the reference's per-landmark JSON-map aggregation
@@ -1010,7 +1011,8 @@ def exact_deciles_no_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c",
         lambda n: [(d, 1 + (d * (n - 1)) // 10) for d in range(1, 10)],
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(int(d), int(k), c / 100.0) for d, k, c in hits],
         "decile INT, rank_k BIGINT, value DOUBLE",
     )
@@ -1093,7 +1095,8 @@ def trimmed_mean_no_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
     )
     if not hits:  # empty table: the oracle's GROUP BY yields 0 rows too
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "n_rows BIGINT, p5 DOUBLE, p95 DOUBLE, n_outside BIGINT,"
             " trimmed_mean DOUBLE, winsorized_mean DOUBLE",

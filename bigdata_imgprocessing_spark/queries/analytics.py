@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from ..core.catalog import table
 from ..core.registry import query
-from ..core.session import ensure_utc
+from ..core.session import ensure_utc, local_frame
 from ..functions.helpers import ordered_fold_sum, ordered_pairs
 from .curation import _duck_bucket, _md5_bucket
 
@@ -1448,7 +1448,8 @@ def benford_amount_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = cents.select(
         F.substring(F.col("c").cast("string"), 1, 1).cast("int").alias("digit")
     ).groupBy("digit").agg(F.count("*").alias("n"))
-    bench = spark.createDataFrame(
+    bench = local_frame(
+        spark,
         [(d, float(_BENFORD_P[d])) for d in range(1, 10)],
         "digit int, exp_p double",
     )
@@ -3067,7 +3068,8 @@ def conformal_coverage_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_cal_pre = sum(cnt for _, cnt in tier_counts)
     if n_cal_pre == 0 or _m.ceil((n_cal_pre + 1) * (1 - _CONF_ALPHA)) > n_cal_pre:
         cal.unpersist()
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "n_cal bigint, n_eval bigint, k_index bigint, q_width double,"
             " n_covered bigint, coverage double, target double",

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from ..core import fs
 from ..core.catalog import table
 from ..core.registry import query
+from ..core.session import local_frame
 from ..functions.helpers import ordered_pairs
 
 _P = 1099511627791  # prime > 2^40
@@ -1443,7 +1444,8 @@ def kcore_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pairs = _lsh_pairs_store(spark, sf_dir).select("doc_a", "doc_b")
     rows = kcore_peel(pairs, "doc_a", "doc_b", k=_KCORE_K, rounds=_KCORE_ROUNDS)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, "peel_round bigint, n_alive bigint, n_edges_alive bigint"
     )
 
@@ -1514,7 +1516,8 @@ def hyperball_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pairs = _lsh_pairs_store(spark, sf_dir).select("doc_a", "doc_b")
     rows = neighborhood_function(pairs, "doc_a", "doc_b", rounds=_HB_ROUNDS)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "reach_round bigint, n_nodes bigint, sum_ball bigint, est_ok boolean",
     )

@@ -27,6 +27,7 @@ from pyspark.sql.types import ArrayType, BinaryType, DoubleType
 
 from ..core.catalog import table
 from ..core.registry import query
+from ..core.session import local_frame
 from ..images.codec import encode_image
 from ..images.color import average_color_udf, dominant_color_udf
 from ..images.detect import SCORE_THRESHOLD, detect_udf
@@ -422,7 +423,8 @@ def detection_class_names(spark: SparkSession, sf_dir: str) -> DataFrame:
     (spark.createDataFrame over an in-code list — the S3 source kind),
     top-10 classes fully tie-broken."""
     class_dim = F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(i, f"class_{i:02d}") for i in range(N_CLASSES)],
             "class_id int, class_name string",
         )

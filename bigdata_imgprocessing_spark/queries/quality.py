@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..core.catalog import table
 from ..core.registry import query
+from ..core.session import local_frame
 
 # ---------------------------------------------------------------------------
 # Quality-filter funnel: the per-rule rejection accounting every corpus
@@ -1119,7 +1120,8 @@ def observed_scan_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rows = real.collect()  # populates the observation
     got = obs.get
-    metrics = spark.createDataFrame(
+    metrics = local_frame(
+        spark,
         [
             (
                 int(got["obs_rows"]),
@@ -1129,7 +1131,8 @@ def observed_scan_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         "obs_rows bigint, obs_price_total double, obs_nonpos_qty bigint",
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, real.schema
     ).crossJoin(F.broadcast(metrics))
 

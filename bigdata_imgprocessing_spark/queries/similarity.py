@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..core.catalog import table
 from ..core.registry import query
+from ..core.session import local_frame
 from ..operators.similarity import dot, norm
 
 _QUERY_IDS = (0, 1, 2)
@@ -2015,7 +2016,7 @@ def kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
         chosen.append((t, row.vec_id, float(row.d2)))
         centers.append(row.embedding)
     e.unpersist()
-    return spark.createDataFrame(chosen, "step int, vec_id bigint, d2 double")
+    return local_frame(spark, chosen, "step int, vec_id bigint, d2 double")
 
 
 @query(
@@ -2622,7 +2623,7 @@ def topk_capture_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = r.agg(
         F.count("*").alias("n"), F.sum("pos").alias("n_pos")
     )
-    ks = spark.createDataFrame([(64,), (256,), (1024,)], "k int")
+    ks = local_frame(spark, [(64,), (256,), (1024,)], "k int")
     joined = (
         ks.crossJoin(F.broadcast(tot))
         .join(cum, cum.rn <= ks.k)

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from ..core import fs
 from ..core.catalog import table
 from ..core.registry import query
-from ..core.session import ensure_utc
+from ..core.session import ensure_utc, local_frame
 from ..streaming.jobs import event_stream, file_feed_stream, run_to_memory
 from ..streaming.stateful import THRESHOLD, running_user_totals
 
@@ -600,7 +600,8 @@ def _outer_join_feed(spark: SparkSession, sf_dir: str) -> str:
         .where(F.col("event_type").isin("click", "purchase"))
         .select("event_id", "user_id", "event_type", "ts")
     )
-    sent = spark.createDataFrame(
+    sent = local_frame(
+        spark,
         [(-1, -1, "click", "2099-01-01 00:00:00"),
          (-2, -1, "purchase", "2099-01-01 00:00:00")],
         "event_id long, user_id long, event_type string, ts_s string",

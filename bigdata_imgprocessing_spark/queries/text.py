@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ..core.catalog import table
 from ..core.registry import query
+from ..core.session import local_frame
 
 # ---------------------------------------------------------------------------
 
@@ -260,7 +261,7 @@ def keyword_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast nested-loop join; a doc matching k keywords lands in k
     groups (the reference's loop semantics)."""
     d = table(spark, sf_dir, "documents").select("text")
-    kws = F.broadcast(spark.createDataFrame([(k,) for k in _KEYWORDS], "kw string"))
+    kws = F.broadcast(local_frame(spark, [(k,) for k in _KEYWORDS], "kw string"))
     return (
         d.crossJoin(kws)
         .where(F.col("text").contains(F.col("kw")))
@@ -289,7 +290,7 @@ def keyword_lang_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pyspark_stats.py:108-119, A4) mapped to (keyword x lang): the
     6x(1+5)-job driver loop as ONE theta-join + grouped aggregation."""
     d = table(spark, sf_dir, "documents").select("text", "lang")
-    kws = F.broadcast(spark.createDataFrame([(k,) for k in _KEYWORDS], "kw string"))
+    kws = F.broadcast(local_frame(spark, [(k,) for k in _KEYWORDS], "kw string"))
     return (
         d.crossJoin(kws)
         .where(F.col("text").contains(F.col("kw")))
@@ -461,7 +462,7 @@ def heatmap_chart_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     6-row partials). ``sources.html_report.write_html_heatmap`` renders
     this matrix to the reference's standalone-HTML chart artifact."""
     d = table(spark, sf_dir, "documents").select("text", "lang")
-    kws = F.broadcast(spark.createDataFrame([(k,) for k in _KEYWORDS], "kw string"))
+    kws = F.broadcast(local_frame(spark, [(k,) for k in _KEYWORDS], "kw string"))
     return (
         d.crossJoin(kws)
         .where(F.col("text").contains(F.col("kw")))

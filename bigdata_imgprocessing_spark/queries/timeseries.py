@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from ..core.catalog import table
 from ..core.registry import query
-from ..core.session import ensure_utc
+from ..core.session import ensure_utc, local_frame
 from ..functions.helpers import ordered_fold_sum
 from ..operators.asof import asof_join
 
@@ -1861,7 +1861,7 @@ def pinball_quantile_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     fc = a.join(
         F.broadcast(b), F.col("b.x") == F.col("a.x") - 7
     ).select((F.col("a.yc") - F.col("b.yc")).alias("diff"))
-    q = spark.createDataFrame([(1,), (5,), (9,)], "t BIGINT")
+    q = local_frame(spark, [(1,), (5,), (9,)], "t BIGINT")
     loss10 = F.greatest(
         F.col("t") * F.col("diff"), (F.col("t") - 10) * F.col("diff")
     )

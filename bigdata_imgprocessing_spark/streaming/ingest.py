@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.util import inheritable_thread_target
 
 from ..core import fs
+from ..core.session import local_frame
 
 
 def batch_dirs(
@@ -56,11 +57,11 @@ def batch_dirs(
 def _read(spark: SparkSession, dirs: list[str], schema: str) -> DataFrame:
     # explicit schema: the store layouts are fixed, and inference would
     # re-read parquet footers on every micro-batch. The empty frame is
-    # a LocalRelation (limit 0), which Catalyst prunes out of unions
-    # and joins, so a first batch plans as if no state read existed.
+    # an empty LocalRelation, which Catalyst prunes out of unions and
+    # joins, so a first batch plans as if no state read existed.
     if dirs:
         return spark.read.schema(schema).parquet(*dirs)
-    return spark.createDataFrame([], schema).limit(0)
+    return local_frame(spark, [], schema)
 
 
 def read_store(

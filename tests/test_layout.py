@@ -531,3 +531,40 @@ def test_bench_ab_loader_builds_a_second_registry(tmp_path):
     fn = ref["pricing_summary"]
     assert fn.__module__.startswith(bench.REF_PACKAGE + ".")
     assert fn is not QUERIES["pricing_summary"]
+
+
+def test_driver_side_frames_skip_the_python_worker():
+    """Driver-side rows become frames through core.session.local_frame
+    (an Arrow local relation): a list-built createDataFrame is a pickled
+    RDD that a Python worker unpickles on every evaluation. Only the
+    helper and the pandas CSV reader call createDataFrame."""
+    import ast
+    import pathlib
+
+    import bigdata_imgprocessing_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    allowed = {root / "core" / "session.py", root / "sources" / "csv_io.py"}
+    hits = [
+        f"{p.relative_to(root)}:{node.lineno}"
+        for p in sorted(root.rglob("*.py"))
+        if p not in allowed
+        for node in ast.walk(ast.parse(p.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "createDataFrame"
+    ]
+    assert hits == []
+
+
+def test_bench_warm_up_starts_python_workers(spark):
+    """bench's warm-up frames keep their Python stage after optimization:
+    the pandas UDF feeds an aggregate (a UDF whose output nothing reads
+    is pruned, leaving Aggregate <- Project <- Range), and the
+    list-built frame scans a pickled RDD."""
+    import bench
+
+    udf_frame, list_frame = bench.python_warmups(spark)
+    assert "ArrowEvalPython" in udf_frame._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" in list_frame._jdf.queryExecution().executedPlan().toString()
+    assert [tuple(df.collect()[0]) for df in (udf_frame, list_frame)] == [(499500,), (1,)]

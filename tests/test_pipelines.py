@@ -8,6 +8,7 @@ from __future__ import annotations
 import glob
 import json
 import pstats
+from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
 import pytest
@@ -191,9 +192,21 @@ def _decode_count(spark, dump_dir: str, fn) -> int:
     )
 
 
+def test_detection_pipeline_job_count(spark, corpus, dims, tmp_path):
+    """Per-image counts are row-local over the one detector pass, and
+    per_landmark is one join to the labels plus one grouping."""
+    (root, n), (labels, names) = corpus, dims
+    jobs = _job_count(
+        spark,
+        "test_detection_pipeline_job_count",
+        lambda: run_detection_pipeline(spark, str(root / "images"), labels, str(tmp_path / "det")),
+    )
+    assert jobs <= 8
+
+
 def test_stats_pipeline_job_count(spark, corpus, dims, tmp_path):
-    """The stats base is materialized once and its five sinks read it,
-    instead of each sink re-running the detection lineage (56 jobs)."""
+    """The five stats are one grouped aggregation, materialized once,
+    and the five sinks read it without a further shuffle."""
     (root, n), (labels, names) = corpus, dims
     _, per_landmark = run_detection_pipeline(
         spark, str(root / "images"), labels, str(tmp_path / "det")
@@ -205,7 +218,7 @@ def test_stats_pipeline_job_count(spark, corpus, dims, tmp_path):
             spark, per_landmark, names, str(tmp_path / "stats"), keywords=["spark", "people"]
         ),
     )
-    assert jobs <= 15
+    assert jobs <= 10
 
 
 def test_color_pipeline_decodes_each_image_once(spark, corpus, tmp_path):
@@ -296,3 +309,167 @@ def test_cache_root_tracks_every_table(spark, tmp_path):
     t2 = store_root(spark, str(sf), "bdip_pipeline")
     assert t2 not in (t0, t1)
     shutil.rmtree(sf)
+
+
+# Edge cases pinned against a driver-side recompute of the reference
+# semantics: duplicate label rows count once in image_count but add
+# their detections once per row; landmarks with no detection above the
+# threshold have no per-class row; names match "people" in any case.
+
+EDGE_LABELS = [
+    ("img1", "lmA"), ("img3", "lmA"), ("img3", "lmA"), ("img10", "lmA"),
+    ("img0", "lmB"), ("img4", "lmB"), ("img6", "lmB"),
+    ("img7", "lmC"), ("img11", "lmC"), ("img1", "lmC"),
+    ("img8", "lmD"), ("ghost", "lmD"),
+    ("img2", "lmE"), ("img5", "lmF"), ("img9", "lmG"),
+]
+EDGE_NAMES = [
+    ("lmA", "Volkspark PEOPLE Friedrichshain"),
+    ("lmB", "Bergen"),
+    ("lmC", "Café People"),
+    ("lmD", None),
+    ("lmE", "Øresund Bridge"),
+    ("lmF", "peoplesquare"),
+    ("lmG", "Ṗeople"),
+    ("lmX", "Unlabelled"),
+]
+PLAIN_NAMES = [("lmA", "Alpha"), ("lmC", "Charlie"), ("lmE", "Echo"), ("lmF", "Foxtrot")]
+
+
+def _zg(num: int, den: int) -> float:
+    """``zero_guard_div``: 0 on a zero denominator, else half-up at 4
+    places of the quotient's shortest decimal form."""
+    if den == 0:
+        return 0.0
+    return float(Decimal(repr(num / den)).quantize(Decimal("0.0001"), ROUND_HALF_UP))
+
+
+def _expected_detection(ids: list[str], labels: list[tuple]) -> tuple[dict, dict]:
+    counts = {}
+    for i in ids:
+        c: dict[int, int] = {}
+        for d in _detections_for_id(i):
+            if d["score"] > SCORE_THRESHOLD:
+                c[d["class_id"]] = c.get(d["class_id"], 0) + 1
+        counts[i] = c
+    members: dict[str, set] = {}
+    sums: dict[str, dict[int, int]] = {}
+    for img, lm in labels:
+        if img in counts:
+            members.setdefault(lm, set()).add(img)
+            for k, v in counts[img].items():
+                sums.setdefault(lm, {})[k] = sums.get(lm, {}).get(k, 0) + v
+    per_class = {lm: (len(members[lm]), s) for lm, s in sums.items()}
+    return counts, per_class
+
+
+def _expected_stats(per_class: dict, names: list[tuple], keywords: list[str], cls: int) -> dict:
+    base = [
+        (name, n, s.get(cls, 0))
+        for lm_n, name in names
+        for lm, (n, s) in per_class.items()
+        if lm == lm_n
+    ]
+
+    def avg(rows):
+        return _zg(sum(r[2] for r in rows), sum(r[1] for r in rows)) if rows else None
+
+    def bucket(name):
+        if name is None or len(name) > 20:
+            return "over_20"
+        return "under_10" if len(name) < 10 else "between_10_and_20"
+
+    def letter(name):
+        return None if name is None else name[:1]
+
+    letters = {letter(r[0]): [q for q in base if letter(q[0]) == letter(r[0])] for r in base}
+    people = [r for r in base if r[0] is not None and "people" in r[0].lower()]
+    return {
+        "alphabet_count": {k: sum(r[1] for r in rows) for k, rows in letters.items()},
+        "alphabet_count_avg": {k: avg(rows) for k, rows in letters.items()},
+        "avg_obj_per_city": {
+            k: avg([r for r in base if r[0] is not None and k in r[0]])
+            for k in keywords
+            if any(r[0] is not None and k in r[0] for r in base)
+        },
+        "people_in_places_with_people": {"avg_all": avg(base), "avg_people_places": avg(people)},
+        "dogs_by_name_length": {
+            f"{b}_chars": avg([r for r in base if bucket(r[0]) == b])
+            for b in {bucket(r[0]) for r in base}
+        },
+    }
+
+
+def _csv_table(out_dir: str) -> dict:
+    """``key -> value`` of a two-column sink; NULL and '' read as None."""
+    rows = [line.split(";") for line in _csv_lines(out_dir)[1:]]
+    val = {k.strip('"') or None: (v or None) for k, v in rows}
+    assert len(val) == len(rows), rows
+    return val
+
+
+@pytest.fixture(scope="module")
+def edge_detection(spark, corpus, tmp_path_factory):
+    root, n = corpus
+    out = str(tmp_path_factory.mktemp("edge_det"))
+    labels = spark.createDataFrame(EDGE_LABELS, "id string, landmark_id string")
+    per_image, per_landmark = run_detection_pipeline(spark, str(root / "images"), labels, out)
+    return out, per_image, per_landmark, _expected_detection([f"img{i}" for i in range(n)], EDGE_LABELS)
+
+
+def test_detection_edge_cases_match_recompute(edge_detection):
+    out, per_image, per_landmark, (counts, per_class) = edge_detection
+    want_pred = {i: ",".join(f"{k}:{v}" for k, v in sorted(c.items())) for i, c in counts.items()}
+    assert want_pred["img0"] == want_pred["img4"] == ""  # zero detections above threshold
+    assert {r.id: r.predictions for r in per_image.collect()} == want_pred
+    csv_pred = {r.split(";")[0]: r.split(";")[1] for r in _csv_lines(f"{out}/results_predictions")[1:]}
+    assert {k: v.strip('"') for k, v in csv_pred.items()} == want_pred
+
+    def entries(s):
+        return {int(k): float(v) for k, v in (e.split(":") for e in s.split(","))}
+
+    assert "lmB" not in per_class and per_class["lmA"][0] == 3
+    want = {
+        lm: (n, {k: float(v) for k, v in s.items()}, {k: _zg(v, n) for k, v in s.items()})
+        for lm, (n, s) in per_class.items()
+    }
+    got = {
+        r.landmark_id: (r.image_count, entries(r.predictions_sum), entries(r.averages))
+        for r in per_landmark.collect()
+    }
+    assert got == want
+    rows = [line.split(";") for line in _csv_lines(f"{out}/results_predictions_per_class")[1:]]
+    assert {r[0]: (int(r[1]), entries(r[2]), entries(r[3])) for r in rows} == want
+
+
+@pytest.mark.parametrize(
+    "names, keywords",
+    [
+        (EDGE_NAMES, ["park", "Bridge", "Bridge", "People", "nomatch"]),
+        (PLAIN_NAMES, []),
+    ],
+    ids=["people_nonascii_null_dupkw", "no_people_no_keywords"],
+)
+def test_stats_edge_cases_match_recompute(spark, edge_detection, tmp_path, names, keywords):
+    _, _, per_landmark, (_, per_class) = edge_detection
+    cls = 35
+    out = str(tmp_path / "stats")
+    stats = run_stats_pipeline(
+        spark, per_landmark,
+        spark.createDataFrame(names, "landmark_id string, name string"),
+        out, keywords=keywords, class_of_interest=cls,
+    )
+    want = _expected_stats(per_class, names, keywords, cls)
+    for sink, expected in want.items():
+        got = _csv_table(f"{out}/{sink}")
+        if sink == "alphabet_count":
+            got = {k: int(v) for k, v in got.items()}
+        else:
+            got = {k: None if v is None else float(v) for k, v in got.items()}
+        assert got == expected, sink
+    people = stats["people"].collect()[0]
+    assert (people.avg_all, people.avg_people_places) == tuple(
+        want["people_in_places_with_people"].values()
+    )
+    if names is PLAIN_NAMES:
+        assert want["people_in_places_with_people"]["avg_people_places"] is None
