@@ -1,18 +1,21 @@
-"""Image codec front door: FIMG, real BMP/PNG (stdlib), cv2 fallback.
+"""Image codec front door: FIMG, real BMP/PNG/JPEG (stdlib+numpy), cv2
+fallback.
 
 The reference decodes JPEGs with ``cv2.imdecode(np.frombuffer(...))``
-(pyspark_yolox.py:65-67, pyspark_dominant.py:33-35). This container has
-no cv2/PIL, so ``decode_image`` dispatches on magic bytes: the trivial
+(pyspark_yolox.py:65-67, pyspark_dominant.py:33-35). The engine does not
+need cv2/PIL: ``decode_image`` dispatches on magic bytes to the trivial
 FIMG container (magic + h + w + channels + raw uint8 pixels) for
-synthetic fixtures, REAL 24-bit BMP and 8-bit PNG via the stdlib-only
-codecs in ``images.formats`` (so a real on-disk format is first-class
-with no native deps), and cv2 for anything else when importable (the
-JPEG slot-in). Everything downstream (average color, k-means dominant
-color, resize) operates on the decoded ndarray identically.
+synthetic fixtures, and to the from-spec BMP, PNG (``images.formats``)
+and JPEG (``images.jpeg``) codecs for real on-disk formats. cv2, when
+importable, takes what those codecs do not decode, and the module
+logger records why it was used. Everything downstream (average color,
+k-means dominant color, resize) operates on the decoded ndarray
+identically.
 """
 
 from __future__ import annotations
 
+import logging
 import struct
 
 import numpy as np
@@ -23,6 +26,8 @@ try:  # pragma: no cover - cv2 absent in this container
     _HAS_CV2 = True
 except ImportError:
     _HAS_CV2 = False
+
+_log = logging.getLogger(__name__)
 
 _MAGIC = b"FIMG"
 _HEADER = struct.Struct(">4sHHB")  # magic, height, width, channels
@@ -44,12 +49,12 @@ def decode_image(buf: bytes) -> np.ndarray:
     (interleaved, non-interleaved multi-scan, AND partially
     interleaved), progressive, LOSSLESS (SOF3), 12-bit extended-
     sequential gray AND color (>>4 uint8 contract), 4:4:4 / 4:2:2 /
-    4:2:0 / gray, plus 4-component Adobe CMYK/YCCK at BOTH precisions
-    (12-bit CMYK landed r9) — all natively
-    (stdlib+numpy codecs — the reference's actual *.jpg ingest format
-    decodes without cv2); the remaining exotic variants
-    (arithmetic-coded, hierarchical) fall through to cv2 when available,
-    else the codec's NotImplementedError propagates (documented gate).
+    4:2:0 / gray, plus 4-component Adobe CMYK/YCCK at both precisions
+    — all natively (stdlib+numpy codecs: the reference's actual *.jpg
+    ingest format decodes without cv2). The remaining exotic variants
+    (arithmetic-coded, hierarchical) and unrecognized formats go to cv2
+    when it is importable; otherwise the codec's NotImplementedError
+    propagates (documented gate).
     All paths return RGB channel order — cv2 decodes BGR, so its
     results are channel-reversed here."""
     from .formats import BMP_MAGIC, PNG_MAGIC, decode_bmp, decode_png
@@ -65,21 +70,23 @@ def decode_image(buf: bytes) -> np.ndarray:
     if buf[:2] == JPEG_MAGIC:
         try:
             return decode_jpeg(buf)
-        except NotImplementedError:
+        except NotImplementedError as exc:
             if not _HAS_CV2:
                 raise
-            bgr = cv2.imdecode(  # pragma: no cover
-                np.frombuffer(buf, dtype=np.uint8), cv2.IMREAD_COLOR
-            )
-            if bgr is None:  # pragma: no cover - cv2 signals failure as None
-                raise ValueError("cv2 could not decode JPEG stream")
-            return np.ascontiguousarray(bgr[:, :, ::-1])  # pragma: no cover
-    if _HAS_CV2:  # pragma: no cover
-        bgr = cv2.imdecode(np.frombuffer(buf, dtype=np.uint8), cv2.IMREAD_COLOR)
-        if bgr is None:
-            raise ValueError("cv2 could not decode image bytes")
-        return np.ascontiguousarray(bgr[:, :, ::-1])
+            return _cv2_decode(buf, str(exc))
+    if _HAS_CV2:
+        return _cv2_decode(buf, "unrecognized format")
     raise NotImplementedError(
-        "unrecognized image format (FIMG, BMP, PNG, and baseline JPEG "
-        "decode natively; cv2/PIL absent in this container)"
+        "unrecognized image format (FIMG, BMP, PNG and JPEG decode "
+        "natively; cv2 is not importable)"
     )
+
+
+def _cv2_decode(buf: bytes, reason: str) -> np.ndarray:
+    """The cv2 fallback: ``cv2.imdecode`` with BGR → RGB, logging why
+    the native codecs passed the bytes on."""
+    _log.info("image decode via cv2: %s", reason)
+    bgr = cv2.imdecode(np.frombuffer(buf, dtype=np.uint8), cv2.IMREAD_COLOR)
+    if bgr is None:  # cv2 signals failure as None
+        raise ValueError("cv2 could not decode image bytes")
+    return np.ascontiguousarray(bgr[:, :, ::-1])

@@ -1,43 +1,45 @@
-"""Stdlib+numpy baseline JPEG codec (ITU-T T.81 / ISO 10918-1).
+"""Stdlib+numpy JPEG codec (ITU-T T.81 / ISO 10918-1): the one decoder
+for every supported frame type, and the sequential encoders.
 
-Closes the last real-format gap: the reference's actual ingest format is
-``*.jpg`` via ``cv2.imdecode`` (pyspark_yolox.py:123,67;
-pyspark_dominant.py:25,35), and this container has no cv2/PIL. Encoder
-and decoder are implemented from the published spec with nothing but
-``struct`` and numpy:
+The reference reads its ``*.jpg`` corpus with ``cv2.imdecode``
+(pyspark_yolox.py:123,67; pyspark_dominant.py:25,35). This codec does
+that job with nothing but ``struct`` and numpy, implemented from the
+published spec, so the engine needs no cv2/PIL.
 
-- **Decoder**: baseline sequential DCT (SOF0), 8-bit, interleaved OR
-  non-interleaved multi-scan (one SOS per component — each scan's
-  blocks raster the component's own grid, DC predictors reset per
-  scan, and a file whose scans miss a component raises instead of
-  rendering it flat), any integer-ratio sampling factors — 4:4:4,
-  4:2:2, 4:2:0 (the default output of essentially every camera
-  encoder), 4:1:1 — or single-component grayscale; chroma upsampled
-  nearest-neighbor after per-component IDCT (spec-sufficient per T.81
-  A.1.1, which leaves the upsampling filter to the implementation);
-  generic DQT (8/16-bit tables) and DHT parsing (tables come from the
-  stream, not hardcoded), restart markers, 0xFF00 byte-unstuffing,
-  fill-byte (repeated 0xFF) skipping per B.1.1.2. Scan scripts may be
-  fully interleaved, per-component, or PARTIALLY interleaved (1 < Ns <
-  Nf — e.g. a luma scan plus a Cb+Cr pair scan); 4-component Adobe
-  CMYK/YCCK frames decode via the APP14 transform flag (inverted-CMYK
-  convention, RGB output). Progressive (SOF2) streams route to the
-  sibling from-spec decoder in ``images/jpeg_progressive.py`` and
-  lossless (SOF3) to ``images/jpeg_lossless.py``; 12-bit EXTENDED
-  sequential (SOF1) gray AND YCbCr color decode natively with a
-  documented >>4 uint8 output contract (the viewer convention —
-  engine arrays are uint8); 12-bit CMYK and arithmetic/hierarchical
-  streams raise NotImplementedError — the same explicit gating as the
-  other codecs' unsupported variants.
-- **Encoder**: SOF0 4:4:4 / 4:2:2 / 4:2:0 (or grayscale), JFIF APP0,
-  canonical Huffman tables CONSTRUCTED rather than transcribed (12 DC
-  size symbols at code length 4, all 162 AC (run,size) symbols at
-  length 8 — Kraft-feasible, all-ones code unused, spec-legal), chroma
-  box-average downsampling, default quantization tables of all ones
-  (max quality: 4:4:4 round-trip error is DCT rounding only, bounded at
-  ±6 per sample incl. the color transform — the property tests pin
-  this; subsampled modes additionally lose chroma detail, exact only
-  for chroma-smooth content).
+- **Decoder** (``decode_jpeg``): ``_decode_jpeg`` is the only loop that
+  walks marker segments. It reads DQT (8/16-bit tables), DHT, SOF0-SOF3,
+  DRI, APP14 and SOS, skips 0xFF fill bytes (B.1.1.2), and applies each
+  frame type's gates in ``_read_frame``:
+  - SOF0 baseline and SOF1 extended sequential, 8- or 12-bit, gray,
+    YCbCr or 4-component Adobe CMYK/YCCK (APP14 transform flag,
+    inverted-CMYK convention, RGB output);
+  - SOF2 progressive, 8-bit, gray or YCbCr: spectral selection,
+    successive approximation, EOBn runs (T.81 Annex G);
+  - SOF3 lossless, 8-bit, gray or direct RGB, no subsampling and no
+    restart interval; its scans decode in ``images/jpeg_lossless.py``.
+
+  A sequential scan is the progressive case Ss=0, Se=63, Ah=Al=0, so
+  every DCT scan goes through one walker (``_decode_dct_scan``) into
+  per-component zigzag coefficient grids: interleaved, per-component or
+  partially interleaved (1 < Ns < Nf) scan scripts, restart markers,
+  any integer-ratio sampling factors (4:4:4, 4:2:2, 4:2:0, 4:1:1). One
+  tail (``_dct_pixels``) then dequantizes, runs the batched IDCT,
+  upsamples chroma nearest-neighbour (T.81 A.1.1 leaves the filter to
+  the implementation) and converts colour. 12-bit frames return uint8
+  via >>4 (the viewer convention; engine arrays are uint8).
+
+  Corrupt or truncated streams raise ValueError (the quarantine path);
+  unsupported variants (arithmetic or hierarchical coding, other
+  precisions) raise NotImplementedError (the cv2 fallback gate).
+- **Encoder**: ``encode_jpeg`` (SOF0, JFIF, 4:4:4 / 4:2:2 / 4:2:0 or
+  gray, any scan script), ``encode_jpeg_cmyk`` (Adobe APP14) and
+  ``encode_jpeg_12bit`` (SOF1) are front ends over one sequential frame
+  writer, ``_write_sequential``. Huffman tables are CONSTRUCTED
+  canonical tables, not transcribed (every symbol of a class at one
+  code length, Kraft-feasible, all-ones code unused). Chroma is
+  box-averaged when subsampled; the default quantization table is all
+  ones, so 4:4:4 round-trip error is DCT rounding only (±6 per sample
+  including the colour transform, pinned by the property tests).
 
 Arrays are RGB-ordered H×W×3 (or H×W gray) uint8 — the engine
 convention shared with images/formats.py.
@@ -46,6 +48,7 @@ convention shared with images/formats.py.
 from __future__ import annotations
 
 import struct
+from collections.abc import Sequence
 
 import numpy as np
 
@@ -81,7 +84,7 @@ _ZIGZAG = _zigzag_order()
 _UNZIGZAG = np.argsort(_ZIGZAG)
 
 # --------------------------------------------------------------------------
-# Canonical Huffman tables for the ENCODER. The decoder never sees
+# Canonical Huffman tables for the ENCODERS. The decoder never sees
 # these names — it builds tables from the stream's DHT segments, so any
 # spec-legal table here keeps files interoperable.
 # --------------------------------------------------------------------------
@@ -92,6 +95,17 @@ _AC_VALS = [0x00, 0xF0] + [
     (run << 4) | size for run in range(16) for size in range(1, 11)
 ]
 _AC_BITS = [0, 0, 0, 0, 0, 0, 0, len(_AC_VALS), 0, 0, 0, 0, 0, 0, 0, 0]
+
+# 12-bit tables: DC difference categories reach 15 and AC sizes 14
+# (T.81 F.1.2.1 for 12-bit data) — 16 DC symbols at code length 5 and
+# 226 AC symbols at length 8, both Kraft-feasible with all-ones unused.
+_DC12_VALS = list(range(16))
+_DC12_BITS = [0, 0, 0, 0, len(_DC12_VALS), 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
+_AC12_VALS = sorted(
+    [0x00, 0xF0] + [(run << 4) | size for run in range(16)
+                    for size in range(1, 15)]
+)
+_AC12_BITS = [0, 0, 0, 0, 0, 0, 0, len(_AC12_VALS), 0, 0, 0, 0, 0, 0, 0, 0]
 
 
 def _canonical_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
@@ -110,6 +124,16 @@ def _canonical_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, i
 
 _ENC_DC = _canonical_codes(_DC_BITS, _DC_VALS)
 _ENC_AC = _canonical_codes(_AC_BITS, sorted(_AC_VALS))
+
+# per sample precision: the DHT segments (Tc<<4|Th, bits, values) and the
+# DC / AC code maps the sequential writer emits with
+_TABLES = {
+    8: ([(0x00, _DC_BITS, _DC_VALS), (0x10, _AC_BITS, sorted(_AC_VALS))],
+        _ENC_DC, _ENC_AC),
+    12: ([(0x00, _DC12_BITS, _DC12_VALS), (0x10, _AC12_BITS, _AC12_VALS)],
+         _canonical_codes(_DC12_BITS, _DC12_VALS),
+         _canonical_codes(_AC12_BITS, _AC12_VALS)),
+}
 
 _QUANT_ONES = np.ones(64, dtype=np.uint16)
 
@@ -136,10 +160,12 @@ class _BitWriter:
             self._n -= 8
         self._acc &= (1 << self._n) - 1
 
-    def flush(self) -> None:
+    def flush(self) -> bytearray:
+        """Pad the last byte with 1-bits (per spec); returns the bytes."""
         if self._n:
             pad = 8 - self._n
-            self.write((1 << pad) - 1, pad)  # pad with 1-bits per spec
+            self.write((1 << pad) - 1, pad)
+        return self.out
 
 
 class _BitReader:
@@ -166,7 +192,9 @@ class _BitReader:
                 self.marker = nxt
                 self.pos += 1
                 raise ValueError("JPEG entropy data exhausted mid-block")
-        self._acc = (self._acc << 8) | b
+        # keep only the live bits: an unmasked accumulator grows with the
+        # stream and makes every shift, so the whole decode, quadratic
+        self._acc = ((self._acc & ((1 << self._n) - 1)) << 8) | b
         self._n += 8
 
     def bit(self) -> int:
@@ -195,27 +223,69 @@ class _BitReader:
             return m
         return None
 
+    def end(self) -> int:
+        """Position of the marker that ends this scan's entropy data."""
+        return self.pos - 2 if self.marker is not None else self.pos
+
+
+# --------------------------------------------------------------------------
+# Frame geometry, shared by the encoders and the decoder
+# --------------------------------------------------------------------------
+
+
+class _Layout:
+    """Block geometry of a frame (T.81 A.2): the MCU grid over the
+    largest sampling factors, and each component's own block grid."""
+
+    def __init__(self, h: int, w: int, factors: list[tuple[int, int]]) -> None:
+        self.h, self.w, self.factors = h, w, factors
+        self.hmax = max(f[0] for f in factors)
+        self.vmax = max(f[1] for f in factors)
+        self.mcx = -(-w // (8 * self.hmax))
+        self.mcy = -(-h // (8 * self.vmax))
+
+    def dims(self, c: int) -> tuple[int, int]:
+        """Component ``c``'s sample rows × cols (ceil-divided)."""
+        hi, vi = self.factors[c]
+        return -(-self.h * vi // self.vmax), -(-self.w * hi // self.hmax)
+
+    def scan_units(self, comps: Sequence[int]):
+        """Yield each unit of a scan over component indices ``comps`` as
+        the (component, block row, block col) list it codes: the frame's
+        MCUs (each component's Hi×Vi blocks) for an interleaved scan —
+        also a partial one, since the MCU grid is frame-level — else one
+        block per unit over the component's own grid."""
+        if len(comps) == 1:
+            c = comps[0]
+            ch, cw = self.dims(c)
+            for bv in range(-(-ch // 8)):
+                for bh in range(-(-cw // 8)):
+                    yield [(c, bv, bh)]
+            return
+        for my in range(self.mcy):
+            for mx in range(self.mcx):
+                unit = []
+                for c in comps:
+                    hi, vi = self.factors[c]
+                    unit += [(c, my * vi + dv, mx * hi + dh)
+                             for dv in range(vi) for dh in range(hi)]
+                yield unit
+
 
 # --------------------------------------------------------------------------
 # Encoder
 # --------------------------------------------------------------------------
 
 
-def _rgb_to_ycbcr(a: np.ndarray) -> np.ndarray:
-    r = a[:, :, 0].astype(np.float64)
-    g = a[:, :, 1].astype(np.float64)
-    b = a[:, :, 2].astype(np.float64)
-    y = 0.299 * r + 0.587 * g + 0.114 * b
-    cb = 128.0 - 0.168736 * r - 0.331264 * g + 0.5 * b
-    cr = 128.0 + 0.5 * r - 0.418688 * g - 0.081312 * b
-    return np.stack([y, cb, cr], axis=2)
-
-
-def _ycbcr_to_rgb(y: np.ndarray, cb: np.ndarray, cr: np.ndarray) -> np.ndarray:
-    r = y + 1.402 * (cr - 128.0)
-    g = y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
-    b = y + 1.772 * (cb - 128.0)
-    return np.clip(np.stack([r, g, b], axis=2).round(), 0, 255).astype(np.uint8)
+def _rgb_to_ycbcr(a: np.ndarray, ctr: float = 128.0) -> list[np.ndarray]:
+    """RGB (or inverted C,M,Y) planes → Y, Cb, Cr with chroma centred at
+    ``ctr`` (128 for 8-bit samples, 2048 for 12-bit)."""
+    r, g, b = (a[:, :, c].astype(np.float64) for c in range(3))
+    return [
+        0.299 * r + 0.587 * g + 0.114 * b,
+        ctr - 0.168736 * r - 0.331264 * g + 0.5 * b,
+        ctr + 0.5 * r - 0.418688 * g - 0.081312 * b,
+    ]
 
 
 def _blocks(plane: np.ndarray, nbv: int, nbh: int) -> np.ndarray:
@@ -249,47 +319,164 @@ def _seg(marker: int, payload: bytes) -> bytes:
 
 
 _SUBSAMPLING = {"444": (1, 1), "422": (2, 1), "420": (2, 2)}
+_APP0_JFIF = _seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
 
 
-def _emit_block(
-    bw_: _BitWriter,
-    zz: np.ndarray,
-    prev_dc: int,
-    enc_dc: dict | None = None,
-    enc_ac: dict | None = None,
-) -> int:
-    """Huffman-code one zigzagged quantized block; returns its DC.
-    Table overrides exist for the 12-bit encoder (wider DC categories
-    and AC sizes than the canonical 8-bit tables cover)."""
-    enc_dc = _ENC_DC if enc_dc is None else enc_dc
-    enc_ac = _ENC_AC if enc_ac is None else enc_ac
-    diff = int(zz[0]) - prev_dc
+def _adobe_app14(transform: int) -> bytes:
+    """The APP14 segment whose transform flag (0 = CMYK, 2 = YCCK) tells
+    a decoder how to read a 4-component frame."""
+    return _seg(0xEE, b"Adobe" + struct.pack(">HHHB", 100, 0, 0, transform))
+
+
+def _quant(quant: np.ndarray | None) -> np.ndarray:
+    q = (_QUANT_ONES if quant is None else np.asarray(quant, np.uint16)).reshape(64)
+    if q.max() > 255 or q.min() < 1:
+        # the emitted DQT uses the 8-bit (Pq=0) encoding; values outside
+        # [1, 255] would silently truncate into a corrupt table
+        raise ValueError("quant table values must be in [1, 255]")
+    return q
+
+
+def _ycc_planes(arr: np.ndarray, subsampling: str):
+    """uint8 H×W×3 RGB (or H×W gray) → (planes, sampling factors): Y at
+    full resolution, Cb/Cr box-downsampled by the subsampling mode."""
+    a = np.ascontiguousarray(arr, dtype=np.uint8)
+    if a.ndim != 2 and a.shape[2] != 3:
+        raise ValueError(f"JPEG encode needs 3 channels or gray, got {a.shape}")
+    if subsampling not in _SUBSAMPLING:
+        raise ValueError(f"subsampling must be one of {sorted(_SUBSAMPLING)}")
+    if a.ndim == 2:
+        return [a.astype(np.float64)], [(1, 1)]
+    hy, vy = _SUBSAMPLING[subsampling]
+    y, cb, cr = _rgb_to_ycbcr(a)
+    planes = [y, _box_downsample(cb, hy, vy), _box_downsample(cr, hy, vy)]
+    return planes, [(hy, vy), (1, 1), (1, 1)]
+
+
+def _cmyk_planes(a: np.ndarray, transform: int, ctr: float) -> list[np.ndarray]:
+    """Inverted-CMYK samples → the four stored planes: direct for
+    ``transform=0``; for ``transform=2`` (YCCK) the C,M,Y triple goes
+    through the YCbCr transform and K stays direct."""
+    if transform == 2:
+        return _rgb_to_ycbcr(a[:, :, :3], ctr) + [a[:, :, 3].astype(np.float64)]
+    return [a[:, :, c].astype(np.float64) for c in range(4)]
+
+
+def _frame_header(sof: int, prec: int, factors: list[tuple[int, int]],
+                  h: int, w: int, q: np.ndarray | None, dht: list,
+                  app: bytes = b"") -> bytearray:
+    """SOI, ``app``, DQT table 0 (unless ``q`` is None), the SOF and the
+    DHT segments: the prefix every encoder's file starts with."""
+    out = bytearray(JPEG_MAGIC) + app
+    if q is not None:
+        out += _seg(0xDB, bytes([0]) + bytes(q[_ZIGZAG].astype(np.uint8)))
+    sof_payload = struct.pack(">BHHB", prec, h, w, len(factors))
+    for cid, (hi, vi) in enumerate(factors, 1):
+        sof_payload += struct.pack(">BBB", cid, (hi << 4) | vi, 0)  # qtable 0
+    out += _seg(sof, sof_payload)
+    for tc_th, bits, vals in dht:
+        out += _seg(0xC4, bytes([tc_th]) + bytes(bits) + bytes(vals))
+    return out
+
+
+def _sos(comps: Sequence[int], ss: int, se: int, ahal: int) -> bytes:
+    """SOS header over component indices ``comps`` (ids c+1, DC and AC
+    table 0)."""
+    payload = bytes([len(comps)]) + b"".join(bytes([c + 1, 0x00]) for c in comps)
+    return _seg(0xDA, payload + bytes([ss, se, ahal]))
+
+
+def _forward_dct(planes: list[np.ndarray], lay: _Layout, q: np.ndarray,
+                 shift: float) -> list[np.ndarray]:
+    """Level-shift, FDCT and quantize every plane over its MCU-padded
+    block grid → per-component (nbv, nbh, 64) int64 in zigzag order."""
+    qf = q.reshape(8, 8).astype(np.float64)
+    out = []
+    for p, (hi, vi) in zip(planes, lay.factors):
+        b = _blocks(p - shift, lay.mcy * vi, lay.mcx * hi)
+        coeff = np.einsum("ij,vhjk,lk->vhil", _T, b, _T)
+        zz = np.round(coeff / qf).astype(np.int64)
+        out.append(zz.reshape(b.shape[0], b.shape[1], 64)[:, :, _ZIGZAG])
+    return out
+
+
+def _emit_dc(bw: _BitWriter, diff: int, enc_dc: dict = _ENC_DC) -> None:
+    """Huffman-code one DC-style difference: category, then amplitude."""
     s = _size_of(diff)
     code, ln = enc_dc[s]
-    bw_.write(code, ln)
+    bw.write(code, ln)
     if s:
-        bw_.write(_amplitude(diff, s), s)
+        bw.write(_amplitude(diff, s), s)
+
+
+def _emit_block(bw: _BitWriter, zz: np.ndarray, prev_dc: int,
+                enc_dc: dict, enc_ac: dict) -> int:
+    """Huffman-code one zigzagged quantized block; returns its DC."""
+    vals = zz.tolist()
+    _emit_dc(bw, vals[0] - prev_dc, enc_dc)
     run = 0
     nz = np.nonzero(zz[1:])[0]
     last = nz[-1] + 1 if len(nz) else 0
-    for k in range(1, last + 1):
-        v = int(zz[k])
+    for v in vals[1:last + 1]:
         if v == 0:
             run += 1
             continue
         while run >= 16:
             code, ln = enc_ac[0xF0]
-            bw_.write(code, ln)
+            bw.write(code, ln)
             run -= 16
         s = _size_of(v)
         code, ln = enc_ac[(run << 4) | s]
-        bw_.write(code, ln)
-        bw_.write(_amplitude(v, s), s)
+        bw.write(code, ln)
+        bw.write(_amplitude(v, s), s)
         run = 0
     if last < 63:
         code, ln = enc_ac[0x00]  # EOB
-        bw_.write(code, ln)
-    return int(zz[0])
+        bw.write(code, ln)
+    return vals[0]
+
+
+def _write_sequential(
+    planes: list[np.ndarray],
+    factors: list[tuple[int, int]],
+    prec: int,
+    quant: np.ndarray | None,
+    script: list[Sequence[int]],
+    restart_interval: int = 0,
+    app: bytes = b"",
+) -> bytes:
+    """The sequential (SOF0 8-bit / SOF1 12-bit) frame writer behind every
+    ``encode_jpeg*`` front end except the progressive and lossless ones.
+
+    ``script`` lists each scan's component indices: ``[(0, 1, 2)]``
+    interleaved, ``[(0,), (1,), (2,)]`` one scan per component,
+    ``[(0,), (1, 2)]`` partially interleaved. ``restart_interval`` > 0
+    emits a DRI segment and an RSTn marker every N units of each scan
+    (MCUs when interleaved, blocks otherwise); DC predictors and the RSTn
+    numbering restart with each scan (T.81 E.2.4 / B.2.3)."""
+    q = _quant(quant)
+    h, w = planes[0].shape
+    lay = _Layout(h, w, factors)
+    dht, enc_dc, enc_ac = _TABLES[prec]
+    out = _frame_header(0xC0 if prec == 8 else 0xC1, prec, factors, h, w, q,
+                        dht, app)
+    if restart_interval:
+        out += _seg(0xDD, struct.pack(">H", restart_interval))
+    zz = _forward_dct(planes, lay, q, float(1 << (prec - 1)))
+    for comps in script:
+        out += _sos(comps, 0, 63, 0)
+        bw = _BitWriter()
+        prev = [0] * len(planes)
+        for unit, blocks in enumerate(lay.scan_units(comps)):
+            if restart_interval and unit and unit % restart_interval == 0:
+                out += bw.flush()
+                out += bytes([0xFF, 0xD0 + (unit // restart_interval - 1) % 8])
+                bw = _BitWriter()
+                prev = [0] * len(planes)
+            for c, bv, bh in blocks:
+                prev[c] = _emit_block(bw, zz[c][bv, bh], prev[c], enc_dc, enc_ac)
+        out += bw.flush()
+    return bytes(out + b"\xff\xd9")  # EOI
 
 
 def encode_jpeg(
@@ -305,162 +492,23 @@ def encode_jpeg(
     ``"422"`` (chroma halved horizontally) or ``"420"`` (chroma halved
     both ways — the camera default); gray input ignores it.
     ``restart_interval`` > 0 emits a DRI segment and RSTn markers every
-    N MCUs (DC predictors reset, bitstream re-aligned) — the
-    resynchronization feature real encoders use so a corrupt byte loses
-    one restart segment, not the rest of the scan; here it also
-    exercises the decoder's DRI/RST path under round-trip tests.
+    N units of each scan (DC predictors reset, bitstream re-aligned) —
+    the resynchronization feature real encoders use so a corrupt byte
+    loses one restart segment, not the rest of the scan.
     ``scan_mode="separate"`` emits the spec-legal NON-interleaved form
     (one SOS per component) instead of the usual single interleaved
-    scan — the variant ADVICE r6 flagged as silently mis-decoded before
-    the multi-scan decoder landed; with restarts, intervals count
-    blocks per scan. ``scan_mode="partial"`` (color only) emits the
-    PARTIALLY interleaved form — a non-interleaved luma scan followed
-    by one Cb+Cr two-component interleaved scan (1 < Ns < Nf, the last
-    baseline scan-script shape that used to gate to cv2)."""
-    a = np.ascontiguousarray(arr, dtype=np.uint8)
-    gray = a.ndim == 2
-    h, w = a.shape[:2]
-    if not gray and a.shape[2] != 3:
-        raise ValueError(f"JPEG encode needs 3 channels or gray, got {a.shape}")
-    if subsampling not in _SUBSAMPLING:
-        raise ValueError(f"subsampling must be one of {sorted(_SUBSAMPLING)}")
-    q = (_QUANT_ONES if quant is None else np.asarray(quant, np.uint16)).reshape(64)
-    if q.max() > 255 or q.min() < 1:
-        # the emitted DQT uses the 8-bit (Pq=0) encoding; values outside
-        # [1, 255] would silently truncate into a corrupt table
-        raise ValueError("quant table values must be in [1, 255]")
-
-    if gray:
-        factors = [(1, 1)]
-        planes = [a.astype(np.float64)]
-    else:
-        hy, vy = _SUBSAMPLING[subsampling]
-        factors = [(hy, vy), (1, 1), (1, 1)]
-        ycc = _rgb_to_ycbcr(a)
-        planes = [ycc[:, :, 0]]
-        for c in (1, 2):
-            planes.append(_box_downsample(ycc[:, :, c], hy, vy))
-    ncomp = len(planes)
-    hmax = max(f[0] for f in factors)
-    vmax = max(f[1] for f in factors)
-    mcx, mcy = -(-w // (8 * hmax)), -(-h // (8 * vmax))
-
-    out = bytearray(b"\xff\xd8")  # SOI
-    out += _seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out += _seg(0xDB, bytes([0]) + bytes(q[_ZIGZAG].astype(np.uint8)))
-    sof = struct.pack(">BHHB", 8, h, w, ncomp)
-    for cid in range(1, ncomp + 1):
-        hi, vi = factors[cid - 1]
-        sof += struct.pack(">BBB", cid, (hi << 4) | vi, 0)  # qtable 0
-    out += _seg(0xC0, sof)
-    out += _seg(0xC4, bytes([0x00]) + bytes(_DC_BITS) + bytes(_DC_VALS))
-    out += _seg(0xC4, bytes([0x10]) + bytes(_AC_BITS) + bytes(sorted(_AC_VALS)))
-    if restart_interval:
-        out += _seg(0xDD, struct.pack(">H", restart_interval))
-
-    qf = q.reshape(8, 8).astype(np.float64)
-    comp_blocks = []
-    for p, (hi, vi) in zip(planes, factors):
-        b = _blocks(p - 128.0, mcy * vi, mcx * hi)
-        coeff = np.einsum("ij,vhjk,lk->vhil", _T, b, _T)
-        comp_blocks.append(np.round(coeff / qf).astype(np.int64))
-
-    if scan_mode == "separate":
-        # spec-legal non-interleaved form: one SOS per component, blocks
-        # in the component's own grid raster, DC predictor and RSTn
-        # numbering reset per scan (T.81 E.2.4 / B.2.3)
-        for c, (hi, vi) in enumerate(factors):
-            sos = struct.pack(">BBB", 1, c + 1, 0x00) + b"\x00\x3f\x00"
-            out += _seg(0xDA, sos)
-            ch, cw = -(-h * vi // vmax), -(-w * hi // hmax)
-            nbv, nbh = -(-ch // 8), -(-cw // 8)
-            bw_ = _BitWriter()
-            prev = 0
-            unit = 0
-            for bv in range(nbv):
-                for bh_ in range(nbh):
-                    if restart_interval and unit and unit % restart_interval == 0:
-                        bw_.flush()
-                        out += bw_.out
-                        out += bytes([
-                            0xFF,
-                            0xD0 + ((unit // restart_interval - 1) % 8),
-                        ])
-                        bw_ = _BitWriter()
-                        prev = 0
-                    unit += 1
-                    zz = comp_blocks[c][bv, bh_]
-                    prev = _emit_block(bw_, zz.reshape(64)[_ZIGZAG], prev)
-            bw_.flush()
-            out += bw_.out
-        out += b"\xff\xd9"  # EOI
-        return bytes(out)
-
-    if scan_mode == "partial":
-        if ncomp != 3:
-            raise ValueError("scan_mode='partial' needs a color image")
-        # scan 1: luma alone (non-interleaved raster over its own grid)
-        out += _seg(0xDA, struct.pack(">BBB", 1, 1, 0x00) + b"\x00\x3f\x00")
-        hy, vy = factors[0]
-        ch, cw = -(-h * vy // vmax), -(-w * hy // hmax)
-        nbv, nbh = -(-ch // 8), -(-cw // 8)
-        bw_ = _BitWriter()
-        prev = 0
-        for bv in range(nbv):
-            for bh_ in range(nbh):
-                zz = comp_blocks[0][bv, bh_]
-                prev = _emit_block(bw_, zz.reshape(64)[_ZIGZAG], prev)
-        bw_.flush()
-        out += bw_.out
-        # scan 2: Cb+Cr interleaved over the frame MCU grid (each
-        # contributes its Hi×Vi = 1×1 block per MCU)
-        sos = struct.pack(">B", 2)
-        for cid in (2, 3):
-            sos += struct.pack(">BB", cid, 0x00)
-        out += _seg(0xDA, sos + b"\x00\x3f\x00")
-        bw_ = _BitWriter()
-        prev_dc = [0, 0]
-        for my in range(mcy):
-            for mx in range(mcx):
-                for c in (1, 2):
-                    zz = comp_blocks[c][my, mx]
-                    prev_dc[c - 1] = _emit_block(
-                        bw_, zz.reshape(64)[_ZIGZAG], prev_dc[c - 1]
-                    )
-        bw_.flush()
-        out += bw_.out
-        out += b"\xff\xd9"
-        return bytes(out)
-
-    sos = struct.pack(">B", ncomp)
-    for cid in range(1, ncomp + 1):
-        sos += struct.pack(">BB", cid, 0x00)  # DC table 0, AC table 0
-    sos += b"\x00\x3f\x00"  # spectral selection 0..63, baseline
-    out += _seg(0xDA, sos)
-
-    bw_ = _BitWriter()
-    prev_dc = [0] * ncomp
-    mcu = 0
-    for my in range(mcy):
-        for mx in range(mcx):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                bw_.flush()
-                out += bw_.out
-                out += bytes([0xFF, 0xD0 + ((mcu // restart_interval - 1) % 8)])
-                bw_ = _BitWriter()
-                prev_dc = [0] * ncomp
-            mcu += 1
-            for c, (hi, vi) in enumerate(factors):
-                for dv in range(vi):
-                    for dh in range(hi):
-                        zz = comp_blocks[c][my * vi + dv, mx * hi + dh]
-                        prev_dc[c] = _emit_block(
-                            bw_, zz.reshape(64)[_ZIGZAG], prev_dc[c]
-                        )
-    bw_.flush()
-    out += bw_.out
-    out += b"\xff\xd9"  # EOI
-    return bytes(out)
+    scan. ``scan_mode="partial"`` (color only) emits the PARTIALLY
+    interleaved form — a luma scan followed by one Cb+Cr two-component
+    interleaved scan (1 < Ns < Nf)."""
+    planes, factors = _ycc_planes(arr, subsampling)
+    nc = len(planes)
+    if scan_mode == "partial" and nc != 3:
+        raise ValueError("scan_mode='partial' needs a color image")
+    script = {"separate": [(c,) for c in range(nc)], "partial": [(0,), (1, 2)]}
+    return _write_sequential(
+        planes, factors, 8, quant, script.get(scan_mode, [tuple(range(nc))]),
+        restart_interval, _APP0_JFIF,
+    )
 
 
 def encode_jpeg_cmyk(
@@ -480,67 +528,10 @@ def encode_jpeg_cmyk(
         raise ValueError(f"CMYK encode needs 4 channels, got {a.shape}")
     if transform not in (0, 2):
         raise ValueError("transform must be 0 (CMYK) or 2 (YCCK)")
-    h, w = a.shape[:2]
-    q = (_QUANT_ONES if quant is None else np.asarray(quant, np.uint16)).reshape(64)
-    if q.max() > 255 or q.min() < 1:
-        raise ValueError("quant table values must be in [1, 255]")
-    if transform == 2:
-        ycc = _rgb_to_ycbcr(a[:, :, :3])
-        planes = [ycc[:, :, 0], ycc[:, :, 1], ycc[:, :, 2],
-                  a[:, :, 3].astype(np.float64)]
-    else:
-        planes = [a[:, :, c].astype(np.float64) for c in range(4)]
-    mcx, mcy = -(-w // 8), -(-h // 8)
-
-    out = bytearray(b"\xff\xd8")
-    out += _seg(
-        0xEE, b"Adobe" + struct.pack(">HHHB", 100, 0, 0, transform)
+    return _write_sequential(
+        _cmyk_planes(a, transform, 128.0), [(1, 1)] * 4, 8, quant,
+        [(0, 1, 2, 3)], app=_adobe_app14(transform),
     )
-    out += _seg(0xDB, bytes([0]) + bytes(q[_ZIGZAG].astype(np.uint8)))
-    sof = struct.pack(">BHHB", 8, h, w, 4)
-    for cid in range(1, 5):
-        sof += struct.pack(">BBB", cid, 0x11, 0)  # 1x1 sampling, qtable 0
-    out += _seg(0xC0, sof)
-    out += _seg(0xC4, bytes([0x00]) + bytes(_DC_BITS) + bytes(_DC_VALS))
-    out += _seg(0xC4, bytes([0x10]) + bytes(_AC_BITS) + bytes(sorted(_AC_VALS)))
-
-    qf = q.reshape(8, 8).astype(np.float64)
-    comp_blocks = [
-        np.round(
-            np.einsum("ij,vhjk,lk->vhil", _T, _blocks(p - 128.0, mcy, mcx), _T)
-            / qf
-        ).astype(np.int64)
-        for p in planes
-    ]
-    sos = struct.pack(">B", 4)
-    for cid in range(1, 5):
-        sos += struct.pack(">BB", cid, 0x00)
-    out += _seg(0xDA, sos + b"\x00\x3f\x00")
-    bw_ = _BitWriter()
-    prev_dc = [0] * 4
-    for my in range(mcy):
-        for mx in range(mcx):
-            for c in range(4):
-                zz = comp_blocks[c][my, mx]
-                prev_dc[c] = _emit_block(bw_, zz.reshape(64)[_ZIGZAG], prev_dc[c])
-    bw_.flush()
-    out += bw_.out
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-# 12-bit tables: DC difference categories reach 15 and AC sizes 14
-# (T.81 F.1.2.1 for 12-bit data) — 16 DC symbols at code length 5 and
-# 226 AC symbols at length 8, both Kraft-feasible with all-ones unused.
-_DC12_VALS = list(range(16))
-_DC12_BITS = [0, 0, 0, 0, len(_DC12_VALS), 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0]
-_AC12_VALS = sorted(
-    [0x00, 0xF0] + [(run << 4) | size for run in range(16)
-                    for size in range(1, 15)]
-)
-_AC12_BITS = [0, 0, 0, 0, 0, 0, 0, len(_AC12_VALS), 0, 0, 0, 0, 0, 0, 0, 0]
-_ENC_DC12 = _canonical_codes(_DC12_BITS, _DC12_VALS)
-_ENC_AC12 = _canonical_codes(_AC12_BITS, _AC12_VALS)
 
 
 def encode_jpeg_12bit(
@@ -551,7 +542,7 @@ def encode_jpeg_12bit(
     """uint16 12-bit samples (0..4095) → extended sequential (SOF1)
     JPEG: H×W grayscale, H×W×3 RGB stored as 4:4:4 YCbCr with chroma
     centered at 2048 (the 12-bit analogue of the 8-bit 128 center), or
-    H×W×4 Adobe-style INVERTED CMYK (r9: 4095 = no ink; ``transform=0``
+    H×W×4 Adobe-style INVERTED CMYK (4095 = no ink; ``transform=0``
     stores the planes directly, ``transform=2`` the YCCK form — the
     inverted C,M,Y triple through the YCbCr transform with 2048-center
     chroma, K direct — and either emits the Adobe APP14 segment the
@@ -569,77 +560,17 @@ def encode_jpeg_12bit(
         raise ValueError("12-bit samples must be in [0, 4095]")
     if transform not in (0, 2):
         raise ValueError("transform must be 0 (CMYK) or 2 (YCCK)")
-    h, w = a.shape[:2]
-    q = (_QUANT_ONES if quant is None else np.asarray(quant, np.uint16)).reshape(64)
-    if q.max() > 255 or q.min() < 1:
-        raise ValueError("quant table values must be in [1, 255]")
-    mcx, mcy = -(-w // 8), -(-h // 8)
     if a.ndim == 2:
         planes = [a.astype(np.float64)]
     elif a.shape[2] == 4:
-        if transform == 2:
-            c_, m_, y4 = (a[:, :, c].astype(np.float64) for c in range(3))
-            planes = [
-                0.299 * c_ + 0.587 * m_ + 0.114 * y4,
-                2048.0 - 0.168736 * c_ - 0.331264 * m_ + 0.5 * y4,
-                2048.0 + 0.5 * c_ - 0.418688 * m_ - 0.081312 * y4,
-                a[:, :, 3].astype(np.float64),
-            ]
-        else:
-            planes = [a[:, :, c].astype(np.float64) for c in range(4)]
+        planes = _cmyk_planes(a, transform, 2048.0)
     else:
-        r, g, b = (a[:, :, c].astype(np.float64) for c in range(3))
-        planes = [
-            0.299 * r + 0.587 * g + 0.114 * b,
-            2048.0 - 0.168736 * r - 0.331264 * g + 0.5 * b,
-            2048.0 + 0.5 * r - 0.418688 * g - 0.081312 * b,
-        ]
+        planes = _rgb_to_ycbcr(a, 2048.0)
     nc = len(planes)
-
-    out = bytearray(b"\xff\xd8")
-    if nc == 4:  # 4-component frames need the Adobe transform flag
-        out += _seg(
-            0xEE, b"Adobe" + struct.pack(">HHHB", 100, 0, 0, transform)
-        )
-    out += _seg(0xDB, bytes([0]) + bytes(q[_ZIGZAG].astype(np.uint8)))
-    sof = struct.pack(">BHHB", 12, h, w, nc)
-    for cid in range(1, nc + 1):
-        sof += struct.pack(">BBB", cid, 0x11, 0)  # 1x1 sampling, qtable 0
-    out += _seg(0xC1, sof)
-    out += _seg(
-        0xC4,
-        bytes([0x00]) + bytes(_DC12_BITS) + bytes(_DC12_VALS),
-    )
-    out += _seg(
-        0xC4,
-        bytes([0x10]) + bytes(_AC12_BITS) + bytes(_AC12_VALS),
-    )
-    sos = struct.pack(">B", nc)
-    for cid in range(1, nc + 1):
-        sos += struct.pack(">BB", cid, 0x00)
-    out += _seg(0xDA, sos + b"\x00\x3f\x00")
-
-    qf = q.reshape(8, 8).astype(np.float64)
-    comp_blocks = [
-        np.round(
-            np.einsum("ij,vhjk,lk->vhil", _T, _blocks(p - 2048.0, mcy, mcx), _T)
-            / qf
-        ).astype(np.int64)
-        for p in planes
-    ]
-    bw_ = _BitWriter()
-    prev_dc = [0] * nc
-    for bv in range(mcy):
-        for bh_ in range(mcx):
-            for c in range(nc):
-                prev_dc[c] = _emit_block(
-                    bw_, comp_blocks[c][bv, bh_].reshape(64)[_ZIGZAG],
-                    prev_dc[c], enc_dc=_ENC_DC12, enc_ac=_ENC_AC12,
-                )
-    bw_.flush()
-    out += bw_.out
-    out += b"\xff\xd9"
-    return bytes(out)
+    # 4-component frames need the Adobe transform flag
+    app = _adobe_app14(transform) if nc == 4 else b""
+    return _write_sequential(planes, [(1, 1)] * nc, 12, quant,
+                             [tuple(range(nc))], app=app)
 
 
 # --------------------------------------------------------------------------
@@ -677,38 +608,68 @@ def _extend(v: int, size: int) -> int:
 def decode_jpeg(buf: bytes) -> np.ndarray:
     """JPEG bytes → uint8 H×W×3 RGB (or H×W gray): baseline (any scan
     script — interleaved / per-component / partial), progressive
-    (SOF2), lossless (SOF3), 12-bit extended-sequential gray, Adobe
-    CMYK/YCCK, 4:4:4 / 4:2:2 / 4:2:0 / grayscale.
+    (SOF2), lossless (SOF3), 12-bit extended-sequential gray and color,
+    Adobe CMYK/YCCK at 8 and 12 bits, 4:4:4 / 4:2:2 / 4:2:0 / grayscale.
 
     Truncated/corrupt streams raise ValueError (the quarantine path
     needs a reliable exception); unsupported spec variants raise
-    NotImplementedError (the cv2 slot-in gate)."""
+    NotImplementedError (the cv2 fallback gate)."""
     if buf[:2] != JPEG_MAGIC:
         raise ValueError("not a JPEG stream")
     try:
         return _decode_jpeg(buf)
-    except (IndexError, struct.error, KeyError, StopIteration) as exc:
-        # IndexError/struct.error: truncation; KeyError: scan references
-        # an undefined quant/Huffman table id; StopIteration: SOS selects
-        # a component the SOF never declared — all are stream corruption
+    except (IndexError, struct.error, KeyError) as exc:
+        # IndexError/struct.error: truncation; KeyError: a scan references
+        # an undefined quant/Huffman table id — both are stream corruption
         raise ValueError("truncated or corrupt JPEG stream") from exc
+
+
+def _read_frame(sof: int, payload: bytes):
+    """Parse an SOF0-SOF3 header and apply its frame type's gates →
+    (precision, component ids, quant table ids, layout)."""
+    prec, h, w, nc = struct.unpack_from(">BHHB", payload, 0)
+    if sof == 0xC3:
+        if prec > 8:
+            raise NotImplementedError(f"lossless JPEG precision {prec} > 8")
+        if nc not in (1, 3):
+            raise NotImplementedError(f"{nc}-component lossless JPEG")
+    elif sof == 0xC2:
+        if prec != 8:
+            raise NotImplementedError(f"only 8-bit progressive JPEG (precision={prec})")
+        if nc not in (1, 3):
+            raise NotImplementedError(f"{nc}-component progressive JPEG unsupported")
+    else:
+        # 12-bit is EXTENDED sequential (SOF1) only — baseline SOF0 is
+        # 8-bit by definition (B.2.2)
+        if prec == 12 and sof != 0xC1:
+            raise ValueError("12-bit precision requires SOF1")
+        if prec not in (8, 12):
+            raise NotImplementedError(f"only 8/12-bit JPEG (precision={prec})")
+        if nc not in (1, 3, 4):
+            raise NotImplementedError(f"{nc}-component JPEG unsupported")
+    comps = [struct.unpack_from(">BBB", payload, 6 + 3 * c) for c in range(nc)]
+    if sof == 0xC3 and any(samp != 0x11 for _, samp, _ in comps):
+        raise NotImplementedError("subsampled lossless JPEG components")
+    # single-component images are non-interleaved by definition: the MCU
+    # is one data unit and the declared factors subsample nothing (A.2.2)
+    factors = [(1, 1)] if nc == 1 else [(s >> 4, s & 0x0F) for _, s, _ in comps]
+    lay = _Layout(h, w, factors)
+    for hi, vi in factors:
+        if not (1 <= hi <= 4 and 1 <= vi <= 4) or lay.hmax % hi or lay.vmax % vi:
+            raise NotImplementedError(f"unsupported JPEG sampling factors {factors}")
+    return prec, [c[0] for c in comps], [c[2] for c in comps], lay
 
 
 def _decode_jpeg(buf: bytes) -> np.ndarray:
     pos = 2
     qtables: dict[int, np.ndarray] = {}
     htables: dict[tuple[int, int], _HuffTable] = {}
-    comps: list[tuple[int, int, int, int]] = []  # (id, hi, vi, tq)
-    h = w = 0
+    sof = 0  # the frame's SOF marker once read
     restart = 0
-    planes: list[np.ndarray] | None = None
-    factors: list[tuple[int, int]] = []
-    qf: list[np.ndarray] = []
-    covered: set[int] = set()  # component indices some scan has decoded
-    hmax = vmax = 1
-    mcx = mcy = 0
-    prec = 8
     adobe_transform = 0  # APP14 color-transform flag (0=CMYK, 2=YCCK)
+    qf: dict[int, np.ndarray] = {}  # per component, latched at its first scan
+    covered: set[int] = set()  # component indices some scan has decoded
+    pt = 0  # lossless point transform of the last scan
 
     while True:
         if buf[pos] != 0xFF:
@@ -728,51 +689,30 @@ def _decode_jpeg(buf: bytes) -> np.ndarray:
             i = 0
             while i < len(payload):
                 pq, tq = payload[i] >> 4, payload[i] & 0x0F
-                i += 1
                 n = 64 * (2 if pq else 1)
-                raw = payload[i : i + n]
-                i += n
-                vals = (
-                    np.frombuffer(raw, dtype=">u2").astype(np.int64)
-                    if pq
-                    else np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
-                )
-                t = np.zeros(64, dtype=np.int64)
-                t[_ZIGZAG] = vals
+                raw = payload[i + 1 : i + 1 + n]
+                i += 1 + n
+                t = np.zeros(64, dtype=np.float64)
+                t[_ZIGZAG] = np.frombuffer(raw, dtype=">u2" if pq else np.uint8)
                 qtables[tq] = t.reshape(8, 8)
         elif marker == 0xC4:  # DHT (possibly several tables)
             i = 0
             while i < len(payload):
-                tc, th = payload[i] >> 4, payload[i] & 0x0F
                 bits = payload[i + 1 : i + 17]
                 n = sum(bits)
-                vals = payload[i + 17 : i + 17 + n]
-                htables[(tc, th)] = _HuffTable(bits, vals)
+                htables[(payload[i] >> 4, payload[i] & 0x0F)] = _HuffTable(
+                    bits, payload[i + 17 : i + 17 + n])
                 i += 17 + n
-        elif marker == 0xC0 or marker == 0xC1:  # SOF0/1 baseline/extended
-            prec, h, w, nc = struct.unpack_from(">BHHB", payload, 0)
-            if prec == 12:
-                # 12-bit EXTENDED sequential (SOF1 only — baseline SOF0
-                # is 8-bit by definition, B.2.2). Gray, YCbCr color and
-                # (r9) Adobe CMYK/YCCK all decode natively with the
-                # documented >>4 uint8 output contract.
-                if marker != 0xC1:
-                    raise ValueError("12-bit precision requires SOF1")
-            elif prec != 8:
-                raise NotImplementedError(f"only 8/12-bit JPEG (precision={prec})")
-            if nc not in (1, 3, 4):
-                raise NotImplementedError(f"{nc}-component JPEG unsupported")
-            for c in range(nc):
-                cid, samp, tq = struct.unpack_from(">BBB", payload, 3 + 3 * c + 3)
-                comps.append((cid, samp >> 4, samp & 0x0F, tq))
-        elif marker == 0xC2:  # SOF2: progressive DCT — sibling decoder
-            from .jpeg_progressive import decode_jpeg_progressive
-
-            return decode_jpeg_progressive(buf)
-        elif marker == 0xC3:  # SOF3: lossless — sibling decoder
-            from .jpeg_lossless import decode_jpeg_lossless
-
-            return decode_jpeg_lossless(buf)
+        elif marker in (0xC0, 0xC1, 0xC2, 0xC3):
+            if sof:
+                raise ValueError("JPEG has more than one frame header")
+            sof = marker
+            prec, ids, tqs, lay = _read_frame(sof, payload)
+            if sof == 0xC3:  # lossless: samples, in the point-shifted domain
+                data = [np.zeros((lay.h, lay.w), dtype=np.int64) for _ in ids]
+            else:  # DCT: zigzag coefficients over the MCU-padded grids
+                data = [np.zeros((lay.mcy * vi, lay.mcx * hi, 64), dtype=np.int64)
+                        for hi, vi in lay.factors]
         elif marker in (0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB,
                         0xCD, 0xCE, 0xCF):
             raise NotImplementedError(
@@ -785,200 +725,192 @@ def _decode_jpeg(buf: bytes) -> np.ndarray:
             # CMYK (0) from YCCK (2) for 4-component frames
             adobe_transform = payload[11] if len(payload) > 11 else 0
         elif marker == 0xDA:  # SOS — decode this scan, keep looping
-            if not comps:
+            if not sof:
                 raise ValueError("JPEG missing SOF before SOS")
-            if planes is None:
-                if len(comps) == 1:
-                    # single-component images are non-interleaved by
-                    # definition: the MCU is one data unit and the
-                    # declared sampling factors don't subsample
-                    # anything (T.81 A.2.2)
-                    factors = [(1, 1)]
-                else:
-                    factors = [(hi, vi) for _, hi, vi, _ in comps]
-                hmax = max(f[0] for f in factors)
-                vmax = max(f[1] for f in factors)
-                for hi, vi in factors:
-                    if (not (1 <= hi <= 4 and 1 <= vi <= 4)
-                            or hmax % hi or vmax % vi):
-                        raise NotImplementedError(
-                            f"unsupported JPEG sampling factors {factors}"
-                        )
-                mcx, mcy = -(-w // (8 * hmax)), -(-h // (8 * vmax))
-                planes = [
-                    np.zeros((mcy * vi * 8, mcx * hi * 8), dtype=np.float64)
-                    for hi, vi in factors
-                ]
-                qf = [
-                    qtables[tq].astype(np.float64) for _, _, _, tq in comps
-                ]
             ns = payload[0]
-            scan = []
-            for c in range(ns):
-                cs, tt = payload[1 + 2 * c], payload[2 + 2 * c]
-                idx = next(i for i, cc in enumerate(comps) if cc[0] == cs)
-                scan.append((idx, tt >> 4, tt & 0x0F))
-            # ns == len(comps): full interleave; ns == 1: per-component
-            # raster; 1 < ns < len(comps): PARTIAL interleave (e.g. a
-            # luma scan followed by a Cb+Cr pair scan) — the MCU walk
-            # below already handles a component subset, because the MCU
-            # grid is frame-level (ceil over 8*Hmax/8*Vmax of ALL frame
-            # components, T.81 A.2.3 / libjpeg per_scan_setup) and each
-            # scan component contributes its own Hi×Vi blocks per MCU.
-            pos = _decode_baseline_scan(
-                buf, pos, htables, planes, qf, factors, scan,
-                restart, mcx, mcy, h, w, hmax, vmax,
-            )
+            scan = [(ids.index(payload[1 + 2 * c]), payload[2 + 2 * c] >> 4,
+                     payload[2 + 2 * c] & 0x0F) for c in range(ns)]
+            ss, se, ahal = payload[1 + 2 * ns : 4 + 2 * ns]
+            br = _BitReader(buf, pos)
+            if sof == 0xC3:
+                from .jpeg_lossless import _decode_lossless_scan  # imports us
+
+                if restart:
+                    raise NotImplementedError("lossless JPEG restart intervals")
+                pt = ahal & 0x0F
+                _decode_lossless_scan(br, data, scan, htables, ss, pt, prec)
+            else:
+                if sof != 0xC2:  # sequential: the whole band at full precision
+                    ss, se, ahal = 0, 63, 0
+                elif se > 63 or ss > se or (ss == 0 and se) or (ss and ns != 1):
+                    # T.81 G.1: DC scans are exactly Ss=Se=0; AC bands live
+                    # in 1..63 and cover one component
+                    raise ValueError("invalid progressive scan header")
+                for ci, _, _ in scan:
+                    qf.setdefault(ci, qtables[tqs[ci]])
+                _decode_dct_scan(br, data, lay, htables, scan, ss, se,
+                                 ahal >> 4, ahal & 0x0F, restart)
             covered.update(ci for ci, _, _ in scan)
+            pos = br.end()
         # APPn / COM / others: skipped via the length field
 
-    if planes is None:
+    if not covered:
         raise ValueError("JPEG has no scan data")
-    if covered != set(range(len(comps))):
-        # a plane that was never scanned would silently render flat 128
+    if covered != set(range(len(ids))):
+        # a plane that was never scanned would silently render flat
         raise ValueError("JPEG scans do not cover every component")
-    shift = float(1 << (prec - 1))  # level shift: 128 (8-bit) / 2048 (12-bit)
-    crops = []
-    for (hi, vi), p in zip(factors, planes):
-        ch, cw = -(-h * vi // vmax), -(-w * hi // hmax)  # comp dims (ceil)
-        c = p[:ch, :cw] + shift
-        if hi != hmax or vi != vmax:  # nearest-neighbor chroma upsample
-            c = np.repeat(np.repeat(c, vmax // vi, axis=0), hmax // hi, axis=1)
-        crops.append(c[:h, :w])
-    if len(comps) == 1:
-        if prec == 12:
-            # engine images are uint8: scale the 12-bit plane down by
-            # >>4 (the viewer convention), exact for encoder-shifted
-            # test content
-            v12 = np.clip(crops[0].round(), 0, 4095).astype(np.int64)
-            return (v12 >> 4).astype(np.uint8)
-        return np.clip(crops[0].round(), 0, 255).astype(np.uint8)
-    if len(comps) == 4:
-        # Adobe 4-component: stored samples are INVERTED CMYK (the only
-        # 4-component form seen in the wild — libjpeg/PIL make the same
-        # assumption). transform 2 (YCCK) stores the inverted C,M,Y
-        # triple YCbCr-transformed; K is always direct. RGB output via
-        # R = s_C * s_K / maxval (s = stored/inverted values), the
-        # inverted-CMYK → RGB identity. 12-bit frames (r9) use the same
-        # identity in 12-bit units — chroma/K centered & clipped at
-        # 4095 — then the engine-wide >>4 uint8 output contract.
-        maxv = float((1 << prec) - 1)
-        ctr = float(1 << (prec - 1))
-        if adobe_transform == 2:
-            y_, cb_, cr_ = crops[0], crops[1], crops[2]
-            sc = y_ + 1.402 * (cr_ - ctr)
-            sm = y_ - 0.344136 * (cb_ - ctr) - 0.714136 * (cr_ - ctr)
-            sy = y_ + 1.772 * (cb_ - ctr)
-        else:
-            sc, sm, sy = crops[0], crops[1], crops[2]
-        sk = np.clip(crops[3], 0.0, maxv)
-        rgb = np.stack(
-            [np.clip(p, 0.0, maxv) * sk / maxv for p in (sc, sm, sy)],
-            axis=2,
-        )
-        if prec == 12:
-            rgb12 = np.clip(rgb.round(), 0, 4095).astype(np.int64)
-            return (rgb12 >> 4).astype(np.uint8)
-        return np.clip(rgb.round(), 0, 255).astype(np.uint8)
-    if prec == 12:
-        # 12-bit YCbCr: chroma centered at 2048, reconstruct in 12-bit
-        # units, then the same >>4 uint8 output contract as gray
-        y_, cb_, cr_ = crops[0], crops[1], crops[2]
-        r = y_ + 1.402 * (cr_ - 2048.0)
-        g = y_ - 0.344136 * (cb_ - 2048.0) - 0.714136 * (cr_ - 2048.0)
-        b = y_ + 1.772 * (cb_ - 2048.0)
-        rgb12 = np.clip(
-            np.stack([r, g, b], axis=2).round(), 0, 4095
-        ).astype(np.int64)
-        return (rgb12 >> 4).astype(np.uint8)
-    return _ycbcr_to_rgb(crops[0], crops[1], crops[2])
+    if sof == 0xC3:
+        out = [np.clip(p << pt, 0, 255).astype(np.uint8) for p in data]
+        return out[0] if len(out) == 1 else np.stack(out, axis=2)
+    return _dct_pixels(data, [qf[c] for c in range(len(ids))], lay, prec,
+                       adobe_transform)
 
 
-def _decode_baseline_scan(
-    buf: bytes,
-    pos: int,
+def _decode_dct_scan(
+    br: _BitReader,
+    coef: list[np.ndarray],
+    lay: _Layout,
     htables: dict[tuple[int, int], _HuffTable],
-    planes: list[np.ndarray],
-    qf: list[np.ndarray],
-    factors: list[tuple[int, int]],
     scan: list[tuple[int, int, int]],
+    ss: int,
+    se: int,
+    ah: int,
+    al: int,
     restart: int,
-    mcx: int,
-    mcy: int,
-    h: int,
-    w: int,
-    hmax: int,
-    vmax: int,
-) -> int:
-    """Decode one baseline scan's entropy data (interleaved MCU walk for
-    a full-interleave scan, component-grid raster for a single-component
-    scan — the spec-legal non-interleaved form); returns the position of
-    the next marker segment. DC predictors reset per scan and at every
-    restart marker (T.81 E.2.4)."""
-    br = _BitReader(buf, pos)
-    prev_dc = [0] * len(factors)
-
-    def block_into(ci: int, bv: int, bh_: int, dct, act) -> None:
-        zz = np.zeros(64, dtype=np.int64)
-        s = dct.decode(br)
-        diff = _extend(br.bits(s), s) if s else 0
-        prev_dc[ci] += diff
-        zz[0] = prev_dc[ci]
-        k = 1
-        while k < 64:
-            sym = act.decode(br)
-            if sym == 0x00:  # EOB
-                break
-            if sym == 0xF0:  # ZRL
-                k += 16
-                continue
-            run, size = sym >> 4, sym & 0x0F
-            k += run
-            if k > 63:
-                raise ValueError("JPEG AC run past block end")
-            zz[k] = _extend(br.bits(size), size)
-            k += 1
-        block = np.zeros(64, dtype=np.float64)
-        block[_ZIGZAG] = zz
-        coeff = block.reshape(8, 8) * qf[ci]
-        planes[ci][bv * 8 : bv * 8 + 8, bh_ * 8 : bh_ * 8 + 8] = (
-            _T.T @ coeff @ _T
-        )
-
-    def maybe_restart(unit: int) -> None:
+) -> None:
+    """Decode one DCT scan's entropy data into the zigzag coefficient
+    grids ``coef``. A scan codes band Ss..Se of its components' blocks:
+    Ss=0 carries the DC coefficient (first pass when Ah=0, one
+    refinement bit otherwise), Se>0 an AC band. A sequential scan is
+    Ss=0, Se=63, Ah=Al=0 — DC and the whole AC band of each block in one
+    pass. DC predictors and any pending EOB run reset per scan and at
+    every restart marker (T.81 E.2.4, G.1.2)."""
+    dc = {ci: htables[(0, t)] for ci, t, _ in scan} if ss == 0 and ah == 0 else {}
+    ac = {ci: htables[(1, t)] for ci, _, t in scan} if se else {}
+    ac_pass, lo = (_ac_refine if ah else _ac_first), max(ss, 1)
+    prev = [0] * len(coef)
+    eob = [0]  # blocks left in the current end-of-band run
+    for unit, blocks in enumerate(lay.scan_units([ci for ci, _, _ in scan])):
         if restart and unit and unit % restart == 0:
             m = br.align_to_marker()
             if m is None or not (0xD0 <= m <= 0xD7):
                 raise ValueError("JPEG restart marker expected")
-            prev_dc[:] = [0] * len(factors)
+            prev = [0] * len(coef)
+            eob[0] = 0
+        for ci, bv, bh in blocks:
+            block = coef[ci][bv, bh]
+            if ss == 0 and ah:
+                if br.bit():
+                    block[0] |= 1 << al
+            elif ss == 0:
+                s = dc[ci].decode(br)
+                prev[ci] += _extend(br.bits(s), s) if s else 0
+                block[0] = prev[ci] << al
+            if se:
+                ac_pass(br, ac[ci], block, lo, se, al, eob)
 
-    if len(scan) > 1:  # full interleave: MCU walk
-        mcu = 0
-        for my in range(mcy):
-            for mx in range(mcx):
-                maybe_restart(mcu)
-                mcu += 1
-                for ci, dc_id, ac_id in scan:
-                    hi, vi = factors[ci]
-                    dct = htables[(0, dc_id)]
-                    act = htables[(1, ac_id)]
-                    for dv in range(vi):
-                        for dh in range(hi):
-                            block_into(ci, my * vi + dv, mx * hi + dh,
-                                       dct, act)
-    else:  # non-interleaved: raster over the component's own block grid
-        ci, dc_id, ac_id = scan[0]
-        hi, vi = factors[ci]
-        ch, cw = -(-h * vi // vmax), -(-w * hi // hmax)
-        nbv, nbh = -(-ch // 8), -(-cw // 8)
-        dct = htables[(0, dc_id)]
-        act = htables[(1, ac_id)]
-        unit = 0
-        for bv in range(nbv):
-            for bh_ in range(nbh):
-                maybe_restart(unit)
-                unit += 1
-                block_into(ci, bv, bh_, dct, act)
-    if br.marker is not None:
-        return br.pos - 2
-    return br.pos
+
+def _ac_first(br, act, block, ss, se, al, eob) -> None:
+    """First pass over AC band Ss..Se of one block (sequential AC, or a
+    progressive first scan at point transform Al)."""
+    if eob[0] > 0:
+        eob[0] -= 1
+        return
+    k = ss
+    while k <= se:
+        sym = act.decode(br)
+        r, s = sym >> 4, sym & 0x0F
+        if s == 0:
+            if r != 15:  # EOB (r=0) or an EOBn run of 2^r + extra blocks
+                eob[0] = (1 << r) - 1 + (br.bits(r) if r else 0)
+                return
+            k += 16  # ZRL
+            continue
+        k += r
+        if k > se:
+            raise ValueError("JPEG AC run past band end")
+        block[k] = _extend(br.bits(s), s) << al
+        k += 1
+
+
+def _ac_refine(br, act, block, ss, se, al, eob) -> None:
+    """Successive-approximation refinement of AC band Ss..Se (G.1.2.3):
+    one correction bit per already-significant coefficient, and newly
+    significant ±1<<Al coefficients placed among the zero-history ones."""
+    p1, m1 = 1 << al, -1 << al
+    k = ss
+    if eob[0] == 0:
+        while k <= se:
+            sym = act.decode(br)
+            r, s = sym >> 4, sym & 0x0F
+            val = 0
+            if s == 0:
+                if r != 15:
+                    eob[0] = (1 << r) + (br.bits(r) if r else 0)
+                    break
+                # ZRL: skip 16 zero-history coeffs (r = 15 → 15 skips
+                # plus the landing position below)
+            else:
+                if s != 1:
+                    raise ValueError("invalid refinement magnitude")
+                val = p1 if br.bit() else m1
+            while k <= se:
+                if block[k] != 0:
+                    if br.bit() and (block[k] & p1) == 0:
+                        block[k] += p1 if block[k] >= 0 else m1
+                else:
+                    if r == 0:
+                        break
+                    r -= 1
+                k += 1
+            if val and k <= se:
+                block[k] = val
+            k += 1
+    if eob[0] > 0:
+        while k <= se:
+            if block[k] != 0:
+                if br.bit() and (block[k] & p1) == 0:
+                    block[k] += p1 if block[k] >= 0 else m1
+            k += 1
+        eob[0] -= 1
+
+
+def _dct_pixels(coef: list[np.ndarray], qf: list[np.ndarray], lay: _Layout,
+                prec: int, adobe_transform: int) -> np.ndarray:
+    """The tail of every DCT frame: dequantize, inverse-DCT all blocks in
+    one einsum per component, crop, upsample chroma and convert colour
+    (gray, YCbCr, Adobe CMYK/YCCK) → uint8, 12-bit frames via >>4."""
+    shift = float(1 << (prec - 1))  # level shift & chroma centre: 128 / 2048
+    maxv = float((1 << prec) - 1)
+    crops = []
+    for c, (zz, q) in enumerate(zip(coef, qf)):
+        nbv, nbh = zz.shape[:2]
+        nat = zz[:, :, _UNZIGZAG].reshape(nbv, nbh, 8, 8) * q
+        spatial = np.einsum("ji,vhjk,kl->vhil", _T, nat, _T)
+        ch, cw = lay.dims(c)
+        p = spatial.swapaxes(1, 2).reshape(nbv * 8, nbh * 8)[:ch, :cw] + shift
+        hi, vi = lay.factors[c]
+        if hi != lay.hmax or vi != lay.vmax:  # nearest-neighbour upsample
+            p = np.repeat(np.repeat(p, lay.vmax // vi, axis=0),
+                          lay.hmax // hi, axis=1)
+        crops.append(p[:lay.h, :lay.w])
+    if len(crops) == 1:
+        out = crops[0]
+    else:
+        chans = crops[:3]
+        if len(crops) == 3 or adobe_transform == 2:  # YCbCr / YCCK
+            y, cb, cr = chans
+            chans = [
+                y + 1.402 * (cr - shift),
+                y - 0.344136 * (cb - shift) - 0.714136 * (cr - shift),
+                y + 1.772 * (cb - shift),
+            ]
+        if len(crops) == 4:
+            # Adobe 4-component: stored samples are INVERTED CMYK (the
+            # only form seen in the wild — libjpeg/PIL assume the same);
+            # K is always direct. RGB via R = s_C * s_K / maxval.
+            sk = np.clip(crops[3], 0.0, maxv)
+            chans = [np.clip(p, 0.0, maxv) * sk / maxv for p in chans]
+        out = np.stack(chans, axis=2)
+    v = np.clip(out.round(), 0, maxv).astype(np.int64)
+    return (v >> (prec - 8)).astype(np.uint8)

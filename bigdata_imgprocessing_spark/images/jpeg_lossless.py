@@ -1,6 +1,6 @@
-"""Lossless JPEG (SOF3, Huffman) — from-spec stdlib+numpy, the third
-member of the native JPEG family (baseline ``jpeg.py``, progressive
-``jpeg_progressive.py``).
+"""Lossless JPEG (SOF3, Huffman) — from-spec stdlib+numpy: the encoder
+and the scan function the one JPEG decoder in ``images/jpeg.py`` calls
+for SOF3 scans.
 
 Lossless mode (ITU-T T.81 Annex H) has no DCT at all: each sample is
 PREDICTED from its decoded neighbors (Ra = left, Rb = above, Rc =
@@ -9,18 +9,13 @@ is Huffman-coded with a DC-style category+bits code. Reconstruction is
 exact by construction — this is the mode DNG raws and legacy medical
 imagery use. Supported: 8-bit precision, 1 or 3 components (3-component
 lossless carries direct RGB — no YCbCr transform in Annex H), all seven
-predictors, point transform, interleaved or per-component scans.
-Gated (NotImplementedError → cv2 slot-in, same contract as the other
-codecs): >8-bit precision output, subsampled components, restart
-intervals. ValueError = corruption (quarantine path).
-
-Decoder dispatch: ``jpeg.decode_jpeg`` routes SOF3 frames here, the
-same way SOF2 routes to the progressive sibling.
+predictors, point transform, interleaved or per-component scans. The
+frame gates (>8-bit precision, subsampled components, restart
+intervals → NotImplementedError) live with the other frame types' gates
+in ``jpeg._read_frame`` and ``jpeg._decode_jpeg``.
 """
 
 from __future__ import annotations
-
-import struct
 
 import numpy as np
 
@@ -29,10 +24,11 @@ from .jpeg import (
     _BitWriter,
     _DC_BITS,
     _DC_VALS,
-    _ENC_DC,
+    _emit_dc,
     _extend,
+    _frame_header,
     _HuffTable,
-    _seg,
+    _sos,
 )
 
 
@@ -80,17 +76,10 @@ def encode_jpeg_lossless(
     planes = [a >> pt] if gray else [a[:, :, c] >> pt for c in range(3)]
     nc = len(planes)
 
-    out = bytearray(b"\xff\xd8")
-    sof = struct.pack(">BHHB", 8, h, w, nc)
-    for cid in range(1, nc + 1):
-        sof += struct.pack(">BBB", cid, 0x11, 0)
-    out += _seg(0xC3, sof)
-    out += _seg(0xC4, bytes([0x00]) + bytes(_DC_BITS) + bytes(_DC_VALS))
-    sos = struct.pack(">B", nc)
-    for cid in range(1, nc + 1):
-        sos += struct.pack(">BB", cid, 0x00)
+    out = _frame_header(0xC3, 8, [(1, 1)] * nc, h, w, None,
+                        [(0x00, _DC_BITS, _DC_VALS)])
     # Ss = predictor selector, Se = 0, Ah/Al = 0/point-transform (H.2)
-    out += _seg(0xDA, sos + bytes([predictor, 0, pt]))
+    out += _sos(list(range(nc)), predictor, 0, pt)
 
     bw = _BitWriter()
     default = 1 << (8 - pt - 1)
@@ -104,123 +93,38 @@ def encode_jpeg_lossless(
                 diff = (v - px) & 0xFFFF
                 if diff > 0x7FFF:
                     diff -= 0x10000
-                s = abs(diff).bit_length()
-                code, ln = _ENC_DC[s]
-                bw.write(code, ln)
-                if s:
-                    amp = diff if diff >= 0 else diff + (1 << s) - 1
-                    bw.write(amp, s)
+                _emit_dc(bw, diff)
                 rows[c][x] = v
         prev_rows = rows  # type: ignore[assignment]
-    bw.flush()
-    out += bw.out
-    out += b"\xff\xd9"
-    return bytes(out)
+    return bytes(out + bw.flush() + b"\xff\xd9")
 
 
-def decode_jpeg_lossless(buf: bytes) -> np.ndarray:
-    """Lossless (SOF3) JPEG bytes → uint8 H×W (gray) or H×W×3 (direct
-    RGB, no color transform — Annex H has none). Exception contract of
-    the family: ValueError = corrupt, NotImplementedError = variant
-    gated to the cv2 slot-in."""
-    try:
-        return _decode(buf)
-    except (IndexError, struct.error, KeyError, StopIteration) as exc:
-        raise ValueError("truncated or corrupt lossless JPEG") from exc
-
-
-def _decode(buf: bytes) -> np.ndarray:
-    pos = 2
-    htables: dict[int, _HuffTable] = {}
-    comps: list[tuple[int, int, int]] = []  # (id, hi, vi)
-    h = w = prec = 0
-    planes: list[np.ndarray] | None = None
-    covered: set[int] = set()
-    pt_out = 0  # point transform: planes stay in the SHIFTED domain
-    # (prediction runs there, H.1.1); output shifts back up
-
-    while True:
-        if buf[pos] != 0xFF:
-            raise ValueError("JPEG marker expected")
-        while buf[pos + 1] == 0xFF:
-            pos += 1
-        marker = buf[pos + 1]
-        pos += 2
-        if marker == 0xD9:
-            break
-        if marker in (0x01, *range(0xD0, 0xD8)):
-            continue
-        (ln,) = struct.unpack_from(">H", buf, pos)
-        payload = buf[pos + 2 : pos + ln]
-        pos += ln
-        if marker == 0xC4:
-            i = 0
-            while i < len(payload):
-                tc, th = payload[i] >> 4, payload[i] & 0x0F
-                bits = payload[i + 1 : i + 17]
-                n = sum(bits)
-                if tc == 0:  # lossless uses DC-class tables only
-                    htables[th] = _HuffTable(bits, payload[i + 17 : i + 17 + n])
-                i += 17 + n
-        elif marker == 0xC3:
-            prec, h, w, nc = struct.unpack_from(">BHHB", payload, 0)
-            if prec > 8:
-                raise NotImplementedError(
-                    f"lossless JPEG precision {prec} > 8"
-                )
-            if nc not in (1, 3):
-                raise NotImplementedError(f"{nc}-component lossless JPEG")
-            for c in range(nc):
-                cid, samp, _tq = struct.unpack_from(">BBB", payload, 3 + 3 * c + 3)
-                if samp != 0x11:
-                    raise NotImplementedError(
-                        "subsampled lossless JPEG components"
-                    )
-                comps.append((cid, samp >> 4, samp & 0x0F))
-        elif marker == 0xDD:
-            (ri,) = struct.unpack_from(">H", payload, 0)
-            if ri:
-                raise NotImplementedError("lossless JPEG restart intervals")
-        elif marker == 0xDA:
-            if not comps:
-                raise ValueError("lossless JPEG missing SOF3 before SOS")
-            if planes is None:
-                planes = [np.zeros((h, w), dtype=np.int64) for _ in comps]
-            ns = payload[0]
-            scan = []
-            for c in range(ns):
-                cs, tt = payload[1 + 2 * c], payload[2 + 2 * c]
-                idx = next(i for i, cc in enumerate(comps) if cc[0] == cs)
-                scan.append((idx, tt >> 4))
-            sel = payload[1 + 2 * ns]  # Ss = predictor selector
-            pt = payload[3 + 2 * ns] & 0x0F  # Al = point transform
-            pt_out = pt
-            if not 1 <= sel <= 7:
-                raise ValueError(f"invalid lossless predictor {sel}")
-            br = _BitReader(buf, pos)
-            default = 1 << (prec - pt - 1)
-            tabs = [htables[t] for _, t in scan]
-            for y in range(h):
-                for x in range(w):
-                    for (ci, _), tab in zip(scan, tabs):
-                        p = planes[ci]
-                        above = p[y - 1] if y else None
-                        px = _predict(p[y], above, x, sel, default)
-                        s = tab.decode(br)
-                        if s == 16:
-                            diff = 32768
-                        else:
-                            diff = _extend(br.bits(s), s) if s else 0
-                        p[y, x] = (px + diff) & 0xFFFF
-            covered.update(ci for ci, _ in scan)
-            pos = br.pos - 2 if br.marker is not None else br.pos
-        # APPn / COM skipped via length
-
-    if planes is None:
-        raise ValueError("lossless JPEG has no scan data")
-    if covered != set(range(len(comps))):
-        raise ValueError("lossless JPEG scans do not cover every component")
-    out = [np.clip(p << pt_out, 0, 255).astype(np.uint8) for p in planes]
-    if len(out) == 1:
-        return out[0]
-    return np.stack(out, axis=2)
+def _decode_lossless_scan(
+    br: _BitReader,
+    planes: list[np.ndarray],
+    scan: list[tuple[int, int, int]],
+    htables: dict[tuple[int, int], _HuffTable],
+    sel: int,
+    pt: int,
+    prec: int,
+) -> None:
+    """Decode one SOF3 scan's entropy data into ``planes`` (H×W int64
+    samples in the point-shifted domain, where prediction runs, H.1.1).
+    ``sel`` is the scan's predictor selector (its Ss byte), ``pt`` its
+    point transform (Al)."""
+    if not 1 <= sel <= 7:
+        raise ValueError(f"invalid lossless predictor {sel}")
+    h, w = planes[0].shape
+    default = 1 << (prec - pt - 1)
+    tabs = [(planes[ci], htables[(0, t)]) for ci, t, _ in scan]
+    for y in range(h):
+        for x in range(w):
+            for p, tab in tabs:
+                above = p[y - 1] if y else None
+                px = _predict(p[y], above, x, sel, default)
+                s = tab.decode(br)
+                if s == 16:
+                    diff = 32768
+                else:
+                    diff = _extend(br.bits(s), s) if s else 0
+                p[y, x] = (px + diff) & 0xFFFF

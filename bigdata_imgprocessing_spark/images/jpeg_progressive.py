@@ -1,5 +1,4 @@
-"""Progressive JPEG (SOF2, Huffman) — from-spec stdlib+numpy, the
-companion to the baseline codec in ``images/jpeg.py``.
+"""Progressive JPEG (SOF2, Huffman) encoder — from-spec stdlib+numpy.
 
 Progressive mode (ITU-T T.81 Annex G) sends the DCT coefficients in
 MULTIPLE scans: spectral selection (each AC scan covers a zigzag band
@@ -9,63 +8,43 @@ coefficients at reduced precision — point transform Al — and later
 refinement scans, Ah = Al+1, add one bit of precision each). AC scans
 additionally use EOBn run codes: a single symbol ends a whole RUN of
 end-of-band blocks. This is what essentially every web-optimized JPEG
-("save as progressive") uses, and it was the last NotImplementedError
-gate in the native format story (VERDICT r6 "What's missing" #1 /
-round-7 continuation).
+("save as progressive") uses.
 
-- **Decoder**: any spec-legal scan script — interleaved or
-  single-component DC scans, per-component AC bands in any order,
-  arbitrary Ah/Al successive-approximation ladders, EOBn runs, DHT
-  tables redefined between scans, restart markers inside scans, and
-  the same integer-ratio chroma subsampling support as the baseline
-  decoder (upsampled nearest-neighbor after IDCT).
-- **Encoder**: a fixed 4-stage script that exercises every decoder
-  path — (1) interleaved DC first scan at Al=1, (2) per-component AC
-  first scans at Al=1 with the luma band split at Ss=6 (spectral
-  selection) and EOBn run accumulation, (3) DC refinement to full
-  precision, (4) per-component AC refinement scans (correction bits,
-  buffered-bit flushing). Point transforms follow the spec exactly:
-  arithmetic shift for DC, magnitude shift (divide toward zero) for AC.
+The encoder writes a fixed 4-stage script that exercises every decoder
+path — (1) interleaved DC first scan at Al=1, (2) per-component AC
+first scans at Al=1 with the luma band split at Ss=6 (spectral
+selection) and EOBn run accumulation, (3) DC refinement to full
+precision, (4) per-component AC refinement scans (correction bits,
+buffered-bit flushing). Point transforms follow the spec exactly:
+arithmetic shift for DC, magnitude shift (divide toward zero) for AC.
 
-Shares the DCT basis, zigzag, canonical tables, bit I/O, and color
-transforms with ``images/jpeg.py`` — one definition each. Same
-conventions: RGB uint8 arrays, ValueError for corruption,
-NotImplementedError for unsupported variants (12-bit, arithmetic
-coding, CMYK).
+SOF2 frames decode through the one JPEG decoder in ``images/jpeg.py``:
+its scan walker treats a sequential scan as the progressive case
+Ss=0, Se=63, Ah=Al=0. This module shares that file's DCT basis, zigzag,
+canonical tables, bit writer, frame geometry and header writers.
 """
 
 from __future__ import annotations
-
-import struct
 
 import numpy as np
 
 from .jpeg import (
     _AC_VALS,
+    _APP0_JFIF,
     _canonical_codes,
     _DC_BITS,
     _DC_VALS,
-    _ENC_DC,
-    _SUBSAMPLING,
-    _T,
-    _ZIGZAG,
     _amplitude,
-    _BitReader,
     _BitWriter,
-    _blocks,
-    _box_downsample,
-    _extend,
-    _HuffTable,
-    _QUANT_ONES,
-    _rgb_to_ycbcr,
-    _seg,
+    _emit_dc,
+    _forward_dct,
+    _frame_header,
+    _Layout,
+    _quant,
     _size_of,
-    _ycbcr_to_rgb,
+    _sos,
+    _ycc_planes,
 )
-
-# ---------------------------------------------------------------------------
-# Encoder
-# ---------------------------------------------------------------------------
 
 # Progressive AC tables additionally need the EOBn symbols (RRRR<<4,
 # SSSS=0 for RRRR=1..14 — end-of-band runs of 2..32767 blocks) the
@@ -74,6 +53,17 @@ from .jpeg import (
 _PAC_VALS = sorted(set(_AC_VALS) | {r << 4 for r in range(1, 15)})
 _PAC_BITS = [0, 0, 0, 0, 0, 0, 0, len(_PAC_VALS), 0, 0, 0, 0, 0, 0, 0, 0]
 _ENC_PAC = _canonical_codes(_PAC_BITS, _PAC_VALS)
+
+
+def _emit_eobrun(bw: _BitWriter, eobrun: int) -> int:
+    """Flush a pending EOBn run; returns 0."""
+    if eobrun > 0:
+        r = eobrun.bit_length() - 1
+        code, ln = _ENC_PAC[r << 4]
+        bw.write(code, ln)
+        if r:
+            bw.write(eobrun - (1 << r), r)
+    return 0
 
 
 class _RefineWriter:
@@ -88,13 +78,7 @@ class _RefineWriter:
         self.bits: list[int] = []  # correction bits awaiting the flush
 
     def flush_eob(self) -> None:
-        if self.eobrun > 0:
-            r = self.eobrun.bit_length() - 1
-            code, ln = _ENC_PAC[r << 4]
-            self.bw.write(code, ln)
-            if r:
-                self.bw.write(self.eobrun - (1 << r), r)
-            self.eobrun = 0
+        self.eobrun = _emit_eobrun(self.bw, self.eobrun)
         for b in self.bits:
             self.bw.write(b, 1)
         self.bits = []
@@ -104,17 +88,6 @@ class _RefineWriter:
         # spec cap: EOBRUN <= 32767 (EOB14's max run)
         if self.eobrun == 0x7FFF:
             self.flush_eob()
-
-
-def _emit_eobrun(bw: _BitWriter, eobrun: int) -> int:
-    """Flush a pending first-scan EOBn run; returns 0."""
-    if eobrun > 0:
-        r = eobrun.bit_length() - 1
-        code, ln = _ENC_PAC[r << 4]
-        bw.write(code, ln)
-        if r:
-            bw.write(eobrun - (1 << r), r)
-    return 0
 
 
 def encode_jpeg_progressive(
@@ -129,490 +102,131 @@ def encode_jpeg_progressive(
     AC refine per comp Ah=1→Al=0. Gray drops the chroma scans. Full
     precision is restored by the refinement ladder, so round-trip
     quality equals the baseline encoder's (±6 with all-ones quant)."""
-    a = np.ascontiguousarray(arr, dtype=np.uint8)
-    gray = a.ndim == 2
-    h, w = a.shape[:2]
-    if not gray and a.shape[2] != 3:
-        raise ValueError(f"JPEG encode needs 3 channels or gray, got {a.shape}")
-    if subsampling not in _SUBSAMPLING:
-        raise ValueError(f"subsampling must be one of {sorted(_SUBSAMPLING)}")
-    q = (_QUANT_ONES if quant is None else np.asarray(quant, np.uint16)).reshape(64)
-    if q.max() > 255 or q.min() < 1:
-        raise ValueError("quant table values must be in [1, 255]")
-
-    if gray:
-        factors = [(1, 1)]
-        planes = [a.astype(np.float64)]
-    else:
-        hy, vy = _SUBSAMPLING[subsampling]
-        factors = [(hy, vy), (1, 1), (1, 1)]
-        ycc = _rgb_to_ycbcr(a)
-        planes = [ycc[:, :, 0]]
-        for c in (1, 2):
-            planes.append(_box_downsample(ycc[:, :, c], hy, vy))
+    planes, factors = _ycc_planes(arr, subsampling)
+    q = _quant(quant)
+    h, w = planes[0].shape
+    lay = _Layout(h, w, factors)
+    comp_zz = _forward_dct(planes, lay, q, 128.0)  # (nbv, nbh, 64) zigzag
     ncomp = len(planes)
-    hmax = max(f[0] for f in factors)
-    vmax = max(f[1] for f in factors)
-    mcx, mcy = -(-w // (8 * hmax)), -(-h // (8 * vmax))
-
-    qf = q.reshape(8, 8).astype(np.float64)
-    comp_zz: list[np.ndarray] = []  # (nbv, nbh, 64) int64 in ZIGZAG order
-    for p, (hi, vi) in zip(planes, factors):
-        b = _blocks(p - 128.0, mcy * vi, mcx * hi)
-        coeff = np.einsum("ij,vhjk,lk->vhil", _T, b, _T)
-        zz = np.round(coeff / qf).astype(np.int64).reshape(
-            b.shape[0], b.shape[1], 64
-        )[:, :, _ZIGZAG]
-        comp_zz.append(zz)
-
-    out = bytearray(b"\xff\xd8")
-    out += _seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out += _seg(0xDB, bytes([0]) + bytes(q[_ZIGZAG].astype(np.uint8)))
-    sof = struct.pack(">BHHB", 8, h, w, ncomp)
-    for cid in range(1, ncomp + 1):
-        hi, vi = factors[cid - 1]
-        sof += struct.pack(">BBB", cid, (hi << 4) | vi, 0)
-    out += _seg(0xC2, sof)  # SOF2: progressive DCT, Huffman
-    out += _seg(0xC4, bytes([0x00]) + bytes(_DC_BITS) + bytes(_DC_VALS))
-    out += _seg(0xC4, bytes([0x10]) + bytes(_PAC_BITS) + bytes(_PAC_VALS))
-
-    def sos_header(comp_ids: list[int], ss: int, se: int, ah: int, al: int) -> bytes:
-        p = struct.pack(">B", len(comp_ids))
-        for cid in comp_ids:
-            tbl = 0x00 if ss == 0 else 0x00  # DC table 0 / AC table 0
-            p += struct.pack(">BB", cid, tbl)
-        return _seg(0xDA, p + bytes([ss, se, (ah << 4) | al]))
+    comps = list(range(ncomp))
+    out = _frame_header(
+        0xC2, 8, factors, h, w, q,  # SOF2: progressive DCT, Huffman
+        [(0x00, _DC_BITS, _DC_VALS), (0x10, _PAC_BITS, _PAC_VALS)], _APP0_JFIF,
+    )
 
     # ---- scan 1: DC first, interleaved, Al=1 -------------------------
-    out += sos_header(list(range(1, ncomp + 1)), 0, 0, 0, 1)
+    out += _sos(comps, 0, 0, 0x01)
     bw = _BitWriter()
     prev = [0] * ncomp
-    for my in range(mcy):
-        for mx in range(mcx):
-            for c, (hi, vi) in enumerate(factors):
-                for dv in range(vi):
-                    for dh in range(hi):
-                        v = int(comp_zz[c][my * vi + dv, mx * hi + dh, 0]) >> 1
-                        diff = v - prev[c]
-                        prev[c] = v
-                        s = _size_of(diff)
-                        code, ln = _ENC_DC[s]
-                        bw.write(code, ln)
-                        if s:
-                            bw.write(_amplitude(diff, s), s)
-    bw.flush()
-    out += bw.out
-
-    # per-component block grids for the NON-interleaved AC scans: the
-    # component's own ceil-divided dims, not the MCU-padded grid
-    def comp_grid(c: int) -> tuple[int, int]:
-        hi, vi = factors[c]
-        ch, cw = -(-h * vi // vmax), -(-w * hi // hmax)
-        return -(-ch // 8), -(-cw // 8)
+    for blocks in lay.scan_units(comps):
+        for c, bv, bh in blocks:
+            v = int(comp_zz[c][bv, bh, 0]) >> 1
+            _emit_dc(bw, v - prev[c])
+            prev[c] = v
+    out += bw.flush()
 
     # ---- AC first scans, Al=1 (luma band split exercises spectral
-    # selection; EOBn runs accumulate across blocks) -------------------
+    # selection; EOBn runs accumulate across blocks). AC scans walk the
+    # component's own ceil-sized block grid, not the MCU-padded one ----
     ac_first_bands = [(0, 1, 5), (0, 6, 63)] if ncomp == 3 else [(0, 1, 63)]
     if ncomp == 3:
         ac_first_bands += [(1, 1, 63), (2, 1, 63)]
     for c, ss, se in ac_first_bands:
-        out += sos_header([c + 1], ss, se, 0, 1)
+        out += _sos([c], ss, se, 0x01)
         bw = _BitWriter()
         eobrun = 0
-        nbv, nbh = comp_grid(c)
-        for bv in range(nbv):
-            for bh in range(nbh):
-                zz = comp_zz[c][bv, bh]
-                run = 0
-                wrote = False
-                for k in range(ss, se + 1):
-                    v = int(zz[k])
-                    t = (abs(v) >> 1) * (1 if v >= 0 else -1)
-                    if t == 0:
-                        run += 1
-                        continue
-                    eobrun = _emit_eobrun(bw, eobrun)
-                    while run > 15:
-                        code, ln = _ENC_PAC[0xF0]
-                        bw.write(code, ln)
-                        run -= 16
-                    s = _size_of(t)
-                    code, ln = _ENC_PAC[(run << 4) | s]
+        for [(_, bv, bh)] in lay.scan_units([c]):
+            zz = comp_zz[c][bv, bh]
+            run = 0
+            wrote = False
+            for k in range(ss, se + 1):
+                v = int(zz[k])
+                t = (abs(v) >> 1) * (1 if v >= 0 else -1)
+                if t == 0:
+                    run += 1
+                    continue
+                eobrun = _emit_eobrun(bw, eobrun)
+                while run > 15:
+                    code, ln = _ENC_PAC[0xF0]
                     bw.write(code, ln)
-                    bw.write(_amplitude(t, s), s)
-                    run = 0
-                    wrote = True
-                if run > 0 or not wrote:
-                    eobrun += 1
-                    if eobrun == 0x7FFF:
-                        eobrun = _emit_eobrun(bw, eobrun)
+                    run -= 16
+                s = _size_of(t)
+                code, ln = _ENC_PAC[(run << 4) | s]
+                bw.write(code, ln)
+                bw.write(_amplitude(t, s), s)
+                run = 0
+                wrote = True
+            if run > 0 or not wrote:
+                eobrun += 1
+                if eobrun == 0x7FFF:
+                    eobrun = _emit_eobrun(bw, eobrun)
         _emit_eobrun(bw, eobrun)
-        bw.flush()
-        out += bw.out
+        out += bw.flush()
 
     # ---- DC refinement: Ah=1 → Al=0, one bit per block ---------------
-    out += sos_header(list(range(1, ncomp + 1)), 0, 0, 1, 0)
+    out += _sos(comps, 0, 0, 0x10)
     bw = _BitWriter()
-    for my in range(mcy):
-        for mx in range(mcx):
-            for c, (hi, vi) in enumerate(factors):
-                for dv in range(vi):
-                    for dh in range(hi):
-                        v = int(comp_zz[c][my * vi + dv, mx * hi + dh, 0])
-                        bw.write(v & 1, 1)
-    bw.flush()
-    out += bw.out
+    for blocks in lay.scan_units(comps):
+        for c, bv, bh in blocks:
+            bw.write(int(comp_zz[c][bv, bh, 0]) & 1, 1)
+    out += bw.flush()
 
     # ---- AC refinement scans: Ah=1 → Al=0 ----------------------------
-    for c in range(ncomp):
-        out += sos_header([c + 1], 1, 63, 1, 0)
+    for c in comps:
+        out += _sos([c], 1, 63, 0x10)
         bw = _BitWriter()
         rw = _RefineWriter(bw)
-        nbv, nbh = comp_grid(c)
-        for bv in range(nbv):
-            for bh in range(nbh):
-                zz = comp_zz[c][bv, bh]
-                run = 0
-                pending: list[int] = []  # correction bits inside this block
-                # jcphuff's EOB variable: index of the LAST newly-significant
-                # coefficient. ZRLs past it fold into the EOB run instead.
-                eob_k = 0
-                for k in range(1, 64):
-                    if abs(int(zz[k])) == 1:
-                        eob_k = k
-                for k in range(1, 64):
-                    v = int(zz[k])
-                    t = abs(v)  # >> Al with Al=0
-                    if t == 0:
-                        run += 1
-                        continue
-                    # The ZRL check runs at EVERY nonzero coefficient —
-                    # newly significant OR correction-bit-only — BEFORE the
-                    # current coefficient is classified, so each ZRL carries
-                    # exactly the correction bits buffered within its own
-                    # 16-zero span (invariant: bits only enter `pending`
-                    # while run <= 15). Deferring the check to the next
-                    # newly-significant coefficient (the pre-r8 bug,
-                    # VERDICT r7) let bits from later spans flush after the
-                    # first ZRL, desynchronizing the decoder's span walk
-                    # (_ac_refine above / libjpeg jdphuff read them
-                    # positionally inside each skip).
-                    while run > 15 and k <= eob_k:
-                        rw.flush_eob()
-                        code, ln = _ENC_PAC[0xF0]
-                        bw.write(code, ln)
-                        run -= 16
-                        for b in pending:
-                            bw.write(b, 1)
-                        pending = []
-                    if t > 1:
-                        pending.append(t & 1)
-                        continue
-                    # newly significant at this precision (|v| == 1)
+        for [(_, bv, bh)] in lay.scan_units([c]):
+            zz = comp_zz[c][bv, bh]
+            run = 0
+            pending: list[int] = []  # correction bits inside this block
+            # jcphuff's EOB variable: index of the LAST newly-significant
+            # coefficient. ZRLs past it fold into the EOB run instead.
+            eob_k = 0
+            for k in range(1, 64):
+                if abs(int(zz[k])) == 1:
+                    eob_k = k
+            for k in range(1, 64):
+                v = int(zz[k])
+                t = abs(v)  # >> Al with Al=0
+                if t == 0:
+                    run += 1
+                    continue
+                # The ZRL check runs at EVERY nonzero coefficient —
+                # newly significant OR correction-bit-only — BEFORE the
+                # current coefficient is classified, so each ZRL carries
+                # exactly the correction bits buffered within its own
+                # 16-zero span (invariant: bits only enter `pending`
+                # while run <= 15). Deferring the check to the next
+                # newly-significant coefficient let bits from later
+                # spans flush after the first ZRL, desynchronizing the
+                # decoder's span walk (``jpeg._ac_refine`` / libjpeg
+                # jdphuff read them positionally inside each skip).
+                while run > 15 and k <= eob_k:
                     rw.flush_eob()
-                    code, ln = _ENC_PAC[(run << 4) | 1]
+                    code, ln = _ENC_PAC[0xF0]
                     bw.write(code, ln)
-                    bw.write(1 if v > 0 else 0, 1)
+                    run -= 16
                     for b in pending:
                         bw.write(b, 1)
                     pending = []
-                    run = 0
-                if run > 0 or pending:
-                    rw.bits.extend(pending)
-                    rw.end_of_band()
-                # a block whose band is fully emitted contributes no EOB
+                if t > 1:
+                    pending.append(t & 1)
+                    continue
+                # newly significant at this precision (|v| == 1)
+                rw.flush_eob()
+                code, ln = _ENC_PAC[(run << 4) | 1]
+                bw.write(code, ln)
+                bw.write(1 if v > 0 else 0, 1)
+                for b in pending:
+                    bw.write(b, 1)
+                pending = []
+                run = 0
+            if run > 0 or pending:
+                rw.bits.extend(pending)
+                rw.end_of_band()
+            # a block whose band is fully emitted contributes no EOB
         rw.flush_eob()
-        bw.flush()
-        out += bw.out
+        out += bw.flush()
 
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-# ---------------------------------------------------------------------------
-# Decoder
-# ---------------------------------------------------------------------------
-
-
-def decode_jpeg_progressive(buf: bytes) -> np.ndarray:
-    """Progressive (SOF2) JPEG bytes → uint8 H×W×3 RGB (or H×W gray).
-    Called by ``jpeg.decode_jpeg`` when the frame header is SOF2; the
-    same exception contract (ValueError = corrupt, NotImplementedError
-    = unsupported variant → cv2 slot-in)."""
-    pos = 2
-    qtables: dict[int, np.ndarray] = {}
-    htables: dict[tuple[int, int], _HuffTable] = {}
-    comps: list[tuple[int, int, int, int]] = []  # (id, hi, vi, tq)
-    h = w = 0
-    restart = 0
-    coef: list[np.ndarray] | None = None  # per comp (nbv, nbh, 64) zigzag
-    factors: list[tuple[int, int]] = []
-    hmax = vmax = 1
-    mcx = mcy = 0
-
-    def comp_grid(c: int) -> tuple[int, int]:
-        hi, vi = factors[c]
-        ch, cw = -(-h * vi // vmax), -(-w * hi // hmax)
-        return -(-ch // 8), -(-cw // 8)
-
-    while True:
-        if buf[pos] != 0xFF:
-            raise ValueError("JPEG marker expected")
-        while buf[pos + 1] == 0xFF:  # fill bytes (B.1.1.2)
-            pos += 1
-        marker = buf[pos + 1]
-        pos += 2
-        if marker == 0xD9:  # EOI
-            break
-        if marker in (0x01, *range(0xD0, 0xD8)):
-            continue
-        (ln,) = struct.unpack_from(">H", buf, pos)
-        payload = buf[pos + 2 : pos + ln]
-        pos += ln
-        if marker == 0xDB:
-            i = 0
-            while i < len(payload):
-                pq, tq = payload[i] >> 4, payload[i] & 0x0F
-                i += 1
-                n = 64 * (2 if pq else 1)
-                raw = payload[i : i + n]
-                i += n
-                vals = (
-                    np.frombuffer(raw, dtype=">u2").astype(np.int64)
-                    if pq
-                    else np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
-                )
-                t = np.zeros(64, dtype=np.int64)
-                t[_ZIGZAG] = vals
-                qtables[tq] = t.reshape(8, 8)
-        elif marker == 0xC4:
-            i = 0
-            while i < len(payload):
-                tc, th = payload[i] >> 4, payload[i] & 0x0F
-                bits = payload[i + 1 : i + 17]
-                n = sum(bits)
-                htables[(tc, th)] = _HuffTable(bits, payload[i + 17 : i + 17 + n])
-                i += 17 + n
-        elif marker == 0xC2:
-            prec, h, w, nc = struct.unpack_from(">BHHB", payload, 0)
-            if prec != 8:
-                raise NotImplementedError(f"only 8-bit JPEG (precision={prec})")
-            if nc not in (1, 3):
-                raise NotImplementedError(f"{nc}-component JPEG unsupported")
-            for c in range(nc):
-                cid, samp, tq = struct.unpack_from(">BBB", payload, 3 + 3 * c + 3)
-                comps.append((cid, samp >> 4, samp & 0x0F, tq))
-            factors = (
-                [(1, 1)]
-                if nc == 1
-                else [(hi, vi) for _, hi, vi, _ in comps]
-            )
-            hmax = max(f[0] for f in factors)
-            vmax = max(f[1] for f in factors)
-            for hi, vi in factors:
-                if not (1 <= hi <= 4 and 1 <= vi <= 4) or hmax % hi or vmax % vi:
-                    raise NotImplementedError(
-                        f"unsupported JPEG sampling factors {factors}"
-                    )
-            mcx, mcy = -(-w // (8 * hmax)), -(-h // (8 * vmax))
-            coef = [
-                np.zeros((mcy * vi, mcx * hi, 64), dtype=np.int64)
-                for hi, vi in factors
-            ]
-        elif marker in (0xC0, 0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA,
-                        0xCB, 0xCD, 0xCE, 0xCF):
-            raise NotImplementedError(
-                f"non-progressive/arithmetic SOF 0xFF{marker:02X} via this path"
-            )
-        elif marker == 0xDD:
-            (restart,) = struct.unpack_from(">H", payload, 0)
-        elif marker == 0xDA:
-            if coef is None:
-                raise ValueError("JPEG scan before SOF")
-            ns = payload[0]
-            scan: list[tuple[int, int, int]] = []
-            for c in range(ns):
-                cs, tt = payload[1 + 2 * c], payload[2 + 2 * c]
-                idx = next(i for i, cc in enumerate(comps) if cc[0] == cs)
-                scan.append((idx, tt >> 4, tt & 0x0F))
-            ss, se = payload[1 + 2 * ns], payload[2 + 2 * ns]
-            ahal = payload[3 + 2 * ns]
-            ah, al = ahal >> 4, ahal & 0x0F
-            pos = _decode_scan(
-                buf, pos, htables, coef, factors, scan, ss, se, ah, al,
-                restart, mcx, mcy, comp_grid,
-            )
-        # APPn/COM skipped
-
-    if coef is None:
-        raise ValueError("JPEG has no scan data")
-    planes = []
-    unzig = np.argsort(_ZIGZAG)
-    for c, (hi, vi) in enumerate(factors):
-        tq = comps[c][3]
-        if tq not in qtables:
-            raise ValueError("JPEG scan references undefined quant table")
-        zz = coef[c]  # (nbv, nbh, 64) zigzag order
-        nat = zz[:, :, unzig].reshape(zz.shape[0], zz.shape[1], 8, 8)
-        deq = nat * qtables[tq].astype(np.float64)[None, None, :, :]
-        spatial = np.einsum("ji,vhjk,kl->vhil", _T, deq, _T)
-        plane = spatial.swapaxes(1, 2).reshape(zz.shape[0] * 8, zz.shape[1] * 8)
-        ch, cw = -(-h * vi // vmax), -(-w * hi // hmax)
-        p = plane[:ch, :cw] + 128.0
-        if hi != hmax or vi != vmax:
-            p = np.repeat(np.repeat(p, vmax // vi, axis=0), hmax // hi, axis=1)
-        planes.append(p[:h, :w])
-    if len(factors) == 1:
-        return np.clip(planes[0].round(), 0, 255).astype(np.uint8)
-    return _ycbcr_to_rgb(planes[0], planes[1], planes[2])
-
-
-def _decode_scan(
-    buf: bytes,
-    pos: int,
-    htables: dict[tuple[int, int], _HuffTable],
-    coef: list[np.ndarray],
-    factors: list[tuple[int, int]],
-    scan: list[tuple[int, int, int]],
-    ss: int,
-    se: int,
-    ah: int,
-    al: int,
-    restart: int,
-    mcx: int,
-    mcy: int,
-    comp_grid,
-) -> int:
-    """Decode one progressive scan's entropy data; returns the buffer
-    position of the next marker segment."""
-    if not (0 <= ss <= se <= 63) or (ss == 0 and se != 0):
-        # T.81 G.1: DC scans are exactly Ss=Se=0; AC bands live in 1..63
-        raise ValueError("invalid progressive scan header (Ss/Se)")
-    br = _BitReader(buf, pos)
-    state = {"eobrun": 0}
-    prev_dc = [0] * len(factors)
-
-    def maybe_restart(unit: int) -> None:
-        if restart and unit and unit % restart == 0:
-            m = br.align_to_marker()
-            if m is None or not (0xD0 <= m <= 0xD7):
-                raise ValueError("JPEG restart marker expected")
-            prev_dc[:] = [0] * len(factors)
-            state["eobrun"] = 0
-
-    if ss == 0:
-        # DC scan — interleaved over MCUs (or single-component blocks)
-        dc_tbls = {ci: htables.get((0, dcid)) for ci, dcid, _ in scan}
-        if ah == 0 and any(t is None for t in dc_tbls.values()):
-            raise ValueError("JPEG scan references undefined DC table")
-        unit = 0
-        if len(scan) > 1 or len(factors) == 1:
-            rows, cols = (mcy, mcx)
-        else:
-            rows, cols = comp_grid(scan[0][0])
-        for my in range(rows):
-            for mx in range(cols):
-                maybe_restart(unit)
-                unit += 1
-                for ci, dcid, _ in scan:
-                    hi, vi = factors[ci] if len(scan) > 1 else (1, 1)
-                    for dv in range(vi):
-                        for dh in range(hi):
-                            bv, bh = my * vi + dv, mx * hi + dh
-                            block = coef[ci][bv, bh]
-                            if ah == 0:
-                                s = dc_tbls[ci].decode(br)
-                                diff = _extend(br.bits(s), s) if s else 0
-                                prev_dc[ci] += diff
-                                block[0] = prev_dc[ci] << al
-                            else:
-                                if br.bit():
-                                    block[0] |= 1 << al
-    else:
-        # AC scan — always single-component, block raster order
-        if len(scan) != 1:
-            raise ValueError("progressive AC scan must be single-component")
-        ci, _, acid = scan[0]
-        act = htables.get((1, acid))
-        if act is None:
-            raise ValueError("JPEG scan references undefined AC table")
-        nbv, nbh = comp_grid(ci)
-        unit = 0
-        for bv in range(nbv):
-            for bh in range(nbh):
-                maybe_restart(unit)
-                unit += 1
-                block = coef[ci][bv, bh]
-                if ah == 0:
-                    _ac_first(br, act, block, ss, se, al, state)
-                else:
-                    _ac_refine(br, act, block, ss, se, al, state)
-    # align to the next marker: the scan ends mid-byte; the next bytes
-    # are FF <marker>. If the reader already swallowed one, rewind.
-    if br.marker is not None:
-        return br.pos - 2
-    return br.pos
-
-
-def _ac_first(br, act, block, ss, se, al, state) -> None:
-    if state["eobrun"] > 0:
-        state["eobrun"] -= 1
-        return
-    k = ss
-    while k <= se:
-        sym = act.decode(br)
-        r, s = sym >> 4, sym & 0x0F
-        if s == 0:
-            if r != 15:
-                state["eobrun"] = (1 << r) - 1
-                if r:
-                    state["eobrun"] += br.bits(r)
-                return
-            k += 16  # ZRL
-            continue
-        k += r
-        if k > se:
-            raise ValueError("JPEG AC run past band end")
-        block[k] = _extend(br.bits(s), s) << al
-        k += 1
-
-
-def _ac_refine(br, act, block, ss, se, al, state) -> None:
-    p1, m1 = 1 << al, -1 << al
-    k = ss
-    if state["eobrun"] == 0:
-        while k <= se:
-            sym = act.decode(br)
-            r, s = sym >> 4, sym & 0x0F
-            val = 0
-            if s == 0:
-                if r != 15:
-                    state["eobrun"] = 1 << r
-                    if r:
-                        state["eobrun"] += br.bits(r)
-                    break
-                # ZRL: skip 16 zero-history coeffs (r = 15 → 15 skips
-                # plus the landing position below)
-            else:
-                if s != 1:
-                    raise ValueError("invalid refinement magnitude")
-                val = p1 if br.bit() else m1
-            while k <= se:
-                if block[k] != 0:
-                    if br.bit() and (block[k] & p1) == 0:
-                        block[k] += p1 if block[k] >= 0 else m1
-                else:
-                    if r == 0:
-                        break
-                    r -= 1
-                k += 1
-            if val and k <= se:
-                block[k] = val
-            k += 1
-    if state["eobrun"] > 0:
-        while k <= se:
-            if block[k] != 0:
-                if br.bit() and (block[k] & p1) == 0:
-                    block[k] += p1 if block[k] >= 0 else m1
-            k += 1
-        state["eobrun"] -= 1
+    return bytes(out + b"\xff\xd9")

@@ -36,10 +36,14 @@ def test_codec_rejects_unknown_format():
         decode_image(b"\xff\xd8\xff\xe0 not really a jpeg")
 
 
-def test_codec_cv2_slot_in(monkeypatch):
+def test_codec_cv2_slot_in(monkeypatch, caplog):
     """The cv2 dispatch branch is live code, not dead glue: with a fake
     cv2 module patched in, non-FIMG bytes route through cv2.imdecode
-    (and FIMG bytes still take the native path, never touching cv2)."""
+    (and FIMG bytes still take the native path, never touching cv2).
+    Each fallback logs one INFO line naming its reason; without cv2 the
+    codec's NotImplementedError propagates."""
+    import logging
+
     from bigdata_imgprocessing_spark.images import codec
 
     calls = []
@@ -65,14 +69,26 @@ def test_codec_cv2_slot_in(monkeypatch):
     good = encode_jpeg(np.full((8, 8, 3), 50, dtype=np.uint8))
     sof = good.find(bytes([0xFF, 0xC0]))
     arith = good[: sof + 1] + b"\xc9" + good[sof + 2 :]
-    out = codec.decode_image(arith)
+    with caplog.at_level(logging.INFO, logger=codec.__name__):
+        out = codec.decode_image(arith)
+        codec.decode_image(b"GIF89a not a native format")
     assert out.shape == (2, 3, 3) and (out == 7).all()
-    assert calls == [(arith, FakeCv2.IMREAD_COLOR)]
+    assert calls == [(arith, FakeCv2.IMREAD_COLOR),
+                     (b"GIF89a not a native format", FakeCv2.IMREAD_COLOR)]
+    assert [r.getMessage() for r in caplog.records if r.name == codec.__name__] == [
+        "image decode via cv2: arithmetic/hierarchical JPEG (SOF 0xFFC9)",
+        "image decode via cv2: unrecognized format",
+    ]
 
     # FIMG bytes bypass cv2 even when it is importable
     native = codec.decode_image(encode_image(np.zeros((4, 4, 3), np.uint8)))
     assert native.shape == (4, 4, 3)
-    assert len(calls) == 1
+    assert len(calls) == 2
+
+    # without cv2 the codec's gate propagates
+    monkeypatch.setattr(codec, "_HAS_CV2", False)
+    with pytest.raises(NotImplementedError, match="arithmetic"):
+        codec.decode_image(arith)
 
 
 def test_avg_color_exact():

@@ -156,6 +156,32 @@ def test_decoder_gates_and_corruption_contract_for_sof_variants():
     arith = bytes(buf[:sof + 1]) + b"\xc9" + bytes(buf[sof + 2:])
     with pytest.raises(NotImplementedError, match="arithmetic"):
         decode_jpeg(arith)
+    # each frame type keeps its own gates: progressive is 8-bit, 1 or 3
+    # components; lossless is <= 8-bit, unsubsampled, without restarts
+    from bigdata_imgprocessing_spark.images.jpeg_lossless import (
+        encode_jpeg_lossless,
+    )
+    from bigdata_imgprocessing_spark.images.jpeg_progressive import (
+        encode_jpeg_progressive,
+    )
+
+    def patched(stream, sof_marker, offset, value):
+        out = bytearray(stream)
+        out[out.find(bytes([0xFF, sof_marker])) + 4 + offset] = value
+        return bytes(out)
+
+    prog = encode_jpeg_progressive(img)
+    lossless = encode_jpeg_lossless(img)
+    sos = lossless.find(bytes([0xFF, 0xDA]))
+    for gated in (
+        patched(prog, 0xC2, 0, 12),  # SOF2 at precision 12
+        patched(prog, 0xC2, 5, 4),  # SOF2 with 4 components
+        patched(lossless, 0xC3, 0, 12),  # SOF3 at precision 12
+        patched(lossless, 0xC3, 7, 0x22),  # SOF3, subsampled component
+        lossless[:sos] + b"\xff\xdd\x00\x04\x00\x02" + lossless[sos:],  # DRI
+    ):
+        with pytest.raises(NotImplementedError):
+            decode_jpeg(gated)
 
 
 def test_12bit_extended_sequential_gray():
@@ -406,16 +432,21 @@ def test_truncation_fuzz_never_garbage(seed, frac):
 
 
 @settings(max_examples=10, deadline=None)
-@given(seed=st.integers(0, 2**31 - 1), ri=st.integers(1, 5))
-def test_restart_marker_roundtrip(seed, ri):
+@given(
+    seed=st.integers(0, 2**31 - 1),
+    ri=st.integers(1, 5),
+    mode=st.sampled_from(["interleaved", "separate", "partial"]),
+)
+def test_restart_marker_roundtrip(seed, ri, mode):
     """DRI/RSTn path: encoding with a restart interval must emit the DRI
     segment + RST markers and decode to the same image as the
     no-restart encoding (DC-predictor resets and bit re-alignment are
-    exercised on BOTH sides)."""
+    exercised on BOTH sides), for every scan script — the partial one
+    once wrote a DRI segment but no RST markers."""
     rng = np.random.default_rng(seed)
     img = rng.integers(0, 256, size=(16, 24, 3), dtype=np.uint8)
     plain = decode_jpeg(encode_jpeg(img))
-    with_rst = encode_jpeg(img, restart_interval=ri)
+    with_rst = encode_jpeg(img, restart_interval=ri, scan_mode=mode)
     assert bytes([0xFF, 0xDD]) in with_rst  # DRI present
     assert bytes([0xFF, 0xD0]) in with_rst  # first RST marker present
     assert (decode_jpeg(with_rst) == plain).all()
@@ -550,3 +581,137 @@ def test_12bit_encode_validation():
         encode_jpeg_12bit(np.full((4, 4, 4), 5000, np.uint16))
     with _pytest.raises(ValueError):
         encode_jpeg_12bit(np.zeros((4, 4, 4), np.uint16), transform=1)
+
+
+def test_bit_reader_keeps_only_live_bits(monkeypatch):
+    """The entropy reader's accumulator holds only its unread bits: one
+    that kept every bit read so far made each shift cost O(bytes read)
+    and the whole decode quadratic in file size."""
+    from bigdata_imgprocessing_spark.images import jpeg
+
+    readers = []
+
+    class Recording(jpeg._BitReader):
+        def __init__(self, buf, pos):
+            super().__init__(buf, pos)
+            readers.append(self)
+
+    monkeypatch.setattr(jpeg, "_BitReader", Recording)
+    img = np.random.default_rng(5).integers(0, 256, (48, 64, 3), np.uint8)
+    buf = encode_jpeg(img)
+    assert decode_jpeg(buf).shape == img.shape
+    (br,) = readers
+    assert br.pos > 8192  # a multi-KB scan went through this reader
+    assert br._acc.bit_length() <= 15
+
+
+def test_batched_idct_matches_per_block_reference():
+    """The decoder's tail inverse-transforms every block of a component
+    in one einsum; each pixel must be the rounding of the per-block
+    ``_T.T @ coeff @ _T`` reference, up to float noise."""
+    from bigdata_imgprocessing_spark.images.jpeg import (
+        _UNZIGZAG,
+        _dct_pixels,
+        _Layout,
+    )
+
+    rng = np.random.default_rng(9)
+    lay = _Layout(21, 30, [(1, 1)])
+    zz = rng.integers(-40, 41, size=(lay.mcy, lay.mcx, 64))
+    q = rng.integers(1, 4, size=(8, 8)).astype(np.float64)
+    out = _dct_pixels([zz], [q], lay, 8, 0)
+    ref = np.zeros((lay.mcy * 8, lay.mcx * 8))
+    for bv in range(lay.mcy):
+        for bh in range(lay.mcx):
+            coeff = zz[bv, bh][_UNZIGZAG].reshape(8, 8) * q
+            ref[bv * 8 : bv * 8 + 8, bh * 8 : bh * 8 + 8] = _T.T @ coeff @ _T
+    ref = np.clip(ref[:21, :30] + 128.0, 0, 255)
+    assert out.shape == (21, 30)
+    assert np.abs(out - ref).max() <= 0.5 + 1e-9
+
+
+# md5 of each encoder's output for fixed seeded inputs. The bench corpus
+# and the image-query fixtures are built with these encoders, so a byte
+# change would silently change their inputs.
+_ENCODER_MD5 = {
+    "jpeg-interleaved-444-ri0-ones": "79010f30d4524ef03836b437b1492831",
+    "jpeg-interleaved-444-ri0-q31": "00457fd2f763a7550b7150f51288b0cf",
+    "jpeg-interleaved-444-ri3-ones": "2a740d0402760ac200b7dc4f32de3928",
+    "jpeg-interleaved-444-ri3-q31": "6d9058c6156b941b2ab67f949d29d4a7",
+    "jpeg-interleaved-420-ri0-ones": "892e683b03e49387e394498f419a94b4",
+    "jpeg-interleaved-420-ri0-q31": "6777a4124d36df52d190616235fa5187",
+    "jpeg-interleaved-420-ri3-ones": "5ea14b41306c07d734f017aa558a15ba",
+    "jpeg-interleaved-420-ri3-q31": "a8f8a397d3afcf87dcd29f056604e9cd",
+    "jpeg-separate-444-ri0-ones": "c305e26fa57364dc95d93d8adc0ffcba",
+    "jpeg-separate-444-ri0-q31": "079a0a8360035917f5c4d72ce968a80e",
+    "jpeg-separate-444-ri3-ones": "c869e3aefd8172811a2e39ce8030bb2e",
+    "jpeg-separate-444-ri3-q31": "6c36db6787847be3e2d26849ddf98023",
+    "jpeg-separate-420-ri0-ones": "c06e6b5fd1c02aa3544f45eb7df4fbbd",
+    "jpeg-separate-420-ri0-q31": "fe1b15872fd0d6d602ac85fc73456ba7",
+    "jpeg-separate-420-ri3-ones": "5353719081709ed311da239822ae6c13",
+    "jpeg-separate-420-ri3-q31": "ab0dd43957b72e98ee4a3bc20d0c80ce",
+    "jpeg-partial-444-ri0-ones": "9fc1ac0ade47cde0b75aaa9ef3025964",
+    "jpeg-partial-444-ri0-q31": "5f8fb412de5fec10519fe48ce88acb94",
+    "jpeg-partial-420-ri0-ones": "d3f047e98450fc3f8d938f6694802766",
+    "jpeg-partial-420-ri0-q31": "962c17e41442598ecb399f91cc0b343d",
+    "jpeg-gray-ri2": "bc2145ca8a6abd1a9cc90ff54815fdc3",
+    "cmyk-t0": "cf91ee1b777dd9bbee7f9f170b1d7a18",
+    "cmyk-t2": "a72b6c4a83630ef479a7f1e485103e57",
+    "12bit-gray": "91403b136496d31a45bd60ed605788b7",
+    "12bit-color": "7a97bd36ad62e6048ac214a9d9317116",
+    "12bit-cmyk-t0": "8d7c445943c76fd502c2d74b0f9f4064",
+    "12bit-cmyk-t2": "fde86b45e8ddaa04f09ed931e0ac2a1f",
+    "progressive-444": "1f36b9d350304a0d7920cb46ebf8a3f2",
+    "progressive-420-q31": "e0db4196da330fdcd5a838861b87db2d",
+    "progressive-gray": "0644353a79d5558e6a8fb62f3a7f5fde",
+    "lossless-gray-p4": "567aab3c51c95b2501681d2fff5cbe41",
+    "lossless-rgb-p7-pt1": "ff68b95a50bf53146c25fb7fa48707cf",
+}
+
+
+def test_encoder_bytes_are_pinned():
+    import hashlib
+
+    from bigdata_imgprocessing_spark.images.jpeg import (
+        encode_jpeg_12bit,
+        encode_jpeg_cmyk,
+    )
+    from bigdata_imgprocessing_spark.images.jpeg_lossless import (
+        encode_jpeg_lossless,
+    )
+    from bigdata_imgprocessing_spark.images.jpeg_progressive import (
+        encode_jpeg_progressive,
+    )
+
+    rng = np.random.default_rng(20261018)
+    rgb = rng.integers(0, 256, size=(19, 27, 3), dtype=np.uint8)
+    gray = rng.integers(0, 256, size=(19, 27), dtype=np.uint8)
+    cmyk = rng.integers(0, 256, size=(13, 21, 4), dtype=np.uint8)
+    w12 = rng.integers(0, 4096, size=(13, 21, 4), dtype=np.uint16)
+    q = (np.arange(64) % 31 + 1).astype(np.uint16)
+    got = {}
+    for mode in ("interleaved", "separate", "partial"):
+        for sub in ("444", "420"):
+            for ri in (0, 3):
+                for qn, qt in (("ones", None), ("q31", q)):
+                    if mode == "partial" and ri:
+                        continue  # its RST markers are new bytes
+                    got[f"jpeg-{mode}-{sub}-ri{ri}-{qn}"] = encode_jpeg(
+                        rgb, quant=qt, restart_interval=ri,
+                        subsampling=sub, scan_mode=mode,
+                    )
+    got["jpeg-gray-ri2"] = encode_jpeg(gray, restart_interval=2)
+    for t in (0, 2):
+        got[f"cmyk-t{t}"] = encode_jpeg_cmyk(cmyk, transform=t, quant=q)
+    got["12bit-gray"] = encode_jpeg_12bit(w12[:, :, 0])
+    got["12bit-color"] = encode_jpeg_12bit(w12[:, :, :3], quant=q)
+    for t in (0, 2):
+        got[f"12bit-cmyk-t{t}"] = encode_jpeg_12bit(w12, transform=t)
+    got["progressive-444"] = encode_jpeg_progressive(rgb)
+    got["progressive-420-q31"] = encode_jpeg_progressive(
+        rgb, quant=q, subsampling="420")
+    got["progressive-gray"] = encode_jpeg_progressive(gray)
+    got["lossless-gray-p4"] = encode_jpeg_lossless(gray, predictor=4)
+    got["lossless-rgb-p7-pt1"] = encode_jpeg_lossless(rgb, predictor=7, pt=1)
+    digests = {k: hashlib.md5(v).hexdigest() for k, v in got.items()}
+    assert digests == _ENCODER_MD5
