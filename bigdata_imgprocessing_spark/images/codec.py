@@ -42,6 +42,22 @@ def encode_image(arr: np.ndarray) -> bytes:
     return _HEADER.pack(_MAGIC, h, w, c) + a.tobytes()
 
 
+def fixture_pixels(vec, n: int) -> np.ndarray:
+    """The synthetic image fixture rule: the first ``n`` values of an
+    embedding as flat uint8 pixel bytes, pixel_i = abs(trunc(v_i *
+    1000)) % 256. Every image, video and patch fixture of the query
+    registry and the FIMG corpus is made of these bytes, and the oracles
+    recompute them with ``fixture_pixel_sql``."""
+    v = np.asarray(vec[:n], dtype=np.float64) * 1000.0
+    return (np.abs(v.astype(np.int64)) % 256).astype(np.uint8)
+
+
+def fixture_pixel_sql(index) -> str:
+    """DuckDB twin of ``fixture_pixels``: the pixel byte of the 1-based
+    ``embedding`` element ``index`` (an int or a SQL expression)."""
+    return f"(abs(trunc(embedding[{index}]::DOUBLE * 1000)::BIGINT) % 256)"
+
+
 def decode_image(buf: bytes) -> np.ndarray:
     """Bytes → uint8 HxWxC ndarray. FIMG; BMP (24/32-bit + 8-bit
     palette); PNG (gray/RGB/RGBA/palette/gray+alpha, depths 1-16,

@@ -9,6 +9,12 @@ array<struct> detection schema, explode → threshold-filter → count
 (pyspark_yolox.py:90-111, P6/P7). Swapping in a real model means
 replacing ``_detections_for_id`` with a ``predict_batch_udf`` scorer —
 the plan shape is unchanged.
+
+Every consumer of the detector — the reference detection pipeline and
+each detection query — reads it through ``class_counts`` (each image's
+per-class count of detections above ``SCORE_THRESHOLD``) or its
+exploded form ``class_count_rows``, and every oracle through the DuckDB
+twin ``detections_sql``.
 """
 
 from __future__ import annotations
@@ -16,6 +22,7 @@ from __future__ import annotations
 import hashlib
 
 import pandas as pd
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -54,7 +61,71 @@ def _detections_for_id(img_id: str) -> list[dict]:
     ]
 
 
+def detections_sql(src: str, keep: str = "img_id") -> str:
+    """DuckDB twin of ``_detections_for_id``: a SELECT with one row per
+    stub detection of each row of relation ``src`` (which has a VARCHAR
+    ``img_id``) — the ``keep`` columns, then class_id and score."""
+    return f"""SELECT {keep},
+               CAST(('0x' || substr(md5(img_id || '_' || CAST(j + 1 AS VARCHAR)), 1, 10))::UBIGINT % 80 AS INTEGER) AS class_id,
+               (('0x' || substr(md5(img_id || '_s' || CAST(j + 1 AS VARCHAR)), 1, 10))::UBIGINT % 1000) / 1000.0 AS score
+        FROM {src} CROSS JOIN (SELECT unnest(range(3)) AS j) js
+        WHERE j < ('0x' || substr(md5(img_id), 1, 10))::UBIGINT % 4"""
+
+
 @F.pandas_udf(DETECTION_SCHEMA)
 def detect_udf(img_id: pd.Series) -> pd.Series:
     """Stub model inference (stands in for predict_batch_udf + YOLOX)."""
     return img_id.map(_detections_for_id)
+
+
+def _class_totals(entries: Column, weight) -> Column:
+    """A per-row ``groupBy(class_id).sum(weight)`` over an array of
+    structs with a ``class_id``: ``array<struct<class_id, n>>`` sorted
+    by class id."""
+    return F.transform(
+        F.array_sort(F.array_distinct(F.transform(entries, lambda e: e.class_id))),
+        lambda k: F.struct(
+            k.alias("class_id"),
+            F.aggregate(
+                F.filter(entries, lambda e: e.class_id == k),
+                F.lit(0).cast("bigint"),
+                lambda acc, e: acc + weight(e),
+            ).alias("n"),
+        ),
+    )
+
+
+def _entries(totals: str, value) -> Column:
+    """``'k:v,k:v'`` over a ``_class_totals`` column."""
+    return F.array_join(
+        F.transform(totals, lambda s: F.concat_ws(":", s.class_id, value(s))), ","
+    )
+
+
+def class_counts(frame: DataFrame, id_col: str) -> DataFrame:
+    """``frame`` plus ``counts``: the image ``id_col``'s detections
+    above ``SCORE_THRESHOLD`` counted per class (explode →
+    threshold-filter → count, P6/P7), as ``array<struct<class_id, n>>``
+    sorted by class id — empty when none passes. Row-local: no groupBy
+    and no join back to the image rows. The detector column is selected
+    before the array functions read it, as Python UDFs cannot run
+    inside a higher-order function's lambda."""
+    return frame.select("*", detect_udf(id_col).alias("dets")).select(
+        *frame.columns,
+        _class_totals(
+            F.filter("dets", lambda d: d.score > SCORE_THRESHOLD), lambda d: F.lit(1)
+        ).alias("counts"),
+    )
+
+
+def class_count_rows(frame: DataFrame, id_col: str) -> DataFrame:
+    """``class_counts`` exploded: ``frame``'s columns plus (class_id, n),
+    one row per image and detected class. The generator is the outer
+    form, with its empty-array rows dropped after it: for the inner
+    form Catalyst infers a ``size(counts) > 0`` filter and pushes it
+    below the projection, which runs the detector UDF a second time."""
+    return (
+        class_counts(frame, id_col)
+        .select(*frame.columns, F.inline_outer("counts"))
+        .where(F.col("class_id").isNotNull())
+    )

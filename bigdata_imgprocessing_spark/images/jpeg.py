@@ -504,10 +504,15 @@ def encode_jpeg(
     nc = len(planes)
     if scan_mode == "partial" and nc != 3:
         raise ValueError("scan_mode='partial' needs a color image")
-    script = {"separate": [(c,) for c in range(nc)], "partial": [(0,), (1, 2)]}
+    script = {
+        "interleaved": [tuple(range(nc))],
+        "separate": [(c,) for c in range(nc)],
+        "partial": [(0,), (1, 2)],
+    }
+    if scan_mode not in script:
+        raise ValueError(f"unknown scan_mode {scan_mode!r}")
     return _write_sequential(
-        planes, factors, 8, quant, script.get(scan_mode, [tuple(range(nc))]),
-        restart_interval, _APP0_JFIF,
+        planes, factors, 8, quant, script[scan_mode], restart_interval, _APP0_JFIF
     )
 
 

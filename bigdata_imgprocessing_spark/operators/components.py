@@ -43,6 +43,53 @@ _log = logging.getLogger(__name__)
 LOCAL_EDGES = 1_000_000
 
 
+def _symmetric_edges(
+    edges: DataFrame, src: str, dst: str, loops: bool = True
+) -> tuple[DataFrame, int, int]:
+    """The distinct symmetric (a, b) edge set of an undirected
+    (src, dst) edge list, checkpointed and counted in one job →
+    (sym, n_edges, width). ``loops=False`` drops self-loops.
+
+    Every iteration over ``sym`` keeps its partitioning, so it is
+    coalesced here to a width sized to the DATA, capped at cores: a
+    default-conf 200 would cost 200 tasks x stages x rounds, and a
+    sparse few-thousand-edge graph on one partition runs each round as
+    single-task jobs instead of paying per-task overhead x cores x
+    rounds (the bytes-per-partition rule of
+    spark.sql.files.maxPartitionBytes, applied to iteration state). The
+    checkpoint is lazy: the count materializes it, one job, not two."""
+    from ..core.session import cache_parallelism
+
+    cores = cache_parallelism(edges.sparkSession)
+    if loops:
+        sym = (
+            edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+            .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+            .distinct()
+            .localCheckpoint(eager=False)
+        )
+        n_edges = sym.count()
+    else:
+        # canonical undirected pairs (pa < pb): half the rows to
+        # deduplicate and checkpoint, and the two projections are
+        # disjoint, so the symmetric set needs no second distinct
+        pairs = (
+            edges.select(
+                F.least(F.col(src), F.col(dst)).alias("pa"),
+                F.greatest(F.col(src), F.col(dst)).alias("pb"),
+            )
+            .where(F.col("pa") != F.col("pb"))
+            .distinct()
+            .localCheckpoint(eager=False)
+        )
+        n_edges = 2 * pairs.count()
+        sym = pairs.select(F.col("pa").alias("a"), F.col("pb").alias("b")).union(
+            pairs.select(F.col("pb").alias("a"), F.col("pa").alias("b"))
+        )
+    width = max(1, min(cores, n_edges // 50_000))
+    return sym.coalesce(width), n_edges, width
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -55,29 +102,15 @@ def connected_components(
     union isolated nodes afterwards if needed. Pass a dict as ``stats``
     to receive {n_edges, width, rounds} — the scale-stress harness uses
     it to verify the O(log diameter) round-count claim empirically."""
-    from ..core.session import cache_parallelism, local_frame
+    from ..core.session import local_frame
 
-    # checkpointed partitioning is frozen for every later round — size it
-    # to the DATA, capped at cores (a default-conf 200 would cost 200
-    # tasks x stages x rounds; and a sparse few-thousand-edge graph on
-    # one partition turns each round into single-task jobs instead of
-    # paying per-task overhead x cores x rounds — the same
-    # bytes-per-partition sizing rule as spark.sql.files.maxPartitionBytes,
-    # applied to the iteration state)
-    cores = cache_parallelism(edges.sparkSession)
     # eager=False throughout: every localCheckpoint here is followed
     # immediately by an action (count / convergence sum), so the lazy
     # form lets that action materialize the checkpoint — one Spark job
     # per round instead of two (measured on er_golden_record: the
     # query's wall is stage-scheduling overhead, not executor time, so
     # job count IS the cost).
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    n_edges = sym.count()  # materializes the checkpoint
+    sym, n_edges, width = _symmetric_edges(edges, src, dst)
     # SIZE-CONDITIONAL closure (r16): below the edge threshold the
     # whole graph fits comfortably on the driver (the broadcast-join
     # principle — small side to the driver), and the iterative rounds
@@ -121,8 +154,6 @@ def connected_components(
         node_t = sym.schema["a"].dataType.simpleString()
         schema = f"node {node_t}, comp {node_t}"
         return local_frame(edges.sparkSession, out_rows, schema)
-    width = max(1, min(cores, n_edges // 50_000))
-    sym = sym.coalesce(width)  # narrow on the checkpointed frame
     labels = (
         sym.groupBy("a")
         .agg(F.min("b").alias("min_nbr"))
@@ -186,18 +217,7 @@ def min_label_propagation(
     corpus-sized; localCheckpoint per round cuts the lineage growth that
     otherwise re-analyzes the whole chain each iteration (the
     connected-components/pagerank lesson applied at design time)."""
-    from ..core.session import cache_parallelism
-
-    cores = cache_parallelism(edges.sparkSession)
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-        .localCheckpoint()
-    )
-    n_edges = sym.count()
-    width = max(1, min(cores, n_edges // 50_000))
-    sym = sym.coalesce(width)
+    sym, _, width = _symmetric_edges(edges, src, dst)
     labels = (
         sym.select(F.col("a").alias("node"))
         .distinct()
@@ -256,19 +276,7 @@ def neighborhood_function(
     dominant cost is the upstream LSH candidate pipeline, not the
     iteration). Rounds are a constant; 4 scalars per round reach the
     driver."""
-    from ..core.session import cache_parallelism
-
-    cores = cache_parallelism(edges.sparkSession)
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
-    n_edges = sym.count()
-    width = max(1, min(cores, n_edges // 50_000))
-    sym = sym.coalesce(width)
+    sym, _, width = _symmetric_edges(edges, src, dst, loops=False)
     reach = (
         sym.select(F.col("a").alias("v"))
         .distinct()
@@ -366,27 +374,7 @@ def kcore_peel(
     two semi-join references to `alive` double the nested plan every
     round (exponential analysis blowup — measured 2.2x slower with
     cache() instead at 3 rounds)."""
-    from ..core.session import cache_parallelism
-
-    cores = cache_parallelism(edges.sparkSession)
-    pairs = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("pa"),
-            F.greatest(F.col(src), F.col(dst)).alias("pb"),
-        )
-        .where(F.col("pa") != F.col("pb"))  # canonical undirected, no loops
-        .distinct()
-        .localCheckpoint()
-    )
-    n_pairs = pairs.count()
-    width = max(1, min(cores, (2 * n_pairs) // 50_000))
-    # pairs is canonical (pa < pb), so the two projections are disjoint
-    # — no distinct needed; narrow ops over the checkpointed pairs.
-    sym = (
-        pairs.select(F.col("pa").alias("a"), F.col("pb").alias("b"))
-        .union(pairs.select(F.col("pb").alias("a"), F.col("pa").alias("b")))
-        .coalesce(width)
-    )
+    sym, _, width = _symmetric_edges(edges, src, dst, loops=False)
     out: list[tuple[int, int, int]] = []
     n_alive = None  # round 0: every node of sym has degree >= 1
     deg = None

@@ -17,9 +17,10 @@ its expensive frame once with an eager ``localCheckpoint()``, and every
 sink reads that result (the reference's ``--cached-pred`` flag avoids
 recomputing its predictions the same way, pyspark_yolox.py:115-119):
 
-- detection: each image's class counts, computed by row-local array
-  functions over the detector output (no groupBy, no join back to the
-  id list), read by the per-image table and the one labels join; and
+- detection: each image's class counts (``images/detect.py``
+  ``class_counts``, row-local: no groupBy, no join back to the id
+  list, the same derivation every detection query reads), read by the
+  per-image table and the one labels join; and
   ``per_landmark``, which is then written and returned;
 - colour: one fused UDF per image (one decode for both features),
   read by the three sinks;
@@ -51,7 +52,7 @@ from pyspark.sql import functions as F
 from ..core.session import local_frame
 from ..functions import first_letter, length_bucket, zero_guard_div
 from ..images.color import color_features_udf
-from ..images.detect import SCORE_THRESHOLD, detect_udf
+from ..images.detect import _class_totals, _entries, class_counts
 from ..sources.csv_io import write_semicolon_csv
 
 
@@ -69,50 +70,15 @@ def _image_ids(spark: SparkSession, images_dir: str, ext: str = "fimg") -> DataF
     )
 
 
-def _class_totals(entries: Column, weight) -> Column:
-    """A per-row ``groupBy(class_id).sum(weight)`` over an array of
-    structs with a ``class_id``: ``array<struct<class_id, n>>`` sorted
-    by class id."""
-    return F.transform(
-        F.array_sort(F.array_distinct(F.transform(entries, lambda e: e.class_id))),
-        lambda k: F.struct(
-            k.alias("class_id"),
-            F.aggregate(
-                F.filter(entries, lambda e: e.class_id == k),
-                F.lit(0).cast("bigint"),
-                lambda acc, e: acc + weight(e),
-            ).alias("n"),
-        ),
-    )
-
-
-def _entries(totals: str, value) -> Column:
-    """``'k:v,k:v'`` over a ``_class_totals`` column."""
-    return F.array_join(
-        F.transform(totals, lambda s: F.concat_ws(":", s.class_id, value(s))), ","
-    )
-
-
 def run_detection_pipeline(
     spark: SparkSession, images_dir: str, labels: DataFrame, out_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     """pyspark_yolox.py end-to-end: detect → per-image counts table →
     per-landmark sums/averages. ``labels`` is the (id, landmark_id)
     dimension (train_labels.csv shape)."""
-    # the one detector pass, reduced to each image's class counts by
-    # row-local array functions (explode → threshold-filter → count,
-    # P6/P7); both tables below read it
-    counts = (
-        _image_ids(spark, images_dir)
-        .select("id", detect_udf("id").alias("dets"))
-        .select(
-            "id",
-            _class_totals(
-                F.filter("dets", lambda d: d.score > SCORE_THRESHOLD), lambda d: F.lit(1)
-            ).alias("counts"),
-        )
-        .localCheckpoint()
-    )
+    # the one detector pass, reduced to each image's class counts;
+    # both tables below read it
+    counts = class_counts(_image_ids(spark, images_dir).select("id"), "id").localCheckpoint()
     # per-image predictions table (results_predictions,
     # pyspark_yolox.py:137-140); '' for no detections like the '{}' rows
     per_image = counts.select(

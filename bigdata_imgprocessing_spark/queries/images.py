@@ -5,11 +5,15 @@ binary columns and Arrow pandas UDFs.
 
 Why embeddings → images: the oracle must be able to recompute results
 from the same parquet inputs, so each "image" is a 2x2x3 uint8 pixel
-block deterministically derived from the first 12 embedding dims
-(pixel_i = abs(trunc(dim_i * 1000)) % 256). The Spark side round-trips
+block deterministically derived from the first 12 embedding dims by
+the fixture pixel rule (``images/codec.py`` ``fixture_pixels``, pixel_i
+= abs(trunc(dim_i * 1000)) % 256; its DuckDB twin
+``fixture_pixel_sql`` is ``_px`` here). The Spark side round-trips
 through actual bytes (encode UDF → BinaryType column → decode UDF);
 the oracle computes from the array directly — hash-equality proves the
-whole binary path.
+whole binary path. The detection queries read the stub detector
+through ``images/detect.py``: ``class_counts`` on the Spark side,
+``detections_sql`` in the oracles.
 
 Scale: UDF stages are Arrow-batched and partition-parallel; the
 aggregations after explode are ordinary shuffles. At 100 TB the binary
@@ -28,9 +32,16 @@ from pyspark.sql.types import ArrayType, BinaryType, DoubleType
 from ..core.catalog import table
 from ..core.registry import query
 from ..core.session import local_frame
-from ..images.codec import encode_image
+from ..images.codec import encode_image, fixture_pixels
+from ..images.codec import fixture_pixel_sql as _px
 from ..images.color import average_color_udf, dominant_color_udf
-from ..images.detect import SCORE_THRESHOLD, detect_udf
+from ..images.detect import (
+    SCORE_THRESHOLD,
+    _entries,
+    class_count_rows,
+    class_counts,
+    detections_sql,
+)
 
 # Adversarial-content JPEG fixture (VERDICT r7 item 3): an 8x8 GRAY
 # block whose quantized DCT is sparse high-frequency — a >15-zero run
@@ -64,9 +75,7 @@ def _embedding_to_image_udf(emb: pd.Series) -> pd.Series:
     in the module docstring; the oracle mirrors the arithmetic)."""
 
     def enc(vec) -> bytes:
-        v = np.asarray(vec[:12], dtype=np.float64) * 1000.0
-        px = (np.abs(v.astype(np.int64)) % 256).astype(np.uint8).reshape(2, 2, 3)
-        return encode_image(px)
+        return encode_image(fixture_pixels(vec, 12).reshape(2, 2, 3))
 
     return emb.map(enc)
 
@@ -76,6 +85,14 @@ def _images(spark: SparkSession, sf_dir: str) -> DataFrame:
     return e.select(
         F.col("vec_id").alias("img_id"),
         _embedding_to_image_udf(F.col("embedding")).alias("content"),
+    )
+
+
+def _image_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The detection queries' image ids: the binary/encode stage is
+    irrelevant to the id-keyed stub detector."""
+    return table(spark, sf_dir, "embeddings").select(
+        F.col("vec_id").cast("string").alias("img_id")
     )
 
 
@@ -104,8 +121,7 @@ def _real_format_image_udf(vec_id: pd.Series, emb: pd.Series) -> pd.Series:
 
     def enc(row) -> bytes:
         vid, vec = row
-        v = np.asarray(vec[:12], dtype=np.float64) * 1000.0
-        px = (np.abs(v.astype(np.int64)) % 256).astype(np.uint8).reshape(2, 2, 3)
+        px = fixture_pixels(vec, 12).reshape(2, 2, 3)
         m = vid % 3
         if m == 0:
             if vid % 6 == 3:
@@ -194,13 +210,6 @@ def _real_format_image_udf(vec_id: pd.Series, emb: pd.Series) -> pd.Series:
         return enc_fn(np.full((2, 2, 3), g, dtype=np.uint8))
 
     return pd.Series(map(enc, zip(vec_id, emb)))
-
-
-_DUCK_PX = "(abs(trunc(embedding[{i}]::DOUBLE * 1000)::BIGINT) % 256)"
-
-
-def _px(i: int) -> str:  # 1-based embedding index
-    return _DUCK_PX.format(i=i)
 
 
 @query(
@@ -352,13 +361,7 @@ def image_format_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     "image_detection_counts",
     oracle=f"""
     WITH imgs AS (SELECT CAST(vec_id AS VARCHAR) AS img_id FROM embeddings),
-    dets AS (
-        SELECT img_id,
-               CAST(('0x' || substr(md5(img_id || '_' || CAST(j + 1 AS VARCHAR)), 1, 10))::UBIGINT % 80 AS INTEGER) AS class_id,
-               (('0x' || substr(md5(img_id || '_s' || CAST(j + 1 AS VARCHAR)), 1, 10))::UBIGINT % 1000) / 1000.0 AS score
-        FROM imgs CROSS JOIN (SELECT unnest(range(3)) AS j) js
-        WHERE j < ('0x' || substr(md5(img_id), 1, 10))::UBIGINT % 4
-    )
+    dets AS ({detections_sql("imgs")})
     SELECT class_id,
            count(*) AS n_detections,
            count(DISTINCT img_id) AS n_images
@@ -367,22 +370,15 @@ def image_format_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def image_detection_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P6/P7: (stub) model inference → explode detections → score
-    threshold → per-class counts. The reference does this via per-row
-    Python closures + JSON strings (pyspark_yolox.py:90-111); here the
-    detections are a real array<struct> column exploded JVM-side."""
-    # ids only; the binary/encode stage is irrelevant to detection
-    imgs = table(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").cast("string").alias("img_id")
-    )
-    dets = imgs.select("img_id", F.explode(detect_udf("img_id")).alias("det"))
+    """P6/P7: (stub) model inference → per-image class counts → per-class
+    totals. The reference does this via per-row Python closures + JSON
+    strings (pyspark_yolox.py:90-111); here the detections are a real
+    array<struct> column counted JVM-side, and an image holds at most
+    one entry per class, so counting entries counts distinct images."""
     return (
-        dets.where(F.col("det.score") > SCORE_THRESHOLD)
-        .groupBy(F.col("det.class_id").alias("class_id"))
-        .agg(
-            F.count("*").alias("n_detections"),
-            F.count_distinct("img_id").alias("n_images"),
-        )
+        class_count_rows(_image_ids(spark, sf_dir), "img_id")
+        .groupBy("class_id")
+        .agg(F.sum("n").alias("n_detections"), F.count("*").alias("n_images"))
     )
 
 
@@ -403,13 +399,7 @@ N_CLASSES = 80
     "detection_class_names",
     oracle=f"""
     WITH imgs AS (SELECT CAST(vec_id AS VARCHAR) AS img_id FROM embeddings),
-    dets AS (
-        SELECT img_id,
-               CAST(('0x' || substr(md5(img_id || '_' || CAST(j + 1 AS VARCHAR)), 1, 10))::UBIGINT % 80 AS INTEGER) AS class_id,
-               (('0x' || substr(md5(img_id || '_s' || CAST(j + 1 AS VARCHAR)), 1, 10))::UBIGINT % 1000) / 1000.0 AS score
-        FROM imgs CROSS JOIN (SELECT unnest(range(3)) AS j) js
-        WHERE j < ('0x' || substr(md5(img_id), 1, 10))::UBIGINT % 4
-    )
+    dets AS ({detections_sql("imgs")})
     SELECT printf('class_%02d', class_id) AS class_name,
            count(*) AS n_detections
     FROM dets WHERE score > {SCORE_THRESHOLD}
@@ -429,15 +419,10 @@ def detection_class_names(spark: SparkSession, sf_dir: str) -> DataFrame:
             "class_id int, class_name string",
         )
     )
-    # ids only; the binary/encode stage is irrelevant to detection
-    imgs = table(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").cast("string").alias("img_id")
-    )
-    dets = imgs.select("img_id", F.explode(detect_udf("img_id")).alias("det"))
     counts = (
-        dets.where(F.col("det.score") > SCORE_THRESHOLD)
-        .groupBy(F.col("det.class_id").alias("class_id"))
-        .agg(F.count("*").alias("n_detections"))
+        class_count_rows(_image_ids(spark, sf_dir), "img_id")
+        .groupBy("class_id")
+        .agg(F.sum("n").alias("n_detections"))
     )
     return (
         counts.join(class_dim, "class_id")
@@ -451,13 +436,7 @@ def detection_class_names(spark: SparkSession, sf_dir: str) -> DataFrame:
     "image_predictions",
     oracle=f"""
     WITH imgs AS (SELECT CAST(vec_id AS VARCHAR) AS img_id FROM embeddings),
-    dets AS (
-        SELECT img_id,
-               CAST(('0x' || substr(md5(img_id || '_' || CAST(j + 1 AS VARCHAR)), 1, 10))::UBIGINT % 80 AS INTEGER) AS class_id,
-               (('0x' || substr(md5(img_id || '_s' || CAST(j + 1 AS VARCHAR)), 1, 10))::UBIGINT % 1000) / 1000.0 AS score
-        FROM imgs CROSS JOIN (SELECT unnest(range(3)) AS j) js
-        WHERE j < ('0x' || substr(md5(img_id), 1, 10))::UBIGINT % 4
-    ),
+    dets AS ({detections_sql("imgs")}),
     cnt AS (
         SELECT img_id, class_id, count(*) AS c
         FROM dets WHERE score > {SCORE_THRESHOLD}
@@ -474,27 +453,8 @@ def image_predictions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The per-image predictions table (id + {class: count} measure,
     pyspark_yolox.py:137-140) — empty-detection images keep '' like the
     reference's '{}' rows (pyspark_yolox.py:95-96)."""
-    # ids only; the binary/encode stage is irrelevant to detection
-    imgs = table(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").cast("string").alias("img_id")
-    )
-    dets = imgs.select("img_id", F.explode(detect_udf("img_id")).alias("det"))
-    cnt = (
-        dets.where(F.col("det.score") > SCORE_THRESHOLD)
-        .groupBy("img_id", F.col("det.class_id").alias("class_id"))
-        .agg(F.count("*").alias("c"))
-    )
-    per_img = cnt.groupBy("img_id").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("class_id", "c"))),
-                lambda s: F.concat_ws(":", s.class_id, s.c),
-            ),
-            ",",
-        ).alias("predictions")
-    )
-    return imgs.join(per_img, "img_id", "left").select(
-        "img_id", F.coalesce("predictions", F.lit("")).alias("predictions")
+    return class_counts(_image_ids(spark, sf_dir), "img_id").select(
+        "img_id", _entries("counts", lambda s: s.n).alias("predictions")
     )
 
 
@@ -502,9 +462,9 @@ def image_predictions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Perceptual-hash near-dup detection (image dedup for a training corpus)
 # ---------------------------------------------------------------------------
 
-_PH_MEAN = "(" + " + ".join(_DUCK_PX.format(i=i) for i in range(1, 13)) + ") / 12.0"
+_PH_MEAN = "(" + " + ".join(_px(i) for i in range(1, 13)) + ") / 12.0"
 _PH_HASH = "(" + " + ".join(
-    f"(CASE WHEN {_DUCK_PX.format(i=i + 1)}::DOUBLE >= m THEN {1 << i} ELSE 0 END)"
+    f"(CASE WHEN {_px(i + 1)}::DOUBLE >= m THEN {1 << i} ELSE 0 END)"
     for i in range(12)
 ) + ")"
 

@@ -20,9 +20,10 @@ from pyspark.sql.types import BinaryType
 
 from ..core.catalog import table
 from ..core.registry import query
-from ..images.codec import decode_image, encode_image
+from ..images.codec import decode_image, encode_image, fixture_pixels
+from ..images.codec import fixture_pixel_sql as _px
 from ..images.transform import PAD_VALUE, letterbox
-from .images import _images, _px
+from .images import _images
 
 
 @F.pandas_udf(BinaryType())
@@ -68,8 +69,7 @@ _STRIDE = 2
 @F.pandas_udf(BinaryType())
 def _embedding_to_video_udf(emb: pd.Series) -> pd.Series:
     def enc(vec) -> bytes:
-        v = np.asarray(vec[: _N_FRAMES * 4], dtype=np.float64) * 1000.0
-        px = (np.abs(v.astype(np.int64)) % 256).astype(np.uint8)
+        px = fixture_pixels(vec, _N_FRAMES * 4)
         frames = [encode_image(px[f * 4 : (f + 1) * 4].reshape(2, 2, 1)) for f in range(_N_FRAMES)]
         return bytes([_N_FRAMES]) + b"".join(frames)
 
@@ -101,7 +101,7 @@ def _frame_sample_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame
     "video_frame_sample",
     oracle=f"""
     SELECT vec_id AS img_id, f AS frame_idx,
-           ({" + ".join(f"(abs(trunc(embedding[f * 4 + {k}]::DOUBLE * 1000)::BIGINT) % 256)" for k in (1, 2, 3, 4))}) / 4.0 AS frame_avg
+           ({" + ".join(_px(f"f * 4 + {k}") for k in (1, 2, 3, 4))}) / 4.0 AS frame_avg
     FROM embeddings CROSS JOIN (SELECT unnest([0, 2, 4]) AS f) fs
     """,
 )
@@ -335,7 +335,7 @@ def _scene_cut_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 def _scene_cut_oracle() -> str:
     def px(f: int, k: int) -> str:
-        return f"(abs(trunc(embedding[{f * 4 + k}]::DOUBLE * 1000)::BIGINT) % 256)"
+        return _px(f * 4 + k)
 
     diffs = [
         "(" + " + ".join(f"abs({px(f, k)} - {px(f + 1, k)})" for k in (1, 2, 3, 4)) + ")"
@@ -511,12 +511,10 @@ def audio_silence_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _embedding_to_patchimg_udf(emb: pd.Series) -> pd.Series:
     """Deterministic 8x8 single-channel image: the 64 embedding
     components map row-major to pixel bytes via the fixture rule
-    (abs(trunc(v*1000)) % 256 — same mapping as `_px`)."""
+    (``images/codec.py`` ``fixture_pixels``)."""
 
     def enc(vec) -> bytes:
-        v = np.asarray(vec, dtype=np.float64)[:64] * 1000.0
-        px = (np.abs(v.astype(np.int64)) % 256).astype(np.uint8)
-        return b"FPX8" + px.tobytes()
+        return b"FPX8" + fixture_pixels(vec, 64).tobytes()
 
     return pd.Series(map(enc, emb))
 
@@ -547,10 +545,7 @@ def _patchify_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 def _patch_px(expr_r: str, expr_c: str) -> str:
     """DuckDB pixel byte at (row, col) from the embedding fixture."""
-    return (
-        f"(abs(trunc(embedding[({expr_r}) * 8 + ({expr_c}) + 1]::DOUBLE"
-        " * 1000)::BIGINT) % 256)"
-    )
+    return _px(f"({expr_r}) * 8 + ({expr_c}) + 1")
 
 
 @query(

@@ -12,9 +12,11 @@ averages (pyspark_stats.py:73-99), K1 ``;``-CSV write
 (pyspark_stats.py:22-24).
 
 Oracle strategy: the corpus is materialized from ``embeddings`` rows
-(vec_id < 200; pixel_i = abs(trunc(dim_i*1000)) % 256, the recipe
-queries/images.py already proves), labels come from ``nation``
-(vec_id % 25), and detections are the md5 stub — every step is
+(vec_id < 200) by the fixture pixel rule (``images/codec.py``
+``fixture_pixels``; DuckDB twin ``fixture_pixel_sql``), labels come
+from ``nation`` (vec_id % 25), and detections are the md5 stub read
+through ``images/detect.py`` (``class_counts``; DuckDB twin
+``detections_sql``) — every step is
 recomputable in DuckDB from the same parquet tables, so hash-equality
 covers the ENTIRE path including the binary file round trip and the
 CSV sink/re-read (a formatting bug in either would break the hash).
@@ -35,17 +37,20 @@ from pyspark.sql import functions as F
 from ..core import fs
 from ..core.catalog import bucketed_table, table
 from ..core.registry import query
+from ..images.codec import fixture_pixel_sql
 from ..images.color import average_color_udf
-from ..images.detect import SCORE_THRESHOLD, detect_udf
+from ..images.detect import (
+    SCORE_THRESHOLD,
+    class_count_rows,
+    class_counts,
+    detections_sql,
+)
 from ..sources.csv_io import read_semicolon_csv, write_semicolon_csv
 from ..sources.fimg_source import materialize_corpus
+from .images import _image_ids
 
 _N_IMGS = 200  # bounded corpus slice — identical at every SF
 _CLASS = 16  # class-of-interest, mirroring pyspark_stats.py:69 "dog"
-
-
-def _duck_px(i: int) -> str:  # 1-based embedding index
-    return f"(abs(trunc(embedding[{i}]::DOUBLE * 1000)::BIGINT) % 256)"
 
 
 @query(
@@ -54,16 +59,12 @@ def _duck_px(i: int) -> str:  # 1-based embedding index
     WITH imgs AS (
         SELECT vec_id, CAST(vec_id AS VARCHAR) AS img_id,
                vec_id % 25 AS nationkey,
-               ({" + ".join(_duck_px(i) for i in range(1, 13))}) AS pixsum
+               ({" + ".join(fixture_pixel_sql(i) for i in range(1, 13))}) AS pixsum
         FROM embeddings WHERE vec_id < {_N_IMGS}
     ),
     dets AS (
         SELECT img_id, count(*) AS cnt FROM (
-            SELECT img_id,
-                   CAST(('0x' || substr(md5(img_id || '_' || CAST(j + 1 AS VARCHAR)), 1, 10))::UBIGINT % 80 AS INTEGER) AS class_id,
-                   (('0x' || substr(md5(img_id || '_s' || CAST(j + 1 AS VARCHAR)), 1, 10))::UBIGINT % 1000) / 1000.0 AS score
-            FROM imgs CROSS JOIN (SELECT unnest(range(3)) AS j) js
-            WHERE j < ('0x' || substr(md5(img_id), 1, 10))::UBIGINT % 4
+            {detections_sql("imgs")}
         ) WHERE score > {SCORE_THRESHOLD} AND class_id = {_CLASS}
         GROUP BY img_id
     ),
@@ -108,7 +109,6 @@ def stats_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # decode through the real binary path; channel means are .25-step
     # doubles so *4 recovers the exact integer pixel sum
     meta = imgs.select(
-        "vec_id",
         F.col("vec_id").cast("string").alias("img_id"),
         (F.col("vec_id") % 25).alias("nationkey"),
         F.aggregate(
@@ -117,25 +117,20 @@ def stats_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("pixsum"),
     )
-
-    dets = meta.select("img_id", F.explode(detect_udf("img_id")).alias("det"))
-    cnt16 = (
-        dets.where(
-            (F.col("det.score") > SCORE_THRESHOLD) & (F.col("det.class_id") == _CLASS)
-        )
-        .groupBy("img_id")
-        .agg(F.count("*").alias("cnt"))
+    # each image's class-of-interest count, row-local: no join back
+    meta = class_counts(meta, "img_id").select(
+        "nationkey",
+        "pixsum",
+        F.aggregate(
+            F.filter("counts", lambda c: c.class_id == _CLASS),
+            F.lit(0).cast("bigint"),
+            lambda acc, c: acc + c.n,
+        ).alias("cnt"),
     )
 
     nation = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    base = (
-        meta.join(F.broadcast(nation), meta.nationkey == nation.n_nationkey)
-        .join(cnt16, "img_id", "left")
-        .select(
-            F.substring("n_name", 1, 1).alias("letter"),
-            "pixsum",
-            F.coalesce("cnt", F.lit(0)).alias("cnt"),
-        )
+    base = meta.join(F.broadcast(nation), meta.nationkey == nation.n_nationkey).select(
+        F.substring("n_name", 1, 1).alias("letter"), "pixsum", "cnt"
     )
     stat = base.groupBy("letter").agg(
         F.count("*").alias("files"),
@@ -284,13 +279,7 @@ def salted_event_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     "cached_predictions_stats",
     oracle=f"""
     WITH imgs AS (SELECT CAST(vec_id AS VARCHAR) AS img_id FROM embeddings),
-    dets AS (
-        SELECT img_id,
-               CAST(('0x' || substr(md5(img_id || '_' || CAST(j + 1 AS VARCHAR)), 1, 10))::UBIGINT % 80 AS INTEGER) AS class_id,
-               (('0x' || substr(md5(img_id || '_s' || CAST(j + 1 AS VARCHAR)), 1, 10))::UBIGINT % 1000) / 1000.0 AS score
-        FROM imgs CROSS JOIN (SELECT unnest(range(3)) AS j) js
-        WHERE j < ('0x' || substr(md5(img_id), 1, 10))::UBIGINT % 4
-    ),
+    dets AS ({detections_sql("imgs")}),
     counted AS (
         SELECT img_id, class_id, count(*) AS cnt
         FROM dets WHERE score > {SCORE_THRESHOLD}
@@ -315,14 +304,8 @@ def cached_predictions_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.cached import read_or_compute
 
     def compute() -> DataFrame:
-        imgs = table(spark, sf_dir, "embeddings").select(
-            F.col("vec_id").cast("string").alias("img_id")
-        )
-        dets = imgs.select("img_id", F.explode(detect_udf("img_id")).alias("det"))
-        return (
-            dets.where(F.col("det.score") > SCORE_THRESHOLD)
-            .groupBy("img_id", F.col("det.class_id").alias("class_id"))
-            .agg(F.count("*").alias("cnt"))
+        return class_count_rows(_image_ids(spark, sf_dir), "img_id").withColumnRenamed(
+            "n", "cnt"
         )
 
     path = fs.store_root(spark, sf_dir, "bdip_cached_predictions")
@@ -341,13 +324,7 @@ def cached_predictions_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                chr(65 + CAST(vec_id % 26 AS INTEGER)) AS letter
         FROM embeddings
     ),
-    dets AS (
-        SELECT letter,
-               CAST(('0x' || substr(md5(img_id || '_' || CAST(j + 1 AS VARCHAR)), 1, 10))::UBIGINT % 80 AS INTEGER) AS class_id,
-               (('0x' || substr(md5(img_id || '_s' || CAST(j + 1 AS VARCHAR)), 1, 10))::UBIGINT % 1000) / 1000.0 AS score
-        FROM imgs CROSS JOIN (SELECT unnest(range(3)) AS j) js
-        WHERE j < ('0x' || substr(md5(img_id), 1, 10))::UBIGINT % 4
-    )
+    dets AS ({detections_sql("imgs", keep="letter")})
     SELECT class_id, letter, count(*) AS n_detections
     FROM dets WHERE score > {SCORE_THRESHOLD}
     GROUP BY class_id, letter
@@ -368,11 +345,10 @@ def bar_chart_data(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").cast("string").alias("img_id"),
         F.char(F.lit(65) + F.col("vec_id") % 26).alias("letter"),
     )
-    dets = imgs.select("letter", F.explode(detect_udf("img_id")).alias("det"))
     return (
-        dets.where(F.col("det.score") > SCORE_THRESHOLD)
-        .groupBy(F.col("det.class_id").alias("class_id"), "letter")
-        .agg(F.count("*").alias("n_detections"))
+        class_count_rows(imgs, "img_id")
+        .groupBy("class_id", "letter")
+        .agg(F.sum("n").alias("n_detections"))
     )
 
 

@@ -836,20 +836,8 @@ def ivf_search_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ivf import assign_cells, ivf_search
 
     e = table(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
-    flat = e.select("label", F.posexplode("embedding").alias("pos", "x"))
-    cent = (
-        flat.groupBy("label", "pos")
-        .agg(F.avg(F.col("x").cast("double")).alias("c"))
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "c"))),
-                lambda s: F.round(s["c"], 3),
-            ).alias("cv")
-        )
-    )
-    rows = cent.collect()  # k rows (k = |labels|) — bounded like clusterCenters()
-    centers = [r.cv for r in sorted(rows, key=lambda r: r.label)]
+    rows = label_centroids(e).collect()  # k rows (k = |labels|) — bounded like clusterCenters()
+    centers = [r.cv for r in sorted(rows, key=lambda r: r.cell)]
     indexed = assign_cells(e.select("vec_id", "embedding"), centers)
     queries = e.where(F.col("vec_id").isin(*_QUERY_IDS)).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -1581,20 +1569,8 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ivf import assign_cells
 
     e = table(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
-    flat = e.select("label", F.posexplode("embedding").alias("pos", "x"))
-    cent = (
-        flat.groupBy("label", "pos")
-        .agg(F.avg(F.col("x").cast("double")).alias("c"))
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "c"))),
-                lambda s: F.round(s["c"], 3),
-            ).alias("cv")
-        )
-    )
-    rows = cent.collect()  # k rows — quantizer-bounded, like clusterCenters()
-    centers = [r.cv for r in sorted(rows, key=lambda r: r.label)]
+    rows = label_centroids(e).collect()  # k rows — quantizer-bounded, like clusterCenters()
+    centers = [r.cv for r in sorted(rows, key=lambda r: r.cell)]
     indexed = assign_cells(e.select("vec_id", "embedding"), centers)
     return semdedup_ledger(indexed)
 

@@ -42,7 +42,6 @@ from __future__ import annotations
 import os
 import struct
 
-import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql.datasource import (
     DataSource,
@@ -55,7 +54,7 @@ from pyspark.sql.datasource import (
     LessThanOrEqual,
 )
 
-from ..images.codec import encode_image
+from ..images.codec import encode_image, fixture_pixels
 
 _HEADER = struct.Struct(">4sHHB")
 
@@ -75,8 +74,9 @@ _MANIFEST = "_manifest.tsv"
 
 def materialize_corpus(rows: DataFrame, img_dir: str) -> str:
     """Write one 2x2x3 FIMG file per ``(vec_id, embedding)`` row into the
-    local dir ``img_dir`` executor-side, pixel_i = abs(trunc(dim_i *
-    1000)) % 256 of the first 12 dims; returns ``img_dir``. Write-once:
+    local dir ``img_dir`` executor-side, its pixels the fixture rule
+    (``images/codec.py`` ``fixture_pixels``) of the first 12 dims;
+    returns ``img_dir``. Write-once:
     file bytes are a pure function of the row, so a dir already holding
     one file per row is kept, and each file lands by atomic rename."""
     os.makedirs(img_dir, exist_ok=True)
@@ -86,8 +86,7 @@ def materialize_corpus(rows: DataFrame, img_dir: str) -> str:
 
     def write_part(part):
         for r in part:
-            v = np.asarray(r.embedding[:12], dtype=np.float64) * 1000.0
-            px = (np.abs(v.astype(np.int64)) % 256).astype(np.uint8).reshape(2, 2, 3)
+            px = fixture_pixels(r.embedding, 12).reshape(2, 2, 3)
             path = os.path.join(img_dir, f"img{r.vec_id}.fimg")
             tmp = f"{path}.{os.getpid()}.tmp"
             with open(tmp, "wb") as f:

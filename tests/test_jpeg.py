@@ -244,6 +244,16 @@ def test_partial_interleave_scan_script():
             assert (decode_jpeg(buf) == ref).all(), (h, w, sub)
 
 
+def test_encode_jpeg_rejects_unknown_scan_mode():
+    """A misspelt scan mode is an error, not a silent interleaved
+    stream; every known mode still encodes."""
+    img = np.zeros((8, 8, 3), dtype=np.uint8)
+    for mode in ("interleaved", "separate", "partial"):
+        assert decode_jpeg(encode_jpeg(img, scan_mode=mode)).shape == (8, 8, 3)
+    with pytest.raises(ValueError, match="seperate"):
+        encode_jpeg(img, scan_mode="seperate")
+
+
 def test_cmyk_and_ycck_decode():
     """4-component Adobe JPEG: transform 0 (direct inverted CMYK) must
     reproduce the analytic RGB (R = s_C * s_K / 255) EXACTLY on flat

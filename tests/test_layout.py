@@ -317,6 +317,34 @@ def test_ingest_loops_use_the_skeleton():
     assert hits == []
 
 
+def test_fixture_rules_live_in_one_module():
+    """The stub detector and the fixture pixel rule each have one home:
+    only images/detect.py calls ``detect_udf`` or spells its md5 SQL
+    twin, and only images/codec.py spells the pixel rule, in numpy and
+    in DuckDB form; every query and pipeline imports them."""
+    import pathlib
+    import re
+
+    import bigdata_imgprocessing_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    rules = {
+        "detector call": (r"\bdetect_udf\(", "images/detect.py"),
+        "md5 detection SQL": (r"substr\(md5\(img_id", "images/detect.py"),
+        "numpy pixel rule": (r"astype\(np\.int64\)\)\s*%\s*256", "images/codec.py"),
+        "DuckDB pixel rule": (r"1000\)::BIGINT\)\s*%\s*256", "images/codec.py"),
+    }
+    found = {
+        name: sorted(
+            p.relative_to(root).as_posix()
+            for p in root.rglob("*.py")
+            if re.search(rx, p.read_text())
+        )
+        for name, (rx, _) in rules.items()
+    }
+    assert found == {name: [home] for name, (_, home) in rules.items()}
+
+
 def test_only_the_storage_layer_touches_storage():
     """Every store, fixture and state path goes through core/fs.py; only
     the FIMG source, whose files Python workers open(), stays local."""

@@ -138,6 +138,25 @@ def test_image_stages_use_arrow(spark, sf_dir, name):
     assert "BatchEvalPython" not in plan
 
 
+@pytest.mark.parametrize(
+    "name",
+    ["image_detection_counts", "detection_class_names", "image_predictions", "bar_chart_data"],
+)
+def test_detection_queries_run_the_detector_once(spark, sf_dir, name):
+    """The per-image class counts are one detector pass: a filter that
+    Catalyst infers from exploding them must not push a second copy of
+    the Python UDF below the projection."""
+    plan = _formatted(spark, QUERIES[name](spark, sf_dir))
+    assert _n_nodes(plan, "ArrowEvalPython") == 1
+
+
+def test_image_predictions_is_row_local(spark, sf_dir):
+    """Each image's prediction string comes from its own class counts:
+    no shuffle and no join back to the image ids."""
+    plan = _formatted(spark, QUERIES["image_predictions"](spark, sf_dir))
+    assert "Exchange" not in plan and "Join" not in plan
+
+
 def test_subqueries_decorrelate(spark, sf_dir):
     """EXISTS → semi join; NOT EXISTS → anti join; correlated scalar
     aggregate → aggregate + join. None may remain as per-row subqueries."""
