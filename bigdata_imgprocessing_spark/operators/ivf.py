@@ -21,7 +21,7 @@ from pyspark.ml.functions import array_to_vector
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .similarity import dot, norm
+from .similarity import norm, rounded_cosine, top_k_per_query
 
 
 def build_ivf_index(
@@ -84,8 +84,6 @@ def ivf_search(
     needs a ``cell`` column (from ``build_ivf_index`` or
     ``assign_cells``). Centroids may come from the fitted ML model or a
     plain centroid array (the SQL-reproducible serving path)."""
-    from pyspark.sql import Window
-
     # (k, dim) centroid matrix captured in the closure — broadcast once
     # per executor with the serialized UDF, distances fully vectorized.
     # Arrow pandas_udf, not row-at-a-time F.udf: the query side is tiny
@@ -115,12 +113,7 @@ def ivf_search(
         .join(F.broadcast(q), "cell")
         .where(F.col(id_col) != F.col("query_id"))
         .select(
-            "query_id",
-            id_col,
-            F.round(
-                dot(F.col(vec_col), F.col("qe")) / (F.col("__nrm") * F.col("qn")), 6
-            ).alias("cos_sim"),
+            "query_id", id_col, rounded_cosine(vec_col, an="__nrm").alias("cos_sim")
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col(id_col))
-    return scored.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= top_k)
+    return top_k_per_query(scored, top_k, tie=id_col)

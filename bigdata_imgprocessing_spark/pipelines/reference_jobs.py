@@ -53,6 +53,7 @@ from ..core.session import local_frame
 from ..functions import first_letter, length_bucket, zero_guard_div
 from ..images.color import color_features_udf
 from ..images.detect import _class_totals, _entries, class_counts
+from ..operators.similarity import nearest_centroid
 from ..sources.csv_io import write_semicolon_csv
 
 
@@ -139,21 +140,11 @@ def run_color_pipeline(
 
     # nearest-primary (P10): Euclidean argmin over parameterized
     # centroids, ties → lowest index (pyspark_dominant.py:115-117)
-    dists = [
-        sum((F.element_at("dom", k + 1) - F.lit(c[k])) ** 2 for k in range(3)).alias(f"d{i}")
-        for i, c in enumerate(centroids)
-    ]
-    d = colors.select("id", *dists)
-    idx = None
-    names = [f"d{i}" for i in range(len(centroids))]
-    for i in range(len(centroids) - 1):
-        rest = [F.col(n) for n in names[i + 1 :]]
-        floor_rest = rest[0] if len(rest) == 1 else F.least(*rest)
-        cond = F.col(names[i]) <= floor_rest
-        idx = F.when(cond, i) if idx is None else idx.when(cond, i)
-    idx = idx.otherwise(len(centroids) - 1)
-    primary_hist = d.select(idx.alias("closest_primary")).groupBy("closest_primary").agg(
-        F.count("*").alias("count")
+    dom = [F.element_at("dom", k + 1) for k in range(3)]
+    primary_hist = (
+        nearest_centroid(colors, dom, centroids, alias="closest_primary")
+        .groupBy("closest_primary")
+        .agg(F.count("*").alias("count"))
     )
     write_semicolon_csv(primary_hist, f"{out_dir}/closest_primary")
     return colors_out, hist, primary_hist

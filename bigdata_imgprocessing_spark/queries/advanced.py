@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from ..core.catalog import table
 from ..core.registry import query
 from ..core.session import local_frame
+from ..operators.similarity import duck_cosine, norm, rounded_cosine
 
 # ---------------------------------------------------------------------------
 # A7 — the reference's per-landmark JSON-map aggregation
@@ -225,10 +226,7 @@ def _plane_dot_sql(j: int) -> str:
     buckets AS (SELECT bucket, count(*) AS k FROM b GROUP BY bucket),
     pairs AS (
         SELECT x.vec_id AS va, y.vec_id AS vb,
-               round(
-                 list_sum(list_transform(range({_DIM}), i -> x.embedding[i+1]::DOUBLE * y.embedding[i+1]::DOUBLE))
-                 / (greatest(sqrt(list_sum(list_transform(range({_DIM}), i -> x.embedding[i+1]::DOUBLE * x.embedding[i+1]::DOUBLE))), 1e-30)
-                    * greatest(sqrt(list_sum(list_transform(range({_DIM}), i -> y.embedding[i+1]::DOUBLE * y.embedding[i+1]::DOUBLE))), 1e-30)), 6) AS cos_sim
+               {duck_cosine("x.embedding", "y.embedding", n=_DIM)} AS cos_sim
         FROM b x JOIN b y ON x.bucket = y.bucket AND x.vec_id < y.vec_id
     )
     SELECT (SELECT count(*) FROM buckets)                              AS n_buckets,
@@ -241,8 +239,6 @@ def embedding_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     an 8-bit hyperplane-sign bucket (≈1/256 of all pairs), then exact
     cosine ≥ 0.3 within buckets. At 100 TB this is the linear-shuffle
     alternative to the quadratic all-pairs join."""
-    from ..operators.similarity import dot, norm
-
     e = table(spark, sf_dir, "embeddings")
 
     def plane_dot(j: int):
@@ -286,11 +282,7 @@ def embedding_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         x.join(y, (F.col("x.bucket") == F.col("y.bucket")) & (F.col("x.vec_id") < F.col("y.vec_id")))
         .select(
-            F.round(
-                dot(F.col("x.embedding"), F.col("y.embedding"))
-                / (F.col("x.nrm") * F.col("y.nrm")),
-                6,
-            ).alias("cos_sim")
+            rounded_cosine("x.embedding", "y.embedding", "x.nrm", "y.nrm").alias("cos_sim")
         )
     )
     n_near = pairs.where(F.col("cos_sim") >= 0.3).agg(F.count("*").alias("n_neardup"))

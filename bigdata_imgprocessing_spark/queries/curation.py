@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from ..core.catalog import table
 from ..core.registry import query
 from ..functions.helpers import ordered_fold_sum
+from ..operators.similarity import duck_cosine, norm, rounded_cosine
 
 # ---------------------------------------------------------------------------
 
@@ -1661,13 +1662,6 @@ _SEM_TAU = 0.4  # cosine flag threshold — BINDING at driver sf (the
 # simhash discipline: best-cos at sf0.01 spans 0.29-0.45 across the 18
 # eval vectors, so both flagged and clean vectors exist)
 
-_DUCK_SEM_COS = """
-    round(
-      list_sum(list_transform(range(len(te.embedding)), i -> te.embedding[i+1]::DOUBLE * tr.embedding[i+1]::DOUBLE))
-      / (greatest(sqrt(list_sum(list_transform(range(len(te.embedding)), i -> te.embedding[i+1]::DOUBLE * te.embedding[i+1]::DOUBLE))), 1e-30)
-         * greatest(sqrt(list_sum(list_transform(range(len(tr.embedding)), i -> tr.embedding[i+1]::DOUBLE * tr.embedding[i+1]::DOUBLE))), 1e-30)), 6)
-"""
-
 
 @query(
     "decontam_semantic_audit",
@@ -1683,7 +1677,7 @@ _DUCK_SEM_COS = """
     tr AS (SELECT vec_id, embedding FROM a WHERE split = 'train'),
     te AS (SELECT vec_id, label, embedding FROM a WHERE split = 'test'),
     best AS (
-        SELECT te.vec_id, te.label, max({_DUCK_SEM_COS}) AS best_cos
+        SELECT te.vec_id, te.label, max({duck_cosine("te.embedding", "tr.embedding")}) AS best_cos
         FROM te CROSS JOIN tr
         GROUP BY te.vec_id, te.label
     )
@@ -1720,8 +1714,6 @@ def decontam_semantic_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     compares the ROUNDED best — part of the pinned definition, same
     literal tau both sides; contamination_rate is one int/int
     division."""
-    from ..operators.similarity import dot, norm
-
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", "embedding", norm(F.col("embedding")).alias("en")
     )
@@ -1744,11 +1736,7 @@ def decontam_semantic_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "q_id",
             "q_label",
-            F.round(
-                dot(F.col("embedding"), F.col("qe"))
-                / (F.col("en") * F.col("qn")),
-                6,
-            ).alias("cos"),
+            rounded_cosine().alias("cos"),
         )
         .groupBy("q_id", "q_label")
         .agg(F.max("cos").alias("best_cos"))

@@ -69,9 +69,10 @@ _CLASS = 16  # class-of-interest, mirroring pyspark_stats.py:69 "dog"
         GROUP BY img_id
     ),
     base AS (
-        SELECT substr(n.n_name, 1, 1) AS letter, i.pixsum,
+        SELECT substr(r.r_name, 1, 1) AS letter, i.pixsum,
                coalesce(d.cnt, 0) AS cnt
         FROM imgs i JOIN nation n ON i.nationkey = n.n_nationkey
+        JOIN region r ON n.n_regionkey = r.r_regionkey
         LEFT JOIN dets d ON d.img_id = i.img_id
     )
     SELECT letter,
@@ -87,7 +88,12 @@ def stats_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     stub detection (P6/P7, class-of-interest filter) → broadcast name
     dim join + first-letter grouped stats (J1/F1/A1-A3) → ``;``-CSV
     write (K1) → schema'd CSV re-read (S2). The RETURNED frame is the
-    CSV re-read, so the sink format is inside the checked hash."""
+    CSV re-read, so the sink format is inside the checked hash.
+
+    The letter is the initial of the image's region (nation → region,
+    both broadcast dims). AFRICA, AMERICA and ASIA share the A, so the
+    key both splits the images (A, E and M) and merges names; nation
+    names would not do, as every test nation is ``NATION_<k>``."""
     img_dir = materialize_corpus(
         table(spark, sf_dir, "embeddings")
         .where(F.col("vec_id") < _N_IMGS)
@@ -128,9 +134,14 @@ def stats_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("cnt"),
     )
 
-    nation = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    base = meta.join(F.broadcast(nation), meta.nationkey == nation.n_nationkey).select(
-        F.substring("n_name", 1, 1).alias("letter"), "pixsum", "cnt"
+    region = table(spark, sf_dir, "region").select("r_regionkey", "r_name")
+    names = (
+        table(spark, sf_dir, "nation")
+        .select("n_nationkey", "n_regionkey")
+        .join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
+    )
+    base = meta.join(F.broadcast(names), meta.nationkey == names.n_nationkey).select(
+        F.substring("r_name", 1, 1).alias("letter"), "pixsum", "cnt"
     )
     stat = base.groupBy("letter").agg(
         F.count("*").alias("files"),

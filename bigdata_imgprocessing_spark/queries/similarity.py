@@ -9,47 +9,106 @@ precomputed ``label`` assignment plays the coarse quantizer role) — at
 100 TB that's the difference between an all-pairs shuffle and a
 partition-pruned equi-join probing ~1/k of the corpus.
 
-Determinism: both engines compute identical doubles (same element order,
-double casts, left-to-right sums — see operators/similarity.py), and
-top-k ORDER BY uses the ROUNDED score + vec_id so rank boundaries can't
-flip on representation noise.
+Every exact-scoring rule these queries share lives in
+operators/similarity.py, in Spark and in DuckDB form: the 6dp cosine
+from precomputed norms, the per-query top-k window, the P10
+nearest-centroid argmin, and the label codebook with its nearest-cell
+assignment. This module owns only the query side (``_query_side``: the
+``_QUERY_IDS`` rows as ``query_id``) and each query's own shape.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..core.catalog import table
 from ..core.registry import query
 from ..core.session import local_frame
-from ..operators.similarity import dot, norm
+from ..operators.similarity import (
+    codebook,
+    duck_codebook,
+    duck_cosine,
+    duck_label_cells,
+    duck_nearest_centroid,
+    duck_norm,
+    duck_query_rank,
+    duck_sqdist,
+    duck_top_k,
+    label_centers,
+    label_centroids,
+    nearest_centroid,
+    norm,
+    query_rank,
+    rounded_cosine,
+    sqdist,
+    top_k_per_query,
+)
 
 _QUERY_IDS = (0, 1, 2)
 
-_DUCK_COS = """
-    round(
-      list_sum(list_transform(range(len(e.embedding)), i -> e.embedding[i+1]::DOUBLE * q.qe[i+1]::DOUBLE))
-      / (greatest(sqrt(list_sum(list_transform(range(len(e.embedding)), i -> e.embedding[i+1]::DOUBLE * e.embedding[i+1]::DOUBLE))), 1e-30)
-         * greatest(sqrt(list_sum(list_transform(range(len(q.qe)), i -> q.qe[i+1]::DOUBLE * q.qe[i+1]::DOUBLE))), 1e-30)), 6)
-"""
+
+def _query_side(frame: DataFrame, *cols: str | Column) -> DataFrame:
+    """The ``_QUERY_IDS`` rows of ``frame`` as (query_id, *cols); ``cols``
+    defaults to the vector and its norm as (qe, qn)."""
+    return frame.where(F.col("vec_id").isin(*_QUERY_IDS)).select(
+        F.col("vec_id").alias("query_id"),
+        *(cols or (F.col("embedding").alias("qe"), F.col("en").alias("qn"))),
+    )
+
+
+def _duck_q(cols: str = "embedding AS qe", src: str = "embeddings") -> str:
+    """``_query_side`` as the CTE ``q``."""
+    return (
+        f"q AS (SELECT vec_id AS query_id, {cols} FROM {src}"
+        f" WHERE vec_id IN {_QUERY_IDS})"
+    )
+
+
+#: corpus row ``e`` scored against query row ``q``
+_DUCK_COS = duck_cosine("e.embedding", "q.qe")
+
+
+def _duck_qprobe(n_probe: int) -> str:
+    """CTE ``qprobe`` over ``duck_label_cells``' dists: each query's
+    ``n_probe`` nearest cells as (query_id, qe, cell)."""
+    return f"""qprobe AS (
+        SELECT vec_id AS query_id, embedding AS qe, cell FROM (
+            SELECT vec_id, embedding, cell,
+                   row_number() OVER (PARTITION BY vec_id
+                                      ORDER BY dist, cell) AS prn
+            FROM dists WHERE vec_id IN {_QUERY_IDS}
+        ) WHERE prn <= {n_probe}
+    )"""
+
+
+def _duck_int8(col: str) -> str:
+    """int8 quantization of an embedding list — mirrors the Spark
+    expression in quantized_ann_recall, ann_rerank_topk and
+    mmr_diverse_topk."""
+    return (
+        f"list_transform({col}, x -> CAST(floor(x::DOUBLE * 127 / "
+        f"greatest(list_max(list_transform({col}, y -> abs(y::DOUBLE))), 1e-30)"
+        f" + 0.5) AS BIGINT))"
+    )
+
+
+def _duck_idot(a: str, b: str) -> str:
+    return (
+        f"list_sum(list_transform(range(len({a})), i -> {a}[i+1] * {b}[i+1]))"
+    )
 
 
 @query(
     "knn_bruteforce",
     oracle=f"""
-    WITH q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings
-               WHERE vec_id IN {_QUERY_IDS}),
+    WITH {_duck_q()},
     scored AS (
         SELECT q.query_id, e.vec_id, {_DUCK_COS} AS cos_sim
         FROM embeddings e CROSS JOIN q
         WHERE e.vec_id != q.query_id
     )
-    SELECT query_id, vec_id, cos_sim, rn FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                                     ORDER BY cos_sim DESC, vec_id) AS rn
-        FROM scored
-    ) WHERE rn <= 5
+    {duck_top_k("scored", 5)}
     """,
 )
 def knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -62,43 +121,24 @@ def knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding", norm(F.col("embedding")).alias("en")
     )
-    q = F.broadcast(
-        e.where(F.col("vec_id").isin(*_QUERY_IDS)).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qe"),
-            F.col("en").alias("qn"),
-        )
-    )
     scored = (
-        e.crossJoin(q)
+        e.crossJoin(F.broadcast(_query_side(e)))
         .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(
-                dot(F.col("embedding"), F.col("qe")) / (F.col("en") * F.col("qn")), 6
-            ).alias("cos_sim"),
-        )
+        .select("query_id", "vec_id", rounded_cosine().alias("cos_sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-    return scored.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= 5)
+    return top_k_per_query(scored, 5)
 
 
 @query(
     "ann_ivf_topk",
     oracle=f"""
-    WITH q AS (SELECT vec_id AS query_id, label AS qlabel, embedding AS qe
-               FROM embeddings WHERE vec_id IN {_QUERY_IDS}),
+    WITH {_duck_q("label AS qlabel, embedding AS qe")},
     scored AS (
         SELECT q.query_id, e.vec_id, {_DUCK_COS} AS cos_sim
         FROM embeddings e JOIN q ON e.label = q.qlabel
         WHERE e.vec_id != q.query_id
     )
-    SELECT query_id, vec_id, cos_sim, rn FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                                     ORDER BY cos_sim DESC, vec_id) AS rn
-        FROM scored
-    ) WHERE rn <= 3
+    {duck_top_k("scored", 3)}
     """,
 )
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -111,96 +151,30 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "label", "embedding", norm(F.col("embedding")).alias("en")
     )
     q = F.broadcast(
-        e.where(F.col("vec_id").isin(*_QUERY_IDS)).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("label").alias("qlabel"),
-            F.col("embedding").alias("qe"),
-            F.col("en").alias("qn"),
+        _query_side(
+            e, F.col("label").alias("qlabel"),
+            F.col("embedding").alias("qe"), F.col("en").alias("qn"),
         )
     )
     scored = (
         e.join(q, e.label == q.qlabel)
         .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(
-                dot(F.col("embedding"), F.col("qe")) / (F.col("en") * F.col("qn")), 6
-            ).alias("cos_sim"),
-        )
+        .select("query_id", "vec_id", rounded_cosine().alias("cos_sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-    return scored.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= 3)
-
-
-def label_centroids(e: DataFrame) -> DataFrame:
-    """(cell, cv) label-seeded centroid codebook: per-label per-position
-    mean over the embedding corpus, rounded to 3dp so Spark and DuckDB
-    agree bit-for-bit. THE one quantizer derivation — shared by
-    ``ann_ivf_learned`` and the streaming assignment ingest
-    (streaming/ivf_ingest.py), the ``_para_units_sql`` convention: a
-    codebook change cannot split the batch and streaming semantics
-    apart. ``e`` needs (label, embedding); extra columns are ignored."""
-    flat = e.select("label", F.posexplode("embedding").alias("pos", "x"))
-    return (
-        flat.groupBy("label", "pos")
-        .agg(F.avg(F.col("x").cast("double")).alias("c"))
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "c"))),
-                lambda s: F.round(s["c"], 3),
-            ).alias("cv")
-        )
-        .select(F.col("label").alias("cell"), "cv")
-    )
+    return top_k_per_query(scored, 3)
 
 
 @query(
     "ann_ivf_learned",
     oracle=f"""
-    WITH flat AS (
-        SELECT label, i AS pos, embedding[i+1]::DOUBLE AS x
-        FROM embeddings, UNNEST(range(len(embedding))) AS t(i)
-    ),
-    cent AS (
-        SELECT label AS cell, list(round(c, 3) ORDER BY pos) AS cv
-        FROM (SELECT label, pos, avg(x) AS c FROM flat GROUP BY label, pos)
-        GROUP BY cell
-    ),
-    dists AS (
-        SELECT e.vec_id, e.embedding, c.cell,
-               round(list_sum(list_transform(range(len(e.embedding)),
-                     i -> (e.embedding[i+1]::DOUBLE - c.cv[i+1])
-                        * (e.embedding[i+1]::DOUBLE - c.cv[i+1]))), 6) AS dist
-        FROM embeddings e CROSS JOIN cent c
-    ),
-    assigned AS (
-        SELECT vec_id, embedding, cell FROM (
-            SELECT vec_id, embedding, cell,
-                   row_number() OVER (PARTITION BY vec_id
-                                      ORDER BY dist, cell) AS arn
-            FROM dists
-        ) WHERE arn = 1
-    ),
-    qprobe AS (
-        SELECT vec_id AS query_id, embedding AS qe, cell FROM (
-            SELECT vec_id, embedding, cell,
-                   row_number() OVER (PARTITION BY vec_id
-                                      ORDER BY dist, cell) AS prn
-            FROM dists WHERE vec_id IN {_QUERY_IDS}
-        ) WHERE prn <= 2
-    ),
+    WITH {duck_label_cells()},
+    {_duck_qprobe(2)},
     scored AS (
         SELECT q.query_id, e.vec_id, {_DUCK_COS} AS cos_sim
         FROM assigned e JOIN qprobe q ON e.cell = q.cell
         WHERE e.vec_id != q.query_id
     )
-    SELECT query_id, vec_id, cos_sim, rn FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                                     ORDER BY cos_sim DESC, vec_id) AS rn
-        FROM scored
-    ) WHERE rn <= 3
+    {duck_top_k("scored", 3)}
     """,
 )
 def ann_ivf_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -221,8 +195,6 @@ def ann_ivf_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned by vec_id (no global sort), and the probe join touches
     ~n_probe/k of the corpus — with the corpus written bucketed by cell
     it's a partition-pruned local scan at 100 TB."""
-    from ..operators.similarity import sqdist
-
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", "embedding", norm(F.col("embedding")).alias("en")
     )
@@ -235,35 +207,22 @@ def ann_ivf_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = ranked.where(F.col("arn") == 1).select(
         "vec_id", "embedding", "en", "cell"
     )
-    qprobe = (
-        ranked.where(F.col("vec_id").isin(*_QUERY_IDS) & (F.col("arn") <= 2))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qe"),
-            F.col("en").alias("qn"),
-            "cell",
-        )
+    qprobe = _query_side(
+        ranked.where(F.col("arn") <= 2),
+        F.col("embedding").alias("qe"), F.col("en").alias("qn"), "cell",
     )
     scored = (
         assigned.join(F.broadcast(qprobe), "cell")
         .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(
-                dot(F.col("embedding"), F.col("qe")) / (F.col("en") * F.col("qn")), 6
-            ).alias("cos_sim"),
-        )
+        .select("query_id", "vec_id", rounded_cosine().alias("cos_sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-    return scored.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= 3)
+    return top_k_per_query(scored, 3)
 
 
 # ---------------------------------------------------------------------------
 # Nearest-centroid classification — the reference's closest-primary-color
-# op (pyspark_dominant.py:96-117): Euclidean distance to a fixed literal
-# centroid set, argmin with ties to the LOWEST index
-# (dist.index(min(dist)) semantics at pyspark_dominant.py:115-117).
+# op (pyspark_dominant.py:96-117) over a fixed literal centroid set, via
+# operators/similarity.nearest_centroid (ties to the LOWEST index).
 # Centroids parameterized (SURVEY.md §2.12 color-space decision).
 # ---------------------------------------------------------------------------
 
@@ -277,32 +236,22 @@ _CENTROIDS: tuple[tuple[float, float, float], ...] = (
 )
 
 
-def _dist_sql(i: int) -> str:
-    c = _CENTROIDS[i]
-    return (
-        f"(embedding[1]::DOUBLE - ({c[0]}))^2 + (embedding[2]::DOUBLE - ({c[1]}))^2"
-        f" + (embedding[3]::DOUBLE - ({c[2]}))^2"
-    )
+def _nearest_fixed(e: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
+    """Each vector's nearest ``_CENTROIDS`` index over its first 3 dims."""
+    coords = [F.element_at("embedding", k + 1).cast("double") for k in range(3)]
+    return nearest_centroid(e, coords, _CENTROIDS, keep)
+
+
+def _duck_nearest_fixed(keep: tuple[str, ...] = ()) -> str:
+    coords = [f"embedding[{k + 1}]::DOUBLE" for k in range(3)]
+    return duck_nearest_centroid("embeddings", coords, _CENTROIDS, keep)
 
 
 @query(
     "nearest_centroid_counts",
     oracle=f"""
-    WITH d AS (
-        SELECT label, {", ".join(f"{_dist_sql(i)} AS d{i}" for i in range(6))}
-        FROM embeddings
-    ), assigned AS (
-        SELECT label,
-               CASE WHEN d0 <= least(d1, d2, d3, d4, d5) THEN 0
-                    WHEN d1 <= least(d2, d3, d4, d5) THEN 1
-                    WHEN d2 <= least(d3, d4, d5) THEN 2
-                    WHEN d3 <= least(d4, d5) THEN 3
-                    WHEN d4 <= d5 THEN 4
-                    ELSE 5 END AS centroid_idx
-        FROM d
-    )
     SELECT centroid_idx, label, count(*) AS n_vectors
-    FROM assigned GROUP BY centroid_idx, label
+    FROM ({_duck_nearest_fixed(("label",))}) GROUP BY centroid_idx, label
     """,
 )
 def nearest_centroid_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -312,25 +261,8 @@ def nearest_centroid_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter(x==i).count() jobs (pyspark_dominant.py:119-124) with one
     grouped aggregation."""
     e = table(spark, sf_dir, "embeddings")
-
-    def dist(i: int):
-        c = _CENTROIDS[i]
-        return sum(
-            (F.element_at("embedding", k + 1).cast("double") - F.lit(c[k])) ** 2
-            for k in range(3)
-        )
-
-    d = e.select("label", *[dist(i).alias(f"d{i}") for i in range(6)])
-    idx = (
-        F.when(F.col("d0") <= F.least("d1", "d2", "d3", "d4", "d5"), 0)
-        .when(F.col("d1") <= F.least("d2", "d3", "d4", "d5"), 1)
-        .when(F.col("d2") <= F.least("d3", "d4", "d5"), 2)
-        .when(F.col("d3") <= F.least("d4", "d5"), 3)
-        .when(F.col("d4") <= F.col("d5"), 4)
-        .otherwise(5)
-    )
     return (
-        d.select("label", idx.alias("centroid_idx"))
+        _nearest_fixed(e, ("label",))
         .groupBy("centroid_idx", "label")
         .agg(F.count("*").alias("n_vectors"))
     )
@@ -343,21 +275,9 @@ _COLOR_NAMES = ("red", "green", "blue", "cyan", "yellow", "magenta")
 @query(
     "color_chart_data",
     oracle=f"""
-    WITH d AS (
-        SELECT {", ".join(f"{_dist_sql(i)} AS d{i}" for i in range(6))}
-        FROM embeddings
-    ), assigned AS (
-        SELECT CASE WHEN d0 <= least(d1, d2, d3, d4, d5) THEN 0
-                    WHEN d1 <= least(d2, d3, d4, d5) THEN 1
-                    WHEN d2 <= least(d3, d4, d5) THEN 2
-                    WHEN d3 <= least(d4, d5) THEN 3
-                    WHEN d4 <= d5 THEN 4
-                    ELSE 5 END AS centroid_idx
-        FROM d
-    )
     SELECT {list(_COLOR_NAMES)}[centroid_idx + 1] AS primary_color,
            count(*) AS n_images
-    FROM assigned GROUP BY centroid_idx
+    FROM ({_duck_nearest_fixed()}) GROUP BY centroid_idx
     """,
 )
 def color_chart_data(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -371,26 +291,9 @@ def color_chart_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 6-row result regardless of corpus size.
     ``sources.html_report.write_html_bar(colors=...)`` renders it."""
     e = table(spark, sf_dir, "embeddings")
-
-    def dist(i: int):
-        c = _CENTROIDS[i]
-        return sum(
-            (F.element_at("embedding", k + 1).cast("double") - F.lit(c[k])) ** 2
-            for k in range(3)
-        )
-
-    d = e.select(*[dist(i).alias(f"d{i}") for i in range(6)])
-    idx = (
-        F.when(F.col("d0") <= F.least("d1", "d2", "d3", "d4", "d5"), 0)
-        .when(F.col("d1") <= F.least("d2", "d3", "d4", "d5"), 1)
-        .when(F.col("d2") <= F.least("d3", "d4", "d5"), 2)
-        .when(F.col("d3") <= F.least("d4", "d5"), 3)
-        .when(F.col("d4") <= F.col("d5"), 4)
-        .otherwise(5)
-    )
     names = F.array(*[F.lit(c) for c in _COLOR_NAMES])
     return (
-        d.select(idx.alias("centroid_idx"))
+        _nearest_fixed(e)
         .groupBy("centroid_idx")
         .agg(F.count("*").alias("n_images"))
         .select(
@@ -418,8 +321,6 @@ def color_chart_data(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def embedding_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-cluster vector-norm profile (embedding QA pass)."""
-    from ..operators.similarity import norm
-
     e = table(spark, sf_dir, "embeddings")
     n = e.select("label", norm(F.col("embedding")).alias("nrm"))
     return n.groupBy("label").agg(
@@ -524,43 +425,23 @@ def embedding_batch_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 # resident index 4x; this query measures what that costs in rank quality.
 # ---------------------------------------------------------------------------
 
-_DUCK_QCOS = """
-    round(
-      list_sum(list_transform(range(len(e.embedding)), i -> e.embedding[i+1]::DOUBLE * q.qe[i+1]::DOUBLE))
-      / (greatest(sqrt(list_sum(list_transform(range(len(e.embedding)), i -> e.embedding[i+1]::DOUBLE * e.embedding[i+1]::DOUBLE))), 1e-30)
-         * greatest(sqrt(list_sum(list_transform(range(len(q.qe)), i -> q.qe[i+1]::DOUBLE * q.qe[i+1]::DOUBLE))), 1e-30)), 6)
-"""
-
 
 @query(
     "quantized_ann_recall",
     oracle=f"""
     WITH qz AS (
-        SELECT vec_id, embedding,
-               list_transform(embedding,
-                   x -> CAST(floor(x::DOUBLE * 127 / ma + 0.5) AS BIGINT)) AS qv
-        FROM (
-            SELECT vec_id, embedding,
-                   greatest(list_max(list_transform(embedding,
-                       x -> abs(x::DOUBLE))), 1e-30) AS ma
-            FROM embeddings
-        )
-    ), q AS (
-        SELECT vec_id AS query_id, embedding AS qe, qv AS qqv
-        FROM qz WHERE vec_id IN {_QUERY_IDS}
-    ), scored AS (
+        SELECT vec_id, embedding, {_duck_int8("embedding")} AS qv FROM embeddings
+    ),
+    {_duck_q("embedding AS qe, qv AS qqv", "qz")},
+    scored AS (
         SELECT q.query_id, e.vec_id,
-               {_DUCK_QCOS} AS cos_sim,
-               list_sum(list_transform(range(len(e.qv)),
-                   i -> e.qv[i+1] * q.qqv[i+1])) AS qdot
+               {_DUCK_COS} AS cos_sim,
+               {_duck_idot("e.qv", "q.qqv")} AS qdot
         FROM qz e CROSS JOIN q
         WHERE e.vec_id != q.query_id
     ), ranked AS (
-        SELECT query_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY qdot DESC, vec_id) AS rn_q,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY cos_sim DESC, vec_id) AS rn_e
+        SELECT query_id, {duck_query_rank("qdot")} AS rn_q,
+               {duck_query_rank()} AS rn_e
         FROM scored
     )
     SELECT query_id,
@@ -588,8 +469,6 @@ def quantized_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimated on a sample, not the full 100 TB); a full-corpus variant
     takes both top-k lists per query via orderBy().limit() two-phase
     heaps exactly as ``embedding_model_scores`` does."""
-    from ..operators.similarity import dot, norm
-
     e = table(spark, sf_dir, "embeddings")
     based = e.select(
         "vec_id",
@@ -613,10 +492,8 @@ def quantized_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         norm(F.col("embedding")).alias("en"),
     )
     q = F.broadcast(
-        qz.where(F.col("vec_id").isin(*_QUERY_IDS)).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qe"),
-            F.col("qv").alias("qqv"),
+        _query_side(
+            qz, F.col("embedding").alias("qe"), F.col("qv").alias("qqv"),
             F.col("en").alias("qn"),
         )
     )
@@ -629,20 +506,11 @@ def quantized_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         qz.crossJoin(q)
         .where(F.col("vec_id") != F.col("query_id"))
         .select(
-            "query_id",
-            "vec_id",
-            F.round(
-                dot(F.col("embedding"), F.col("qe")) / (F.col("en") * F.col("qn")), 6
-            ).alias("cos_sim"),
-            idot.alias("qdot"),
+            "query_id", "vec_id", rounded_cosine().alias("cos_sim"), idot.alias("qdot")
         )
     )
-    wq = Window.partitionBy("query_id").orderBy(F.col("qdot").desc(), F.col("vec_id"))
-    we = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
     ranked = scored.select(
-        "query_id",
-        F.row_number().over(wq).alias("rn_q"),
-        F.row_number().over(we).alias("rn_e"),
+        "query_id", query_rank("qdot").alias("rn_q"), query_rank().alias("rn_e")
     )
     hit = (F.col("rn_q") <= 5) & (F.col("rn_e") <= 5)
     return ranked.groupBy("query_id").agg(
@@ -656,29 +524,24 @@ def quantized_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH base AS (
         SELECT vec_id, embedding,
-               greatest(sqrt(list_sum(list_transform(range(64), i -> embedding[i+1]::DOUBLE * embedding[i+1]::DOUBLE))), 1e-30) AS n64,
-               greatest(sqrt(list_sum(list_transform(range(32), i -> embedding[i+1]::DOUBLE * embedding[i+1]::DOUBLE))), 1e-30) AS n32,
-               greatest(sqrt(list_sum(list_transform(range(16), i -> embedding[i+1]::DOUBLE * embedding[i+1]::DOUBLE))), 1e-30) AS n16
+               {duck_norm("embedding", 64)} AS n64,
+               {duck_norm("embedding", 32)} AS n32,
+               {duck_norm("embedding", 16)} AS n16
         FROM embeddings
-    ), q AS (
-        SELECT vec_id AS query_id, embedding AS qe,
-               n64 AS qn64, n32 AS qn32, n16 AS qn16
-        FROM base WHERE vec_id IN {_QUERY_IDS}
-    ), scored AS (
+    ),
+    {_duck_q("embedding AS qe, n64 AS qn64, n32 AS qn32, n16 AS qn16", "base")},
+    scored AS (
         SELECT q.query_id, e.vec_id,
-               round(list_sum(list_transform(range(64), i -> e.embedding[i+1]::DOUBLE * q.qe[i+1]::DOUBLE)) / (e.n64 * q.qn64), 6) AS c64,
-               round(list_sum(list_transform(range(32), i -> e.embedding[i+1]::DOUBLE * q.qe[i+1]::DOUBLE)) / (e.n32 * q.qn32), 6) AS c32,
-               round(list_sum(list_transform(range(16), i -> e.embedding[i+1]::DOUBLE * q.qe[i+1]::DOUBLE)) / (e.n16 * q.qn16), 6) AS c16
+               {duck_cosine("e.embedding", "q.qe", "e.n64", "q.qn64", 64)} AS c64,
+               {duck_cosine("e.embedding", "q.qe", "e.n32", "q.qn32", 32)} AS c32,
+               {duck_cosine("e.embedding", "q.qe", "e.n16", "q.qn16", 16)} AS c16
         FROM base e CROSS JOIN q
         WHERE e.vec_id != q.query_id
     ), ranked AS (
         SELECT query_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY c64 DESC, vec_id) AS r64,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY c32 DESC, vec_id) AS r32,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY c16 DESC, vec_id) AS r16
+               {duck_query_rank("c64")} AS r64,
+               {duck_query_rank("c32")} AS r32,
+               {duck_query_rank("c16")} AS r16
         FROM scored
     )
     SELECT query_id,
@@ -710,8 +573,6 @@ def dim_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     on representation noise; truncated norms floor at 1e-30 (a zero
     PREFIX of a nonzero vector is legal — unguarded it is an
     engine-divergent 0/0)."""
-    from ..operators.similarity import dot, norm
-
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id",
         "embedding",
@@ -720,20 +581,15 @@ def dim_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         norm(F.slice(F.col("embedding"), 1, 16)).alias("n16"),
     )
     q = F.broadcast(
-        e.where(F.col("vec_id").isin(*_QUERY_IDS)).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qe"),
-            F.col("n64").alias("qn64"),
-            F.col("n32").alias("qn32"),
-            F.col("n16").alias("qn16"),
+        _query_side(
+            e, F.col("embedding").alias("qe"), F.col("n64").alias("qn64"),
+            F.col("n32").alias("qn32"), F.col("n16").alias("qn16"),
         )
     )
 
     def tcos(d: int, en: str, qn: str):
-        return F.round(
-            dot(F.slice(F.col("embedding"), 1, d), F.slice(F.col("qe"), 1, d))
-            / (F.col(en) * F.col(qn)),
-            6,
+        return rounded_cosine(
+            F.slice(F.col("embedding"), 1, d), F.slice(F.col("qe"), 1, d), en, qn
         )
 
     scored = (
@@ -742,26 +598,16 @@ def dim_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "vec_id",
-            F.round(
-                dot(F.col("embedding"), F.col("qe"))
-                / (F.col("n64") * F.col("qn64")),
-                6,
-            ).alias("c64"),
+            rounded_cosine(an="n64", bn="qn64").alias("c64"),
             tcos(32, "n32", "qn32").alias("c32"),
             tcos(16, "n16", "qn16").alias("c16"),
         )
     )
-
-    def w(c: str) -> Window:
-        return Window.partitionBy("query_id").orderBy(
-            F.col(c).desc(), F.col("vec_id")
-        )
-
     ranked = scored.select(
         "query_id",
-        F.row_number().over(w("c64")).alias("r64"),
-        F.row_number().over(w("c32")).alias("r32"),
-        F.row_number().over(w("c16")).alias("r16"),
+        query_rank("c64").alias("r64"),
+        query_rank("c32").alias("r32"),
+        query_rank("c16").alias("r16"),
     )
     hit32 = (F.col("r64") <= 5) & (F.col("r32") <= 5)
     hit16 = (F.col("r64") <= 5) & (F.col("r16") <= 5)
@@ -776,48 +622,14 @@ def dim_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ivf_search_served",
     oracle=f"""
-    WITH flat AS (
-        SELECT label, i AS pos, embedding[i+1]::DOUBLE AS x
-        FROM embeddings, UNNEST(range(len(embedding))) AS t(i)
-    ),
-    cent AS (
-        SELECT label AS cell, list(round(c, 3) ORDER BY pos) AS cv
-        FROM (SELECT label, pos, avg(x) AS c FROM flat GROUP BY label, pos)
-        GROUP BY cell
-    ),
-    dists AS (
-        SELECT e.vec_id, e.embedding, c.cell,
-               round(list_sum(list_transform(range(len(e.embedding)),
-                     i -> (e.embedding[i+1]::DOUBLE - c.cv[i+1])
-                        * (e.embedding[i+1]::DOUBLE - c.cv[i+1]))), 6) AS dist
-        FROM embeddings e CROSS JOIN cent c
-    ),
-    assigned AS (
-        SELECT vec_id, embedding, cell FROM (
-            SELECT vec_id, embedding, cell,
-                   row_number() OVER (PARTITION BY vec_id
-                                      ORDER BY dist, cell) AS arn
-            FROM dists
-        ) WHERE arn = 1
-    ),
-    qprobe AS (
-        SELECT vec_id AS query_id, embedding AS qe, cell FROM (
-            SELECT vec_id, embedding, cell,
-                   row_number() OVER (PARTITION BY vec_id
-                                      ORDER BY dist, cell) AS prn
-            FROM dists WHERE vec_id IN {_QUERY_IDS}
-        ) WHERE prn <= 3
-    ),
+    WITH {duck_label_cells()},
+    {_duck_qprobe(3)},
     scored AS (
         SELECT q.query_id, e.vec_id, {_DUCK_COS} AS cos_sim
         FROM assigned e JOIN qprobe q ON e.cell = q.cell
         WHERE e.vec_id != q.query_id
     )
-    SELECT query_id, vec_id, cos_sim, rn FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                                     ORDER BY cos_sim DESC, vec_id) AS rn
-        FROM scored
-    ) WHERE rn <= 5
+    {duck_top_k("scored", 5)}
     """,
 )
 def ivf_search_served(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -836,13 +648,9 @@ def ivf_search_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ivf import assign_cells, ivf_search
 
     e = table(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
-    rows = label_centroids(e).collect()  # k rows (k = |labels|) — bounded like clusterCenters()
-    centers = [r.cv for r in sorted(rows, key=lambda r: r.cell)]
+    centers = label_centers(e)
     indexed = assign_cells(e.select("vec_id", "embedding"), centers)
-    queries = e.where(F.col("vec_id").isin(*_QUERY_IDS)).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return ivf_search(indexed, centers, queries, top_k=5, n_probe=3)
+    return ivf_search(indexed, centers, _query_side(e, "embedding"), top_k=5, n_probe=3)
 
 
 # ---------------------------------------------------------------------------
@@ -868,9 +676,7 @@ _PQ_SHORTLIST = 100  # ADC candidates kept for the exact rerank leg
     oracle=f"""
     WITH nv AS (
         SELECT vec_id,
-               list_transform(embedding, x -> x::DOUBLE /
-                   greatest(sqrt(list_sum(list_transform(embedding,
-                       y -> y::DOUBLE * y::DOUBLE))), 1e-30)) AS ne
+               list_transform(embedding, x -> x::DOUBLE / {duck_norm("embedding")}) AS ne
         FROM embeddings
     ),
     subv AS (
@@ -901,15 +707,8 @@ _PQ_SHORTLIST = 100  # ADC candidates kept for the exact rerank leg
             FROM subv s JOIN seed_cb c ON s.sub = c.sub
         ) WHERE rn = 1
     ),
-    cb AS (
-        SELECT sub, cell, list(round(c, 3) ORDER BY pos) AS cv FROM (
-            SELECT a.sub, a.cell, t.j AS pos, avg(s.sv[t.j + 1]) AS c
-            FROM assigned a
-            JOIN subv s ON a.vec_id = s.vec_id AND a.sub = s.sub,
-                 UNNEST(range({_PQ_D})) AS t(j)
-            GROUP BY a.sub, a.cell, t.j
-        ) GROUP BY sub, cell
-    ),
+    cb AS ({duck_codebook("sub, cell", "sv", "(SELECT a.sub, a.cell, s.sv FROM assigned a"
+                          " JOIN subv s ON a.vec_id = s.vec_id AND a.sub = s.sub)")}),
     adist AS (
         SELECT s.vec_id, s.sub, c.cell,
                round(list_sum(list_transform(range({_PQ_D}),
@@ -937,36 +736,21 @@ _PQ_SHORTLIST = 100  # ADC candidates kept for the exact rerank leg
         GROUP BY q.query_id, k.vec_id
     ),
     ranked AS (
-        SELECT query_id, vec_id,
-               row_number() OVER (PARTITION BY query_id ORDER BY d, vec_id) AS rn
+        SELECT query_id, vec_id, {duck_query_rank("d", descending=False)} AS rn
         FROM adc
     ),
     pq_top AS (SELECT query_id, vec_id FROM ranked WHERE rn <= 5),
     pq_short AS (SELECT query_id, vec_id FROM ranked WHERE rn <= {_PQ_SHORTLIST}),
-    q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings
-          WHERE vec_id IN {_QUERY_IDS}),
+    {_duck_q()},
     cosall AS (
-        SELECT q.query_id, e.vec_id, {_DUCK_COS} AS cs
+        SELECT q.query_id, e.vec_id, {_DUCK_COS} AS cos_sim
         FROM embeddings e CROSS JOIN q
         WHERE e.vec_id != q.query_id
     ),
-    exact AS (
-        SELECT query_id, vec_id FROM (
-            SELECT query_id, vec_id,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY cs DESC, vec_id) AS rn
-            FROM cosall
-        ) WHERE rn <= 5
-    ),
-    rr_top AS (
-        SELECT query_id, vec_id FROM (
-            SELECT s.query_id, s.vec_id,
-                   row_number() OVER (PARTITION BY s.query_id
-                                      ORDER BY c.cs DESC, s.vec_id) AS rn
-            FROM pq_short s
-            JOIN cosall c ON c.query_id = s.query_id AND c.vec_id = s.vec_id
-        ) WHERE rn <= 5
-    )
+    exact AS ({duck_top_k("cosall", 5, "query_id, vec_id")}),
+    rr_top AS ({duck_top_k("(SELECT c.* FROM pq_short s JOIN cosall c"
+                           " ON c.query_id = s.query_id AND c.vec_id = s.vec_id)",
+                           5, "query_id, vec_id")})
     SELECT e.query_id,
            CAST(count(p.vec_id) AS BIGINT) AS n_overlap,
            round(count(p.vec_id) / 5.0, 2) AS recall_at_5,
@@ -1006,8 +790,6 @@ def pq_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials join on (sub, cell) — never a per-dim blowup — the top-5
     and shortlist are rank-limited windows per query, and the exact
     rerank touches only shortlist×queries full vectors."""
-    from ..operators.similarity import sqdist
-
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", "embedding", norm(F.col("embedding")).alias("en")
     )
@@ -1070,20 +852,7 @@ def pq_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("m.cell").alias("cell"), F.col("m.sv").alias("sv"),
         )
     )
-    cb = (
-        assigned.select(
-            "sub", "cell", F.posexplode("sv").alias("pos", "x")
-        )
-        .groupBy("sub", "cell", "pos")
-        .agg(F.avg(F.col("x").cast("double")).alias("c"))
-        .groupBy("sub", "cell")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "c"))),
-                lambda s: F.round(s["c"], 3),
-            ).alias("cv")
-        )
-    )
+    cb = codebook(assigned, ["sub", "cell"], "sv")
     # corpus subvectors → nearest centroid per subspace = the PQ code
     # (same map-side argmin shape as the Lloyd assignment above)
     adist = subs.join(F.broadcast(cb), "sub").withColumn(
@@ -1095,9 +864,7 @@ def pq_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "sub", F.col("m.cell").alias("cell"))
     )
     # ADC: exact query subvectors vs coded corpus
-    qsub = subs.where(F.col("vec_id").isin(*_QUERY_IDS)).select(
-        F.col("vec_id").alias("query_id"), "sub", F.col("sv").alias("qsv")
-    )
+    qsub = _query_side(subs, "sub", F.col("sv").alias("qsv"))
     adc = (
         code.join(F.broadcast(qsub), "sub")
         .where(F.col("vec_id") != F.col("query_id"))
@@ -1106,43 +873,27 @@ def pq_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("query_id", "vec_id")
         .agg(F.round(F.sum("part"), 4).alias("d"))
     )
-    w_pq = Window.partitionBy("query_id").orderBy("d", "vec_id")
-    ranked = adc.withColumn("rn", F.row_number().over(w_pq))
+    ranked = adc.withColumn("rn", query_rank("d", descending=False))
     pq_top = ranked.where(F.col("rn") <= 5).select("query_id", "vec_id")
     pq_short = ranked.where(F.col("rn") <= _PQ_SHORTLIST).select(
         "query_id", "vec_id"
     )
     # exact cosine (baseline top-5 AND the rerank scorer)
-    q = e.where(F.col("vec_id").isin(*_QUERY_IDS)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.col("en").alias("qn"),
-    )
     scored = (
-        e.crossJoin(F.broadcast(q))
+        e.crossJoin(F.broadcast(_query_side(e)))
         .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(
-                dot(F.col("embedding"), F.col("qe")) / (F.col("en") * F.col("qn")), 6
-            ).alias("cos_sim"),
-        )
+        .select("query_id", "vec_id", rounded_cosine().alias("cos_sim"))
         # cache(): the exact-top5 baseline AND the shortlist rerank read it
         .coalesce(cache_parallelism(spark))
         .cache()
     )
-    w_ex = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), "vec_id")
-    exact = scored.withColumn("rn", F.row_number().over(w_ex)).where(F.col("rn") <= 5)
+    exact = top_k_per_query(scored, 5)
     # deployed-PQ leg: exact-rerank the ADC shortlist (IVFADC shape —
     # at 100 TB the shortlist is what leaves the compressed index; the
     # rerank touches only shortlist×queries full vectors)
-    rr_top = (
-        pq_short.join(scored, ["query_id", "vec_id"])
-        .withColumn("rn", F.row_number().over(w_ex))
-        .where(F.col("rn") <= 5)
-        .select("query_id", "vec_id")
-    )
+    rr_top = top_k_per_query(
+        pq_short.join(scored, ["query_id", "vec_id"]), 5
+    ).select("query_id", "vec_id")
     hit = (
         exact.alias("e")
         .join(
@@ -1170,47 +921,21 @@ def pq_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ann_rerank_topk",
     oracle=f"""
     WITH qz AS (
-        SELECT vec_id, embedding,
-               list_transform(embedding,
-                   x -> CAST(floor(x::DOUBLE * 127 / ma + 0.5) AS BIGINT)) AS qv
-        FROM (
-            SELECT vec_id, embedding,
-                   greatest(list_max(list_transform(embedding,
-                       x -> abs(x::DOUBLE))), 1e-30) AS ma
-            FROM embeddings
-        )
-    ), q AS (
-        SELECT vec_id AS query_id, embedding AS qe, qv AS qqv
-        FROM qz WHERE vec_id IN {_QUERY_IDS}
-    ), cand AS (
+        SELECT vec_id, embedding, {_duck_int8("embedding")} AS qv FROM embeddings
+    ),
+    {_duck_q("embedding AS qe, qv AS qqv", "qz")},
+    cand AS (
         SELECT query_id, vec_id, embedding, qe FROM (
-            SELECT q.query_id, e.vec_id, e.embedding, q.qe,
-                   row_number() OVER (PARTITION BY q.query_id
-                       ORDER BY list_sum(list_transform(range(len(e.qv)),
-                                 i -> e.qv[i+1] * q.qqv[i+1])) DESC,
-                                e.vec_id) AS prn
-            FROM qz e CROSS JOIN q WHERE e.vec_id != q.query_id
+            SELECT *, {duck_query_rank("qdot")} AS prn FROM (
+                SELECT q.query_id, e.vec_id, e.embedding, q.qe,
+                       {_duck_idot("e.qv", "q.qqv")} AS qdot
+                FROM qz e CROSS JOIN q WHERE e.vec_id != q.query_id)
         ) WHERE prn <= 20
-    )
-    SELECT query_id, vec_id, cos_sim, rn FROM (
-        SELECT query_id, vec_id,
-               round(list_sum(list_transform(range(len(embedding)),
-                         i -> embedding[i+1]::DOUBLE * qe[i+1]::DOUBLE))
-                 / (greatest(sqrt(list_sum(list_transform(range(len(embedding)),
-                         i -> embedding[i+1]::DOUBLE * embedding[i+1]::DOUBLE))), 1e-30)
-                  * greatest(sqrt(list_sum(list_transform(range(len(qe)),
-                         i -> qe[i+1]::DOUBLE * qe[i+1]::DOUBLE))), 1e-30)), 6)
-                   AS cos_sim,
-               row_number() OVER (PARTITION BY query_id
-                   ORDER BY round(list_sum(list_transform(range(len(embedding)),
-                             i -> embedding[i+1]::DOUBLE * qe[i+1]::DOUBLE))
-                     / (greatest(sqrt(list_sum(list_transform(range(len(embedding)),
-                             i -> embedding[i+1]::DOUBLE * embedding[i+1]::DOUBLE))), 1e-30)
-                      * greatest(sqrt(list_sum(list_transform(range(len(qe)),
-                             i -> qe[i+1]::DOUBLE * qe[i+1]::DOUBLE))), 1e-30)), 6) DESC,
-                            vec_id) AS rn
+    ), scored AS (
+        SELECT query_id, vec_id, {duck_cosine("embedding", "qe")} AS cos_sim
         FROM cand
-    ) WHERE rn <= 5
+    )
+    {duck_top_k("scored", 5)}
     """,
 )
 def ann_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1257,10 +982,8 @@ def ann_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         norm(F.col("embedding")).alias("en"),
     )
     q = F.broadcast(
-        qz.where(F.col("vec_id").isin(*_QUERY_IDS)).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qe"),
-            F.col("qv").alias("qqv"),
+        _query_side(
+            qz, F.col("embedding").alias("qe"), F.col("qv").alias("qqv"),
             F.col("en").alias("qn"),
         )
     )
@@ -1269,41 +992,27 @@ def ann_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).cast("bigint"),
         lambda acc, x: acc + x,
     )
-    w_q = Window.partitionBy("query_id").orderBy(F.col("qdot").desc(), "vec_id")
-    cand = (
+    cand = top_k_per_query(
         qz.crossJoin(q)
         .where(F.col("vec_id") != F.col("query_id"))
         .select("query_id", "vec_id", "embedding", "en", "qe", "qn",
-                idot.alias("qdot"))
-        .withColumn("prn", F.row_number().over(w_q))
-        .where(F.col("prn") <= 20)
+                idot.alias("qdot")),
+        20, "qdot", rank="prn",
     )
-    rer = cand.select(
-        "query_id",
-        "vec_id",
-        F.round(
-            dot(F.col("embedding"), F.col("qe")) / (F.col("en") * F.col("qn")), 6
-        ).alias("cos_sim"),
-    )
-    w_e = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), "vec_id")
-    return rer.withColumn("rn", F.row_number().over(w_e)).where(F.col("rn") <= 5)
+    rer = cand.select("query_id", "vec_id", rounded_cosine().alias("cos_sim"))
+    return top_k_per_query(rer, 5)
 
 
 @query(
     "hard_negative_mining",
     oracle=f"""
-    WITH q AS (SELECT vec_id AS query_id, label AS qlabel, embedding AS qe
-               FROM embeddings WHERE vec_id IN {_QUERY_IDS}),
+    WITH {_duck_q("label AS qlabel, embedding AS qe")},
     scored AS (
-        SELECT q.query_id, e.vec_id, e.label, {_DUCK_COS} AS cos_sim
+        SELECT q.query_id, e.vec_id, e.label AS neg_label, {_DUCK_COS} AS cos_sim
         FROM embeddings e CROSS JOIN q
         WHERE e.vec_id != q.query_id AND e.label != q.qlabel
     )
-    SELECT query_id, vec_id, label AS neg_label, cos_sim, rn FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                                     ORDER BY cos_sim DESC, vec_id) AS rn
-        FROM scored
-    ) WHERE rn <= 5
+    {duck_top_k("scored", 5, "query_id, vec_id, neg_label, cos_sim, rn")}
     """,
 )
 def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1325,11 +1034,9 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "label", "embedding", norm(F.col("embedding")).alias("en")
     )
     q = F.broadcast(
-        e.where(F.col("vec_id").isin(*_QUERY_IDS)).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("label").alias("qlabel"),
-            F.col("embedding").alias("qe"),
-            F.col("en").alias("qn"),
+        _query_side(
+            e, F.col("label").alias("qlabel"),
+            F.col("embedding").alias("qe"), F.col("en").alias("qn"),
         )
     )
     scored = (
@@ -1342,13 +1049,10 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             "vec_id",
             F.col("label").alias("neg_label"),
-            F.round(
-                dot(F.col("embedding"), F.col("qe")) / (F.col("en") * F.col("qn")), 6
-            ).alias("cos_sim"),
+            rounded_cosine().alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), "vec_id")
-    return scored.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= 5)
+    return top_k_per_query(scored, 5)
 
 
 @query(
@@ -1463,11 +1167,7 @@ def semdedup_ledger(indexed: DataFrame, tau: float = _SEMDEDUP_TAU) -> DataFrame
     )
     removed = (
         a.join(b, (F.col("cell") == F.col("bcell")) & (F.col("aid") < F.col("rid")))
-        .where(
-            F.round(
-                dot(F.col("ae"), F.col("be")) / (F.col("an") * F.col("bn")), 6
-            ) >= F.lit(tau)
-        )
+        .where(rounded_cosine("ae", "be", "an", "bn") >= F.lit(tau))
         .select("cell", "rid")
         .distinct()
         .groupBy("cell")
@@ -1491,44 +1191,17 @@ def semdedup_ledger(indexed: DataFrame, tau: float = _SEMDEDUP_TAU) -> DataFrame
 @query(
     "semdedup_prune",
     oracle=f"""
-    WITH flat AS (
-        SELECT label, i AS pos, embedding[i+1]::DOUBLE AS x
-        FROM embeddings, UNNEST(range(len(embedding))) AS t(i)
-    ),
-    cent AS (
-        SELECT label AS cell, list(round(c, 3) ORDER BY pos) AS cv
-        FROM (SELECT label, pos, avg(x) AS c FROM flat GROUP BY label, pos)
-        GROUP BY cell
-    ),
-    dists AS (
-        SELECT e.vec_id, e.embedding, c.cell,
-               round(list_sum(list_transform(range(len(e.embedding)),
-                     i -> (e.embedding[i+1]::DOUBLE - c.cv[i+1])
-                        * (e.embedding[i+1]::DOUBLE - c.cv[i+1]))), 6) AS dist
-        FROM embeddings e CROSS JOIN cent c
-    ),
-    assigned AS (
-        SELECT vec_id, embedding, cell FROM (
-            SELECT vec_id, embedding, cell,
-                   row_number() OVER (PARTITION BY vec_id
-                                      ORDER BY dist, cell) AS arn
-            FROM dists
-        ) WHERE arn = 1
-    ),
+    WITH {duck_label_cells()},
     nrm AS (
-        SELECT vec_id, cell, embedding,
-               greatest(sqrt(list_sum(list_transform(range(len(embedding)),
-                     i -> embedding[i+1]::DOUBLE * embedding[i+1]::DOUBLE))), 1e-30) AS nn
+        SELECT vec_id, cell, embedding, {duck_norm("embedding")} AS nn
         FROM assigned
     ),
     removed AS (
         SELECT cell, rid FROM (
             SELECT a.cell, b.vec_id AS rid
             FROM nrm a JOIN nrm b ON a.cell = b.cell AND a.vec_id < b.vec_id
-            WHERE round(
-                list_sum(list_transform(range(len(a.embedding)),
-                    i -> a.embedding[i+1]::DOUBLE * b.embedding[i+1]::DOUBLE))
-                / (a.nn * b.nn), 6) >= {_SEMDEDUP_TAU}
+            WHERE {duck_cosine("a.embedding", "b.embedding", "a.nn", "b.nn")}
+                  >= {_SEMDEDUP_TAU}
         ) GROUP BY cell, rid
     ),
     rem_per_cell AS (SELECT cell, count(*) AS n_removed FROM removed GROUP BY cell)
@@ -1569,26 +1242,8 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ivf import assign_cells
 
     e = table(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
-    rows = label_centroids(e).collect()  # k rows — quantizer-bounded, like clusterCenters()
-    centers = [r.cv for r in sorted(rows, key=lambda r: r.cell)]
-    indexed = assign_cells(e.select("vec_id", "embedding"), centers)
+    indexed = assign_cells(e.select("vec_id", "embedding"), label_centers(e))
     return semdedup_ledger(indexed)
-
-
-def _duck_int8(col: str) -> str:
-    """int8 quantization of an embedding list — mirrors the Spark
-    expression in ann_rerank_topk/mmr_diverse_topk."""
-    return (
-        f"list_transform({col}, x -> CAST(floor(x::DOUBLE * 127 / "
-        f"greatest(list_max(list_transform({col}, y -> abs(y::DOUBLE))), 1e-30)"
-        f" + 0.5) AS BIGINT))"
-    )
-
-
-def _duck_idot(a: str, b: str) -> str:
-    return (
-        f"list_sum(list_transform(range(len({a})), i -> {a}[i+1] * {b}[i+1]))"
-    )
 
 
 @query(
@@ -1597,28 +1252,22 @@ def _duck_idot(a: str, b: str) -> str:
     WITH qz AS (
         SELECT vec_id, {_duck_int8("embedding")} AS qv FROM embeddings
     ),
-    q AS (SELECT vec_id AS query_id, qv AS qqv FROM qz
-          WHERE vec_id IN {_QUERY_IDS}),
+    {_duck_q("qv AS qqv", "qz")},
     cand AS (
         SELECT query_id, vec_id, qv, rel FROM (
-            SELECT q.query_id, e.vec_id, e.qv,
-                   {_duck_idot("e.qv", "q.qqv")} AS rel,
-                   row_number() OVER (PARTITION BY q.query_id
-                       ORDER BY {_duck_idot("e.qv", "q.qqv")} DESC, e.vec_id)
-                       AS prn
-            FROM qz e CROSS JOIN q WHERE e.vec_id != q.query_id
+            SELECT *, {duck_query_rank("rel")} AS prn FROM (
+                SELECT q.query_id, e.vec_id, e.qv, {_duck_idot("e.qv", "q.qqv")} AS rel
+                FROM qz e CROSS JOIN q WHERE e.vec_id != q.query_id)
         ) WHERE prn <= 10
     ),
     s1 AS (SELECT query_id, vec_id, qv, rel FROM (
-            SELECT *, row_number() OVER (PARTITION BY query_id
-                ORDER BY rel DESC, vec_id) AS rn FROM cand) WHERE rn = 1),
+            SELECT *, {duck_query_rank("rel")} AS rn FROM cand) WHERE rn = 1),
     p2 AS (SELECT c.query_id, c.vec_id, c.qv, c.rel,
                   {_duck_idot("c.qv", "s.qv")} AS msim
            FROM cand c JOIN s1 s USING (query_id)
            WHERE c.vec_id != s.vec_id),
     s2 AS (SELECT query_id, vec_id, qv, rel, msim FROM (
-            SELECT *, row_number() OVER (PARTITION BY query_id
-                ORDER BY 2 * rel - msim DESC, vec_id) AS rn FROM p2)
+            SELECT *, {duck_query_rank("2 * rel - msim")} AS rn FROM p2)
            WHERE rn = 1),
     p3 AS (SELECT c.query_id, c.vec_id, c.rel,
                   greatest({_duck_idot("c.qv", "s1.qv")},
@@ -1626,8 +1275,7 @@ def _duck_idot(a: str, b: str) -> str:
            FROM cand c JOIN s1 USING (query_id) JOIN s2 USING (query_id)
            WHERE c.vec_id != s1.vec_id AND c.vec_id != s2.vec_id),
     s3 AS (SELECT query_id, vec_id, rel, msim FROM (
-            SELECT *, row_number() OVER (PARTITION BY query_id
-                ORDER BY 2 * rel - msim DESC, vec_id) AS rn FROM p3)
+            SELECT *, {duck_query_rank("2 * rel - msim")} AS rn FROM p3)
            WHERE rn = 1)
     SELECT query_id, 1 AS mmr_rank, vec_id, CAST(rel AS BIGINT) AS rel_dot,
            CAST(NULL AS BIGINT) AS max_sim FROM s1
@@ -1675,11 +1323,7 @@ def mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda x: F.floor(x.cast("double") * 127 / ma + 0.5).cast("bigint"),
         ).alias("qv"),
     )
-    q = F.broadcast(
-        qz.where(F.col("vec_id").isin(*_QUERY_IDS)).select(
-            F.col("vec_id").alias("query_id"), F.col("qv").alias("qqv")
-        )
-    )
+    q = F.broadcast(_query_side(qz, F.col("qv").alias("qqv")))
 
     def idot(a, b):
         return F.aggregate(
@@ -1688,22 +1332,22 @@ def mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda acc, x: acc + x,
         )
 
-    w_rel = Window.partitionBy("query_id").orderBy(F.col("rel").desc(), "vec_id")
     cand = (
-        qz.crossJoin(q)
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id", "vec_id", "qv",
-            idot(F.col("qv"), F.col("qqv")).alias("rel"),
+        top_k_per_query(
+            qz.crossJoin(q)
+            .where(F.col("vec_id") != F.col("query_id"))
+            .select(
+                "query_id", "vec_id", "qv",
+                idot(F.col("qv"), F.col("qqv")).alias("rel"),
+            ),
+            10, "rel", rank="prn",
         )
-        .withColumn("prn", F.row_number().over(w_rel))
-        .where(F.col("prn") <= 10)
         .drop("prn")
         .coalesce(cache_parallelism(spark))
         .cache()  # the greedy loop probes this tiny frame k times
     )
     s1 = (
-        cand.withColumn("rn", F.row_number().over(w_rel))
+        cand.withColumn("rn", query_rank("rel"))
         .where(F.col("rn") == 1)
         .select(
             "query_id",
@@ -1720,11 +1364,9 @@ def mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             idot(F.col("qv"), F.col("qv1")).alias("msim"),
         )
     )
-    w_mmr = Window.partitionBy("query_id").orderBy(
-        (2 * F.col("rel") - F.col("msim")).desc(), "vec_id"
-    )
+    mmr_rank = query_rank(2 * F.col("rel") - F.col("msim"))
     s2 = (
-        p2.withColumn("rn", F.row_number().over(w_mmr))
+        p2.withColumn("rn", mmr_rank)
         .where(F.col("rn") == 1)
         .select(
             "query_id",
@@ -1746,7 +1388,7 @@ def mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("msim"),
         )
     )
-    s3 = p3.withColumn("rn", F.row_number().over(w_mmr)).where(F.col("rn") == 1)
+    s3 = p3.withColumn("rn", mmr_rank).where(F.col("rn") == 1)
     out1 = s1.select(
         "query_id",
         F.lit(1).alias("mmr_rank"),
@@ -1774,18 +1416,13 @@ def mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KM_K = 8
 _KM_ROUNDS = 2
 
-_DUCK_KM_DIST = """
-    round(list_sum(list_transform(range(64),
-          i -> (e.embedding[i+1]::DOUBLE - c.cv[i+1])
-             * (e.embedding[i+1]::DOUBLE - c.cv[i+1]))), 6)
-"""
-
 # chained CTEs: assignment r uses centroids r-1; centroids r are the
 # per-dim means of assignment r rounded to 3dp (empty cells drop out)
 _DUCK_KM_CHAIN = "".join(
     f""",
     d{r} AS (
-        SELECT e.vec_id, e.embedding, c.cell, {_DUCK_KM_DIST} AS dist
+        SELECT e.vec_id, e.embedding, c.cell,
+               round({duck_sqdist("e.embedding", "c.cv")}, 6) AS dist
         FROM e CROSS JOIN c{r - 1} c
     ),
     a{r} AS (
@@ -1795,12 +1432,7 @@ _DUCK_KM_CHAIN = "".join(
             FROM d{r}
         ) WHERE rn = 1
     ),
-    c{r} AS (
-        SELECT cell, list(round(c, 3) ORDER BY pos) AS cv FROM (
-            SELECT cell, i AS pos, avg(embedding[i+1]::DOUBLE) AS c
-            FROM a{r}, UNNEST(range(64)) t(i) GROUP BY cell, i
-        ) GROUP BY cell
-    )"""
+    c{r} AS ({duck_codebook("cell", "embedding", f"a{r}")})"""
     for r in range(1, _KM_ROUNDS + 1)
 )
 
@@ -1845,8 +1477,6 @@ def kmeans_lloyd_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouped avg whose k×64-row result collects to the driver exactly
     like ``KMeansModel.clusterCenters()``. Rounds are a constant; the
     corpus is scanned once per round."""
-    from ..operators.similarity import sqdist
-
     e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     # seeds rounded ENGINE-side (F.round), never python round(): python
     # rounds the binary expansion half-even while the engines round the
@@ -1904,21 +1534,11 @@ def kmeans_lloyd_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-def _kc_d2(e: str, c: str) -> str:
-    """Oracle squared-distance: element order, double casts,
-    left-to-right sum, explicit multiply — the operators/similarity
-    determinism contract."""
-    t = f"({e}.embedding[i+1]::DOUBLE - {c}.embedding[i+1]::DOUBLE)"
-    return (
-        f"list_sum(list_transform(range(len({e}.embedding)), i -> {t} * {t}))"
-    )
-
-
 def _kcenter_oracle(k: int) -> str:
     parts = [
         "WITH e AS (SELECT vec_id, embedding FROM embeddings),",
         "c0 AS (SELECT vec_id, embedding FROM e ORDER BY vec_id LIMIT 1),",
-        f"d0 AS (SELECT e.vec_id, e.embedding, {_kc_d2('e', 'c')} AS d2"
+        f"d0 AS (SELECT e.vec_id, e.embedding, {duck_sqdist('e.embedding', 'c.embedding')} AS d2"
         "       FROM e, c0 c),",
     ]
     for t in range(1, k):
@@ -1929,7 +1549,7 @@ def _kcenter_oracle(k: int) -> str:
         if t < k - 1:
             parts.append(
                 f"d{t} AS (SELECT d.vec_id, d.embedding,"
-                f"         least(d.d2, {_kc_d2('d', 'c')}) AS d2"
+                f"         least(d.d2, {duck_sqdist('d.embedding', 'c.embedding')}) AS d2"
                 f"         FROM d{t-1} d, c{t} c),"
             )
     parts[-1] = parts[-1].rstrip(",")
@@ -1962,8 +1582,6 @@ def kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     The driver loop is the standard iterative-selection shape
     (kmeans_lloyd_rounds' discipline): per-round state is one row."""
     from ..core.session import cache_parallelism
-    from ..operators.similarity import sqdist
-
     k = 5
     e = (
         table(spark, sf_dir, "embeddings")

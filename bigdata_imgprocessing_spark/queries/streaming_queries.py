@@ -12,6 +12,7 @@ from ..core import fs
 from ..core.catalog import table
 from ..core.registry import query
 from ..core.session import ensure_utc, local_frame
+from ..operators.similarity import duck_label_cells
 from ..streaming.jobs import event_stream, file_feed_stream, run_to_memory
 from ..streaming.stateful import THRESHOLD, running_user_totals
 
@@ -1500,32 +1501,8 @@ def _ivf_ingest_feed(spark: SparkSession, sf_dir: str) -> str:
 @query(
     "streaming_ivf_assign_ingest",
     contract_batches=4,
-    oracle="""
-    WITH flat AS (
-        SELECT label, i AS pos, embedding[i+1]::DOUBLE AS x
-        FROM embeddings, UNNEST(range(len(embedding))) AS t(i)
-    ),
-    cent AS (
-        SELECT label AS cell, list(round(c, 3) ORDER BY pos) AS cv
-        FROM (SELECT label, pos, avg(x) AS c FROM flat GROUP BY label, pos)
-        GROUP BY cell
-    ),
-    dists AS (
-        SELECT e.vec_id, e.label, CAST(e.vec_id % 4 AS BIGINT) AS wave,
-               c.cell,
-               round(list_sum(list_transform(range(len(e.embedding)),
-                     i -> (e.embedding[i+1]::DOUBLE - c.cv[i+1])
-                        * (e.embedding[i+1]::DOUBLE - c.cv[i+1]))), 6)
-                   AS dist
-        FROM embeddings e CROSS JOIN cent c
-    ),
-    assigned AS (
-        SELECT wave, vec_id, label, cell, dist FROM (
-            SELECT *, row_number() OVER (PARTITION BY vec_id
-                                         ORDER BY dist, cell) AS arn
-            FROM dists
-        ) WHERE arn = 1
-    ),
+    oracle=f"""
+    WITH {duck_label_cells("e.vec_id, e.label, CAST(e.vec_id % 4 AS BIGINT) AS wave")},
     occ AS (
         SELECT wave, cell, count(*) AS n FROM assigned GROUP BY wave, cell
     ),
@@ -1583,7 +1560,7 @@ def _ivf_ingest_feed(spark: SparkSession, sf_dir: str) -> str:
 def streaming_ivf_assign_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF index freshness as a CONTINUOUS ingest loop
     (streaming/ivf_ingest.py): the codebook is PINNED before the drain
-    (queries/similarity.py:label_centroids — the same label-seeded 3dp
+    (operators/similarity.py:label_centroids — the same label-seeded 3dp
     quantizer ``ann_ivf_learned`` searches with), embedded vectors
     arrive in 4 mtime-ordered waves (vec_id % 4, one file per
     micro-batch), and each micro-batch assigns its arrivals to their

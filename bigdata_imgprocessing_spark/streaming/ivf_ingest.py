@@ -1,6 +1,6 @@
 """Streaming IVF assignment-at-ingest: the index-freshness loop every
 large-scale ANN deployment needs. A codebook is PINNED before the drain
-(`queries/similarity.py:label_centroids` — the same label-seeded 3dp
+(`operators/similarity.py:label_centroids` — the same label-seeded 3dp
 quantizer `ann_ivf_learned` searches with); embedded documents then
 arrive in waves, and each micro-batch assigns its arrivals to their
 nearest centroid, lands the per-batch cell postings (the incremental
@@ -10,7 +10,7 @@ from the index layout:
 
 - ``n_foreign``: arrivals whose assigned cell differs from their own
   ``label`` — drift vs the label-partitioned layout the batch
-  ``ann_ivf_topk`` probe assumes (queries/similarity.py:103);
+  ``ann_ivf_topk`` probe assumes (queries/similarity.py);
 - ``occ_drift_e6``: L1 distance between the batch's cell-occupancy
   shares and the ACCUMULATED prior waves' shares, in exact integer
   arithmetic (``sum_c |nb·Np − np·Nb| · 1e6 DIV (Nb·Np)`` with
@@ -43,6 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.similarity import label_centroids
 from . import ingest
 
 _CB_SCHEMA = "cell int, cv array<double>"
@@ -58,9 +59,7 @@ _STATS_SCHEMA = (
 def write_codebook(emb: DataFrame, state_root: str) -> None:
     """Pin the quantizer for the whole drain: one (cell, cv) parquet
     under ``state_root/codebook`` from the SHARED label-seeded
-    derivation (queries/similarity.py:label_centroids)."""
-    from ..queries.similarity import label_centroids
-
+    derivation (operators/similarity.py:label_centroids)."""
     label_centroids(emb).coalesce(1).write.mode("overwrite").parquet(
         f"{state_root}/codebook"
     )

@@ -345,6 +345,48 @@ def test_fixture_rules_live_in_one_module():
     assert found == {name: [home] for name, (_, home) in rules.items()}
 
 
+def test_vector_scoring_rules_live_in_one_module():
+    """The vector family's exact-scoring rules each have one home,
+    operators/similarity.py, in Spark and in DuckDB form: the rounded
+    cosine, the floored-norm cosine SQL, the per-query top-k window,
+    the P10 nearest-centroid chain and the 3dp codebook CTE. Queries,
+    operators, pipelines and oracles import them."""
+    import pathlib
+    import re
+
+    import bigdata_imgprocessing_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    home = "operators/similarity.py"
+    rules = {
+        "Spark rounded cosine": r"F\.round\(\s*dot\(",
+        "DuckDB cosine SQL": r"greatest\(sqrt\(",
+        "query_id top-k window": r"partitionBy\(\"query_id\"|PARTITION BY (\w+\.)?query_id",
+        "P10 when/least chain": r"<=\s*\(?(F\.)?least\(",
+        "codebook CTE": r"list\(round\(c, 3\) ORDER BY pos\)",
+    }
+    found = {
+        name: sorted(
+            p.relative_to(root).as_posix()
+            for p in root.rglob("*.py")
+            if re.search(rx, p.read_text())
+        )
+        for name, rx in rules.items()
+    }
+    assert found == {name: [home] for name in rules}
+
+
+def test_querydoc_matches_the_registry():
+    """QUERIES.md is what tools_gen_querydoc.py renders from the
+    registry's docstrings, so a docstring edit cannot leave it stale."""
+    import pathlib
+
+    import tools_gen_querydoc
+
+    committed = pathlib.Path(tools_gen_querydoc.__file__).with_name("QUERIES.md")
+    assert tools_gen_querydoc.render() == committed.read_text()
+
+
 def test_only_the_storage_layer_touches_storage():
     """Every store, fixture and state path goes through core/fs.py; only
     the FIMG source, whose files Python workers open(), stays local."""

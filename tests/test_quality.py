@@ -304,6 +304,17 @@ def test_gopher_rules_are_non_degenerate(spark, sf_dir):
         assert 0.0 < r["avg_top_word_frac"] < 1.0
 
 
+def test_stats_pipeline_letter_key_groups_several_names(spark, sf_dir):
+    """The first-letter key of ``stats_pipeline_e2e`` must split the
+    images into several groups, or its oracle check cannot tell a wrong
+    key from a right one. Region initials give A (AFRICA, AMERICA and
+    ASIA collapse into it), E and M."""
+    rows = QUERIES["stats_pipeline_e2e"](spark, sf_dir).collect()
+    assert len(rows) >= 2
+    assert {r["letter"] for r in rows} == {"A", "E", "M"}
+    assert sum(r["files"] for r in rows) == 200
+
+
 def test_psi_terms_bounded_and_nonzero(spark, sf_dir):
     """PSI terms are each >= 0 ((p-q)ln(p/q) is nonnegative), the bins
     partition the corpus, and SOME bin must show nonzero drift between

@@ -1443,6 +1443,19 @@ def test_streaming_simhash_ingest_crash_replay_is_idempotent(spark, tmp_path):
     reproduce identical pairs — without the strictly-before state
     filter the replayed batch would probe its own fingerprints and
     re-emit its pairs against itself."""
+    _simhash_crash_replay(spark, tmp_path, "")
+
+
+def test_streaming_simhash_ingest_crash_replay_file_uri_state_root(spark, tmp_path):
+    """The SimHash crash-replay contract with a ``file://`` state root:
+    prior fingerprints and landed batches must be found through the
+    root's Hadoop FileSystem, as with a bare path."""
+    _simhash_crash_replay(spark, tmp_path, "file://")
+
+
+def _simhash_crash_replay(spark, tmp_path, scheme: str) -> None:
+    """Drain two waves into ``scheme`` + a local state dir, then replay
+    batch 1 after each crash window; the pairs never change."""
     import os as _os
 
     import duckdb as _duck
@@ -1472,12 +1485,12 @@ def test_streaming_simhash_ingest_crash_replay_is_idempotent(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(str(feed))
         )
-        run_simhash_ingest(s, state)
+        run_simhash_ingest(s, scheme + state)
 
     drain()
     first = sorted(
         (r.doc_a, r.doc_b, r.dist, r.wave)
-        for r in read_pairs(spark, state).collect()
+        for r in read_pairs(spark, scheme + state).collect()
     )
     assert first == [(0, 1, 0, 1), (0, 2, 0, 1), (1, 2, 0, 1)]
     _os.remove(f"{state}/ckpt/commits/1")
@@ -1487,7 +1500,7 @@ def test_streaming_simhash_ingest_crash_replay_is_idempotent(spark, tmp_path):
     drain()
     replayed = sorted(
         (r.doc_a, r.doc_b, r.dist, r.wave)
-        for r in read_pairs(spark, state).collect()
+        for r in read_pairs(spark, scheme + state).collect()
     )
     assert replayed == first
     # partial crash: the fps write (the cache barrier) landed, but the
@@ -1502,7 +1515,7 @@ def test_streaming_simhash_ingest_crash_replay_is_idempotent(spark, tmp_path):
     drain()
     partial = sorted(
         (r.doc_a, r.doc_b, r.dist, r.wave)
-        for r in read_pairs(spark, state).collect()
+        for r in read_pairs(spark, scheme + state).collect()
     )
     assert partial == first
 
@@ -1898,6 +1911,18 @@ def test_streaming_paragraph_ingest_planted_and_crash_replay(spark, tmp_path):
     batch's units/stats landed but BEFORE its checkpoint committed and
     must converge to identical stats (a replay probing its OWN landed
     units would flip its new units to dups)."""
+    _paragraph_crash_replay(spark, tmp_path, "")
+
+
+def test_streaming_paragraph_ingest_crash_replay_file_uri_state_root(spark, tmp_path):
+    """The paragraph-ingest planted drain and crash replay with a
+    ``file://`` state root: a lister that only sees local paths would
+    find no prior units, and wave 1's cross-batch dups would count as
+    new."""
+    _paragraph_crash_replay(spark, tmp_path, "file://")
+
+
+def _paragraph_crash_replay(spark, tmp_path, scheme: str) -> None:
     import os as _os
 
     import duckdb as _duck
@@ -1936,13 +1961,13 @@ def test_streaming_paragraph_ingest_planted_and_crash_replay(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(str(feed))
         )
-        run_paragraph_ingest(s, state)
+        run_paragraph_ingest(s, scheme + state)
 
     drain()
-    assert n_store_versions(state) == 2
+    assert n_store_versions(scheme + state) == 2
     got = {
         r.wave: (r.n_docs, r.n_units, r.n_dup_units, r.n_new_units)
-        for r in read_stats(spark, state).collect()
+        for r in read_stats(spark, scheme + state).collect()
     }
     # wave 0: docs 0,1 -> units u1,u2,u2 (doc 1's u2 repeats doc 0's
     #         within the batch): 3 instances, 1 dup, 2 new
@@ -1958,10 +1983,10 @@ def test_streaming_paragraph_ingest_planted_and_crash_replay(spark, tmp_path):
     drain()
     replayed = {
         r.wave: (r.n_docs, r.n_units, r.n_dup_units, r.n_new_units)
-        for r in read_stats(spark, state).collect()
+        for r in read_stats(spark, scheme + state).collect()
     }
     assert replayed == got
-    assert n_store_versions(state) == 2
+    assert n_store_versions(scheme + state) == 2
 
 
 def test_paragraph_batch_stream_totals_agree(spark, tmp_path):

@@ -23,7 +23,8 @@ def first_sentence(doc: str | None) -> str:
     return text[:220]
 
 
-def main() -> None:
+def render() -> str:
+    """QUERIES.md's text for the registry as imported."""
     by_module: dict[str, list[tuple[str, str]]] = {}
     for name, fn in QUERIES.items():
         mod = fn.__module__.rsplit(".", 1)[-1]
@@ -44,9 +45,13 @@ def main() -> None:
             mark = "" if name in ORACLES else " *(rows-only)*"
             lines.append(f"- **{name}**{mark} — {doc}")
         lines.append("")
+    return "\n".join(lines)
+
+
+def main() -> None:
     with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
                            "QUERIES.md"), "w") as f:
-        f.write("\n".join(lines))
+        f.write(render())
     print(f"wrote QUERIES.md ({len(QUERIES)} queries)")
 
 
