@@ -5,6 +5,7 @@ and once, next to it, as its DuckDB oracle twin:
 |---|---|---|
 | dot / floored norm | ``dot``, ``norm`` | ``duck_dot``, ``duck_norm`` |
 | squared distance | ``sqdist`` | ``duck_sqdist`` |
+| symmetric int8 quantization, integer dot | ``int8_scale``, ``int8``, ``idot`` | ``duck_int8``, ``duck_idot`` |
 | 6dp cosine from norms | ``rounded_cosine`` | ``duck_cosine`` |
 | per-query top-k | ``query_rank``, ``top_k_per_query`` | ``duck_query_rank``, ``duck_top_k`` |
 | nearest fixed centroid (P10) | ``nearest_centroid`` | ``duck_nearest_centroid`` |
@@ -100,6 +101,54 @@ def sqdist(a: Column, b: Column) -> Column:
 def duck_sqdist(a: str, b: str) -> str:
     t = f"({a}[i+1]::DOUBLE - {b}[i+1]::DOUBLE)"
     return f"list_sum(list_transform(range(len({a})), i -> {t} * {t}))"
+
+
+# -- int8 quantization ---------------------------------------------------------
+# Per-vector symmetric quantization: scale 127 / max|x|, the max floored
+# like ``norm`` so a zero vector quantizes to zeros, round half up.
+
+
+def int8_scale(a: Column) -> Column:
+    """The floored max |x| of the vector ``a``."""
+    return F.greatest(
+        F.aggregate(
+            F.transform(a, lambda x: F.abs(x.cast("double"))),
+            F.lit(0.0),
+            lambda acc, x: F.greatest(acc, x),
+        ),
+        F.lit(1e-30),
+    )
+
+
+def int8(a: Column, scale: Column) -> Column:
+    """``a`` quantized to integers in [-127, 127] by its ``int8_scale``."""
+    return F.transform(
+        a, lambda x: F.floor(x.cast("double") * 127 / scale + 0.5).cast("bigint")
+    )
+
+
+def duck_int8(a: str) -> str:
+    """``int8(a, int8_scale(a))``."""
+    return (
+        f"list_transform({a}, x -> CAST(floor(x::DOUBLE * 127 / "
+        f"greatest(list_max(list_transform({a}, y -> abs(y::DOUBLE))), 1e-30)"
+        f" + 0.5) AS BIGINT))"
+    )
+
+
+def idot(a: Column, b: Column) -> Column:
+    """Exact integer dot product of two quantized vectors."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y),
+        F.lit(0).cast("bigint"),
+        lambda acc, x: acc + x,
+    )
+
+
+def duck_idot(a: str, b: str) -> str:
+    return (
+        f"list_sum(list_transform(range(len({a})), i -> {a}[i+1] * {b}[i+1]))"
+    )
 
 
 # -- per-query top-k ---------------------------------------------------------

@@ -24,6 +24,12 @@ from pyspark.sql import functions as F
 from ..core.catalog import table
 from ..core.registry import query
 from ..functions.helpers import ordered_fold_sum
+from ..operators.neardup import (
+    DUCK_PAIRS_CTES,
+    WORDGRAM_N,
+    duck_wordgram_5h,
+    wordgram_hashes,
+)
 from ..operators.similarity import duck_cosine, norm, rounded_cosine
 
 # ---------------------------------------------------------------------------
@@ -358,34 +364,6 @@ def doc_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 
-_DECON_N = 5  # word n-gram size for contamination detection
-
-
-def _wordgram_5h(d: DataFrame) -> DataFrame:
-    """(doc_id, gram_h): the decontamination family's md5-16hex word
-    5-grams of ``d.text`` — one derivation shared by the batch scans
-    here and the streaming ingest loop (streaming/decontam_ingest.py),
-    so the gram space cannot drift between deployment modes."""
-    toks = F.split(F.col("text"), " ")
-    n = F.size(toks)
-    idx = F.when(n >= _DECON_N, F.sequence(F.lit(0), n - _DECON_N)).otherwise(
-        F.array().cast("array<int>")
-    )
-    return d.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                idx,
-                lambda i: F.substring(
-                    F.md5(F.array_join(F.slice(toks, i + 1, _DECON_N), " ")),
-                    1,
-                    16,
-                ),
-            )
-        ).alias("gram_h"),
-    )
-
-
 @query(
     "decontam_ngram_overlap",
     oracle=f"""
@@ -398,11 +376,11 @@ def _wordgram_5h(d: DataFrame) -> DataFrame:
         FROM documents
     ), grams AS (
         SELECT doc_id, lang, split,
-               substr(md5(array_to_string(toks[i + 1:i + {_DECON_N}], ' ')), 1, 16)
+               {duck_wordgram_5h()}
                    AS gram_h
         FROM (
             SELECT doc_id, lang, split, toks,
-                   unnest(generate_series(0, len(toks) - {_DECON_N})) AS i
+                   unnest(generate_series(0, len(toks) - {WORDGRAM_N})) AS i
             FROM assigned WHERE split IS NOT NULL
         )
     ), train_grams AS (
@@ -447,22 +425,10 @@ def decontam_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = d.select(
         "doc_id", "lang", split.alias("split"), F.split(F.col("text"), " ").alias("toks")
     ).where(F.col("split").isNotNull())
-    n = F.size(F.col("toks"))
-    idx = F.when(n >= _DECON_N, F.sequence(F.lit(0), n - _DECON_N)).otherwise(
-        F.array().cast("array<int>")
-    )
     grams = assigned.select(
         "doc_id",
         "split",
-        F.explode(
-            F.transform(
-                idx, lambda i: F.substring(
-                    F.md5(F.array_join(F.slice(F.col("toks"), i + 1, _DECON_N), " ")),
-                    1,
-                    16,
-                )
-            )
-        ).alias("gram_h"),
+        F.explode(wordgram_hashes(F.col("toks"))).alias("gram_h"),
     )
     train_grams = grams.where(F.col("split") == "train").select("gram_h").distinct()
     contaminated = (
@@ -646,11 +612,11 @@ def _bitset_decontam_stats(
         FROM documents
     ), grams AS (
         SELECT doc_id, lang, split,
-               substr(md5(array_to_string(toks[i + 1:i + {_DECON_N}], ' ')), 1, 16)
+               {duck_wordgram_5h()}
                    AS gram_h
         FROM (
             SELECT doc_id, lang, split, toks,
-                   unnest(generate_series(0, len(toks) - {_DECON_N})) AS i
+                   unnest(generate_series(0, len(toks) - {WORDGRAM_N})) AS i
             FROM assigned WHERE split IS NOT NULL
         )
     ), train_grams AS (
@@ -710,23 +676,11 @@ def decontam_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", split.alias("split"),
         F.split(F.col("text"), " ").alias("toks"),
     ).where(F.col("split").isNotNull())
-    n = F.size(F.col("toks"))
-    idx = F.when(n >= _DECON_N, F.sequence(F.lit(0), n - _DECON_N)).otherwise(
-        F.array().cast("array<int>")
-    )
     grams = assigned.select(
         "doc_id",
         "lang",
         "split",
-        F.explode(
-            F.transform(
-                idx, lambda i: F.substring(
-                    F.md5(F.array_join(F.slice(F.col("toks"), i + 1, _DECON_N), " ")),
-                    1,
-                    16,
-                )
-            )
-        ).alias("gram_h"),
+        F.explode(wordgram_hashes(F.col("toks"))).alias("gram_h"),
     )
     test_docs = assigned.where(F.col("split") == "test").select(
         "doc_id", "lang"
@@ -752,10 +706,10 @@ def decontam_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM documents
     ), grams AS (
         SELECT doc_id, lang, split,
-               array_to_string(toks[i + 1:i + {_DECON_N}], ' ') AS gram
+               array_to_string(toks[i + 1:i + {WORDGRAM_N}], ' ') AS gram
         FROM (
             SELECT doc_id, lang, split, toks,
-                   unnest(generate_series(0, len(toks) - {_DECON_N})) AS i
+                   unnest(generate_series(0, len(toks) - {WORDGRAM_N})) AS i
             FROM assigned WHERE split IS NOT NULL
         )
     ), train_grams AS (
@@ -1173,13 +1127,13 @@ def _split_of(col: Column) -> Column:
 
 # dedup loads here as an import side effect (it registers its own
 # queries first; there is no cycle — dedup never imports curation)
-from .dedup import _DUCK_PAIRS_CTES, _lsh_pairs_store  # noqa: E402
+from .dedup import _lsh_pairs_store  # noqa: E402
 
 
 @query(
     "split_leakage_audit",
     oracle=f"""
-    WITH {_DUCK_PAIRS_CTES}
+    WITH {DUCK_PAIRS_CTES}
     SELECT least({_SPLIT_CASE_A}, {_SPLIT_CASE_B}) AS split_lo,
            greatest({_SPLIT_CASE_A}, {_SPLIT_CASE_B}) AS split_hi,
            count(*) AS n_pairs,
@@ -1233,7 +1187,7 @@ _SPLIT_CASE_GRP = """CASE WHEN (('0x' || substr(md5(CAST(grp AS VARCHAR) || '_sp
 @query(
     "component_safe_split",
     oracle=f"""
-    WITH RECURSIVE {_DUCK_PAIRS_CTES},
+    WITH RECURSIVE {DUCK_PAIRS_CTES},
     edges AS (
         SELECT doc_a AS a, doc_b AS b FROM pairs
         UNION SELECT doc_b, doc_a FROM pairs

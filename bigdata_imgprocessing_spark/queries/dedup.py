@@ -4,12 +4,9 @@ pipeline surface (exact, MinHash+LSH, n-gram Jaccard, SimHash).
 Everything runs as built-in JVM expressions so Catalyst sees the whole
 plan: shingling via array HOFs, hashing via md5 (identically computable
 in the DuckDB oracle: hex-prefix → integer), band-bucketing + self-join
-for LSH candidates.
-
-Hash design shared by Spark and oracle: H(s) = first 10 hex chars of
-md5(s) as a 40-bit integer; minhash_j(s) = (a_j*H + b_j) mod P with
-a_j = 2j+3, b_j = 7919j + 1, P = 1099511627791 (prime > 2^40). 40-bit H
-keeps a_j*H far below 2^63 — no overflow in either engine.
+for LSH candidates. The shingle, hash, band, probe, verification and
+fingerprint rules themselves live in operators/neardup.py, shared with
+the streaming ingests.
 
 Scale notes: exact dedup is groupBy(fingerprint) with map-side combine;
 minhash signatures are one pass (explode-free: aggregate over the
@@ -20,141 +17,33 @@ verify stage joins only candidate pairs, never all pairs.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..core import fs
 from ..core.catalog import table
-from ..core.registry import query
+from ..core.registry import prestaged, query
 from ..core.session import local_frame
 from ..functions.helpers import ordered_pairs
-
-_P = 1099511627791  # prime > 2^40
-_N_HASHES = 16
-_BANDS = 8  # 2 rows per band
-
-
-def _a(j: int) -> int:
-    return 2 * j + 3
-
-
-def _b(j: int) -> int:
-    return 7919 * j + 1
-
-
-# ---- shared Spark-side builders -------------------------------------------
-
-
-def _shingles_sql(text: str) -> str:
-    """SQL fragment for word 3-gram shingles (empty-safe) over the
-    column expression ``text``.
-
-    Built with arrays_zip over three shifted slices rather than
-    ``transform(sequence(...), i -> toks[i] ...)``: subexpression
-    elimination does not reach inside HOF lambdas, so the indexed form
-    re-executes split() three times per ELEMENT (~2.4ms/doc measured);
-    the zip form splits once per row (the repeated ``split()`` calls
-    below are identical subtrees, eliminated by whole-stage codegen's
-    subexpression elimination exactly as the shared-Column form was).
-
-    A string, not a Column: foreachBatch pays plan CONSTRUCTION per
-    micro-batch, and the Column-DSL build of this expression cost
-    ~196 ms vs ~1 ms for the parse of this fragment (the r11
-    `_simhash64_frame` F.expr rule, NOTES item 5)."""
-    toks = f"split({text}, ' ')"
-    n = f"size({toks})"
-    zipped = (
-        f"arrays_zip(slice({toks}, 1, {n} - 2), "
-        f"slice({toks}, 2, {n} - 2), slice({toks}, 3, {n} - 2))"
-    )
-    return (
-        f"CASE WHEN {n} >= 3 THEN transform({zipped}, "
-        f"s -> concat_ws(' ', s['0'], s['1'], s['2'])) "
-        f"ELSE array({text}) END"
-    )
-
-
-def _shingles(text: Column | str) -> Column:
-    """Word 3-gram shingles as an array<string> (empty-safe).
-
-    Accepts a column NAME (fast path: one F.expr parse) or a Column
-    (legacy callers; routed through the same SQL fragment via the
-    column's field name when trivially extractable)."""
-    if isinstance(text, str):
-        return F.expr(_shingles_sql(text))
-    # Column arg: fall back to the DSL build (only hit by callers that
-    # pass a computed expression; all in-repo callers pass a name).
-    toks = F.split(text, " ")
-    n = F.size(toks)
-    zipped = F.arrays_zip(
-        F.slice(toks, 1, n - 2), F.slice(toks, 2, n - 2), F.slice(toks, 3, n - 2)
-    )
-    return F.when(
-        n >= 3,
-        F.transform(zipped, lambda s: F.concat_ws(" ", s["0"], s["1"], s["2"])),
-    ).otherwise(F.array(text))
-
-
-def _h40(s: Column) -> Column:
-    """40-bit integer hash: first 10 hex chars of md5. Reproducible in
-    DuckDB as ('0x' || substr(md5(s),1,10))::UBIGINT."""
-    return F.conv(F.substring(F.md5(s), 1, 10), 16, 10).cast("bigint")
-
-
-def _minhash_signatures(d: DataFrame) -> DataFrame:
-    """doc_id + mh0..mh15 via explode → hash-once → groupBy(doc_id) with
-    16 algebraic min aggregates.
-
-    Why explode instead of array HOFs: 16 independent projections over a
-    shared `transform(shingles, md5...)` array get re-INLINED by
-    Catalyst's CollapseProject, so md5 runs 16x per shingle (measured 54s
-    at sf0.1). Exploding computes each shingle's md5 exactly once; the
-    min aggregates are map-side partial, so the shuffle carries only
-    16 ints per (doc, partition) — negligible at any scale.
-
-    Construction is F.expr strings, not Column loops: foreachBatch
-    builds this plan per micro-batch and the Column-DSL form cost
-    ~660 ms/build (NOTES item 5 — same arithmetic, same plan)."""
-    sh = d.select(
-        "doc_id",
-        F.expr(f"explode(array_distinct({_shingles_sql('text')}))").alias("s"),
-    )
-    h = sh.select(
-        "doc_id",
-        F.expr(
-            "CAST(conv(substring(md5(s), 1, 10), 16, 10) AS BIGINT)"
-        ).alias("h"),
-    )
-    return h.groupBy("doc_id").agg(
-        *[
-            F.expr(f"min(({_a(j)} * h + {_b(j)}) % {_P}) AS mh{j}")
-            for j in range(_N_HASHES)
-        ]
-    )
-
-
-# ---- oracle-side builders (DuckDB SQL fragments) --------------------------
-
-_DUCK_SHINGLES = """
-    SELECT doc_id, lang,
-           CASE WHEN len(string_split(text, ' ')) >= 3
-                THEN list_transform(range(len(string_split(text, ' ')) - 2),
-                     i -> string_split(text, ' ')[i+1] || ' ' ||
-                          string_split(text, ' ')[i+2] || ' ' ||
-                          string_split(text, ' ')[i+3])
-                ELSE [text] END AS sh
-    FROM documents
-"""
-
-
-def _duck_mh(j: int) -> str:
-    return (
-        f"list_min(list_transform(sh, s -> ({_a(j)} * CAST(('0x' || substr(md5(s),1,10))::UBIGINT AS BIGINT)"
-        f" + {_b(j)}) % {_P})) AS mh{j}"
-    )
-
-
-# ---------------------------------------------------------------------------
+from ..operators.neardup import (
+    DUCK_BANDS_CTES,
+    DUCK_PAIRS_CTES,
+    DUCK_SHINGLES,
+    DUCK_SIMHASH64_CTES,
+    N_HASHES,
+    SHINGLE_SET,
+    band_frame,
+    candidate_pairs,
+    duck_jaccard,
+    duck_para_chunks,
+    exact_jaccard,
+    h40,
+    minhash_signatures,
+    para_units_sql,
+    shingle_sets,
+    shingles,
+    simhash64_frame,
+)
 
 
 @query(
@@ -185,13 +74,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "minhash_band_stats",
     oracle=f"""
-    WITH sh AS ({_DUCK_SHINGLES}),
-    sig AS (SELECT doc_id, {", ".join(_duck_mh(j) for j in range(_N_HASHES))} FROM sh),
-    bands AS (
-        SELECT doc_id, band,
-               CASE band {" ".join(f"WHEN {b} THEN CAST(mh{2*b} AS VARCHAR) || '_' || CAST(mh{2*b+1} AS VARCHAR)" for b in range(_BANDS))} END AS bkey
-        FROM sig CROSS JOIN (SELECT unnest(range({_BANDS})) AS band) bs
-    ),
+    WITH {DUCK_BANDS_CTES},
     buckets AS (SELECT band, bkey, count(*) AS k FROM bands GROUP BY band, bkey)
     SELECT band, count(*) AS n_buckets, max(k) AS max_bucket,
            CAST(sum(k * (k - 1) // 2) AS BIGINT) AS n_candidate_pairs
@@ -203,42 +86,13 @@ def minhash_band_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-band bucket count, largest bucket, and intra-bucket candidate
     pair count — the cost model of the LSH join."""
     d = table(spark, sf_dir, "documents")
-    sig = _minhash_signatures(d)
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.concat_ws("_", f"mh{2*b}", f"mh{2*b+1}").alias("bkey"),
-                )
-                for b in range(_BANDS)
-            ])
-        ).alias("bb"),
-    ).select("doc_id", "bb.band", "bb.bkey")
+    bands = band_frame(minhash_signatures(d))
     buckets = bands.groupBy("band", "bkey").agg(F.count("*").alias("k"))
     return buckets.groupBy("band").agg(
         F.count("*").alias("n_buckets"),
         F.max("k").alias("max_bucket"),
         F.sum((F.col("k") * (F.col("k") - 1) / 2).cast("bigint")).alias("n_candidate_pairs"),
     )
-
-
-def _band_frame(sig: DataFrame) -> DataFrame:
-    """Signature frame → (doc_id, band, bkey) LSH band keys — ONE
-    definition shared by the batch pipeline, the incremental-index
-    query, and the streaming ingest, so the banding scheme cannot
-    drift between deployment modes.
-
-    Single F.expr parse (was a ~400 ms Column-loop build paid per
-    micro-batch by the streaming ingest — NOTES item 5)."""
-    inner = ", ".join(
-        f"struct({b} AS band, concat_ws('_', mh{2*b}, mh{2*b+1}) AS bkey)"
-        for b in range(_BANDS)
-    )
-    return sig.select(
-        "doc_id", F.expr(f"explode(array({inner}))").alias("bb")
-    ).select("doc_id", "bb.band", "bb.bkey")
 
 
 def _lsh_exact_candidates(
@@ -256,49 +110,16 @@ def _lsh_exact_candidates(
     from ..core.session import cache_parallelism
 
     d = table(spark, sf_dir, "documents")
-    with_sh = d.select("doc_id", _shingles("text").alias("sh"))
     # cache(): bands derives from sig, and the estimate-error audit
     # joins sig twice more for hash-agreement counts
-    sig = _minhash_signatures(d).coalesce(cache_parallelism(spark)).cache()
-    bands = _band_frame(sig)
+    sig = minhash_signatures(d).coalesce(cache_parallelism(spark)).cache()
     # cache(): bands feeds BOTH sides of the candidate self-join (and
     # sig above is already cached, so the signature lineage runs once).
     # coalesce first: cached partitioning is frozen (see cache_parallelism).
-    bands = bands.coalesce(cache_parallelism(spark)).cache()
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cand = (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bkey") == F.col("b.bkey"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    # Verification only touches docs that appear in a candidate pair, so
-    # shingle-set materialization is SEMI-JOINED down to candidate ids
-    # first — at scale the candidate set is orders of magnitude smaller
-    # than the corpus, and caching full shingle arrays for every document
-    # was the dominant cost of this query.
-    # cache(): the pruned sets frame still joins in twice (sa/sb).
-    cand = cand.coalesce(cache_parallelism(spark)).cache()
-    cand_ids = cand.select(F.col("doc_a").alias("doc_id")).union(
-        cand.select(F.col("doc_b").alias("doc_id"))
-    )
-    sets = (
-        with_sh.join(cand_ids, "doc_id", "semi")
-        .select("doc_id", F.array_distinct("sh").alias("ss"))
-        .coalesce(cache_parallelism(spark))
-        .cache()
-    )
-    sa = sets.alias("sa")
-    sb = sets.alias("sb")
-    inter = F.size(F.array_intersect(F.col("sa.ss"), F.col("sb.ss")))
-    uni = F.size(F.col("sa.ss")) + F.size(F.col("sb.ss")) - inter
-    verified = (
-        cand.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
-        .select("doc_a", "doc_b", inter.alias("inter"), uni.alias("uni"))
-    )
-    return sig, verified
+    bands = band_frame(sig).coalesce(cache_parallelism(spark)).cache()
+    cand = candidate_pairs(bands, bands, cache_parallelism(spark))
+    exact, _ = exact_jaccard(cand, d, cache_parallelism(spark), SHINGLE_SET)
+    return sig, exact
 
 
 def _lsh_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -377,6 +198,7 @@ def _fingerprinted_store(
     return reader.parquet(path)
 
 
+@prestaged("dedup_pairs_store")
 def _lsh_pairs_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The verified near-dup pair graph as a MATERIALIZED, corpus-
     fingerprinted parquet store — computed once per corpus version and
@@ -405,9 +227,7 @@ def _ngram_posting_lists(spark: SparkSession, sf_dir: str, cutoff: int = 50) -> 
     on this fresh path so the pipeline cost remains benchmarked) for
     the derivation rationale."""
     d = table(spark, sf_dir, "documents")
-    sets = d.select(
-        "doc_id", F.array_distinct(_shingles("text")).alias("ss")
-    )
+    sets = shingle_sets(d)
     # Shuffle 8-byte shingle hashes, not ~30-byte shingle strings (the
     # hash is injective on the observed vocabulary — collision odds
     # ~1e-7 at 1e6 shingles, and the corpus-wide collision test guards
@@ -422,6 +242,7 @@ def _ngram_posting_lists(spark: SparkSession, sf_dir: str, cutoff: int = 50) -> 
     )
 
 
+@prestaged("ngram_postings_store")
 def _ngram_postings_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The pruned inverted index as a MATERIALIZED, corpus-fingerprinted
     parquet store — the pair-graph-store pattern (``_lsh_pairs_store``)
@@ -471,6 +292,7 @@ def _wordgram_occurrences(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@prestaged("wordgram_store")
 def _wordgram_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word 5-gram occurrences materialized once per corpus version —
     same store pattern as ``_ngram_postings_store``; the gram key is
@@ -485,40 +307,10 @@ def _wordgram_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Shared CTE chain: shingles → signatures → bands → candidates →
-# exact-Jaccard verified pairs at >= 0.5. Reused by minhash_lsh_pairs
-# (emits the pairs) and neardup_component_dedup (closes them into
-# clusters).
-_DUCK_PAIRS_CTES = f"""sh AS ({_DUCK_SHINGLES}),
-    sig AS (SELECT doc_id, {", ".join(_duck_mh(j) for j in range(_N_HASHES))} FROM sh),
-    bands AS (
-        SELECT doc_id, band,
-               CASE band {" ".join(f"WHEN {b} THEN CAST(mh{2*b} AS VARCHAR) || '_' || CAST(mh{2*b+1} AS VARCHAR)" for b in range(_BANDS))} END AS bkey
-        FROM sig CROSS JOIN (SELECT unnest(range({_BANDS})) AS band) bs
-    ),
-    cand AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b ON a.band = b.band AND a.bkey = b.bkey
-                                  AND a.doc_id < b.doc_id
-    ),
-    sets AS (SELECT doc_id, list_distinct(sh) AS ss FROM sh),
-    verified AS (
-        SELECT doc_a, doc_b,
-               len(list_intersect(sa.ss, sb.ss)) AS inter,
-               len(sa.ss) + len(sb.ss) - len(list_intersect(sa.ss, sb.ss)) AS uni
-        FROM cand JOIN sets sa ON sa.doc_id = doc_a
-                  JOIN sets sb ON sb.doc_id = doc_b
-    ),
-    pairs AS (
-        SELECT doc_a, doc_b, round(inter * 1.0 / uni, 4) AS jaccard
-        FROM verified WHERE inter * 1.0 / uni >= 0.5
-    )"""
-
-
 @query(
     "minhash_lsh_pairs",
     oracle=f"""
-    WITH {_DUCK_PAIRS_CTES}
+    WITH {DUCK_PAIRS_CTES}
     SELECT doc_a, doc_b, jaccard FROM pairs
     """,
 )
@@ -533,7 +325,7 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ngram_jaccard_hist",
     oracle=f"""
-    WITH sh AS ({_DUCK_SHINGLES}),
+    WITH sh AS ({DUCK_SHINGLES}),
     ex_all AS (SELECT DISTINCT doc_id, unnest(sh) AS s FROM sh),
     ok AS (SELECT s FROM ex_all GROUP BY s HAVING count(*) <= {{cutoff}}),
     ex AS (SELECT doc_id, ex_all.s FROM ex_all JOIN ok ON ex_all.s = ok.s),
@@ -624,9 +416,9 @@ def _simhash_frame(d: DataFrame) -> DataFrame:
     fingerprint-bucket query and the hamming-1 neighbor query — one
     derivation so the fingerprint space cannot drift between them."""
     # explode → hash once per token → 16 map-side-partial bit-vote sums
-    # (same CollapseProject md5-reinlining rationale as _minhash_signatures)
+    # (same CollapseProject md5-reinlining rationale as minhash_signatures)
     tok = d.select("doc_id", F.explode(F.split(F.col("text"), " ")).alias("t"))
-    h = tok.select("doc_id", _h40(F.col("t")).alias("h"))
+    h = tok.select("doc_id", h40(F.col("t")).alias("h"))
     votes = h.groupBy("doc_id").agg(
         *[
             F.sum(2 * F.shiftright(F.col("h"), b).bitwiseAND(1) - 1).alias(f"v{b}")
@@ -723,155 +515,36 @@ def hamming1_neighbor_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _simhash64_votes_sql() -> str:
-    """The 64 per-bit vote-sum aggregates over (h1, h2) token hashes —
-    one md5 per token (unnest once, hash once, 64 cheap bit probes),
-    matching the Spark derivation stage for stage."""
-    return ", ".join(
-        f"sum(2 * ((h{1 if b < 40 else 2} >> {b if b < 40 else b - 40}) & 1) - 1) AS v{b}"
-        for b in range(64)
-    )
-
-
-def _simhash64_value_sql() -> str:
-    """Signed-64 fingerprint from the vote signs. Bit 63 contributes
-    the MIN-LONG constant (DuckDB raises on ``1::BIGINT << 63``, and
-    the wrapped value is exactly -2^63 — same bit pattern Spark's
-    shiftleft produces)."""
-    terms = [
-        f"CASE WHEN v{b} >= 0 THEN CAST({1 << b} AS BIGINT) ELSE 0 END"
-        for b in range(63)
-    ]
-    terms.append(
-        "CASE WHEN v63 >= 0 THEN CAST(-9223372036854775807 AS BIGINT) - 1 ELSE 0 END"
-    )
-    return "CAST(" + " + ".join(terms) + " AS BIGINT)"
-
-
-def _simhash64_frame(d: DataFrame, parallelism: int | None = None) -> DataFrame:
-    """(doc_id, simhash64): 64-bit SimHash — the standard LLM-corpus
-    near-dup fingerprint width (the 16-bit ``_simhash_frame`` is the
-    didactic demo; 64 bits is what a deployment stores per document).
-    Bits 0..39 vote from the first 40 bits of md5(token), bits 40..63
-    from the next 40 (both halves stay below 2^63 so the UBIGINT ->
-    BIGINT oracle cast can never overflow); the sign bit enters via the
-    wrapped shiftleft (== -2^63), exercising the full signed range.
-
-    The doc frame is keyed-repartitioned BEFORE the explode: a 1-file
-    test-scale scan otherwise runs the token hash + 64 partial vote
-    sums on a single task (the NOTES r9 single-task-stage shape), and
-    at corpus scale this is also the shuffle the groupBy(doc_id) needs
-    anyway — map-side partials then combine on already-colocated
-    keys. ``parallelism`` overrides the width for arrivals-sized
-    callers (the streaming ingest loop passes a small value — 32-way
-    repartition of a micro-batch is pure task overhead)."""
-    from ..core.session import cache_parallelism
-
-    d = d.repartition(
-        parallelism or cache_parallelism(d.sparkSession), "doc_id"
-    )
-    # The 64 vote aggregates and the 64-term value fold are built as
-    # SQL STRINGS parsed JVM-side in a handful of calls: the original
-    # Column-by-Column construction cost ~1.75 s of py4j round-trips
-    # PER PLAN BUILD — paid once for the batch query but once per
-    # MICRO-BATCH by the streaming ingest loop, where it dominated the
-    # drain wall (round 11; the expressions are identical, only their
-    # construction path changed).
-    tok = d.select("doc_id", F.explode(F.split(F.col("text"), " ")).alias("t"))
-    h = tok.select(
-        "doc_id",
-        F.expr("CAST(conv(substring(md5(t), 1, 10), 16, 10) AS BIGINT)").alias("h1"),
-        F.expr("CAST(conv(substring(md5(t), 11, 10), 16, 10) AS BIGINT)").alias("h2"),
-    )
-    votes = h.groupBy("doc_id").agg(
-        *[
-            F.expr(
-                f"sum(2 * (shiftright({'h1' if b < 40 else 'h2'},"
-                f" {b if b < 40 else b - 40}) & 1) - 1) AS v{b}"
-            )
-            for b in range(64)
-        ]
-    )
-    sim_sql = " + ".join(
-        f"(CASE WHEN v{b} >= 0 THEN shiftleft(CAST(1 AS BIGINT), {b})"
-        f" ELSE CAST(0 AS BIGINT) END)"
-        for b in range(64)
-    )
-    return votes.select("doc_id", F.expr(sim_sql).alias("simhash64"))
-
-
-@query(
-    "simhash64_neardup",
-    oracle=f"""
-    WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS t
-                 FROM documents),
-    h AS (SELECT doc_id,
-                 CAST(('0x' || substr(md5(t),1,10))::UBIGINT AS BIGINT) AS h1,
-                 CAST(('0x' || substr(md5(t),11,10))::UBIGINT AS BIGINT) AS h2
-          FROM tok),
-    v AS (SELECT doc_id, {_simhash64_votes_sql()} FROM h GROUP BY doc_id),
-    s AS (SELECT doc_id, {_simhash64_value_sql()} AS fp FROM v),
+_DUCK_SIMHASH64_KEYS = f"""{DUCK_SIMHASH64_CTES},
     fps AS (SELECT fp, CAST(count(*) AS BIGINT) AS n FROM s GROUP BY 1),
     keys AS (
         SELECT fp, n, CAST(t.i AS INTEGER) AS blk,
                (fp >> (16 * CAST(t.i AS INTEGER))) & 65535 AS kv
         FROM fps, UNNEST(range(4)) AS t(i)
-    ),
-    cand AS (
-        SELECT a.blk, xor(a.fp, b.fp) AS x, a.n * b.n AS w
-        FROM keys a JOIN keys b
-          ON a.blk = b.blk AND a.kv = b.kv AND a.fp < b.fp
-    ),
-    pairs AS (
-        SELECT CAST(bit_count(x) AS INTEGER) AS dist, w
-        FROM cand
-        WHERE bit_count(x) <= 3
-          AND blk = CASE WHEN (x >> 0)  & 65535 = 0 THEN 0
-                         WHEN (x >> 16) & 65535 = 0 THEN 1
-                         WHEN (x >> 32) & 65535 = 0 THEN 2
-                         ELSE 3 END
-    ),
-    near AS (
-        SELECT dist, CAST(count(*) AS BIGINT) AS n_fp_pairs,
-               CAST(sum(w) AS BIGINT) AS n_doc_pairs
-        FROM pairs GROUP BY dist
-    ),
-    d0 AS (
+    )"""
+
+_DUCK_D0 = """d0 AS (
         SELECT 0 AS dist, CAST(count(*) AS BIGINT) AS n_fp_pairs,
                CAST(sum(n * (n - 1) // 2) AS BIGINT) AS n_doc_pairs
         FROM fps WHERE n > 1 HAVING count(*) > 0
-    )
-    SELECT * FROM d0 UNION ALL SELECT * FROM near
-    """,
-)
-def simhash64_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """64-bit SimHash near-duplicate detection at Hamming distance <= 3
-    — the deployment-width consumer of the banded
-    ``hamming_k_neighbor_join`` (operators/hamming.py): 4 pigeonhole
-    blocks of 16 bits, candidates from one equi-join on
-    ``(block, block_bits)``, exactly-once emission via the
-    minimal-matching-block rule (no distinct pass), never a bit_count
-    theta join. Per distance 0..3: distinct-fingerprint pair count and
-    document pair count — the dist-0 row counts distinct documents
-    COLLIDING on one fingerprint (bucket C(n,2) sums), i.e. what exact
-    SimHash dedup would collapse, and rows 1..3 are what the banded
-    index adds beyond it. The DuckDB oracle replays the identical
-    banded index, so a pair missed, duplicated, or attributed to the
-    wrong distance breaks the hash.
+    )"""
 
-    Scale: |V|*4 index rows over the distinct-fingerprint vocabulary;
-    expected bucket size |V|/2^16 under a uniform model (hot-block
-    remedies in the operator docstring); merge join pinned because
-    Catalyst cannot see the explode fan-out (NOTES r9)."""
+
+def _simhash64_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(simhash64, n): the corpus' distinct 64-bit fingerprints with
+    their document counts. Cached: it feeds the banded index, both
+    count join-backs and the dist-0 bucket scan."""
     from ..core.session import cache_parallelism
-    from ..operators.hamming import hamming_k_neighbor_join
 
-    s = _simhash64_frame(table(spark, sf_dir, "documents"))
+    s = simhash64_frame(table(spark, sf_dir, "documents"))
     fps = s.groupBy("simhash64").agg(F.count("*").alias("n"))
-    # cached: feeds the banded index, both count join-backs, and the
-    # dist-0 bucket scan
-    fps = fps.coalesce(cache_parallelism(s.sparkSession)).cache()
-    pairs = hamming_k_neighbor_join(fps, "simhash64", bits=64, k=3)
+    return fps.coalesce(cache_parallelism(s.sparkSession)).cache()
+
+
+def _simhash64_pair_counts(fps: DataFrame, pairs: DataFrame) -> DataFrame:
+    """(dist, n_fp_pairs, n_doc_pairs) of the banded index's
+    fingerprint ``pairs``, weighted by ``fps``' document counts, under
+    a dist-0 row of the docs colliding on one fingerprint."""
     na = fps.select(
         F.col("simhash64").cast("long").alias("fp_a"), F.col("n").alias("na")
     )
@@ -906,22 +579,62 @@ def simhash64_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
+    "simhash64_neardup",
+    oracle=f"""
+    WITH {_DUCK_SIMHASH64_KEYS},
+    cand AS (
+        SELECT a.blk, xor(a.fp, b.fp) AS x, a.n * b.n AS w
+        FROM keys a JOIN keys b
+          ON a.blk = b.blk AND a.kv = b.kv AND a.fp < b.fp
+    ),
+    pairs AS (
+        SELECT CAST(bit_count(x) AS INTEGER) AS dist, w
+        FROM cand
+        WHERE bit_count(x) <= 3
+          AND blk = CASE WHEN (x >> 0)  & 65535 = 0 THEN 0
+                         WHEN (x >> 16) & 65535 = 0 THEN 1
+                         WHEN (x >> 32) & 65535 = 0 THEN 2
+                         ELSE 3 END
+    ),
+    near AS (
+        SELECT dist, CAST(count(*) AS BIGINT) AS n_fp_pairs,
+               CAST(sum(w) AS BIGINT) AS n_doc_pairs
+        FROM pairs GROUP BY dist
+    ),
+    {_DUCK_D0}
+    SELECT * FROM d0 UNION ALL SELECT * FROM near
+    """,
+)
+def simhash64_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """64-bit SimHash near-duplicate detection at Hamming distance <= 3
+    — the deployment-width consumer of the banded
+    ``hamming_k_neighbor_join`` (operators/hamming.py): 4 pigeonhole
+    blocks of 16 bits, candidates from one equi-join on
+    ``(block, block_bits)``, exactly-once emission via the
+    minimal-matching-block rule (no distinct pass), never a bit_count
+    theta join. Per distance 0..3: distinct-fingerprint pair count and
+    document pair count — the dist-0 row counts distinct documents
+    COLLIDING on one fingerprint (bucket C(n,2) sums), i.e. what exact
+    SimHash dedup would collapse, and rows 1..3 are what the banded
+    index adds beyond it. The DuckDB oracle replays the identical
+    banded index, so a pair missed, duplicated, or attributed to the
+    wrong distance breaks the hash.
+
+    Scale: |V|*4 index rows over the distinct-fingerprint vocabulary;
+    expected bucket size |V|/2^16 under a uniform model (hot-block
+    remedies in the operator docstring); merge join pinned because
+    Catalyst cannot see the explode fan-out (NOTES r9)."""
+    from ..operators.hamming import hamming_k_neighbor_join
+
+    fps = _simhash64_fps(spark, sf_dir)
+    pairs = hamming_k_neighbor_join(fps, "simhash64", bits=64, k=3)
+    return _simhash64_pair_counts(fps, pairs)
+
+
+@query(
     "simhash64_neardup_capped",
     oracle=f"""
-    WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS t
-                 FROM documents),
-    h AS (SELECT doc_id,
-                 CAST(('0x' || substr(md5(t),1,10))::UBIGINT AS BIGINT) AS h1,
-                 CAST(('0x' || substr(md5(t),11,10))::UBIGINT AS BIGINT) AS h2
-          FROM tok),
-    v AS (SELECT doc_id, {_simhash64_votes_sql()} FROM h GROUP BY doc_id),
-    s AS (SELECT doc_id, {_simhash64_value_sql()} AS fp FROM v),
-    fps AS (SELECT fp, CAST(count(*) AS BIGINT) AS n FROM s GROUP BY 1),
-    keys AS (
-        SELECT fp, n, CAST(t.i AS INTEGER) AS blk,
-               (fp >> (16 * CAST(t.i AS INTEGER))) & 65535 AS kv
-        FROM fps, UNNEST(range(4)) AS t(i)
-    ),
+    WITH {_DUCK_SIMHASH64_KEYS},
     surv AS (
         SELECT blk, kv FROM keys GROUP BY blk, kv HAVING count(*) <= 4
     ),
@@ -941,11 +654,7 @@ def simhash64_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         JOIN fps nb ON nb.fp = fb
         GROUP BY dist
     ),
-    d0 AS (
-        SELECT 0 AS dist, CAST(count(*) AS BIGINT) AS n_fp_pairs,
-               CAST(sum(n * (n - 1) // 2) AS BIGINT) AS n_doc_pairs
-        FROM fps WHERE n > 1 HAVING count(*) > 0
-    ),
+    {_DUCK_D0},
     cut AS (
         SELECT CAST(count(*) AS BIGINT) AS n_buckets_cut
         FROM (SELECT blk, kv FROM keys GROUP BY blk, kv
@@ -976,43 +685,12 @@ def simhash64_neardup_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     Candidate volume is bounded by n_buckets * cap^2/2 whatever the
     skew — the 1M planted-skew run in SCALING.md measured 676.9 s
     uncapped vs 4.5 s capped."""
-    from ..core.session import cache_parallelism
     from ..operators.hamming import band_keys, hamming_k_neighbor_join
 
     cap = 4
-    s = _simhash64_frame(table(spark, sf_dir, "documents"))
-    fps = s.groupBy("simhash64").agg(F.count("*").alias("n"))
-    fps = fps.coalesce(cache_parallelism(s.sparkSession)).cache()
+    fps = _simhash64_fps(spark, sf_dir)
     pairs = hamming_k_neighbor_join(
         fps, "simhash64", bits=64, k=3, max_bucket=cap
-    )
-    na = fps.select(
-        F.col("simhash64").cast("long").alias("fp_a"), F.col("n").alias("na")
-    )
-    nb = fps.select(
-        F.col("simhash64").cast("long").alias("fp_b"), F.col("n").alias("nb")
-    )
-    near = (
-        pairs.join(na, "fp_a")
-        .join(nb, "fp_b")
-        .groupBy("dist")
-        .agg(
-            F.count("*").alias("n_fp_pairs"),
-            F.sum(F.col("na") * F.col("nb"))
-            .cast("bigint")
-            .alias("n_doc_pairs"),
-        )
-    )
-    d0 = (
-        fps.where(F.col("n") > 1)
-        .agg(
-            F.count("*").alias("n_fp_pairs"),
-            F.sum(F.expr("n * (n - 1) div 2"))
-            .cast("bigint")
-            .alias("n_doc_pairs"),
-        )
-        .where(F.col("n_fp_pairs") > 0)
-        .select(F.lit(0).alias("dist"), "n_fp_pairs", "n_doc_pairs")
     )
     cut = (
         band_keys(
@@ -1024,10 +702,7 @@ def simhash64_neardup_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("count") > cap)
         .agg(F.count("*").cast("bigint").alias("n_buckets_cut"))
     )
-    return (
-        d0.unionByName(near.select("dist", "n_fp_pairs", "n_doc_pairs"))
-        .crossJoin(F.broadcast(cut))
-    )
+    return _simhash64_pair_counts(fps, pairs).crossJoin(F.broadcast(cut))
 
 
 @query(
@@ -1272,7 +947,7 @@ def fuzzy_match_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "neardup_component_dedup",
     oracle=f"""
-    WITH RECURSIVE {_DUCK_PAIRS_CTES},
+    WITH RECURSIVE {DUCK_PAIRS_CTES},
     edges AS (
         SELECT doc_a AS a, doc_b AS b FROM pairs
         UNION SELECT doc_b, doc_a FROM pairs
@@ -1342,7 +1017,7 @@ _DUCK_LPA_CHAIN = "".join(
 @query(
     "label_prop_communities",
     oracle=f"""
-    WITH {_DUCK_PAIRS_CTES},
+    WITH {DUCK_PAIRS_CTES},
     sym AS (
         SELECT doc_a AS a, doc_b AS b FROM pairs
         UNION SELECT doc_b, doc_a FROM pairs
@@ -1412,7 +1087,7 @@ _DUCK_KCORE_ROWS = " UNION ALL ".join(
 @query(
     "kcore_neardup",
     oracle=f"""
-    WITH {_DUCK_PAIRS_CTES},
+    WITH {DUCK_PAIRS_CTES},
     sym AS (
         SELECT doc_a AS a, doc_b AS b FROM pairs
         UNION SELECT doc_b, doc_a FROM pairs
@@ -1476,7 +1151,7 @@ _DUCK_HB_ROWS = " UNION ALL ".join(
 @query(
     "hyperball_reach",
     oracle=f"""
-    WITH {_DUCK_PAIRS_CTES},
+    WITH {DUCK_PAIRS_CTES},
     sym AS (
         SELECT doc_a AS a, doc_b AS b FROM pairs
         UNION SELECT doc_b, doc_a FROM pairs
@@ -1675,8 +1350,8 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = d.select(
         "doc_id",
         "lang",
-        F.posexplode(_shingles("text")).alias("pos", "s0"),
-    ).select("doc_id", "lang", "pos", _h40(F.col("s0")).alias("h"))
+        F.posexplode(shingles("text")).alias("pos", "s0"),
+    ).select("doc_id", "lang", "pos", h40(F.col("s0")).alias("h"))
     packed = F.col("h") * F.lit(1048576) + (F.lit(1048575) - F.col("pos"))
     w = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(0, 3)
     sel = sh.select(
@@ -1817,7 +1492,7 @@ def dup_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "neardup_triangle_stats",
     oracle=f"""
-    WITH {_DUCK_PAIRS_CTES},
+    WITH {DUCK_PAIRS_CTES},
     wedges AS (
         SELECT p1.doc_a AS a, p1.doc_b AS b, p2.doc_b AS c
         FROM pairs p1 JOIN pairs p2 ON p1.doc_b = p2.doc_a
@@ -1949,7 +1624,7 @@ def pagerank_fixed_point(
 @query(
     "pagerank_neardup",
     oracle=f"""
-    WITH {_DUCK_PAIRS_CTES},
+    WITH {DUCK_PAIRS_CTES},
     edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
               UNION ALL
               SELECT doc_b AS src, doc_a AS dst FROM pairs),
@@ -2030,7 +1705,7 @@ def pagerank_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ngram_containment_hist",
     oracle=f"""
-    WITH sh AS ({_DUCK_SHINGLES}),
+    WITH sh AS ({DUCK_SHINGLES}),
     ex_all AS (SELECT DISTINCT doc_id, unnest(sh) AS s FROM sh),
     ok AS (SELECT s FROM ex_all GROUP BY s HAVING count(*) <= 50),
     ex AS (SELECT doc_id, ex_all.s FROM ex_all JOIN ok ON ex_all.s = ok.s),
@@ -2113,7 +1788,7 @@ def ngram_containment_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "pair_rouge_stats",
     oracle=f"""
-    WITH {_DUCK_PAIRS_CTES},
+    WITH {DUCK_PAIRS_CTES},
     toks AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS ts
              FROM documents),
     scored AS (
@@ -2170,15 +1845,15 @@ def pair_rouge_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "minhash_estimate_error",
     oracle=f"""
-    WITH {_DUCK_PAIRS_CTES},
+    WITH {DUCK_PAIRS_CTES},
     agr AS (
         SELECT doc_a, doc_b,
-               ({" + ".join(f"CASE WHEN sa.mh{j} = sb.mh{j} THEN 1 ELSE 0 END" for j in range(_N_HASHES))}) AS agree
+               ({" + ".join(f"CASE WHEN sa.mh{j} = sb.mh{j} THEN 1 ELSE 0 END" for j in range(N_HASHES))}) AS agree
         FROM cand JOIN sig sa ON sa.doc_id = doc_a
                   JOIN sig sb ON sb.doc_id = doc_b
     )
-    SELECT CAST(abs(agree * uni - {_N_HASHES} * inter) * 10
-                // ({_N_HASHES} * uni) AS INTEGER) AS err_decile,
+    SELECT CAST(abs(agree * uni - {N_HASHES} * inter) * 10
+                // ({N_HASHES} * uni) AS INTEGER) AS err_decile,
            count(*) AS n_pairs,
            CAST(sum(agree) AS BIGINT) AS sum_agree,
            CAST(sum(inter) AS BIGINT) AS sum_inter,
@@ -2204,7 +1879,7 @@ def minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     gb = sig.alias("gb")
     agree = sum(
         (F.col(f"ga.mh{j}") == F.col(f"gb.mh{j}")).cast("int")
-        for j in range(_N_HASHES)
+        for j in range(N_HASHES)
     )
     j = (
         exact.join(ga, F.col("doc_a") == F.col("ga.doc_id"))
@@ -2212,8 +1887,8 @@ def minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b", "inter", "uni", agree.alias("agree"))
     )
     err_decile = F.expr(
-        f"CAST(abs(agree * uni - {_N_HASHES} * inter) * 10"
-        f" DIV ({_N_HASHES} * uni) AS INT)"
+        f"CAST(abs(agree * uni - {N_HASHES} * inter) * 10"
+        f" DIV ({N_HASHES} * uni) AS INT)"
     )
     return (
         j.groupBy(err_decile.alias("err_decile"))
@@ -2229,7 +1904,7 @@ def minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "lsh_incremental_pairs",
     oracle=f"""
-    WITH {_DUCK_PAIRS_CTES},
+    WITH {DUCK_PAIRS_CTES},
     inc AS (
         SELECT doc_a, doc_b FROM pairs
         WHERE doc_a % 10 = 0 OR doc_b % 10 = 0
@@ -2274,7 +1949,6 @@ def lsh_incremental_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..core.session import cache_parallelism
 
     d = table(spark, sf_dir, "documents")
-    with_sh = d.select("doc_id", _shingles("text").alias("sh"))
     # the band table IS the persisted index this query's deployment
     # story describes — read the materialized `_minhash_bands_store`
     # (row-identical to the fresh pipeline by test) instead of
@@ -2287,41 +1961,10 @@ def lsh_incremental_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cache()
     )
     is_batch = F.col("doc_id") % 10 == 0
-    probe = bands.where(is_batch)
-    a = probe.alias("a")
-    b = bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") != F.col("b.doc_id")),
-        )
-        .select(
-            F.least("a.doc_id", "b.doc_id").alias("doc_a"),
-            F.greatest("a.doc_id", "b.doc_id").alias("doc_b"),
-        )
-        .distinct()
-        .coalesce(cache_parallelism(spark))
-        .cache()
-    )
-    cand_ids = cand.select(F.col("doc_a").alias("doc_id")).union(
-        cand.select(F.col("doc_b").alias("doc_id"))
-    )
-    sets = (
-        with_sh.join(cand_ids, "doc_id", "semi")
-        .select("doc_id", F.array_distinct("sh").alias("ss"))
-        .coalesce(cache_parallelism(spark))
-        .cache()
-    )
-    sa = sets.alias("sa")
-    sb = sets.alias("sb")
-    inter = F.size(F.array_intersect(F.col("sa.ss"), F.col("sb.ss")))
-    uni = F.size(F.col("sa.ss")) + F.size(F.col("sb.ss")) - inter
+    cand = candidate_pairs(bands.where(is_batch), bands, cache_parallelism(spark))
+    exact, _ = exact_jaccard(cand, d, cache_parallelism(spark), SHINGLE_SET)
     inc = (
-        cand.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
-        .where(inter / uni >= 0.5)
+        exact.where(F.col("inter") / F.col("uni") >= 0.5)
         .select("doc_a", "doc_b")
         .coalesce(cache_parallelism(spark))
         .cache()
@@ -2419,7 +2062,7 @@ def cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "pos",
         "word",
-        (_h40(F.col("word")) % 8 == 0).cast("int").alias("isb"),
+        (h40(F.col("word")) % 8 == 0).cast("int").alias("isb"),
     )
     win = Window.partitionBy("doc_id").orderBy("pos")
     ck = fl.select(
@@ -2588,21 +2231,21 @@ def er_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("a.nm").alias("na"), F.col("b.nm").alias("nb"))
         .distinct()
     )
-    # node ids: the shared 40-bit md5 hash (``_h40``) — the closure's
+    # node ids: the shared 40-bit md5 hash (``h40``) — the closure's
     # convergence monotone sums node ids, so string nodes hash first
     # (collision-free at vocabulary cardinality; the shingle-collision
     # test guards the same hash corpus-wide)
     edges = cand.where(F.levenshtein("na", "nb") <= 1).select(
-        _h40(F.col("na")).alias("ha"), _h40(F.col("nb")).alias("hb")
+        h40(F.col("na")).alias("ha"), h40(F.col("nb")).alias("hb")
     )
     comp = connected_components(edges, "ha", "hb")
     labeled = dirty.join(
-        comp, _h40(dirty.nm) == comp.node, "left"
+        comp, h40(dirty.nm) == comp.node, "left"
     ).select(
         "p_partkey",
         "p_retailprice",
         "nm",
-        F.coalesce(F.col("comp"), _h40(F.col("nm"))).alias("ent"),
+        F.coalesce(F.col("comp"), h40(F.col("nm"))).alias("ent"),
     )
     # Survivorship, cluster size, and variant count in ONE entity-keyed
     # aggregation (r12 stage diet — was a row_number window + a second
@@ -2637,7 +2280,7 @@ def er_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "cross_source_dup_rate",
     oracle=f"""
-    WITH {_DUCK_PAIRS_CTES}
+    WITH {DUCK_PAIRS_CTES}
     SELECT least(da.source, db.source) AS src_lo,
            greatest(da.source, db.source) AS src_hi,
            least(da.source, db.source)
@@ -2707,7 +2350,7 @@ def cross_source_dup_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "minhash_lsh_capped",
     oracle=f"""
-    WITH {_DUCK_PAIRS_CTES},
+    WITH {DUCK_PAIRS_CTES},
     census AS (
         SELECT band, bkey, count(*) AS k FROM bands GROUP BY band, bkey
     ),
@@ -2718,16 +2361,14 @@ def cross_source_dup_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM sbands a JOIN sbands b ON a.band = b.band AND a.bkey = b.bkey
                                     AND a.doc_id < b.doc_id
     ),
-    cver AS (
-        SELECT doc_a, doc_b,
-               round(len(list_intersect(sa.ss, sb.ss)) * 1.0
-                     / (len(sa.ss) + len(sb.ss)
-                        - len(list_intersect(sa.ss, sb.ss))), 4) AS jaccard
+    cex AS (
+        SELECT doc_a, doc_b, {duck_jaccard()}
         FROM ccand JOIN sets sa ON sa.doc_id = doc_a
                    JOIN sets sb ON sb.doc_id = doc_b
-        WHERE len(list_intersect(sa.ss, sb.ss)) * 1.0
-              / (len(sa.ss) + len(sb.ss)
-                 - len(list_intersect(sa.ss, sb.ss))) >= 0.5
+    ),
+    cver AS (
+        SELECT doc_a, doc_b, round(inter * 1.0 / uni, 4) AS jaccard
+        FROM cex WHERE inter * 1.0 / uni >= 0.5
     ),
     cut AS (
         SELECT CAST(count(*) AS BIGINT) AS n_buckets_cut,
@@ -2781,53 +2422,11 @@ def minhash_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     census = census.coalesce(cache_parallelism(spark)).cache()
     surv = census.where(F.col("k") <= cap).select("band", "bkey")
     sbands = bands.join(surv, ["band", "bkey"])
-    a = sbands.alias("a")
-    b = sbands.alias("b")
-    # cand and sets are each consumed by BOTH sides of the verify join
-    # (sa/sb lineage) — cache the candidate-bounded frames so the
-    # band self-join and the shingle derivation run once (the dbscan
-    # review lesson); ids prune the docs BEFORE shingling
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-        .coalesce(scaled_width(spark))
-        .cache()
-    )
-    # ONE scan of cand, not a union of two selects: the union's two
-    # branches evaluated the COLD cand cache concurrently inside the
-    # semi-join's broadcast-build thread — the NOTES cold-cache race —
-    # computing the band self-join twice on first use (profiled r15:
-    # first-in-session 6.9 -> 2.6 s, steady min 1.62 -> 1.48 s, back
-    # at the r12 time; same id set, values unchanged)
-    ids = cand.select(
-        F.explode(F.array("doc_a", "doc_b")).alias("doc_id")
-    ).distinct()
-    sets = (
-        d.join(ids, "doc_id", "semi")
-        .select(
-            "doc_id",
-            F.expr(f"array_distinct({_shingles_sql('text')})").alias("ss"),
-        )
-        .coalesce(scaled_width(spark))
-        .cache()
-    )
-    sa = sets.alias("sa")
-    sb = sets.alias("sb")
-    inter = F.size(F.array_intersect(F.col("sa.ss"), F.col("sb.ss")))
-    uni = F.size(F.col("sa.ss")) + F.size(F.col("sb.ss")) - inter
-    pairs = (
-        cand.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
-        .where(inter * 1.0 / uni >= 0.5)
-        .select(
-            "doc_a", "doc_b", F.round(inter * 1.0 / uni, 4).alias("jaccard")
-        )
+    cand = candidate_pairs(sbands, sbands, scaled_width(spark))
+    exact, _ = exact_jaccard(cand, d, scaled_width(spark), SHINGLE_SET)
+    jac = F.col("inter") * 1.0 / F.col("uni")
+    pairs = exact.where(jac >= 0.5).select(
+        "doc_a", "doc_b", F.round(jac, 4).alias("jaccard")
     )
     cut = census.where(F.col("k") > cap).agg(
         F.count("*").cast("bigint").alias("n_buckets_cut"),
@@ -2849,7 +2448,7 @@ def minhash_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "hot_bucket_rep_dedup",
     oracle=f"""
-    WITH {_DUCK_PAIRS_CTES},
+    WITH {DUCK_PAIRS_CTES},
     census AS (
         SELECT band, bkey, count(*) AS k FROM bands GROUP BY band, bkey
     ),
@@ -2864,12 +2463,10 @@ def minhash_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE hb.doc_id <> rep.rep
     ),
     ver AS (
-        SELECT mem.doc_id,
-               round(len(list_intersect(sm.ss, sr.ss)) * 1.0
-                     / (len(sm.ss) + len(sr.ss)
-                        - len(list_intersect(sm.ss, sr.ss))), 4) AS j
-        FROM mem JOIN sets sm ON sm.doc_id = mem.doc_id
-                 JOIN sets sr ON sr.doc_id = mem.rep
+        SELECT doc_id, round(inter * 1.0 / uni, 4) AS j
+        FROM (SELECT mem.doc_id, {duck_jaccard("sm", "sr")}
+              FROM mem JOIN sets sm ON sm.doc_id = mem.doc_id
+                       JOIN sets sr ON sr.doc_id = mem.rep)
     ),
     per_doc AS (
         SELECT doc_id, max(j) AS best_j,
@@ -2940,42 +2537,19 @@ def hot_bucket_rep_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     hot = census.where(F.col("k") > cap).select("band", "bkey")
     hb = bands.join(hot, ["band", "bkey"])
     rep = hb.groupBy("band", "bkey").agg(F.min("doc_id").alias("rep"))
-    # mem and sets both feed two branches of the verify join — cache
-    # the member-bounded frames so the hot-bucket join and the shingle
-    # derivation run once; ids prune the docs BEFORE shingling
+    # mem feeds both the id prune and the verify join: cached so the
+    # hot-bucket join runs once
     mem = (
         hb.join(rep, ["band", "bkey"])
         .where(F.col("doc_id") != F.col("rep"))
-        .select("doc_id", "rep")
+        .select(F.col("doc_id").alias("m_doc"), F.col("rep").alias("m_rep"))
         .distinct()
         .coalesce(scaled_width(spark))
         .cache()
     )
-    # ONE scan of mem (the minhash_lsh_capped cold-cache-race fix —
-    # see the ids derivation there): same id set, values unchanged
-    ids = mem.select(
-        F.explode(F.array("doc_id", "rep")).alias("doc_id")
-    ).distinct()
-    sets = (
-        d.join(ids, "doc_id", "semi")
-        .select(
-            "doc_id",
-            F.expr(f"array_distinct({_shingles_sql('text')})").alias("ss"),
-        )
-        .coalesce(scaled_width(spark))
-        .cache()
-    )
-    sm = sets.alias("sm")
-    sr = sets.alias("sr")
-    inter = F.size(F.array_intersect(F.col("sm.ss"), F.col("sr.ss")))
-    uni = F.size(F.col("sm.ss")) + F.size(F.col("sr.ss")) - inter
-    mem2 = mem.select(
-        F.col("doc_id").alias("m_doc"), F.col("rep").alias("m_rep")
-    )
-    ver = (
-        mem2.join(sm, F.col("m_doc") == F.col("sm.doc_id"))
-        .join(sr, F.col("m_rep") == F.col("sr.doc_id"))
-        .select("m_doc", F.round(inter * 1.0 / uni, 4).alias("j"))
+    exact, _ = exact_jaccard(mem, d, scaled_width(spark), SHINGLE_SET)
+    ver = exact.select(
+        "m_doc", F.round(F.col("inter") * 1.0 / F.col("uni"), 4).alias("j")
     )
     per_doc = ver.groupBy("m_doc").agg(
         F.max("j").alias("best_j"),
@@ -2999,6 +2573,7 @@ def hot_bucket_rep_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@prestaged("minhash_bands_store")
 def _minhash_bands_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The (doc_id, band, bkey) MinHash band index as a MATERIALIZED,
     corpus-fingerprinted parquet store — the pair-graph-store pattern
@@ -3014,8 +2589,8 @@ def _minhash_bands_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-identical (pinned by ``test_bands_store_matches_fresh``)."""
     return _fingerprinted_store(
         spark, sf_dir, "bands", "bands-v4",
-        lambda: _band_frame(
-            _minhash_signatures(table(spark, sf_dir, "documents"))
+        lambda: band_frame(
+            minhash_signatures(table(spark, sf_dir, "documents"))
         ),
         schema="doc_id bigint, band int, bkey string",
         keys=("band", "bkey"),
@@ -3032,39 +2607,13 @@ def _minhash_bands_store(spark: SparkSession, sf_dir: str) -> DataFrame:
 # dedup family the same way minhash/simhash do.
 # ---------------------------------------------------------------------------
 
-_PARA_W = 8  # words per paragraph unit (the synthetic corpus has no
-# newline structure, so fixed non-overlapping 8-word windows stand in
-# for paragraphs; on a real crawl this is split(text, '\n\n'))
-
-
-def _para_units_sql(words_expr: str) -> str:
-    """SQL expr: the array of xxhash64 keys of ``words_expr``'s
-    non-overlapping ``_PARA_W``-word units (empty for shorter docs).
-    The ONE definition of the paragraph-unit hash — shared by
-    `paragraph_dedup_stats` and the streaming ingest
-    (streaming/paragraph_ingest.py), so a width change cannot split
-    the batch and streaming semantics apart (their cross-validation at
-    1M docs is a SCALING.md claim)."""
-    return (
-        f"CASE WHEN size({words_expr}) >= {_PARA_W} THEN"
-        f" transform(sequence(0, size({words_expr}) DIV {_PARA_W} - 1),"
-        f" i -> xxhash64(concat_ws(' ',"
-        f" slice({words_expr}, i*{_PARA_W} + 1, {_PARA_W}))))"
-        " ELSE array() END"
-    )
-
-
 @query(
     "paragraph_dedup_stats",
     oracle=f"""
     WITH w AS (
         SELECT doc_id, lang, string_split(text, ' ') AS ws FROM documents
     ),
-    ch AS (
-        SELECT doc_id, lang, CAST(i AS BIGINT) AS chunk_no,
-               array_to_string(ws[(i*{_PARA_W}+1):(i*{_PARA_W}+{_PARA_W})], ' ') AS chunk
-        FROM w, unnest(range(CAST(floor(len(ws)/{_PARA_W}) AS BIGINT))) AS t(i)
-    ),
+    ch AS ({duck_para_chunks("doc_id, lang")}),
     marked AS (
         SELECT doc_id, lang,
                CASE WHEN row_number() OVER (
@@ -3113,7 +2662,7 @@ def paragraph_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ch = d.select(
         "doc_id",
         "lang",
-        F.posexplode(F.expr(_para_units_sql("w"))).alias("chunk_no", "h"),
+        F.posexplode(F.expr(para_units_sql("w"))).alias("chunk_no", "h"),
     )
     first = ch.groupBy("h").agg(
         F.min(F.struct("doc_id", "chunk_no")).alias("f")

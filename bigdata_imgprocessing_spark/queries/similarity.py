@@ -29,12 +29,17 @@ from ..operators.similarity import (
     codebook,
     duck_codebook,
     duck_cosine,
+    duck_idot,
+    duck_int8,
     duck_label_cells,
     duck_nearest_centroid,
     duck_norm,
     duck_query_rank,
     duck_sqdist,
     duck_top_k,
+    idot,
+    int8,
+    int8_scale,
     label_centers,
     label_centroids,
     nearest_centroid,
@@ -80,23 +85,6 @@ def _duck_qprobe(n_probe: int) -> str:
             FROM dists WHERE vec_id IN {_QUERY_IDS}
         ) WHERE prn <= {n_probe}
     )"""
-
-
-def _duck_int8(col: str) -> str:
-    """int8 quantization of an embedding list — mirrors the Spark
-    expression in quantized_ann_recall, ann_rerank_topk and
-    mmr_diverse_topk."""
-    return (
-        f"list_transform({col}, x -> CAST(floor(x::DOUBLE * 127 / "
-        f"greatest(list_max(list_transform({col}, y -> abs(y::DOUBLE))), 1e-30)"
-        f" + 0.5) AS BIGINT))"
-    )
-
-
-def _duck_idot(a: str, b: str) -> str:
-    return (
-        f"list_sum(list_transform(range(len({a})), i -> {a}[i+1] * {b}[i+1]))"
-    )
 
 
 @query(
@@ -430,13 +418,13 @@ def embedding_batch_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     "quantized_ann_recall",
     oracle=f"""
     WITH qz AS (
-        SELECT vec_id, embedding, {_duck_int8("embedding")} AS qv FROM embeddings
+        SELECT vec_id, embedding, {duck_int8("embedding")} AS qv FROM embeddings
     ),
     {_duck_q("embedding AS qe, qv AS qqv", "qz")},
     scored AS (
         SELECT q.query_id, e.vec_id,
                {_DUCK_COS} AS cos_sim,
-               {_duck_idot("e.qv", "q.qqv")} AS qdot
+               {duck_idot("e.qv", "q.qqv")} AS qdot
         FROM qz e CROSS JOIN q
         WHERE e.vec_id != q.query_id
     ), ranked AS (
@@ -471,24 +459,12 @@ def quantized_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     heaps exactly as ``embedding_model_scores`` does."""
     e = table(spark, sf_dir, "embeddings")
     based = e.select(
-        "vec_id",
-        "embedding",
-        F.greatest(
-            F.aggregate(
-                F.transform(F.col("embedding"), lambda x: F.abs(x.cast("double"))),
-                F.lit(0.0),
-                lambda acc, x: F.greatest(acc, x),
-            ),
-            F.lit(1e-30),
-        ).alias("ma"),
+        "vec_id", "embedding", int8_scale(F.col("embedding")).alias("ma")
     )
     qz = based.select(
         "vec_id",
         "embedding",
-        F.transform(
-            F.col("embedding"),
-            lambda x: F.floor(x.cast("double") * 127 / F.col("ma") + 0.5).cast("bigint"),
-        ).alias("qv"),
+        int8(F.col("embedding"), F.col("ma")).alias("qv"),
         norm(F.col("embedding")).alias("en"),
     )
     q = F.broadcast(
@@ -497,16 +473,12 @@ def quantized_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("en").alias("qn"),
         )
     )
-    idot = F.aggregate(
-        F.zip_with(F.col("qv"), F.col("qqv"), lambda a, b: a * b),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
     scored = (
         qz.crossJoin(q)
         .where(F.col("vec_id") != F.col("query_id"))
         .select(
-            "query_id", "vec_id", rounded_cosine().alias("cos_sim"), idot.alias("qdot")
+            "query_id", "vec_id", rounded_cosine().alias("cos_sim"),
+            idot(F.col("qv"), F.col("qqv")).alias("qdot"),
         )
     )
     ranked = scored.select(
@@ -921,14 +893,14 @@ def pq_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ann_rerank_topk",
     oracle=f"""
     WITH qz AS (
-        SELECT vec_id, embedding, {_duck_int8("embedding")} AS qv FROM embeddings
+        SELECT vec_id, embedding, {duck_int8("embedding")} AS qv FROM embeddings
     ),
     {_duck_q("embedding AS qe, qv AS qqv", "qz")},
     cand AS (
         SELECT query_id, vec_id, embedding, qe FROM (
             SELECT *, {duck_query_rank("qdot")} AS prn FROM (
                 SELECT q.query_id, e.vec_id, e.embedding, q.qe,
-                       {_duck_idot("e.qv", "q.qqv")} AS qdot
+                       {duck_idot("e.qv", "q.qqv")} AS qdot
                 FROM qz e CROSS JOIN q WHERE e.vec_id != q.query_id)
         ) WHERE prn <= 20
     ), scored AS (
@@ -959,26 +931,12 @@ def ann_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact float work is candidate-bounded, never corpus-bounded."""
     e = table(spark, sf_dir, "embeddings")
     based = e.select(
-        "vec_id",
-        "embedding",
-        F.greatest(
-            F.aggregate(
-                F.transform(F.col("embedding"), lambda x: F.abs(x.cast("double"))),
-                F.lit(0.0),
-                lambda acc, x: F.greatest(acc, x),
-            ),
-            F.lit(1e-30),
-        ).alias("ma"),
+        "vec_id", "embedding", int8_scale(F.col("embedding")).alias("ma")
     )
     qz = based.select(
         "vec_id",
         "embedding",
-        F.transform(
-            F.col("embedding"),
-            lambda x: F.floor(x.cast("double") * 127 / F.col("ma") + 0.5).cast(
-                "bigint"
-            ),
-        ).alias("qv"),
+        int8(F.col("embedding"), F.col("ma")).alias("qv"),
         norm(F.col("embedding")).alias("en"),
     )
     q = F.broadcast(
@@ -987,16 +945,11 @@ def ann_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("en").alias("qn"),
         )
     )
-    idot = F.aggregate(
-        F.zip_with(F.col("qv"), F.col("qqv"), lambda a, b: a * b),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
     cand = top_k_per_query(
         qz.crossJoin(q)
         .where(F.col("vec_id") != F.col("query_id"))
         .select("query_id", "vec_id", "embedding", "en", "qe", "qn",
-                idot.alias("qdot")),
+                idot(F.col("qv"), F.col("qqv")).alias("qdot")),
         20, "qdot", rank="prn",
     )
     rer = cand.select("query_id", "vec_id", rounded_cosine().alias("cos_sim"))
@@ -1250,28 +1203,28 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     "mmr_diverse_topk",
     oracle=f"""
     WITH qz AS (
-        SELECT vec_id, {_duck_int8("embedding")} AS qv FROM embeddings
+        SELECT vec_id, {duck_int8("embedding")} AS qv FROM embeddings
     ),
     {_duck_q("qv AS qqv", "qz")},
     cand AS (
         SELECT query_id, vec_id, qv, rel FROM (
             SELECT *, {duck_query_rank("rel")} AS prn FROM (
-                SELECT q.query_id, e.vec_id, e.qv, {_duck_idot("e.qv", "q.qqv")} AS rel
+                SELECT q.query_id, e.vec_id, e.qv, {duck_idot("e.qv", "q.qqv")} AS rel
                 FROM qz e CROSS JOIN q WHERE e.vec_id != q.query_id)
         ) WHERE prn <= 10
     ),
     s1 AS (SELECT query_id, vec_id, qv, rel FROM (
             SELECT *, {duck_query_rank("rel")} AS rn FROM cand) WHERE rn = 1),
     p2 AS (SELECT c.query_id, c.vec_id, c.qv, c.rel,
-                  {_duck_idot("c.qv", "s.qv")} AS msim
+                  {duck_idot("c.qv", "s.qv")} AS msim
            FROM cand c JOIN s1 s USING (query_id)
            WHERE c.vec_id != s.vec_id),
     s2 AS (SELECT query_id, vec_id, qv, rel, msim FROM (
             SELECT *, {duck_query_rank("2 * rel - msim")} AS rn FROM p2)
            WHERE rn = 1),
     p3 AS (SELECT c.query_id, c.vec_id, c.rel,
-                  greatest({_duck_idot("c.qv", "s1.qv")},
-                           {_duck_idot("c.qv", "s2.qv")}) AS msim
+                  greatest({duck_idot("c.qv", "s1.qv")},
+                           {duck_idot("c.qv", "s2.qv")}) AS msim
            FROM cand c JOIN s1 USING (query_id) JOIN s2 USING (query_id)
            WHERE c.vec_id != s1.vec_id AND c.vec_id != s2.vec_id),
     s3 AS (SELECT query_id, vec_id, rel, msim FROM (
@@ -1308,29 +1261,9 @@ def mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..core.session import cache_parallelism
 
     e = table(spark, sf_dir, "embeddings")
-    ma = F.greatest(
-        F.aggregate(
-            F.transform(F.col("embedding"), lambda x: F.abs(x.cast("double"))),
-            F.lit(0.0),
-            lambda acc, x: F.greatest(acc, x),
-        ),
-        F.lit(1e-30),
-    )
-    qz = e.select(
-        "vec_id",
-        F.transform(
-            F.col("embedding"),
-            lambda x: F.floor(x.cast("double") * 127 / ma + 0.5).cast("bigint"),
-        ).alias("qv"),
-    )
+    emb = F.col("embedding")
+    qz = e.select("vec_id", int8(emb, int8_scale(emb)).alias("qv"))
     q = F.broadcast(_query_side(qz, F.col("qv").alias("qqv")))
-
-    def idot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
-        )
 
     cand = (
         top_k_per_query(

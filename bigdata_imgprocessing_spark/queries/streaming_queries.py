@@ -10,8 +10,17 @@ from pyspark.sql import functions as F
 
 from ..core import fs
 from ..core.catalog import table
-from ..core.registry import query
+from ..core.registry import prestaged, query
 from ..core.session import ensure_utc, local_frame
+from ..operators.neardup import (
+    DUCK_PAIRS_CTES,
+    DUCK_SIMHASH64_CTES,
+    WORDGRAM_N,
+    duck_jaccard,
+    duck_para_chunks,
+    duck_wordgram_5h,
+    wordgram_5h,
+)
 from ..operators.similarity import duck_label_cells
 from ..streaming.jobs import event_stream, file_feed_stream, run_to_memory
 from ..streaming.stateful import THRESHOLD, running_user_totals
@@ -230,31 +239,6 @@ def streaming_foreachbatch_counts(spark: SparkSession, sf_dir: str) -> DataFrame
         F.count("*").alias("n_events"),
         F.count_distinct("user_id").alias("n_users"),
     )
-
-
-#: name -> feed-builder callable (spark, sf_dir) -> staged feed path.
-#: Each multi-batch streaming query's staging block lives in ONE named
-#: builder (registered via @_feed) that the query itself calls, so
-#: `prestage_feeds` can build every per-corpus wave feed once per bench
-#: run (untimed warmup) without duplicating any staging logic — the
-#: timed query then hits the idempotence marker and starts cold only on
-#: its own state, never on fixture construction (VERDICT r15 item 2).
-_FEED_BUILDERS: dict = {}
-
-
-def _feed(name: str):
-    def deco(fn):
-        _FEED_BUILDERS[name] = fn
-        return fn
-
-    return deco
-
-
-def prestage_feeds(spark: SparkSession, sf_dir: str) -> list[str]:
-    """Build every registered per-corpus streaming feed fixture
-    (idempotent: marker-keyed on the corpus fingerprint). Returns the
-    staged paths. Called by bench.py's untimed warmup."""
-    return [fn(spark, sf_dir) for fn in _FEED_BUILDERS.values()]
 
 
 def _stage_feed(spark: SparkSession, root: str, parts: list) -> str:
@@ -510,7 +494,7 @@ def streaming_erasure_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_feed("streaming_sketch_rollup")
+@prestaged("streaming_sketch_rollup")
 def _sketch_rollup_feed(spark: SparkSession, sf_dir: str) -> str:
     ensure_utc(spark)
     root = fs.store_root(spark, sf_dir, "bdip_skst3")
@@ -592,7 +576,7 @@ def streaming_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _rolling_sketch_audit(ud, sk)
 
 
-@_feed("streaming_outer_join")
+@prestaged("streaming_outer_join")
 def _outer_join_feed(spark: SparkSession, sf_dir: str) -> str:
     ensure_utc(spark)
     root = fs.store_root(spark, sf_dir, "bdip_soj")
@@ -738,7 +722,7 @@ def streaming_pysource_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_memory(agg, mode="complete")
 
 
-@_feed("streaming_dedup_within_watermark")
+@prestaged("streaming_dedup_within_watermark")
 def _ddww_feed(spark: SparkSession, sf_dir: str) -> str:
     ensure_utc(spark)
     root = fs.store_root(spark, sf_dir, "bdip_ddww")
@@ -786,9 +770,6 @@ def streaming_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFr
     return run_to_memory(agg, mode="complete")
 
 
-from .dedup import _DUCK_PAIRS_CTES, _PARA_W  # noqa: E402  (one banding scheme)
-
-
 def _doc_wave_feed(
     spark: SparkSession, sf_dir: str, prefix: str, n_waves: int
 ) -> str:
@@ -805,25 +786,25 @@ def _doc_wave_feed(
     )
 
 
-@_feed("streaming_lsh_ingest")
+@prestaged("streaming_lsh_ingest")
 def _lsh_ingest_feed(spark: SparkSession, sf_dir: str) -> str:
     ensure_utc(spark)
     return _doc_wave_feed(spark, sf_dir, "bdip_lshing", 4)
 
 
-@_feed("streaming_lsh_ingest_capped")
+@prestaged("streaming_lsh_ingest_capped")
 def _lsh_capped_feed(spark: SparkSession, sf_dir: str) -> str:
     ensure_utc(spark)
     return _doc_wave_feed(spark, sf_dir, "bdip_lshcap", 4)
 
 
-@_feed("streaming_simhash_ingest")
+@prestaged("streaming_simhash_ingest")
 def _simhash_ingest_feed(spark: SparkSession, sf_dir: str) -> str:
     ensure_utc(spark)
     return _doc_wave_feed(spark, sf_dir, "bdip_shing", 3)
 
 
-@_feed("streaming_paragraph_ingest")
+@prestaged("streaming_paragraph_ingest")
 def _paragraph_ingest_feed(spark: SparkSession, sf_dir: str) -> str:
     ensure_utc(spark)
     return _doc_wave_feed(spark, sf_dir, "bdip_paraing", 4)
@@ -833,7 +814,7 @@ def _paragraph_ingest_feed(spark: SparkSession, sf_dir: str) -> str:
     "streaming_lsh_ingest",
     contract_batches=4,
     oracle=f"""
-    WITH {_DUCK_PAIRS_CTES}
+    WITH {DUCK_PAIRS_CTES}
     SELECT greatest(doc_a % 4, doc_b % 4) AS wave,
            CAST(count(*) AS BIGINT) AS n_pairs,
            CAST(sum(CASE WHEN doc_a % 4 != doc_b % 4 THEN 1 ELSE 0 END)
@@ -897,7 +878,7 @@ def streaming_lsh_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     "streaming_lsh_ingest_capped",
     contract_batches=4,
     oracle=f"""
-    WITH {_DUCK_PAIRS_CTES},
+    WITH {DUCK_PAIRS_CTES},
     wb AS (
         SELECT doc_id, band, bkey, CAST(doc_id % 4 AS BIGINT) AS wave
         FROM bands
@@ -924,10 +905,7 @@ def streaming_lsh_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE c.k_cum <= 2
     ),
     sver AS (
-        SELECT doc_a, doc_b, s.wave,
-               len(list_intersect(sa.ss, sb.ss)) AS inter,
-               len(sa.ss) + len(sb.ss)
-                   - len(list_intersect(sa.ss, sb.ss)) AS uni
+        SELECT doc_a, doc_b, s.wave, {duck_jaccard()}
         FROM scand s JOIN sets sa ON sa.doc_id = s.doc_a
                      JOIN sets sb ON sb.doc_id = s.doc_b
     ),
@@ -1025,12 +1003,12 @@ def streaming_lsh_ingest_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_feed("streaming_decontam_ingest")
+@prestaged("streaming_decontam_ingest")
 def _decontam_ingest_feed(spark: SparkSession, sf_dir: str) -> str:
     """Stages BOTH decontam fixtures: the train-gram base index (the
     pinned pre-drain state) and the 3-wave test-doc feed."""
 
-    from .curation import _md5_bucket, _wordgram_5h
+    from .curation import _md5_bucket
 
     ensure_utc(spark)
     root = fs.store_root(spark, sf_dir, "bdip_dci")
@@ -1040,7 +1018,7 @@ def _decontam_ingest_feed(spark: SparkSession, sf_dir: str) -> str:
     )
     base_idx = f"{root}/base_idx"
     if not fs.landed(spark, base_idx):
-        _wordgram_5h(d.where(h < 90)).select(
+        wordgram_5h(d.where(h < 90)).select(
             "gram_h"
         ).distinct().repartition(4, "gram_h").write.mode("overwrite").parquet(
             base_idx
@@ -1058,7 +1036,7 @@ def _decontam_ingest_feed(spark: SparkSession, sf_dir: str) -> str:
 @query(
     "streaming_decontam_ingest",
     contract_batches=3,
-    oracle="""
+    oracle=f"""
     WITH assigned AS (
         SELECT doc_id, lang, string_split(text, ' ') AS toks,
                CASE WHEN (('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '_split'), 1, 10))::UBIGINT % 100) < 90
@@ -1068,11 +1046,11 @@ def _decontam_ingest_feed(spark: SparkSession, sf_dir: str) -> str:
         FROM documents
     ), grams AS (
         SELECT doc_id, split, CAST(doc_id % 3 AS BIGINT) AS wave,
-               substr(md5(array_to_string(toks[i + 1:i + 5], ' ')), 1, 16)
+               {duck_wordgram_5h()}
                    AS gram_h
         FROM (
             SELECT doc_id, split, toks,
-                   unnest(generate_series(0, len(toks) - 5)) AS i
+                   unnest(generate_series(0, len(toks) - {WORDGRAM_N})) AS i
             FROM assigned WHERE split IS NOT NULL
         )
     ), tr AS (SELECT DISTINCT gram_h FROM grams WHERE split = 'train'),
@@ -1130,7 +1108,7 @@ def streaming_decontam_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     writes are idempotent overwrite-per-batch-id subdirs."""
 
     from ..streaming.decontam_ingest import read_results, run_decontam_ingest
-    from .curation import _md5_bucket, _wordgram_5h
+    from .curation import _md5_bucket
 
     ensure_utc(spark)
     root = fs.store_root(spark, sf_dir, "bdip_dci")
@@ -1171,7 +1149,7 @@ def _ts_tertile_feed(
     )
 
 
-@_feed("streaming_quota_admission")
+@prestaged("streaming_quota_admission")
 def _quota_feed(spark: SparkSession, sf_dir: str) -> str:
     ensure_utc(spark)
     return _ts_tertile_feed(
@@ -1179,7 +1157,7 @@ def _quota_feed(spark: SparkSession, sf_dir: str) -> str:
     )
 
 
-@_feed("streaming_ewma_anomaly")
+@prestaged("streaming_ewma_anomaly")
 def _ewma_feed(spark: SparkSession, sf_dir: str) -> str:
     ensure_utc(spark)
     return _ts_tertile_feed(
@@ -1250,18 +1228,11 @@ def streaming_quota_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _simhash64_ingest_oracle() -> str:
-    from .dedup import _simhash64_value_sql, _simhash64_votes_sql
-
-    return f"""
-    WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS t
-                 FROM documents),
-    h AS (SELECT doc_id,
-                 CAST(('0x' || substr(md5(t),1,10))::UBIGINT AS BIGINT) AS h1,
-                 CAST(('0x' || substr(md5(t),11,10))::UBIGINT AS BIGINT) AS h2
-          FROM tok),
-    v AS (SELECT doc_id, {_simhash64_votes_sql()} FROM h GROUP BY doc_id),
-    s AS (SELECT doc_id, {_simhash64_value_sql()} AS fp FROM v),
+@query(
+    "streaming_simhash_ingest",
+    contract_batches=3,
+    oracle=f"""
+    WITH {DUCK_SIMHASH64_CTES},
     keys AS (
         SELECT doc_id, fp, CAST(t.i AS INTEGER) AS blk,
                (fp >> (16 * CAST(t.i AS INTEGER))) & 65535 AS kv
@@ -1282,13 +1253,7 @@ def _simhash64_ingest_oracle() -> str:
                AS n_near,
            CAST(sum(dist) AS BIGINT) AS sum_dist
     FROM pairs GROUP BY 1
-    """
-
-
-@query(
-    "streaming_simhash_ingest",
-    contract_batches=3,
-    oracle=_simhash64_ingest_oracle(),
+    """,
 )
 def streaming_simhash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup detection as a CONTINUOUS ingest loop — the
@@ -1410,11 +1375,7 @@ def streaming_ewma_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(doc_id % 4 AS BIGINT) AS wave
         FROM documents
     ),
-    ch AS (
-        SELECT doc_id, wave, CAST(i AS BIGINT) AS chunk_no,
-               array_to_string(ws[(i*{_PARA_W}+1):(i*{_PARA_W}+{_PARA_W})], ' ') AS chunk
-        FROM w, unnest(range(CAST(floor(len(ws)/{_PARA_W}) AS BIGINT))) AS t(i)
-    ),
+    ch AS ({duck_para_chunks("doc_id, wave")}),
     rn AS (
         SELECT wave, doc_id,
                CASE WHEN row_number() OVER (
@@ -1476,7 +1437,7 @@ def streaming_paragraph_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_stats(spark, state).orderBy("wave")
 
 
-@_feed("streaming_ivf_assign_ingest")
+@prestaged("streaming_ivf_assign_ingest")
 def _ivf_ingest_feed(spark: SparkSession, sf_dir: str) -> str:
     """Stages BOTH ivf fixtures: the pinned codebook (one k-row parquet
     under the fixture root — marker-idempotent, the decontam base_idx

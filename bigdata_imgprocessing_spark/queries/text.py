@@ -415,7 +415,7 @@ def repetition_ngram_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     histogrammed per language — heavily repetitive documents sink into
     the low deciles. Bigrams are built with the zip-of-shifted-slices
     construction (split() runs once per row, not per element — see
-    dedup._shingles), all arithmetic is integer → exact parity, and the
+    neardup.shingles_sql), all arithmetic is integer → exact parity, and the
     whole query is a narrow map plus one low-cardinality shuffle."""
     d = table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.neardup import wordgram_5h
 from . import ingest
 
 _RES = "doc_id bigint, lang string, contaminated boolean, wave bigint"
@@ -37,14 +38,12 @@ def run_decontam_ingest(
     checking each micro-batch against ``base_index_dir`` (the fixed
     train-gram index) plus the clean-doc gram extensions of every
     earlier batch under ``state_root/idx``."""
-    from ..queries.curation import _wordgram_5h
-
     def step(batch: DataFrame, state: ingest.BatchState) -> None:
         # no isEmpty() guard: one Spark job per batch saved; an empty
         # batch overwrites its subdirs with empty frames, harmless to
         # every reader
         batch = batch.cache()
-        grams_b = _wordgram_5h(batch).cache()
+        grams_b = wordgram_5h(batch).cache()
         # explicit schema: the base index and every extension land as
         # (gram_h string); one scan over the base and the extensions
         idx = state.spark.read.schema("gram_h string").parquet(

@@ -8,10 +8,9 @@ discovered exactly once, in the micro-batch where its LATER document
 arrives.
 
 Per micro-batch (foreachBatch):
-  1. band-key + signature the batch documents (the SAME `_shingles` /
-     `_minhash_signatures` / `_band_frame` definitions as the batch
-     pipeline — the banding scheme cannot drift between deployment
-     modes),
+  1. band-key + signature the batch documents (the SAME
+     operators/neardup.py rules as the batch pipeline — the banding
+     scheme cannot drift between deployment modes),
   2. probe: batch bands join the accumulated index ∪ batch bands —
      candidates are new×old ∪ new×new; the old×old space is NEVER
      rejoined (at 100 TB that is the entire point: the index is
@@ -39,6 +38,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.neardup import (
+    band_frame,
+    candidate_pairs,
+    exact_jaccard,
+    minhash_signatures,
+    shingle_sets,
+)
 from . import ingest
 
 _BANDS = "doc_id bigint, band int, bkey string"
@@ -69,19 +75,14 @@ def run_lsh_ingest(
     bucket is within the cap at the later doc's batch; the census is
     deterministic from strictly-earlier state + the batch, so the
     replay invariants hold unchanged."""
-    from ..queries.dedup import _band_frame, _minhash_signatures, _shingles_sql
-
     def step(batch: DataFrame, state: ingest.BatchState) -> None:
         # no isEmpty() guard: it costs one Spark job per batch, and an
         # empty batch just overwrites its subdirs with empty frames —
         # harmless to every reader (availableNow over a staged feed
         # does not emit empty batches in practice anyway)
         batch = batch.coalesce(4).cache()
-        new_bands = _band_frame(_minhash_signatures(batch)).coalesce(4).cache()
-        new_sh = batch.select(
-            "doc_id",
-            F.expr(f"array_distinct({_shingles_sql('text')})").alias("ss"),
-        )
+        new_bands = band_frame(minhash_signatures(batch)).coalesce(4).cache()
+        new_sh = shingle_sets(batch)
         all_bands = state.prior("bands", _BANDS).union(new_bands)
         all_sh = state.prior("shingles", _SHINGLES).union(new_sh)
         census = None
@@ -119,44 +120,10 @@ def run_lsh_ingest(
                 "band", "bkey"
             )
             probe = new_bands.join(surv, ["band", "bkey"], "semi")
-        a = probe.alias("a")
-        b = all_bands.alias("b")
-        cand = (
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bkey") == F.col("b.bkey"))
-                & (F.col("a.doc_id") != F.col("b.doc_id")),
-            )
-            .select(
-                F.least("a.doc_id", "b.doc_id").alias("doc_a"),
-                F.greatest("a.doc_id", "b.doc_id").alias("doc_b"),
-            )
-            .distinct()
-            .coalesce(4)
-            .cache()
-        )
-        cand_ids = cand.select(F.col("doc_a").alias("doc_id")).union(
-            cand.select(F.col("doc_b").alias("doc_id"))
-        )
-        sets = (
-            all_sh.join(cand_ids, "doc_id", "semi").coalesce(4).cache()
-        )
-        sa = sets.alias("sa")
-        sb = sets.alias("sb")
-        inter = F.size(F.array_intersect(F.col("sa.ss"), F.col("sb.ss")))
-        uni = F.size(F.col("sa.ss")) + F.size(F.col("sb.ss")) - inter
-        pairs = (
-            cand.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-            .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
-            .select(
-                "doc_a",
-                "doc_b",
-                inter.alias("inter"),
-                uni.alias("uni"),
-                F.lit(state.bid).cast("bigint").alias("wave"),
-            )
-            .where(F.col("inter") * 1.0 / F.col("uni") >= 0.5)
+        cand = candidate_pairs(probe, all_bands, 4)
+        exact, sets = exact_jaccard(cand, all_sh, 4)
+        pairs = exact.withColumn("wave", F.lit(state.bid).cast("bigint")).where(
+            F.col("inter") * 1.0 / F.col("uni") >= 0.5
         )
         # The barrier (r16, one serialized job wave cut per capped
         # micro-batch — guide §2.6). For a capped batch it is the ACCT

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.neardup import para_units_sql
 from . import ingest
 
 _STATS = (
@@ -41,16 +42,13 @@ _STATS = (
 
 def _units(batch: DataFrame) -> DataFrame:
     """(doc_id, chunk_no, h) unit-hash instances of a (doc_id, text)
-    frame — IMPORTS the batch query's unit expression
-    (queries/dedup.py:_para_units_sql, the lsh_ingest convention of
-    sharing the derivation with its batch twin) so the streaming and
+    frame, by the unit hash `paragraph_dedup_stats` uses
+    (operators/neardup.py ``para_units_sql``), so the streaming and
     batch semantics cannot drift apart."""
-    from ..queries.dedup import _para_units_sql
-
     return batch.select(
         "doc_id",
         F.posexplode(
-            F.expr(_para_units_sql("split(text, ' ')"))
+            F.expr(para_units_sql("split(text, ' ')"))
         ).alias("chunk_no", "h"),
     )
 

@@ -4,7 +4,7 @@ analog of ``streaming/lsh_ingest.py`` (MinHash bands) built on the
 round-10 ``hamming_k_neighbor_join`` banding (operators/hamming.py).
 
 Per micro-batch (foreachBatch):
-  1. 64-bit SimHash the batch documents (the SAME ``_simhash64_frame``
+  1. 64-bit SimHash the batch documents (the SAME ``simhash64_frame``
      derivation as the batch query ``simhash64_neardup`` — the
      fingerprint space cannot drift between deployment modes),
   2. probe: batch fingerprints' (block, block_bits) keys join the
@@ -42,6 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.neardup import simhash64_frame
 from . import ingest
 
 _BITS = 64
@@ -64,15 +65,14 @@ def run_simhash_ingest(stream_df: DataFrame, state_root: str) -> None:
     """Drain a (doc_id, text) stream with availableNow, maintaining the
     fingerprint index and discovered-pairs store under ``state_root``."""
     from ..operators.hamming import first_equal_block
-    from ..queries.dedup import _simhash64_frame
 
     def step(batch: DataFrame, state: ingest.BatchState) -> None:
         # batch is read exactly once (through new_fp, which has its own
         # cache), so caching/coalescing it here would pay a MemoryStore
-        # copy for zero reuse — and _simhash64_frame repartitions by
+        # copy for zero reuse — and simhash64_frame repartitions by
         # doc_id anyway
         new_fp = (
-            _simhash64_frame(batch, parallelism=4)
+            simhash64_frame(batch, parallelism=4)
             .select("doc_id", F.col("simhash64").alias("fp"))
             .coalesce(4)
             .cache()

@@ -349,8 +349,9 @@ def test_vector_scoring_rules_live_in_one_module():
     """The vector family's exact-scoring rules each have one home,
     operators/similarity.py, in Spark and in DuckDB form: the rounded
     cosine, the floored-norm cosine SQL, the per-query top-k window,
-    the P10 nearest-centroid chain and the 3dp codebook CTE. Queries,
-    operators, pipelines and oracles import them."""
+    the P10 nearest-centroid chain, the 3dp codebook CTE, the int8
+    quantization and the integer dot. Queries, operators, pipelines and
+    oracles import them."""
     import pathlib
     import re
 
@@ -364,6 +365,8 @@ def test_vector_scoring_rules_live_in_one_module():
         "query_id top-k window": r"partitionBy\(\"query_id\"|PARTITION BY (\w+\.)?query_id",
         "P10 when/least chain": r"<=\s*\(?(F\.)?least\(",
         "codebook CTE": r"list\(round\(c, 3\) ORDER BY pos\)",
+        "int8 quantization": r"\* 127 /",
+        "integer dot": r"\w+ \* \w+\),\s*F\.lit\(0\)\.cast\(\"bigint\"\)|\[i\+1\] \* \{?\w+\}?\[i\+1\]",
     }
     found = {
         name: sorted(
@@ -374,6 +377,67 @@ def test_vector_scoring_rules_live_in_one_module():
         for name, rx in rules.items()
     }
     assert found == {name: [home] for name in rules}
+
+
+def test_near_dup_rules_live_in_one_module():
+    """The text near-dup rules each have one home, operators/neardup.py,
+    in Spark and in DuckDB form: the MinHash band key, the shingle-set
+    Jaccard and the SimHash-64 token hash. The stopword intersect
+    (queries/quality.py) and pair_rouge_stats' token-set overlap only
+    look alike: they intersect word lists, not shingle sets."""
+    import pathlib
+    import re
+
+    import bigdata_imgprocessing_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    home = "operators/neardup.py"
+    rules = {
+        "Spark band key": r"concat_ws\(\s*['\"]_['\"],\s*f?['\"]?mh",
+        "DuckDB band key": r"AS VARCHAR\) \|\| '_' \|\|",
+        "shingle-set Jaccard": r"(array|list)_intersect\([^)]*\bss\b",
+        "SimHash-64 token hash": r"md5\(t\),\s*11,\s*10",
+    }
+    found = {
+        name: sorted(
+            p.relative_to(root).as_posix()
+            for p in root.rglob("*.py")
+            if re.search(rx, p.read_text())
+        )
+        for name, rx in rules.items()
+    }
+    assert found == {name: [home] for name in rules}
+
+
+def test_only_queries_import_queries():
+    """The dependency arrow points into queries/, never out of it:
+    operators, streaming jobs, pipelines and the core import their rules
+    from operators/ and core/, so a query module stays free to change."""
+    import ast
+    import pathlib
+
+    import bigdata_imgprocessing_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    target = f"{pkg.__name__}.queries"
+    hits = []
+    for p in sorted(root.rglob("*.py")):
+        rel = p.relative_to(root)
+        if rel.parts[0] == "queries":
+            continue
+        package = [pkg.__name__, *rel.parts[:-1]]
+        for node in ast.walk(ast.parse(p.read_text())):
+            if isinstance(node, ast.ImportFrom):
+                base = package[: len(package) - node.level + 1] if node.level else []
+                mod = ".".join(base + ([node.module] if node.module else []))
+                names = [f"{mod}.{a.name}" for a in node.names] + [mod]
+            elif isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            else:
+                continue
+            if any(n == target or n.startswith(target + ".") for n in names):
+                hits.append(f"{rel.as_posix()}:{node.lineno}")
+    assert hits == []
 
 
 def test_querydoc_matches_the_registry():
@@ -638,3 +702,35 @@ def test_bench_warm_up_starts_python_workers(spark):
     assert "ArrowEvalPython" in udf_frame._jdf.queryExecution().executedPlan().toString()
     assert "ExistingRDD" in list_frame._jdf.queryExecution().executedPlan().toString()
     assert [tuple(df.collect()[0]) for df in (udf_frame, list_frame)] == [(499500,), (1,)]
+
+
+def test_bench_warm_up_prestages_write_once_stores(spark, sf_dir, tmp_path):
+    """bench's warm-up lands every registered write-once fixture, so on
+    a corpus whose stores were never built a store consumer's first
+    timed run starts no more jobs than its second."""
+    import glob
+    import shutil
+
+    import bench
+    from bigdata_imgprocessing_spark.core import fs
+    from bigdata_imgprocessing_spark.queries import QUERIES
+
+    corpus = str(tmp_path / "corpus")
+    shutil.copytree(sf_dir, corpus)  # a new path: a new store token
+    token = fs.store_root(spark, corpus, "x").rsplit("_", 1)[1]
+    try:
+        bench.warm_up(spark, corpus)
+        for name in ("zorder_pruned_scan", "minhash_lsh_capped", "kcore_neardup",
+                     "bucketed_join_revenue"):
+            jobs = [bench.run_once(spark, name, QUERIES[name], corpus)[1]
+                    for _ in range(2)]
+            assert jobs[0] <= jobs[1], (name, jobs)
+    finally:
+        for t in spark.catalog.listTables():
+            if t.name.endswith(token):
+                spark.sql(f"DROP TABLE IF EXISTS `{t.name}`")
+        wh = spark.conf.get("spark.sql.warehouse.dir")
+        for path in glob.glob(f"/tmp/*_{token}") + glob.glob(
+            f"{wh.removeprefix('file:')}/*_{token}"
+        ):
+            shutil.rmtree(path, ignore_errors=True)

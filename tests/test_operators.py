@@ -399,10 +399,10 @@ def test_shingle_hash_collision_free_on_corpus(spark, sf_dir):
     (~1e-7 odds documented at queries/dedup.py). This makes a collision
     LOUD on the test corpus instead of a silent posting-list merge."""
     from bigdata_imgprocessing_spark.core.catalog import table
-    from bigdata_imgprocessing_spark.queries.dedup import _shingles
+    from bigdata_imgprocessing_spark.operators.neardup import shingles
 
     d = table(spark, sf_dir, "documents")
-    ex = d.select(F.explode(F.array_distinct(_shingles(F.col("text")))).alias("s0"))
+    ex = d.select(F.explode(F.array_distinct(shingles("text"))).alias("s0"))
     row = ex.agg(
         F.count_distinct("s0").alias("n_shingles"),
         F.count_distinct(F.xxhash64("s0")).alias("n_hashes"),
@@ -421,12 +421,12 @@ def test_paragraph_unit_hash_collision_free_on_corpus(spark, sf_dir):
     collision would silently merge distinct paragraphs in Spark while
     the string-keyed DuckDB oracle keeps them apart."""
     from bigdata_imgprocessing_spark.core.catalog import table
-    from bigdata_imgprocessing_spark.queries.dedup import _PARA_W
+    from bigdata_imgprocessing_spark.operators.neardup import PARA_W
 
     units_sql = (
-        f"CASE WHEN size(w) >= {_PARA_W} THEN"
-        f" transform(sequence(0, size(w) DIV {_PARA_W} - 1),"
-        f" i -> concat_ws(' ', slice(w, i*{_PARA_W} + 1, {_PARA_W})))"
+        f"CASE WHEN size(w) >= {PARA_W} THEN"
+        f" transform(sequence(0, size(w) DIV {PARA_W} - 1),"
+        f" i -> concat_ws(' ', slice(w, i*{PARA_W} + 1, {PARA_W})))"
         " ELSE array() END"
     )
     d = table(spark, sf_dir, "documents").select(

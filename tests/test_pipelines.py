@@ -286,6 +286,47 @@ def test_returned_frames_survive_clear_cache(spark, corpus, dims, tmp_path):
     assert run_stats(frames[1], "stats_after") == stats_before
 
 
+def _csv_files(out_dir) -> dict[str, list[bytes]]:
+    """Each CSV output dir under ``out_dir``: its part files' bytes in
+    part order."""
+    got: dict[str, list[bytes]] = {}
+    for p in sorted(out_dir.rglob("part-*.csv")):
+        got.setdefault(p.parent.relative_to(out_dir).as_posix(), []).append(p.read_bytes())
+    return got
+
+
+def test_pipelines_write_identical_csvs_in_a_second_session(spark, corpus, dims, tmp_path):
+    """Each reference pipeline (detect, stats, colour) writes
+    byte-identical CSVs when it runs twice in one session and once more
+    in ``spark.newSession()``, which has its own SQL conf, temp views and
+    UDF registry: no localCheckpoint lineage or session-keyed state
+    carries over between runs."""
+    (root, n), (labels, names) = corpus, dims
+    images = str(root / "images")
+
+    def run_all(session, tag: str) -> dict[str, list[bytes]]:
+        out = tmp_path / tag
+        lab = session.createDataFrame(labels.collect(), labels.schema)
+        nam = session.createDataFrame(names.collect(), names.schema)
+        _, per_landmark = run_detection_pipeline(session, images, lab, str(out / "det"))
+        run_stats_pipeline(
+            session, per_landmark, nam, str(out / "stats"), keywords=["spark", "people"]
+        )
+        run_color_pipeline(session, images, str(out / "color"), CENTROIDS)
+        return _csv_files(out)
+
+    first = run_all(spark, "first")
+    assert {d.split("/")[0] for d in first} == {"det", "stats", "color"}
+    assert run_all(spark, "again") == first
+    other = spark.newSession()
+    # the fixture narrows shuffle partitions at run time, which a new
+    # session does not inherit; a CSV's row order follows that count
+    other.conf.set(
+        "spark.sql.shuffle.partitions", spark.conf.get("spark.sql.shuffle.partitions")
+    )
+    assert run_all(other, "new_session") == first
+
+
 def test_cache_root_tracks_every_table(spark, tmp_path):
     """The /tmp store root token must change when ANY source parquet changes
     (r4 advisor: the old token only fingerprinted embeddings, so a

@@ -99,7 +99,7 @@ def test_asof_join_matches_bruteforce(spark_prop, lefts, rights):
 
 # ---------------------------------------------------------------------------
 # Shingling vs a trivial Python 3-gram reference: the arrays_zip-of-
-# shifted-slices construction (dedup._shingles, chosen for its CSE
+# shifted-slices construction (neardup.shingles, chosen for its CSE
 # behavior — see its docstring) must produce exactly the naive sliding
 # window for arbitrary token streams, including the n<3 degenerate case.
 # ---------------------------------------------------------------------------
@@ -112,10 +112,15 @@ def test_asof_join_matches_bruteforce(spark_prop, lefts, rights):
     )
 )
 def test_shingles_match_naive_ngrams(spark_prop, toks):
-    from bigdata_imgprocessing_spark.queries.dedup import _shingles
+    from bigdata_imgprocessing_spark.operators.neardup import shingles
 
     text = " ".join(toks)
-    got = _eval(spark_prop, _shingles(F.lit(text)))
+    got = (
+        spark_prop.createDataFrame([(text,)], "text string")
+        .select(shingles("text").alias("v"))
+        .collect()[0]
+        .v
+    )
     words = text.split(" ")  # split(" ") semantics: "" -> [""]
     if len(words) >= 3:
         expected = [
@@ -296,19 +301,18 @@ def test_morton_key_matches_python_interleave(spark_prop, a, b):
 def test_minhash_signature_matches_python(spark_prop, toks):
     import hashlib as hl
 
-    from bigdata_imgprocessing_spark.queries.dedup import (
-        _N_HASHES,
-        _P,
+    from bigdata_imgprocessing_spark.operators.neardup import (
+        N_HASHES,
+        P,
         _a,
         _b,
-        _minhash_signatures,
-        _shingles,  # noqa: F401  (shingling shape shared with the ref below)
+        minhash_signatures,
     )
 
     spark = spark_prop
     text = " ".join(toks)
     d = spark.createDataFrame([(1, text)], "doc_id bigint, text string")
-    row = _minhash_signatures(d).collect()[0]
+    row = minhash_signatures(d).collect()[0]
 
     words = text.split(" ")
     sh = (
@@ -317,8 +321,8 @@ def test_minhash_signature_matches_python(spark_prop, toks):
         else [text]
     )
     hs = [int(hl.md5(s.encode()).hexdigest()[:10], 16) for s in set(sh)]
-    for j in range(_N_HASHES):
-        expected = min((_a(j) * h + _b(j)) % _P for h in hs)
+    for j in range(N_HASHES):
+        expected = min((_a(j) * h + _b(j)) % P for h in hs)
         assert row[f"mh{j}"] == expected, j
 
 
@@ -344,10 +348,10 @@ def test_simhash_matches_python(spark_prop, toks):
     # rebuild the exact Spark expression chain used by the query
     from pyspark.sql import functions as SF
 
-    from bigdata_imgprocessing_spark.queries.dedup import _h40
+    from bigdata_imgprocessing_spark.operators.neardup import h40
 
     tok = d.select("doc_id", SF.explode(SF.split(SF.col("text"), " ")).alias("t"))
-    h = tok.select("doc_id", _h40(SF.col("t")).alias("h"))
+    h = tok.select("doc_id", h40(SF.col("t")).alias("h"))
     votes = h.groupBy("doc_id").agg(
         *[
             SF.sum(2 * SF.shiftright(SF.col("h"), b).bitwiseAND(1) - 1).alias(f"v{b}")
@@ -961,22 +965,22 @@ def test_exact_rank_values_property(spark_prop, vals, qs, nb):
 def test_paragraph_units_match_python(spark_prop, toks):
     from pyspark.sql import Row
 
-    from bigdata_imgprocessing_spark.queries.dedup import (
-        _PARA_W,
-        _para_units_sql,
+    from bigdata_imgprocessing_spark.operators.neardup import (
+        PARA_W,
+        para_units_sql,
     )
 
     text = " ".join(toks)
     got = (
         spark_prop.createDataFrame([Row(text=text)])
-        .select(F.expr(_para_units_sql("split(text, ' ')")).alias("v"))
+        .select(F.expr(para_units_sql("split(text, ' ')")).alias("v"))
         .collect()[0]
         .v
     )
     words = text.split(" ")  # split(" ") semantics: "" -> [""]
     chunks = [
-        " ".join(words[i : i + _PARA_W])
-        for i in range(0, len(words) - _PARA_W + 1, _PARA_W)
+        " ".join(words[i : i + PARA_W])
+        for i in range(0, len(words) - PARA_W + 1, PARA_W)
     ]
     expected = [
         spark_prop.sql(

@@ -842,16 +842,16 @@ def test_bands_store_matches_fresh(spark, sf_dir):
     so the capped/hot-bucket consumers read exactly what the fresh
     family computes."""
     from bigdata_imgprocessing_spark.core.catalog import table as _t
-    from bigdata_imgprocessing_spark.queries.dedup import (
-        _band_frame,
-        _minhash_bands_store,
-        _minhash_signatures,
+    from bigdata_imgprocessing_spark.operators.neardup import (
+        band_frame,
+        minhash_signatures,
     )
+    from bigdata_imgprocessing_spark.queries.dedup import _minhash_bands_store
 
     fresh = sorted(
         tuple(r)
-        for r in _band_frame(
-            _minhash_signatures(_t(spark, sf_dir, "documents"))
+        for r in band_frame(
+            minhash_signatures(_t(spark, sf_dir, "documents"))
         ).collect()
     )
     stored = sorted(

@@ -875,7 +875,7 @@ def test_ingest_drains_leave_no_job_without_group(spark, tmp_path):
     store writes — so query.stop() cancellation and UI attribution
     reach all of them. The test thread sets its own group first, so
     any new ungrouped job came from a write thread that lost it."""
-    from bigdata_imgprocessing_spark.queries.curation import _wordgram_5h
+    from bigdata_imgprocessing_spark.operators.neardup import wordgram_5h
     from bigdata_imgprocessing_spark.streaming.decontam_ingest import (
         run_decontam_ingest,
     )
@@ -900,7 +900,7 @@ def test_ingest_drains_leave_no_job_without_group(spark, tmp_path):
         train = spark.createDataFrame(
             [(1, "alpha beta gamma delta epsilon")], "doc_id bigint, text string"
         )
-        _wordgram_5h(train).select("gram_h").distinct().write.parquet(base_idx)
+        wordgram_5h(train).select("gram_h").distinct().write.parquet(base_idx)
         run_decontam_ingest(
             _doc_stream(
                 spark,
@@ -972,7 +972,7 @@ def test_streaming_lsh_ingest_capped_cuts_hot_bucket(spark, tmp_path):
 
     import duckdb as _duck
 
-    from bigdata_imgprocessing_spark.queries.dedup import _BANDS
+    from bigdata_imgprocessing_spark.operators.neardup import BANDS
     from bigdata_imgprocessing_spark.streaming.lsh_ingest import (
         read_acct,
         read_final_pairs,
@@ -1018,7 +1018,7 @@ def test_streaming_lsh_ingest_capped_cuts_hot_bucket(spark, tmp_path):
         r.wave: (r.n_buckets_cut, r.n_band_rows_cut)
         for r in read_acct(spark, state).collect()
     }
-    assert acct == {0: (0, 0), 1: (0, 0), 2: (_BANDS, 3 * _BANDS)}
+    assert acct == {0: (0, 0), 1: (0, 0), 2: (BANDS, 3 * BANDS)}
     # restart: a third B doc arrives -> B buckets now depth 3, cut too
     write_wave(3, [(3, b_text)])
     drain()
@@ -1031,7 +1031,7 @@ def test_streaming_lsh_ingest_capped_cuts_hot_bucket(spark, tmp_path):
         r.wave: (r.n_buckets_cut, r.n_band_rows_cut)
         for r in read_acct(spark, state).collect()
     }
-    assert acct2 == {**acct, 3: (_BANDS, 3 * _BANDS)}
+    assert acct2 == {**acct, 3: (BANDS, 3 * BANDS)}
 
 
 def test_streaming_quota_restart_keeps_caps(spark, tmp_path):
@@ -1208,9 +1208,9 @@ def test_streaming_decontam_replay_is_idempotent(spark, tmp_path):
     train = spark.createDataFrame(
         [(1, "alpha beta gamma delta epsilon")], "doc_id bigint, text string"
     )
-    from bigdata_imgprocessing_spark.queries.curation import _wordgram_5h
+    from bigdata_imgprocessing_spark.operators.neardup import wordgram_5h
 
-    _wordgram_5h(train).select("gram_h").distinct().coalesce(1).write.parquet(
+    wordgram_5h(train).select("gram_h").distinct().coalesce(1).write.parquet(
         str(base_idx)
     )
     feed = tmp_path / "feed"
@@ -1596,7 +1596,7 @@ def test_streaming_lsh_ingest_capped_crash_replay(spark, tmp_path):
 
     import duckdb as _duck
 
-    from bigdata_imgprocessing_spark.queries.dedup import _BANDS
+    from bigdata_imgprocessing_spark.operators.neardup import BANDS
     from bigdata_imgprocessing_spark.streaming.lsh_ingest import (
         read_acct,
         read_final_pairs,
@@ -1638,7 +1638,7 @@ def test_streaming_lsh_ingest_capped_crash_replay(spark, tmp_path):
         for r in read_acct(spark, state).collect()
     )
     assert pairs0 == [(0, 1, 0)]
-    assert acct0 == [(0, 0, 0), (1, _BANDS, 3 * _BANDS)]
+    assert acct0 == [(0, 0, 0), (1, BANDS, 3 * BANDS)]
     # crash: batch 1's stores (incl. acct/b1) landed, commit missing
     _os.remove(f"{state}/ckpt/commits/1")
     crc = f"{state}/ckpt/commits/.1.crc"
@@ -1670,17 +1670,16 @@ def test_streaming_lsh_ingest_capped_randomized(spark, tmp_path):
 
     import duckdb as _duck
 
-    from bigdata_imgprocessing_spark.queries.dedup import (
-        _band_frame,
-        _minhash_signatures,
-        _shingles_sql,
+    from bigdata_imgprocessing_spark.operators.neardup import (
+        band_frame,
+        minhash_signatures,
+        shingle_sets,
     )
     from bigdata_imgprocessing_spark.streaming.lsh_ingest import (
         read_acct,
         read_final_pairs,
         run_lsh_ingest,
     )
-    from pyspark.sql import functions as F
 
     CAP, WAVES = 2, 3
     for seed in range(3):
@@ -1701,15 +1700,9 @@ def test_streaming_lsh_ingest_capped_randomized(spark, tmp_path):
         sdf = spark.createDataFrame(docs, "doc_id bigint, text string")
         bands = [
             (r.doc_id, r.band, r.bkey)
-            for r in _band_frame(_minhash_signatures(sdf)).collect()
+            for r in band_frame(minhash_signatures(sdf)).collect()
         ]
-        sets = {
-            r.doc_id: set(r.ss)
-            for r in sdf.select(
-                "doc_id",
-                F.expr(f"array_distinct({_shingles_sql('text')})").alias("ss"),
-            ).collect()
-        }
+        sets = {r.doc_id: set(r.ss) for r in shingle_sets(sdf).collect()}
         # pure-Python replay of the capped drain
         wave = {d: d % WAVES for d, _ in docs}
         by_key = defaultdict(list)  # (band,bkey) -> [(wave, doc)]
