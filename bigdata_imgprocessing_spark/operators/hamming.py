@@ -212,7 +212,7 @@ def hamming_k_neighbor_join(
         be missing from the index. The verification term (bit_count on
         the xor) is O(1) per candidate.
       * The merge-join pin below is the Catalyst explode-fan-out rule
-        from ``hamming1_neighbor_join`` (NOTES r9): the optimizer
+        from ``hamming1_neighbor_join`` (NOTES.md rule 7): the optimizer
         cannot see the (k+1)x fan-out, would broadcast the exploded
         index, and OOMs at vocabulary scale.
     """

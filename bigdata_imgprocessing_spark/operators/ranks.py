@@ -1,44 +1,50 @@
-"""Scale-conditional tie-averaged ranking for the rank-statistic
-monitors (Mann-Whitney, Kruskal-Wallis, Spearman, ROC-AUC).
+"""The rank pass of the four rank tests (Mann-Whitney, Kruskal-Wallis,
+Spearman, ROC-AUC): the size switch and both rank forms live here, so
+each query folds its statistic once over what these return.
 
-The window form — ``rank() OVER (ORDER BY value)`` — plans an
-``Exchange SinglePartition`` + total sort over the FACT, which is the
-classic non-scaling shape (guide §2.4): at 100 TB one task sorts the
-corpus. The scale form here computes the same doubled tie-averaged
-rank (``dr = 2*cnt_lt + c + 1``, an exact integer) per DISTINCT value
-with no data-sized single partition anywhere:
+- ``rank_pass(scan, value, *keys, **sums)`` returns ``(keys..., m, c,
+  dr, sums...)``: ``m`` is the number of scan rows a row stands for,
+  ``c`` the tie count of its value and ``dr`` the doubled tie-averaged
+  rank ``2*cnt_lt + c + 1`` (an exact integer; ``cnt_lt`` counts rows
+  with a strictly smaller value, NULL ranking first as ``rank()``
+  orders it). Each ``sums`` column is a per-row expression, summed
+  over the ``m`` rows. A fold therefore weights by ``m``:
+  ``sum(m * dr)`` is the doubled rank sum, ``sum(m * (c*c - 1))`` the
+  tie term ``sum over values of (c^3 - c)``.
+- ``row_ranks(scan, {name: col})`` returns ``dr_<name>`` per column
+  and ``n`` (the row count) on every scan row, for statistics that
+  pair several ranks of one row.
+
+Below ``PREFIX_BYTES`` of scanned input, by Spark's own size estimate
+of the ``scan`` frame, both run the window form: ``rank() OVER (ORDER
+BY value)`` and a per-value count on every row (``m = 1``). Its total
+sort runs in one task (an ``Exchange SinglePartition``), which stalls
+at scale but is the faster form on small frames, where the extra stage
+waves of the prefix form dominate. At or above it, or when the size is
+unknown, they run the bucketed-prefix form, which has no data-sized
+single partition (``doubled_tie_ranks``):
 
 1. group rows by value (map-side combinable; the shuffle carries one
-   row per distinct value),
+   row per distinct value, or per ``(value, keys)``),
 2. bucket the value range into ``n_buckets`` equal-width buckets; the
-   per-bucket totals (<= B rows, a CONSTANT independent of data
-   volume) take one bounded single-partition window for the exclusive
-   bucket-offset prefix sums,
-3. a PARTITIONED (per-bucket) cumulative window adds the within-bucket
-   prefix, so ``cnt_lt = bucket_offset + within_bucket`` — every
-   data-sized operation is a groupBy, a broadcast join (<= B rows), or
-   a partitioned window.
+   per-bucket totals (<= B rows, a constant) take one bounded
+   single-partition window for the exclusive bucket-offset prefix sums,
+3. a partitioned (per-bucket) cumulative window adds the within-bucket
+   prefix, so ``cnt_lt = bucket_offset + within_bucket``.
 
-Round 15 built this restructure, proved it hash-identical at 3 SFs,
-and measured it 2-4x SLOWER at driver sf — the extra dependent stage
-waves dominate frames this small (OPTIMIZATION_r15.md "Rejected with
-measurements", in git history at 752fc5a). It is therefore wired
-behind a SIZE SWITCH (VERDICT r15 item 6): ``use_prefix_ranks`` keeps
-the monitors on the measured-faster window form below
-``PREFIX_BYTES`` (2 GiB) of scanned input, by Spark's own size
-estimate of the frame, and switches to this form at or above it, where
-the single-partition sort stalls; an unknown size counts as large. A
-deployment with another crossover edits the constant (tests patch it).
-Both forms produce bit-identical statistics, NULLs included (the
-doubled-rank identity keeps every intermediate an exact integer; tests
-pin equality).
+``rank_pass`` then returns one row per distinct ``(value, keys)``; it
+joins the tie counts back only when keys are given. ``row_ranks``
+joins one rank map per column back to the scan on the value. Both
+forms give bit-identical folds, NULLs included: every intermediate is
+an exact integer (tests pin equality). A deployment with another
+crossover edits ``PREFIX_BYTES`` (tests patch it).
 """
 
 from __future__ import annotations
 
 import logging
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 _log = logging.getLogger(__name__)
@@ -68,6 +74,72 @@ def use_prefix_ranks(scan: DataFrame) -> bool:
         "prefix" if prefix else "window", size, PREFIX_BYTES,
     )
     return prefix
+
+
+def _window_dr(value) -> Column:
+    """Doubled tie-averaged rank of ``value`` on every row."""
+    return (
+        2 * F.rank().over(Window.orderBy(value))
+        + F.count("*").over(Window.partitionBy(value))
+        - 1
+    )
+
+
+def rank_pass(scan: DataFrame, value, *keys, **sums: Column) -> DataFrame:
+    """``(keys..., m, c, dr, sums...)`` for ``value`` over ``scan``, in
+    the form the size switch picks (module docstring). ``value``,
+    ``keys`` and ``sums`` are columns of ``scan`` or expressions over
+    it; a key is named by its alias."""
+    value = F.col(value) if isinstance(value, str) else value
+    if not use_prefix_ranks(scan):
+        rows = scan.select(
+            value.alias("v"), *keys, *(col.alias(n) for n, col in sums.items())
+        )
+        return rows.select(
+            *rows.columns[1 : 1 + len(keys)],
+            F.lit(1).alias("m"),
+            F.count("*").over(Window.partitionBy("v")).alias("c"),
+            _window_dr("v").alias("dr"),
+            *sums,
+        )
+    pvk = scan.groupBy(value.alias("v"), *keys).agg(
+        F.count("*").alias("m"), *(F.sum(col).alias(n) for n, col in sums.items())
+    )
+    if not keys:
+        return doubled_tie_ranks(pvk, "v", "m").select(
+            "m", F.col("m").alias("c"), "dr", *sums
+        )
+    pv = pvk.groupBy("v").agg(F.sum("m").alias("c"))
+    drv = doubled_tie_ranks(pv, "v").select(F.col("v").alias("_v"), "c", "dr")
+    return pvk.join(drv, F.col("v").eqNullSafe(F.col("_v"))).select(
+        *pvk.columns[1 : 1 + len(keys)], "m", "c", "dr", *sums
+    )
+
+
+def row_ranks(scan: DataFrame, cols: dict[str, Column]) -> DataFrame:
+    """``dr_<name>`` for each ``name: col`` and ``n``, the row count, on
+    every row of ``scan``, in the form the size switch picks (module
+    docstring)."""
+    if not use_prefix_ranks(scan):
+        return scan.select(
+            *(_window_dr(col).alias(f"dr_{name}") for name, col in cols.items()),
+            F.count("*").over(Window.partitionBy()).alias("n"),
+        )
+    # one doubled-rank map per column, joined back to the scan on the
+    # value (NULL-safe: a NULL value has a rank too); a deterministic
+    # expression rebuilds bit-identical keys
+    base = scan.select(*(col.alias(name) for name, col in cols.items()))
+    ranked = base
+    for name in cols:
+        pv = base.groupBy(F.col(name).alias("v")).agg(F.count("*").alias("c"))
+        ranked = ranked.join(
+            doubled_tie_ranks(pv, "v").select("v", F.col("dr").alias(f"dr_{name}")),
+            F.col(name).eqNullSafe(F.col("v")),
+        ).drop("v")
+    nrow = base.agg(F.count("*").alias("n"))
+    return ranked.crossJoin(F.broadcast(nrow)).select(
+        *(f"dr_{name}" for name in cols), "n"
+    )
 
 
 def doubled_tie_ranks(

@@ -31,6 +31,9 @@ recomputing its predictions the same way, pyspark_yolox.py:115-119):
   (kind, key), and the five sinks filter that result without a
   further shuffle.
 
+Each grouped report is written as one part file sorted by its key, so
+its bytes do not depend on ``spark.sql.shuffle.partitions``.
+
 Local checkpoints are not cached tables, so a harness-level
 ``clearCache()`` leaves them in place, and the frames returned to the
 caller carry a short lineage. Jobs per call on six 120x160 JPEGs
@@ -109,7 +112,9 @@ def run_detection_pipeline(
         )
         .localCheckpoint()
     )
-    write_semicolon_csv(per_landmark, f"{out_dir}/results_predictions_per_class")
+    write_semicolon_csv(
+        per_landmark, f"{out_dir}/results_predictions_per_class", "landmark_id"
+    )
     return per_image, per_landmark
 
 
@@ -136,7 +141,7 @@ def run_color_pipeline(
     hist = colors.groupBy(F.to_json("dom").alias("dominant_color")).agg(
         F.count("*").alias("count")
     )
-    write_semicolon_csv(hist, f"{out_dir}/color_histogram")
+    write_semicolon_csv(hist, f"{out_dir}/color_histogram", "dominant_color")
 
     # nearest-primary (P10): Euclidean argmin over parameterized
     # centroids, ties → lowest index (pyspark_dominant.py:115-117)
@@ -146,7 +151,7 @@ def run_color_pipeline(
         .groupBy("closest_primary")
         .agg(F.count("*").alias("count"))
     )
-    write_semicolon_csv(primary_hist, f"{out_dir}/closest_primary")
+    write_semicolon_csv(primary_hist, f"{out_dir}/closest_primary", "closest_primary")
     return colors_out, hist, primary_hist
 
 
@@ -202,7 +207,8 @@ def run_stats_pipeline(
         "kind string, key string, files bigint, class_cnt bigint",
     )
     # materialized here, whatever lineage the caller's per_landmark has:
-    # the five sinks below all read this one small frame
+    # the five sinks below all read this one small frame, and each is a
+    # filter of its one (kind, key)-sorted partition, so no sink sorts
     groups = (
         per_landmark.join(F.broadcast(names), "landmark_id")
         .select(
@@ -217,6 +223,8 @@ def run_stats_pipeline(
             F.sum("files").alias("files"),
             zero_guard_div(F.sum("class_cnt"), F.sum("files")).alias("avg"),
         )
+        .coalesce(1)
+        .sortWithinPartitions("kind", "key")
         .localCheckpoint()
     )
 

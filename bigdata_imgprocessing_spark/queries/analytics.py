@@ -375,6 +375,40 @@ def chi2_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _top2_length_counts(spark: SparkSession, sf_dir: str):
+    """``(pv, tt)`` for the two largest documents sources (count desc,
+    name asc — a deterministic pick): ``pv`` holds each observed
+    ``n_chars`` with its count in the first (``d1``) and the second
+    (``d2``) source, ``tt`` the one row ``(src_a, src_b, n1, n2)``."""
+    from ..core.session import cache_parallelism
+
+    d = table(spark, sf_dir, "documents").select("source", "n_chars")
+    # ONE fact scan: collapse to the (source, length) contingency frame
+    # and derive both the per-source totals and the per-length counts
+    # from it (cached — it is domain-sized, |sources| × |lengths|).
+    base = (
+        d.groupBy("source", "n_chars")
+        .agg(F.count("*").alias("c"))
+        .coalesce(cache_parallelism(spark))
+        .cache()
+    )
+    sc = base.groupBy("source").agg(F.sum("c").alias("cnt"))
+    wr = Window.orderBy(F.desc("cnt"), "source")  # tiny frame: one row/source
+    top2 = sc.withColumn("rk", F.row_number().over(wr)).where(F.col("rk") <= 2)
+    t = base.join(F.broadcast(top2), "source").select("rk", "n_chars", "c")
+    pv = t.groupBy("n_chars").agg(
+        F.sum(F.when(F.col("rk") == 1, F.col("c")).otherwise(0)).alias("d1"),
+        F.sum(F.when(F.col("rk") == 2, F.col("c")).otherwise(0)).alias("d2"),
+    )
+    tt = top2.agg(
+        F.max(F.when(F.col("rk") == 1, F.col("source"))).alias("src_a"),
+        F.max(F.when(F.col("rk") == 2, F.col("source"))).alias("src_b"),
+        F.max(F.when(F.col("rk") == 1, F.col("cnt"))).alias("n1"),
+        F.max(F.when(F.col("rk") == 2, F.col("cnt"))).alias("n2"),
+    )
+    return pv, tt
+
+
 @query(
     "ks_score_drift",
     oracle="""
@@ -413,35 +447,10 @@ def ks_score_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor-division (``ks_e6``) — no float quotient ever rounds. The
     cumulative window runs over the distinct length DOMAIN (bounded),
     not the corpus; the per-length counts come from one grouped scan."""
-    from ..core.session import cache_parallelism
-
-    d = table(spark, sf_dir, "documents").select("source", "n_chars")
-    # ONE fact scan: collapse to the (source, length) contingency frame
-    # and derive both the per-source totals and the per-length counts
-    # from it (cached — it is domain-sized, |sources| × |lengths|).
-    base = (
-        d.groupBy("source", "n_chars")
-        .agg(F.count("*").alias("c"))
-        .coalesce(cache_parallelism(spark))
-        .cache()
-    )
-    sc = base.groupBy("source").agg(F.sum("c").alias("cnt"))
-    wr = Window.orderBy(F.desc("cnt"), "source")  # tiny frame: one row/source
-    top2 = sc.withColumn("rk", F.row_number().over(wr)).where(F.col("rk") <= 2)
-    t = base.join(F.broadcast(top2), "source").select("rk", "n_chars", "c")
-    pv = t.groupBy("n_chars").agg(
-        F.sum(F.when(F.col("rk") == 1, F.col("c")).otherwise(0)).alias("d1"),
-        F.sum(F.when(F.col("rk") == 2, F.col("c")).otherwise(0)).alias("d2"),
-    )
+    pv, tt = _top2_length_counts(spark, sf_dir)
     wv = Window.orderBy("n_chars").rowsBetween(Window.unboundedPreceding, 0)
     cum = pv.select(
         F.sum("d1").over(wv).alias("c1"), F.sum("d2").over(wv).alias("c2")
-    )
-    tt = top2.agg(
-        F.max(F.when(F.col("rk") == 1, F.col("source"))).alias("src_a"),
-        F.max(F.when(F.col("rk") == 2, F.col("source"))).alias("src_b"),
-        F.max(F.when(F.col("rk") == 1, F.col("cnt"))).alias("n1"),
-        F.max(F.when(F.col("rk") == 2, F.col("cnt"))).alias("n2"),
     )
     dd = F.abs(F.col("c1") * F.col("n2") - F.col("c2") * F.col("n1"))
     return (
@@ -514,23 +523,7 @@ def wasserstein_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapses the corpus to the (source, length) contingency frame;
     the cumulative/lead window runs over the bounded distinct-length
     DOMAIN, never corpus rows."""
-    from ..core.session import cache_parallelism
-
-    d = table(spark, sf_dir, "documents").select("source", "n_chars")
-    base = (
-        d.groupBy("source", "n_chars")
-        .agg(F.count("*").alias("c"))
-        .coalesce(cache_parallelism(spark))
-        .cache()
-    )
-    sc = base.groupBy("source").agg(F.sum("c").alias("cnt"))
-    wr = Window.orderBy(F.desc("cnt"), "source")  # tiny frame: one row/source
-    top2 = sc.withColumn("rk", F.row_number().over(wr)).where(F.col("rk") <= 2)
-    t = base.join(F.broadcast(top2), "source").select("rk", "n_chars", "c")
-    pv = t.groupBy("n_chars").agg(
-        F.sum(F.when(F.col("rk") == 1, F.col("c")).otherwise(0)).alias("d1"),
-        F.sum(F.when(F.col("rk") == 2, F.col("c")).otherwise(0)).alias("d2"),
-    )
+    pv, tt = _top2_length_counts(spark, sf_dir)
     wv = Window.orderBy("n_chars").rowsBetween(Window.unboundedPreceding, 0)
     wl = Window.orderBy("n_chars")
     cum = pv.select(
@@ -538,12 +531,6 @@ def wasserstein_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("d2").over(wv).alias("c2"),
         (F.lead("n_chars").over(wl) - F.col("n_chars")).alias("dx"),
     ).where(F.col("dx").isNotNull())
-    tt = top2.agg(
-        F.max(F.when(F.col("rk") == 1, F.col("source"))).alias("src_a"),
-        F.max(F.when(F.col("rk") == 2, F.col("source"))).alias("src_b"),
-        F.max(F.when(F.col("rk") == 1, F.col("cnt"))).alias("n1"),
-        F.max(F.when(F.col("rk") == 2, F.col("cnt"))).alias("n2"),
-    )
     gap = F.abs(F.col("c1") * F.col("n2") - F.col("c2") * F.col("n1"))
     return (
         cum.crossJoin(F.broadcast(tt))
@@ -1527,73 +1514,35 @@ def mannwhitney_price_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     operands (one sqrt — correctly rounded IEEE in both), then rounds.
     tie_term = sum(c^3 - c) stays far inside int64 (c <= corpus rows).
 
-    Scale: SIZE-CONDITIONAL rank pass (r16, VERDICT r15 item 6). Below
-    the rank-prefix crossover (operators/ranks.py — 2 GiB of scanned
-    input) the measured-faster window form runs: one global
-    rank (a total sort), tie sizes riding the same sorted run, then a
-    single scalar aggregate; the r15 interleaved measurement (2.5 s vs
-    1.1 s at sf0.1) showed the restructure's extra stage waves dominate
-    frames this small. ABOVE the crossover the single-partition sort is
-    the bottleneck, so the same statistics come from the two-level
-    bucketed-prefix form: groupBy the distinct price (map-side
-    combinable), doubled tie-averaged rank per value with bounded /
-    partitioned windows only, and the group-1 rank sum as
-    sum(c1 * dr) / 2 — the doubled-rank identity keeps every
-    intermediate an exact integer, so both forms are bit-identical
-    (pinned by test_rank_prefix_forms_match). Either way: no per-pair
-    work (the naive U definition is |n1 x n2|), and the tie term folds
-    from the same pass via sum_rows(c^2 - 1) = sum_prices(c^3 - c)."""
-    from ..operators.ranks import doubled_tie_ranks, use_prefix_ranks
+    Scale: one rank pass (``operators/ranks.py`` ``rank_pass``), then
+    one scalar aggregate: no per-pair work (the naive U definition is
+    |n1 x n2|), and the tie term folds from the same pass via
+    sum_rows(c^2 - 1) = sum_prices(c^3 - c)."""
+    from ..operators.ranks import rank_pass
 
     ensure_utc(spark)
     o = table(spark, sf_dir, "orders")
     grp = F.when(
         F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1
     ).otherwise(0)
-    if use_prefix_ranks(o):
-        pv = o.groupBy(F.col("o_totalprice").alias("v")).agg(
-            F.count("*").alias("c"), F.sum(grp).alias("c1")
-        )
-        drv = doubled_tie_ranks(pv, "v")
-        # r1 = sum over group-1 rows of (rank + (c-1)/2) = sum_v c1*dr/2;
-        # the doubled sum accumulates as DECIMAL(38,0) (sum_v c1*dr can
-        # pass int64 at ~1e6 rows) and the terminal halving of the
-        # double-cast value is exact — identical to the window form's
-        # half-integer double sum.
-        stats = drv.agg(
-            F.sum("c1").alias("n1"),
-            F.sum(F.col("c") - F.col("c1")).alias("n2"),
-            # NULL (not 0) when no group-1 row exists — the window
-            # form's sum-over-filtered-rows degenerate
-            F.when(
-                F.sum("c1") > 0,
-                F.sum(
-                    (F.col("c1") * F.col("dr")).cast("decimal(38,0)")
-                ).cast("double")
-                / 2.0,
-            ).alias("r1"),
-            F.coalesce(F.sum("c"), F.lit(0)).alias("n"),
-            F.sum(
-                F.col("c") * (F.col("c") * F.col("c") - 1)
-            ).alias("tie_term"),
-        )
-    else:
-        ranked = o.select(
-            grp.alias("grp"),
-            F.rank().over(Window.orderBy("o_totalprice")).alias("r"),
-            F.count("*")
-            .over(Window.partitionBy("o_totalprice"))
-            .alias("c"),
-        )
-        stats = ranked.agg(
-            F.sum(F.when(F.col("grp") == 1, 1).otherwise(0)).alias("n1"),
-            F.sum(F.when(F.col("grp") == 0, 1).otherwise(0)).alias("n2"),
-            F.sum(
-                F.when(F.col("grp") == 1, F.col("r") + (F.col("c") - 1) / 2.0)
-            ).alias("r1"),
-            F.count("*").alias("n"),
-            F.sum(F.col("c") * F.col("c") - 1).alias("tie_term"),
-        )
+    rp = rank_pass(o, "o_totalprice", c1=grp)
+    m, c1 = F.col("m"), F.col("c1")
+    # r1 = sum over group-1 rows of (rank + (c-1)/2) = sum(c1*dr)/2; the
+    # doubled sum accumulates as DECIMAL(38,0) (it can pass int64 at
+    # ~1e6 rows) and the terminal halving of the double-cast value is
+    # exact
+    stats = rp.agg(
+        F.sum(c1).alias("n1"),
+        F.sum(m - c1).alias("n2"),
+        # NULL (not 0) when no group-1 row exists
+        F.when(
+            F.sum(c1) > 0,
+            F.sum((c1 * F.col("dr")).cast("decimal(38,0)")).cast("double")
+            / 2.0,
+        ).alias("r1"),
+        F.coalesce(F.sum(m), F.lit(0)).alias("n"),
+        F.sum(m * (F.col("c") * F.col("c") - 1)).alias("tie_term"),
+    )
     u1 = F.col("r1") - F.col("n1") * (F.col("n1") + 1) / 2.0
     mu = F.col("n1") * F.col("n2") / 2.0
     sigma = F.sqrt(
@@ -1820,73 +1769,28 @@ def spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-valued operands. DuckDB's HUGEINT sums are cast back to
     DOUBLE exactly as Spark's BIGINT sums widen.
 
-    Scale: SIZE-CONDITIONAL rank pass (r16, operators/ranks.py — see
-    mannwhitney_price_shift): three global rank windows below the
-    input-bytes crossover, three value-keyed rank-map joins (no
-    data-sized single partition) above it, bit-identical either way;
-    then one scalar aggregate; no per-pair work (the naive rho is
-    |n^2| concordance pairs).
+    Scale: one rank pass (``operators/ranks.py`` ``row_ranks``), then
+    one scalar aggregate; no per-pair work (the naive rho is |n^2|
+    concordance pairs).
     The moments accumulate as DECIMAL(38,0) (exact to n ~ 2.9e11 rows
     — int64 sums would overflow past n ~ 1.3e6 since |sum(u*u)| <=
     4n^3), mirroring DuckDB's HUGEINT widening; both engines convert
     to double only at the terminal ratio."""
-    from ..operators.ranks import doubled_tie_ranks, use_prefix_ranks
+    from ..operators.ranks import row_ranks
 
     ensure_utc(spark)
     li = table(spark, sf_dir, "lineitem")
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-
-    if use_prefix_ranks(li):
-        # SIZE-CONDITIONAL rank pass (r16, operators/ranks.py — see
-        # mannwhitney_price_shift): one doubled-rank map per measure
-        # (groupBy distinct value + bounded two-level prefix, no
-        # data-sized single partition), joined back to the fact on the
-        # value — three value-keyed shuffles instead of three
-        # single-partition total sorts. The deterministic rev
-        # expression rebuilds bit-identical join keys; all ranks stay
-        # exact integers, so the moments match the window form exactly.
-        base = li.select(
-            F.col("l_quantity").alias("q"),
-            F.col("l_extendedprice").alias("p"),
-            rev.alias("rv"),
+    rr = row_ranks(
+        li, {"q": F.col("l_quantity"), "p": F.col("l_extendedprice"), "r": rev}
+    )
+    # doubled tie-averaged ranks centered by 2*mean = n + 1: exact int64
+    c = rr.select(
+        *(
+            (F.col(f"dr_{k}") - (F.col("n") + 1)).cast("bigint").alias(f"u{k}")
+            for k in "qpr"
         )
-        nrow = base.agg(F.count("*").alias("nn"))
-
-        def drmap(colname: str):
-            pv = base.groupBy(F.col(colname).alias("v")).agg(
-                F.count("*").alias("c")
-            )
-            return doubled_tie_ranks(pv, "v").select(
-                F.col("v").alias(colname),
-                F.col("dr").alias(f"dr_{colname}"),
-            )
-
-        c = (
-            base.join(drmap("q"), "q")
-            .join(drmap("p"), "p")
-            .join(drmap("rv"), "rv")
-            .crossJoin(F.broadcast(nrow))
-            .select(
-                (F.col("dr_q") - (F.col("nn") + 1)).cast("bigint").alias("uq"),
-                (F.col("dr_p") - (F.col("nn") + 1)).cast("bigint").alias("up"),
-                (F.col("dr_rv") - (F.col("nn") + 1)).cast("bigint").alias("ur"),
-            )
-        )
-    else:
-
-        def dctr(col):  # doubled tie-averaged rank, centered: exact int64
-            return (
-                2 * F.rank().over(Window.orderBy(col))
-                + F.count("*").over(Window.partitionBy(col))
-                - 1
-                - (F.count("*").over(Window.partitionBy()) + 1)
-            ).cast("bigint")
-
-        c = li.select(
-            dctr(F.col("l_quantity")).alias("uq"),
-            dctr(F.col("l_extendedprice")).alias("up"),
-            dctr(rev).alias("ur"),
-        )
+    )
     # Products are int64-safe (|u| <= 2n -> |u*u| <= 4n^2, fine to
     # n ~ 1.5e9 rows) but their SUMS are not past n ~ 1.3e6 (4n^3), so
     # the moments accumulate as DECIMAL(38,0) — exact to n ~ 2.9e11 —
@@ -2396,69 +2300,29 @@ def kruskal_wallis_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     significance flag compares the UNROUNDED ratio, and the all-equal
     degenerate (cc = 0) NULL-pins h_corrected/significant.
 
-    Scale: SIZE-CONDITIONAL rank pass (r16, operators/ranks.py — see
-    mannwhitney_price_shift): the window form's global rank below the
-    input-bytes crossover, the bucketed-prefix form (no data-sized
-    single partition) above it, bit-identical either way; the tie term
-    folds from the SAME pass via
+    Scale: one rank pass (``operators/ranks.py`` ``rank_pass``, keyed
+    by tier); the tie term folds from the SAME pass via
     sum_rows(c^2 - 1) = sum_prices(c^3 - c), so there is no second
     fact scan; then a 5-row fold — no per-pair work."""
-    from ..operators.ranks import doubled_tie_ranks, use_prefix_ranks
+    from ..operators.ranks import rank_pass
 
     ensure_utc(spark)
     o = table(spark, sf_dir, "orders")
     dd = "decimal(38,0)"
-    if use_prefix_ranks(o):
-        # SIZE-CONDITIONAL rank pass (r16, VERDICT r15 item 6 — see
-        # mannwhitney_price_shift): per-(price, tier) counts, doubled
-        # tie-averaged rank per distinct price from the bounded
-        # two-level prefix (operators/ranks.py), then the identical
-        # per-group fold — dj = sum_v cg*dr, ttg = sum_v cg*(c^2-1) —
-        # all exact integers, bit-identical to the window form.
-        pvg = o.groupBy(
-            F.col("o_totalprice").alias("v"),
-            F.col("o_orderpriority").alias("grp"),
-        ).agg(F.count("*").alias("cg"))
-        pv = pvg.groupBy("v").agg(F.sum("cg").alias("c"))
-        drv = doubled_tie_ranks(pv, "v")
-        per_g = (
-            pvg.join(drv.select("v", "c", "dr"), "v")
-            .groupBy("grp")
-            .agg(
-                F.sum("cg").alias("nj"),
-                F.sum(F.col("cg") * F.col("dr")).alias("dj"),
-                F.sum(
-                    (
-                        F.col("cg")
-                        * (F.col("c") * F.col("c") - 1)
-                    ).cast(dd)
-                ).alias("ttg"),
-            )
-        )
-    else:
-        # the tie size c rides the SAME rank pass (r12 review: a
-        # separate groupBy(o_totalprice) re-scanned the fact table; the
-        # identity sum_over_distinct_prices(c^3 - c) =
-        # sum_over_rows(c^2 - 1) folds the tie term from the per-row
-        # window value instead)
-        ranked = o.select(
-            F.col("o_orderpriority").alias("grp"),
-            F.count("*").over(Window.partitionBy("o_totalprice")).alias("c"),
-            (
-                2 * F.rank().over(Window.orderBy("o_totalprice"))
-                + F.count("*").over(Window.partitionBy("o_totalprice"))
-                - 1
-            ).alias("dr"),
-        )
-        per_g = ranked.groupBy("grp").agg(
-            F.count("*").alias("nj"),
-            F.sum("dr").alias("dj"),
+    m = F.col("m")
+    per_g = (
+        rank_pass(o, "o_totalprice", F.col("o_orderpriority").alias("grp"))
+        .groupBy("grp")
+        .agg(
+            F.sum(m).alias("nj"),
+            F.sum(m * F.col("dr")).alias("dj"),
             # tie term widened to decimal like dj^2: DuckDB's BIGINT
             # sum promotes to HUGEINT while Spark's int64 sum would
             # silently wrap on a heavily tied column (sum approaches
             # n^3)
-            F.sum((F.col("c") * F.col("c") - 1).cast(dd)).alias("ttg"),
+            F.sum((m * (F.col("c") * F.col("c") - 1)).cast(dd)).alias("ttg"),
         )
+    )
     folded = per_g.agg(
         F.sum("nj").alias("n"),
         F.count("*").alias("k"),

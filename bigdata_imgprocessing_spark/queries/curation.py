@@ -744,9 +744,8 @@ def decontam_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def decontam_store_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STORE-BACKED decontamination prefilter — the variant NOTES r10
-    item 11 scopes: the same two-phase shape as
-    ``decontam_bloom_prefilter`` (broadcast Bloom bitset probed
+    """STORE-BACKED decontamination prefilter: the same two-phase shape
+    as ``decontam_bloom_prefilter`` (broadcast Bloom bitset probed
     map-side, survivors verified by the exact membership join) but fed
     from the landed word-5-gram store (``_wordgram_store``,
     queries/dedup.py) instead of a fresh tokenize+md5 derivation. The

@@ -623,7 +623,7 @@ def simhash64_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: |V|*4 index rows over the distinct-fingerprint vocabulary;
     expected bucket size |V|/2^16 under a uniform model (hot-block
     remedies in the operator docstring); merge join pinned because
-    Catalyst cannot see the explode fan-out (NOTES r9)."""
+    Catalyst cannot see the explode fan-out (NOTES.md rule 7)."""
     from ..operators.hamming import hamming_k_neighbor_join
 
     fps = _simhash64_fps(spark, sf_dir)
@@ -2486,9 +2486,9 @@ def minhash_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def hot_bucket_rep_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Representative-based dedup of the HOT-bucket residue — the
-    consumer of `minhash_lsh_capped`'s cut accounting (NOTES r12 item
-    11): band buckets deeper than the cap (2, the same binding cutoff)
-    are not pairwise-enumerated; instead each bucket elects its min
+    consumer of `minhash_lsh_capped`'s cut accounting: band buckets
+    deeper than the cap (2, the same binding cutoff) are not
+    pairwise-enumerated; instead each bucket elects its min
     doc_id as REPRESENTATIVE and every other member verifies exact
     Jaccard against the representative only. Per member the best
     representative Jaccard decides duplication — the standard

@@ -1701,13 +1701,10 @@ def roc_auc_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     of bit-identical int64 operands. Degenerate single-class inputs
     pin auc/gini to NULL in both engines.
 
-    Scale: one embedding scan -> SIZE-CONDITIONAL rank pass (r16,
-    operators/ranks.py — see mannwhitney_price_shift): the window
-    form's global rank below the input-bytes crossover, the
-    bucketed-prefix form (no data-sized single partition) above it,
-    bit-identical either way -> one scalar aggregate; no |pos| x |neg|
-    pair enumeration (the naive AUC definition)."""
-    from ..operators.ranks import doubled_tie_ranks, use_prefix_ranks
+    Scale: one embedding scan -> one rank pass (``operators/ranks.py``
+    ``rank_pass``) -> one scalar aggregate; no |pos| x |neg| pair
+    enumeration (the naive AUC definition)."""
+    from ..operators.ranks import rank_pass
 
     e = table(spark, sf_dir, "embeddings")
     score = F.aggregate(
@@ -1715,38 +1712,15 @@ def roc_auc_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0.0),
         lambda acc, x: acc + x * x,
     )
-    s = e.select(
-        (F.col("label") < 5).cast("int").alias("pos"),
-        score.alias("score"),
+    # a NULL label counts as negative, as the oracle's CASE has it
+    rp = rank_pass(e, score, c1=F.when(F.col("label") < 5, 1).otherwise(0))
+    c1 = F.col("c1")
+    agg = rp.agg(
+        F.sum(c1).alias("n1"),
+        F.sum(F.col("m") - c1).alias("n0"),
+        # NULL (not 0) when no positive row exists
+        F.when(F.sum(c1) > 0, F.sum(c1 * F.col("dr"))).alias("s2"),
     )
-    if use_prefix_ranks(e):
-        pv = s.groupBy(F.col("score").alias("v")).agg(
-            F.count("*").alias("c"), F.sum("pos").alias("c1")
-        )
-        drv = doubled_tie_ranks(pv, "v")
-        agg = drv.agg(
-            F.sum("c1").alias("n1"),
-            F.sum(F.col("c") - F.col("c1")).alias("n0"),
-            # NULL (not 0) when no positive row exists — the window
-            # form's sum-over-filtered-rows degenerate
-            F.when(
-                F.sum("c1") > 0, F.sum(F.col("c1") * F.col("dr"))
-            ).alias("s2"),
-        )
-    else:
-        r = s.select(
-            "pos",
-            (
-                2 * F.rank().over(Window.orderBy("score"))
-                + F.count("*").over(Window.partitionBy("score"))
-                - 1
-            ).alias("dr"),
-        )
-        agg = r.agg(
-            F.sum(F.when(F.col("pos") == 1, 1).otherwise(0)).alias("n1"),
-            F.sum(F.when(F.col("pos") == 0, 1).otherwise(0)).alias("n0"),
-            F.sum(F.when(F.col("pos") == 1, F.col("dr"))).alias("s2"),
-        )
     ok = (F.col("n1") > 0) & (F.col("n0") > 0)
     u2 = F.col("s2") - F.col("n1") * (F.col("n1") + 1)
     return agg.select(

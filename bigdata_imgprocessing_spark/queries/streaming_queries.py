@@ -1350,7 +1350,7 @@ def streaming_ewma_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     Float parity: halvings are exact; the fold runs in the identical
     oldest-to-newest order in the pandas op and the oracle's
     list_reduce; the emitted double is UNROUNDED until the JVM-side
-    terminal round (python round is half-even — the NOTES hazard).
+    terminal round (python round is half-even).
 
     Scale: state is 19 scalars per key; each micro-batch shuffles only
     its own rows on the key; the final rollup is |event_types| rows."""

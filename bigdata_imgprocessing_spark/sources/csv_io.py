@@ -23,9 +23,15 @@ def read_semicolon_csv(
     return spark.read.schema(schema).csv(path, sep=";", header=True)
 
 
-def write_semicolon_csv(df: DataFrame, path: str) -> None:
+def write_semicolon_csv(df: DataFrame, path: str, *keys: str) -> None:
     """K1: overwrite-mode ``;`` CSV with header (reference's result-table
-    sink, pyspark_yolox.py:138-140)."""
+    sink, pyspark_yolox.py:138-140). With ``keys``, one part file sorted
+    by them, so a grouped report's bytes do not follow the shuffle
+    partition count: coalesce(1) adds no shuffle, and a sort within the
+    one partition adds no range-sampling job as orderBy would (small
+    reports only)."""
+    if keys:
+        df = df.coalesce(1).sortWithinPartitions(*keys)
     df.write.mode("overwrite").option("header", True).option("sep", ";").csv(path)
 
 

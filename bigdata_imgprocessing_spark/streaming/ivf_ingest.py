@@ -27,8 +27,8 @@ groupBy on vec_id (no sorted window partition — a hot shard of arrivals
 splits under AQE), the drift compare reads only the landed k-row
 occupancy summaries of prior batches (never the postings), and the
 stats row is built from three 1-row aggregates. The accumulated
-postings store is never re-read by the loop at all — it exists for
-downstream probes.
+postings store is never re-read by the loop at all: it is the index
+a downstream probe reads with ``ingest.read_store``.
 
 Stores: ``postings``, ``occ`` and ``stats``, under the layout and
 replay rule of streaming/ingest.py.
@@ -48,7 +48,6 @@ from . import ingest
 
 _CB_SCHEMA = "cell int, cv array<double>"
 _OCC_SCHEMA = "cell int, n bigint"
-_POSTINGS_SCHEMA = "cell int, vec_id bigint, dist double"
 _STATS_SCHEMA = (
     "wave bigint, n_vecs bigint, n_cells bigint, n_foreign bigint,"
     " max_cell_n bigint, avg_dist_e6 bigint, max_dist double,"
@@ -229,13 +228,6 @@ def run_ivf_assign_ingest(
 def read_stats(spark: SparkSession, state_root: str) -> DataFrame:
     """One stats row per drained micro-batch."""
     return ingest.read_store(spark, state_root, "stats", _STATS_SCHEMA)
-
-
-def read_postings(spark: SparkSession, state_root: str) -> DataFrame:
-    """The accumulated incremental IVF index: (cell, vec_id, dist)
-    across every drained batch. Per-batch dirs are disjoint by vec_id
-    (each arrival lands once), so no distinct on read."""
-    return ingest.read_store(spark, state_root, "postings", _POSTINGS_SCHEMA)
 
 
 def n_store_versions(state_root: str) -> int:

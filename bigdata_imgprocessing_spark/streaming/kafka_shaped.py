@@ -1,5 +1,4 @@
-"""Kafka-shaped streaming ingest (SURVEY.md §2.10 extension; NOTES r2
-item 3 — "Kafka-shaped sources when available").
+"""Kafka-shaped streaming ingest (SURVEY.md §2.10 extension).
 
 No Kafka broker exists in this container, so the *wire contract* is
 demonstrated instead: the event corpus is re-encoded into the exact

@@ -173,7 +173,7 @@ def _ewma_update(
     ``_update`` (ADVICE r2). Emits the UNROUNDED fold — terminal
     rounding happens JVM-side in the query so both engines round the
     identical double with the same half-up rule (python round is
-    half-even; the NOTES rounding hazard)."""
+    half-even)."""
     n, last, njumps, tail = (
         state.get if state.exists else (0, 0.0, 0, [])
     )

@@ -1,7 +1,7 @@
-"""MERGE-style upsert sink via ``foreachBatch`` (NOTES r2 item 3) —
-the keyed-state sink shape a real ingest pipeline runs against Delta/
-Iceberg/JDBC ``MERGE INTO``, built here on versioned parquet because no
-transactional table format ships in this container.
+"""MERGE-style upsert sink via ``foreachBatch`` — the keyed-state sink
+shape a real ingest pipeline runs against Delta/Iceberg/JDBC ``MERGE
+INTO``, built here on versioned parquet because no transactional table
+format ships in this container.
 
 Semantics per micro-batch (classic CDC compaction):
 - batch rows are reduced to one candidate per key (newest wins);

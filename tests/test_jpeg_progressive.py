@@ -61,7 +61,7 @@ def test_progressive_equals_baseline_decode(h, w, seed):
 
 
 def test_ac_refine_zrl_span_regression():
-    """Regression for the r7 AC-refinement encoder bug (VERDICT r7):
+    """Regression for an AC-refinement encoder bug:
     ZRL emission was deferred to the next newly-significant coefficient
     and ALL buffered correction bits flushed after the FIRST ZRL, so
     blocks with a previously-significant coefficient after the 16th
@@ -187,8 +187,8 @@ def test_progressive_truncation_fuzz(seed, frac):
     assert out.shape == img.shape
 
 
-# A byte-pinned stream from the PRE-r8 encoder (the ZRL/correction-bit
-# span bug, VERDICT r7): the AC-refinement scan of the sparse-coefficient
+# A byte-pinned stream from the earlier encoder (the ZRL/correction-bit
+# span bug): the AC-refinement scan of the sparse-coefficient
 # fixture above, with correction bits flushed in the wrong span order.
 # Real-world files mis-encoded this way exist; the decode contract must
 # route them to quarantine (clean ValueError), never crash the job.

@@ -409,6 +409,47 @@ def test_near_dup_rules_live_in_one_module():
     assert found == {name: [home] for name in rules}
 
 
+def test_rank_switch_lives_in_one_module():
+    """The rank size switch and both rank forms have one home,
+    operators/ranks.py: no other package module names
+    ``use_prefix_ranks`` or ``doubled_tie_ranks``, and each of the four
+    rank tests calls ``rank_pass`` or ``row_ranks`` once and builds no
+    ``rank()`` window of its own."""
+    import ast
+    import pathlib
+    import re
+
+    import bigdata_imgprocessing_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    switch = sorted(
+        p.relative_to(root).as_posix()
+        for p in root.rglob("*.py")
+        if re.search(r"\b(use_prefix_ranks|doubled_tie_ranks)\b", p.read_text())
+    )
+    assert switch == ["operators/ranks.py"]
+    rank_tests = {
+        "mannwhitney_price_shift",
+        "kruskal_wallis_price",
+        "spearman_rank_corr",
+        "roc_auc_eval",
+    }
+    found = {}
+    for p in (root / "queries").glob("*.py"):
+        for node in ast.walk(ast.parse(p.read_text())):
+            if isinstance(node, ast.FunctionDef) and node.name in rank_tests:
+                calls = [
+                    getattr(c.func, "attr", getattr(c.func, "id", None))
+                    for c in ast.walk(node)
+                    if isinstance(c, ast.Call)
+                ]
+                found[node.name] = (
+                    calls.count("rank_pass") + calls.count("row_ranks"),
+                    "rank" in calls,
+                )
+    assert found == {name: (1, False) for name in rank_tests}
+
+
 def test_only_queries_import_queries():
     """The dependency arrow points into queries/, never out of it:
     operators, streaming jobs, pipelines and the core import their rules

@@ -6,6 +6,7 @@ from __future__ import annotations
 import os
 from datetime import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 from bigdata_imgprocessing_spark.operators.asof import asof_join
@@ -469,6 +470,80 @@ def test_doubled_tie_ranks_null_first_like_window(spark):
     prefix = {r.v: r.dr for r in doubled_tie_ranks(pv, "v").collect()}
     assert window == {None: 3, 1: 6, 2: 9, 5: 12}
     assert prefix == window
+
+
+def _numpy_doubled_ranks(values):
+    """(dr, c) per value: doubled tie-averaged rank and tie count, with
+    NULL tied below every value, as ``rank()`` orders it."""
+    import numpy as np
+
+    key = np.array([-np.inf if v is None else v for v in values], dtype=float)
+    srt = np.sort(key)
+    lt = np.searchsorted(srt, key, "left")
+    c = np.searchsorted(srt, key, "right") - lt
+    return 2 * lt + c + 1, c
+
+
+@pytest.mark.parametrize("case", ["key", "sum", "rows"])
+def test_rank_forms_fold_like_numpy_on_skewed_nulls(spark, monkeypatch, case):
+    """Both forms of ``rank_pass`` (keyed, and with a per-row sum) and of
+    ``row_ranks`` fold to the same sums as a numpy rank reference on a
+    skewed column: one value holds 80% of the rows, plus NULLs and
+    ties (NULLs in both ``row_ranks`` columns)."""
+    import numpy as np
+
+    from bigdata_imgprocessing_spark.operators import ranks
+
+    ids = range(200)
+    v = [7 if i < 160 else None if i < 170 else i % 9 for i in ids]
+    w = [None if i % 13 == 0 else (i * 37) % 11 for i in ids]
+    k = ["abc"[i % 3] for i in ids]
+    s = [i % 2 for i in ids]
+    df = spark.createDataFrame(
+        list(zip(v, w, k, s)), "v bigint, w bigint, k string, s int"
+    )
+    dr, c = _numpy_doubled_ranks(v)
+    s_np, k_np = np.array(s), np.array(k)
+    m, cc = F.col("m"), F.col("c")
+    tie = F.sum(m * (cc * cc - 1))
+    if case == "key":
+        expect = {
+            g: (int((k_np == g).sum()), int(dr[k_np == g].sum()),
+                int((c[k_np == g] ** 2 - 1).sum()))
+            for g in "abc"
+        }
+
+        def fold():
+            out = ranks.rank_pass(df, "v", F.col("k").alias("g")).groupBy("g").agg(
+                F.sum(m).alias("n"), F.sum(m * F.col("dr")).alias("d"), tie.alias("t")
+            )
+            return {r.g: (r.n, r.d, r.t) for r in out.collect()}
+    elif case == "sum":
+        expect = (int(s_np.sum()), int((1 - s_np).sum()), int((s_np * dr).sum()),
+                  int((c**2 - 1).sum()), len(v))
+
+        def fold():
+            s1 = F.col("s1")
+            return tuple(ranks.rank_pass(df, F.col("v"), s1=F.col("s")).agg(
+                F.sum(s1), F.sum(m - s1), F.sum(s1 * F.col("dr")), tie, F.sum(m)
+            ).first())
+    else:
+        dw, _ = _numpy_doubled_ranks(w)
+        expect = (len(v), int((dr * dw).sum()), int(dr.sum()), int(dw.sum()), len(v))
+
+        def fold():
+            a, b = F.col("dr_a"), F.col("dr_b")
+            rr = ranks.row_ranks(df, {"a": F.col("v"), "b": F.col("w")})
+            return tuple(rr.agg(
+                F.count("*"), F.sum(a * b), F.sum(a), F.sum(b), F.max("n")
+            ).first())
+
+    # a list-built frame has no size estimate (Long.MaxValue), so a
+    # threshold past it forces the window form and 0 the prefix form
+    for threshold, prefix in ((1 << 63, False), (0, True)):
+        monkeypatch.setattr(ranks, "PREFIX_BYTES", threshold)
+        assert ranks.use_prefix_ranks(df) is prefix
+        assert fold() == expect, f"prefix form: {prefix}"
 
 
 def test_size_switches_log_their_choice(spark, sf_dir, monkeypatch, caplog):

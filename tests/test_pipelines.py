@@ -318,13 +318,9 @@ def test_pipelines_write_identical_csvs_in_a_second_session(spark, corpus, dims,
     first = run_all(spark, "first")
     assert {d.split("/")[0] for d in first} == {"det", "stats", "color"}
     assert run_all(spark, "again") == first
-    other = spark.newSession()
     # the fixture narrows shuffle partitions at run time, which a new
-    # session does not inherit; a CSV's row order follows that count
-    other.conf.set(
-        "spark.sql.shuffle.partitions", spark.conf.get("spark.sql.shuffle.partitions")
-    )
-    assert run_all(other, "new_session") == first
+    # session does not inherit: the grouped reports must not follow it
+    assert run_all(spark.newSession(), "new_session") == first
 
 
 def test_cache_root_tracks_every_table(spark, tmp_path):

@@ -1023,7 +1023,7 @@ def test_rank_switch_sizes_a_file_uri_corpus(spark, sf_dir, monkeypatch):
     ],
 )
 def test_rank_prefix_forms_match(spark, sf_dir, name, monkeypatch):
-    """r16 size-conditional rank pass (operators/ranks.py): below the
+    """The rank size switch (operators/ranks.py): below the
     scanned-bytes crossover the monitors plan the window form (global
     rank — fastest at test SFs); forcing the threshold to 0 switches
     the SAME query to the bucketed-prefix form, whose plan contains NO

@@ -961,9 +961,9 @@ def test_run_to_memory_drops_stale_sinks_per_session(spark, tmp_path, monkeypatc
 
 
 def test_streaming_lsh_ingest_capped_cuts_hot_bucket(spark, tmp_path):
-    """max_bucket mode of the streaming LSH ingest (VERDICT r12 item
-    3): identical-text docs share every band bucket, so the bucket's
-    accumulated depth crosses the cap on the third arrival — the pair
+    """max_bucket mode of the streaming LSH ingest: identical-text
+    docs share every band bucket, so the bucket's accumulated depth
+    crosses the cap on the third arrival — the pair
     against the newcomer is NOT enumerated (that residue is the
     representative pass' job), the per-batch accounting lands the cut
     (all 8 bands of the hot doc, depth 3 each), and a RESTART against
@@ -1766,9 +1766,8 @@ def test_streaming_lsh_ingest_capped_randomized(spark, tmp_path):
 
 
 def test_streaming_capped_residue_rep_pass_closes_the_loop(spark, tmp_path):
-    """End-to-end residue loop (VERDICT r13 item 5): the capped
-    stream's docstring claims `hot_bucket_rep_dedup` run over the
-    LANDED band state IS the residue consumer — bucket depth is
+    """End-to-end residue loop: the capped stream's docstring claims
+    `hot_bucket_rep_dedup` run over the LANDED band state IS the residue consumer — bucket depth is
     monotone over the drain, so the final index's over-cap buckets are
     exactly the ever-cut set. Prove it on a planted hot-cohort corpus:
     drain capped, replay the representative pass over the landed
@@ -1983,9 +1982,9 @@ def _paragraph_crash_replay(spark, tmp_path, scheme: str) -> None:
 
 
 def test_paragraph_batch_stream_totals_agree(spark, tmp_path):
-    """The SCALING.md part-C cross-validation as a randomized gate:
-    on a seeded corpus with planted unit repeats, the BATCH dedup
-    (paragraph_dedup_stats) and the STREAMING ingest
+    """Batch and streaming paragraph dedup cross-checked as a
+    randomized gate: on a seeded corpus with planted unit repeats, the
+    BATCH dedup (paragraph_dedup_stats) and the STREAMING ingest
     (streaming_paragraph_ingest) must agree on total unit instances
     and total duplicated instances — both count instances minus
     global first occurrences, so any drift in the unit expression,

@@ -150,8 +150,8 @@ def variant_dir(spark):
             -- complete view→click→purchase session (5-min steps, one
             -- session per user at 2h spacing) so the strict-sequential
             -- funnel count is O(100) instead of the organic corpus's
-            -- 0-1 (VERDICT r6: one ordering bug = one row difference
-            -- is statistically thin evidence); plus 15 REVERSED
+            -- 0-1 (one ordering bug = one row difference is
+            -- statistically thin evidence); plus 15 REVERSED
             -- purchase→click→view sessions that must count as view-only
             -- sessions (an out-of-order click may not advance a strict
             -- funnel — the exact bug class the mass is planted to catch)
