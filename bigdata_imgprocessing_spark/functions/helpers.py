@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import hashlib
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -54,3 +56,46 @@ def ordered_fold_sum(arr: Column) -> Column:
     by a stable key first (sort_array over a struct / list(... ORDER
     BY ...)). Shared by jackknife / log-rank / ACF / mixture-plan."""
     return F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x)
+
+
+# -- the deterministic hash rules --------------------------------------------
+# Every md5-derived rule in the package (the stub detector, the train/val/
+# test split, shard, sample and sketch buckets, near-dup node ids) builds on
+# one 40-bit key: the first 10 hex chars of md5(s) as an integer. 40 bits
+# keep it positive in BIGINT and leave room for the MinHash products below
+# 2^63 in both engines. Each rule is written here once per engine.
+
+
+def h40_of(s: str) -> int:
+    """The 40-bit key of ``s`` in Python: the first 10 hex chars of
+    md5(s). A plain module-level function, so Arrow UDF workers call it
+    without a closure."""
+    return int(hashlib.md5(s.encode()).hexdigest()[:10], 16)
+
+
+def h40(s: Column) -> Column:
+    """The 40-bit key of the string column ``s`` in Spark, as a bigint."""
+    return F.conv(F.substring(F.md5(s), 1, 10), 16, 10).cast("bigint")
+
+
+def duck_h40(expr: str) -> str:
+    """DuckDB twin of ``h40`` over the VARCHAR SQL expression ``expr``."""
+    return f"CAST(('0x' || substr(md5({expr}), 1, 10))::UBIGINT AS BIGINT)"
+
+
+def split_of(key: Column) -> Column:
+    """The train/val/test split (90/5/5) of a row with stable id ``key``:
+    ``h40(key || '_split') % 100`` below 90 is train, below 95 val, else
+    test. One rule across the pipeline, so a decontamination or leakage
+    audit sees exactly the split the trainer will."""
+    b = h40(F.concat(key.cast("string"), F.lit("_split"))) % 100
+    return F.when(b < 90, "train").when(b < 95, "val").otherwise("test")
+
+
+def duck_split(expr: str) -> str:
+    """DuckDB twin of ``split_of`` over the SQL expression ``expr``."""
+    b = duck_h40(f"CAST({expr} AS VARCHAR) || '_split'") + " % 100"
+    return (
+        f"CASE WHEN {b} < 90 THEN 'train' WHEN {b} < 95 THEN 'val' "
+        "ELSE 'test' END"
+    )

@@ -19,8 +19,6 @@ twin ``detections_sql``.
 
 from __future__ import annotations
 
-import hashlib
-
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -31,6 +29,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ..functions.helpers import duck_h40, h40_of
 
 #: score threshold for counting a detection (TRESHOLD, pyspark_yolox.py:17)
 SCORE_THRESHOLD = 0.4
@@ -45,17 +45,13 @@ DETECTION_SCHEMA = ArrayType(
 )
 
 
-def _h40(s: str) -> int:
-    return int(hashlib.md5(s.encode()).hexdigest()[:10], 16)
-
-
 def _detections_for_id(img_id: str) -> list[dict]:
     """0-3 pseudo-detections, fully determined by the image id."""
-    n = _h40(img_id) % 4
+    n = h40_of(img_id) % 4
     return [
         {
-            "class_id": _h40(f"{img_id}_{j}") % 80,
-            "score": (_h40(f"{img_id}_s{j}") % 1000) / 1000.0,
+            "class_id": h40_of(f"{img_id}_{j}") % 80,
+            "score": (h40_of(f"{img_id}_s{j}") % 1000) / 1000.0,
         }
         for j in range(1, n + 1)
     ]
@@ -65,11 +61,13 @@ def detections_sql(src: str, keep: str = "img_id") -> str:
     """DuckDB twin of ``_detections_for_id``: a SELECT with one row per
     stub detection of each row of relation ``src`` (which has a VARCHAR
     ``img_id``) — the ``keep`` columns, then class_id and score."""
+    class_h = duck_h40("img_id || '_' || CAST(j + 1 AS VARCHAR)")
+    score_h = duck_h40("img_id || '_s' || CAST(j + 1 AS VARCHAR)")
     return f"""SELECT {keep},
-               CAST(('0x' || substr(md5(img_id || '_' || CAST(j + 1 AS VARCHAR)), 1, 10))::UBIGINT % 80 AS INTEGER) AS class_id,
-               (('0x' || substr(md5(img_id || '_s' || CAST(j + 1 AS VARCHAR)), 1, 10))::UBIGINT % 1000) / 1000.0 AS score
+               CAST({class_h} % 80 AS INTEGER) AS class_id,
+               ({score_h} % 1000) / 1000.0 AS score
         FROM {src} CROSS JOIN (SELECT unnest(range(3)) AS j) js
-        WHERE j < ('0x' || substr(md5(img_id), 1, 10))::UBIGINT % 4"""
+        WHERE j < {duck_h40("img_id")} % 4"""
 
 
 @F.pandas_udf(DETECTION_SCHEMA)

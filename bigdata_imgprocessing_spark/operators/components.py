@@ -126,7 +126,8 @@ def connected_components(
         "local" if local else "distributed", n_edges, LOCAL_EDGES,
     )
     if local:
-        rows = sym.collect()
+        # two Arrow columns, not up to LOCAL_EDGES PySpark Row objects
+        cols = sym.toArrow()
         parent: dict = {}
 
         def find(x):
@@ -135,8 +136,7 @@ def connected_components(
                 x = parent[x]
             return x
 
-        for r in rows:
-            a, b = r["a"], r["b"]
+        for a, b in zip(cols["a"].to_pylist(), cols["b"].to_pylist()):
             parent.setdefault(a, a)
             parent.setdefault(b, b)
             ra, rb = find(a), find(b)

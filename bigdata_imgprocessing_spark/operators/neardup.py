@@ -8,7 +8,6 @@ deployment modes:
 | rule | Spark | DuckDB |
 |---|---|---|
 | word 3-gram shingles | ``shingles_sql``, ``shingles``, ``SHINGLE_SET``, ``shingle_sets`` | ``DUCK_SHINGLES`` |
-| 40-bit md5 hash | ``h40`` | (inside ``duck_mh``) |
 | MinHash signature, band keys | ``minhash_signatures``, ``band_frame`` | ``duck_mh``, ``DUCK_BANDS_CTES`` |
 | band-bucket probe | ``candidate_pairs`` | ``cand`` of ``DUCK_PAIRS_CTES`` |
 | exact shingle-set Jaccard | ``exact_jaccard`` | ``duck_jaccard`` |
@@ -16,10 +15,11 @@ deployment modes:
 | paragraph unit hash | ``para_units_sql`` | ``duck_para_chunks`` |
 | md5 word 5-grams | ``wordgram_hashes``, ``wordgram_5h`` | ``duck_wordgram_5h`` |
 
-Hash design shared by Spark and oracle: H(s) = first 10 hex chars of
-md5(s) as a 40-bit integer; minhash_j(s) = (a_j*H + b_j) mod P with
-a_j = 2j+3, b_j = 7919j + 1, P = 1099511627791 (prime > 2^40). 40-bit H
-keeps a_j*H far below 2^63, so neither engine overflows.
+Hash design shared by Spark and oracle: H(s) = the 40-bit md5 key
+(``h40``/``duck_h40``, functions/helpers.py); minhash_j(s) =
+(a_j*H + b_j) mod P with a_j = 2j+3, b_j = 7919j + 1, P = 1099511627791
+(prime > 2^40). 40-bit H keeps a_j*H far below 2^63, so neither engine
+overflows.
 
 Construction: the per-row rules are built from SQL strings parsed in one
 ``F.expr`` call, not Column loops. A foreachBatch ingest builds its plan
@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..core.session import cache_parallelism
+from ..functions.helpers import duck_h40, h40
 
 P = 1099511627791  # prime > 2^40
 N_HASHES = 16
@@ -93,12 +94,6 @@ def shingle_sets(d: DataFrame) -> DataFrame:
     return d.select("doc_id", F.expr(SHINGLE_SET).alias("ss"))
 
 
-def h40(s: Column) -> Column:
-    """40-bit integer hash: first 10 hex chars of md5. Reproducible in
-    DuckDB as ('0x' || substr(md5(s),1,10))::UBIGINT."""
-    return F.conv(F.substring(F.md5(s), 1, 10), 16, 10).cast("bigint")
-
-
 def minhash_signatures(d: DataFrame) -> DataFrame:
     """doc_id + mh0..mh15 via explode → hash-once → groupBy(doc_id) with
     16 algebraic min aggregates.
@@ -113,12 +108,7 @@ def minhash_signatures(d: DataFrame) -> DataFrame:
         "doc_id",
         F.expr(f"explode({SHINGLE_SET})").alias("s"),
     )
-    h = sh.select(
-        "doc_id",
-        F.expr(
-            "CAST(conv(substring(md5(s), 1, 10), 16, 10) AS BIGINT)"
-        ).alias("h"),
-    )
+    h = sh.select("doc_id", h40(F.col("s")).alias("h"))
     return h.groupBy("doc_id").agg(
         *[
             F.expr(f"min(({_a(j)} * h + {_b(j)}) % {P}) AS mh{j}")
@@ -153,7 +143,7 @@ DUCK_SHINGLES = """
 
 def duck_mh(j: int) -> str:
     return (
-        f"list_min(list_transform(sh, s -> ({_a(j)} * CAST(('0x' || substr(md5(s),1,10))::UBIGINT AS BIGINT)"
+        f"list_min(list_transform(sh, s -> ({_a(j)} * {duck_h40('s')}"
         f" + {_b(j)}) % {P})) AS mh{j}"
     )
 
@@ -286,7 +276,7 @@ def simhash64_frame(d: DataFrame, parallelism: int | None = None) -> DataFrame:
     tok = d.select("doc_id", F.explode(F.split(F.col("text"), " ")).alias("t"))
     h = tok.select(
         "doc_id",
-        F.expr("CAST(conv(substring(md5(t), 1, 10), 16, 10) AS BIGINT)").alias("h1"),
+        h40(F.col("t")).alias("h1"),
         F.expr("CAST(conv(substring(md5(t), 11, 10), 16, 10) AS BIGINT)").alias("h2"),
     )
     votes = h.groupBy("doc_id").agg(
@@ -326,7 +316,7 @@ def _duck_simhash64_value() -> str:
 DUCK_SIMHASH64_CTES = f"""tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS t
                  FROM documents),
     h AS (SELECT doc_id,
-                 CAST(('0x' || substr(md5(t),1,10))::UBIGINT AS BIGINT) AS h1,
+                 {duck_h40('t')} AS h1,
                  CAST(('0x' || substr(md5(t),11,10))::UBIGINT AS BIGINT) AS h2
           FROM tok),
     v AS (SELECT doc_id, {", ".join(

@@ -8,21 +8,18 @@ pandas_udf. A real model swaps the numpy dot for a forward pass
 
 from __future__ import annotations
 
-import hashlib
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.helpers import h40_of
+
 
 def deterministic_weights(dim: int, seed_tag: str = "w") -> list[int]:
     """Integer weight vector derived from md5 — reproducible in SQL, so
     scored outputs stay oracle-checkable."""
-    return [
-        (int(hashlib.md5(f"{seed_tag}{d}".encode()).hexdigest()[:10], 16) % 201) - 100
-        for d in range(dim)
-    ]
+    return [(h40_of(f"{seed_tag}{d}") % 201) - 100 for d in range(dim)]
 
 
 def make_linear_scorer(spark: SparkSession, weights: list[int]):

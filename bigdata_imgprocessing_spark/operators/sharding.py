@@ -15,16 +15,17 @@ Spark shape: the score array is built JVM-side (one md5 per
 (record, shard), ``array_max`` over ``struct(hash, shard)`` — struct
 ordering compares the hash first, and md5 over distinct strings makes
 ties impossible), so assignment is a pure projection: no shuffle, no
-state, no UDF. The DuckDB oracles replay the identical hash
-(``('0x' || substr(md5(...), 1, 10))::UBIGINT`` == Spark's
-``conv(substr(md5(...), 1, 10), 16, 10)`` — 40 bits, always positive,
-same ordering in BIGINT).
+state, no UDF. The hash is the 40-bit md5 key (``h40``,
+functions/helpers.py), and the DuckDB oracles replay it with its twin
+``duck_h40``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from ..functions.helpers import h40
 
 
 def shard_scores(key: Column, n_shards: int, salt: str = "_shard_") -> Column:
@@ -36,17 +37,7 @@ def shard_scores(key: Column, n_shards: int, salt: str = "_shard_") -> Column:
     return F.array(
         *[
             F.struct(
-                F.conv(
-                    F.substring(
-                        F.md5(F.concat(key.cast("string"), F.lit(f"{salt}{s}"))),
-                        1,
-                        10,
-                    ),
-                    16,
-                    10,
-                )
-                .cast("bigint")
-                .alias("h"),
+                h40(F.concat(key.cast("string"), F.lit(f"{salt}{s}"))).alias("h"),
                 F.lit(s).alias("s"),
             )
             for s in range(n_shards)

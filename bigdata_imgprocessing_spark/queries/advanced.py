@@ -7,8 +7,6 @@ approx answers have no exact oracle by construction).
 
 from __future__ import annotations
 
-import hashlib
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -16,6 +14,7 @@ from pyspark.sql import functions as F
 from ..core.catalog import table
 from ..core.registry import query
 from ..core.session import local_frame
+from ..functions.helpers import h40_of
 from ..operators.similarity import duck_cosine, norm, rounded_cosine
 
 # ---------------------------------------------------------------------------
@@ -200,11 +199,7 @@ def percentile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _DIM = 64
 _PLANES = [
-    [
-        (int(hashlib.md5(f"pl{j}_{d}".encode()).hexdigest()[:10], 16) % 2001) - 1000
-        for d in range(_DIM)
-    ]
-    for j in range(8)
+    [(h40_of(f"pl{j}_{d}") % 2001) - 1000 for d in range(_DIM)] for j in range(8)
 ]
 
 

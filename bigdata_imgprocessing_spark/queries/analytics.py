@@ -27,8 +27,7 @@ from pyspark.sql import functions as F
 from ..core.catalog import table
 from ..core.registry import query
 from ..core.session import ensure_utc, local_frame
-from ..functions.helpers import ordered_fold_sum, ordered_pairs
-from .curation import _duck_bucket, _md5_bucket
+from ..functions.helpers import duck_h40, h40, ordered_fold_sum, ordered_pairs
 
 # ---------------------------------------------------------------------------
 # Spark-4 SQL dialect surfaces
@@ -81,7 +80,7 @@ def listagg_order_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     "collation_group_names",
     oracle=f"""
     WITH t AS (
-        SELECT CASE WHEN {_duck_bucket("w", 2)} = 0 THEN upper(w) ELSE w END AS w2
+        SELECT CASE WHEN {duck_h40("w")} % 2 = 0 THEN upper(w) ELSE w END AS w2
         FROM (SELECT string_split(text, ' ')[1] AS w FROM documents)
     )
     SELECT lower(w2) AS word,
@@ -101,7 +100,7 @@ def collation_group_names(spark: SparkSession, sf_dir: str) -> DataFrame:
     across a ci-group, unlike the arbitrary group representative)."""
     d = table(spark, sf_dir, "documents")
     w = F.split(F.col("text"), " ").getItem(0)
-    w2 = F.when(_md5_bucket(w, 2) == 0, F.upper(w)).otherwise(w)
+    w2 = F.when(h40(w) % 2 == 0, F.upper(w)).otherwise(w)
     return (
         d.select(w2.alias("w2"))
         .groupBy(F.collate(F.col("w2"), "UTF8_LCASE").alias("wc"))
@@ -799,11 +798,10 @@ def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "weighted_doc_sample",
-    oracle="""
+    oracle=f"""
     WITH t AS (
         SELECT doc_id, n_chars,
-               CAST(('0x' || substr(md5(doc_id::VARCHAR || '_wsample'), 1, 10))::UBIGINT
-                    % 1048576 AS BIGINT) AS h_int
+               {duck_h40("doc_id::VARCHAR || '_wsample'")} % 1048576 AS h_int
         FROM documents WHERE n_chars > 0
     )
     SELECT doc_id, n_chars, h_int
@@ -824,9 +822,7 @@ def weighted_doc_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale-correct corpus sampler: one scan, one bounded top-k, no
     global sort materialized."""
     d = table(spark, sf_dir, "documents").where(F.col("n_chars") > 0)
-    h = _md5_bucket(
-        F.concat(F.col("doc_id").cast("string"), F.lit("_wsample")), 1 << 20
-    )
+    h = h40(F.concat(F.col("doc_id").cast("string"), F.lit("_wsample"))) % (1 << 20)
     t = d.select("doc_id", "n_chars", h.alias("h_int"))
     key = F.ln((F.col("h_int") + 1) / F.lit(float((1 << 20) + 1))) / F.col("n_chars")
     return (
@@ -1264,8 +1260,7 @@ _CMS_W = 64  # buckets per row — ~900 bigram keys over 64 buckets, so
     n AS (SELECT CAST(sum(cnt) AS BIGINT) AS n_tok FROM tc),
     keys AS (
         SELECT g, cnt, CAST(r.i AS INTEGER) AS r,
-               CAST((('0x' || substr(md5(g || '_cms_' || CAST(r.i AS VARCHAR)), 1, 10))::UBIGINT
-                     % {_CMS_W}) AS BIGINT) AS b
+               {duck_h40("g || '_cms_' || CAST(r.i AS VARCHAR)")} % {_CMS_W} AS b
         FROM tc, UNNEST(range({_CMS_D})) AS r(i)
     ),
     counters AS (
@@ -1341,8 +1336,8 @@ def cms_frequency_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 *[
                     F.struct(
                         F.lit(r).alias("r"),
-                        _md5_bucket(
-                            F.concat(F.col("g"), F.lit(f"_cms_{r}")), _CMS_W
+                        (
+                            h40(F.concat(F.col("g"), F.lit(f"_cms_{r}"))) % _CMS_W
                         ).alias("b"),
                     )
                     for r in range(_CMS_D)
@@ -2831,7 +2826,7 @@ _CONF_ALPHA = 0.1  # target coverage 0.9
     WITH c AS (
         SELECT o_orderpriority AS tier,
                CAST(round(o_totalprice * 100) AS BIGINT) AS yc,
-               CASE WHEN {_duck_bucket("CAST(o_orderkey AS VARCHAR) || '_conf'", 2)} = 0
+               CASE WHEN {duck_h40("CAST(o_orderkey AS VARCHAR) || '_conf'")} % 2 = 0
                     THEN 'cal' ELSE 'eval' END AS split
         FROM orders
     ), med AS (
@@ -2913,9 +2908,7 @@ def conformal_coverage_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderpriority").alias("tier"),
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("yc"),
         (
-            _md5_bucket(
-                F.concat(F.col("o_orderkey").cast("string"), F.lit("_conf")), 2
-            )
+            h40(F.concat(F.col("o_orderkey").cast("string"), F.lit("_conf"))) % 2
             == 0
         ).alias("is_cal"),
     )

@@ -4,8 +4,8 @@ splitting, overlapping-window chunking, and fixed-order sequence packing
 that the reference's pipeline (image corpus -> per-image features ->
 grouped stats) never needed but a 100 TB text pipeline always does.
 
-All randomness is hash-derived (md5 -> 40-bit integer, the same
-construction as ``queries/dedup.py``) so every assignment is a pure
+All randomness is hash-derived (the 40-bit md5 key ``h40`` and the
+split ``split_of`` of functions/helpers.py) so every assignment is a pure
 function of the row — reproducible across runs, engines, and cluster
 sizes, and re-runnable on an incrementally grown corpus without
 reshuffling previously assigned rows.
@@ -18,12 +18,18 @@ window key.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..core.catalog import table
 from ..core.registry import query
-from ..functions.helpers import ordered_fold_sum
+from ..functions.helpers import (
+    duck_h40,
+    duck_split,
+    h40,
+    ordered_fold_sum,
+    split_of,
+)
 from ..operators.neardup import (
     DUCK_PAIRS_CTES,
     WORDGRAM_N,
@@ -35,30 +41,12 @@ from ..operators.similarity import duck_cosine, norm, rounded_cosine
 # ---------------------------------------------------------------------------
 
 
-def _md5_bucket(s: Column, mod: int) -> Column:
-    """First 10 md5 hex chars as an integer, mod ``mod`` — DuckDB side is
-    ('0x' || substr(md5(s),1,10))::UBIGINT % mod (fits in 40 bits, so no
-    signedness mismatch)."""
-    return F.conv(F.substring(F.md5(s), 1, 10), 16, 10).cast("bigint") % mod
-
-
-def _duck_bucket(expr: str, mod: int) -> str:
-    return f"(('0x' || substr(md5({expr}), 1, 10))::UBIGINT % {mod})"
-
-
-# ---------------------------------------------------------------------------
-
-
 @query(
     "doc_split_stats",
     oracle=f"""
     WITH assigned AS (
         SELECT lang,
-               CASE WHEN {_duck_bucket("CAST(doc_id AS VARCHAR) || '_split'", 100)} < 90
-                    THEN 'train'
-                    WHEN {_duck_bucket("CAST(doc_id AS VARCHAR) || '_split'", 100)} < 95
-                    THEN 'val'
-                    ELSE 'test' END AS split,
+               {duck_split("doc_id")} AS split,
                len(string_split(text, ' ')) AS n_tokens
         FROM documents
     )
@@ -78,14 +66,10 @@ def doc_split_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     query is one narrow projection plus a single grouped-agg shuffle on
     a low-cardinality key (langs x 3)."""
     d = table(spark, sf_dir, "documents")
-    h = _md5_bucket(F.concat(F.col("doc_id").cast("string"), F.lit("_split")), 100)
-    split = (
-        F.when(h < 90, "train").when(h < 95, "val").otherwise("test")
-    )
     return (
         d.select(
             "lang",
-            split.alias("split"),
+            split_of(F.col("doc_id")).alias("split"),
             F.size(F.split(F.col("text"), " ")).alias("n_tokens"),
         )
         .groupBy("lang", "split")
@@ -166,7 +150,7 @@ _PACK_SHARDS = 8  # parallel packing streams per lang
     oracle=f"""
     WITH sized AS (
         SELECT lang,
-               {_duck_bucket("CAST(doc_id AS VARCHAR) || '_shard'", _PACK_SHARDS)} AS shard,
+               {duck_h40("CAST(doc_id AS VARCHAR) || '_shard'")} % {_PACK_SHARDS} AS shard,
                doc_id,
                len(string_split(text, ' ')) AS n_tokens
         FROM documents
@@ -206,8 +190,9 @@ def doc_pack_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     sized = d.select(
         "lang",
-        _md5_bucket(
-            F.concat(F.col("doc_id").cast("string"), F.lit("_shard")), _PACK_SHARDS
+        (
+            h40(F.concat(F.col("doc_id").cast("string"), F.lit("_shard")))
+            % _PACK_SHARDS
         ).alias("shard"),
         "doc_id",
         F.size(F.split(F.col("text"), " ")).alias("n_tokens"),
@@ -250,7 +235,7 @@ def doc_pack_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep AS (
         SELECT d.lang
         FROM documents d JOIN cnt ON d.lang = cnt.lang CROSS JOIN tgt
-        WHERE {_duck_bucket("CAST(doc_id AS VARCHAR) || '_sample'", 1000000)} * 1.0 / 1000000
+        WHERE {duck_h40("CAST(doc_id AS VARCHAR) || '_sample'")} % 1000000 * 1.0 / 1000000
               < tgt.t * 1.0 / cnt.c
     )
     SELECT cnt.lang,
@@ -288,8 +273,8 @@ def stratified_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("t", F.min("c").over(Window.partitionBy()))
         .cache()
     )
-    u = _md5_bucket(
-        F.concat(F.col("doc_id").cast("string"), F.lit("_sample")), 1_000_000
+    u = (
+        h40(F.concat(F.col("doc_id").cast("string"), F.lit("_sample"))) % 1_000_000
     ) / F.lit(1_000_000.0)
     kept = (
         d.join(F.broadcast(cnt), "lang")
@@ -369,10 +354,7 @@ def doc_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH assigned AS (
         SELECT doc_id, lang, string_split(text, ' ') AS toks,
-               CASE WHEN {_duck_bucket("CAST(doc_id AS VARCHAR) || '_split'", 100)} < 90
-                    THEN 'train'
-                    WHEN {_duck_bucket("CAST(doc_id AS VARCHAR) || '_split'", 100)} >= 95
-                    THEN 'test' END AS split
+               {duck_split("doc_id")} AS split
         FROM documents
     ), grams AS (
         SELECT doc_id, lang, split,
@@ -381,7 +363,7 @@ def doc_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM (
             SELECT doc_id, lang, split, toks,
                    unnest(generate_series(0, len(toks) - {WORDGRAM_N})) AS i
-            FROM assigned WHERE split IS NOT NULL
+            FROM assigned WHERE split != 'val'
         )
     ), train_grams AS (
         SELECT DISTINCT gram_h FROM grams WHERE split = 'train'
@@ -404,9 +386,10 @@ def decontam_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     share any word 5-gram with the train split — the benchmark-leakage
     scan every training-data pipeline runs before shipping an eval set.
 
-    Uses the SAME hash split as ``doc_split_stats`` (one split function
-    across the whole pipeline is itself the point: the contamination
-    scan must see exactly the split the trainer will).
+    Uses the SAME hash split as ``doc_split_stats``, ``split_of``
+    (functions/helpers.py; one split function across the whole
+    pipeline is itself the point: the contamination scan must see
+    exactly the split the trainer will).
 
     Scale design: grams are hashed to a 16-hex-char key BEFORE the
     shuffle, so the semi join moves fixed 16-byte keys instead of raw
@@ -420,11 +403,12 @@ def decontam_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     direction for decontamination.
     """
     d = table(spark, sf_dir, "documents")
-    h = _md5_bucket(F.concat(F.col("doc_id").cast("string"), F.lit("_split")), 100)
-    split = F.when(h < 90, "train").when(h >= 95, "test")
     assigned = d.select(
-        "doc_id", "lang", split.alias("split"), F.split(F.col("text"), " ").alias("toks")
-    ).where(F.col("split").isNotNull())
+        "doc_id",
+        "lang",
+        split_of(F.col("doc_id")).alias("split"),
+        F.split(F.col("text"), " ").alias("toks"),
+    ).where(F.col("split") != "val")
     grams = assigned.select(
         "doc_id",
         "split",
@@ -605,10 +589,7 @@ def _bitset_decontam_stats(
     oracle=f"""
     WITH assigned AS (
         SELECT doc_id, lang, string_split(text, ' ') AS toks,
-               CASE WHEN {_duck_bucket("CAST(doc_id AS VARCHAR) || '_split'", 100)} < 90
-                    THEN 'train'
-                    WHEN {_duck_bucket("CAST(doc_id AS VARCHAR) || '_split'", 100)} >= 95
-                    THEN 'test' END AS split
+               {duck_split("doc_id")} AS split
         FROM documents
     ), grams AS (
         SELECT doc_id, lang, split,
@@ -617,7 +598,7 @@ def _bitset_decontam_stats(
         FROM (
             SELECT doc_id, lang, split, toks,
                    unnest(generate_series(0, len(toks) - {WORDGRAM_N})) AS i
-            FROM assigned WHERE split IS NOT NULL
+            FROM assigned WHERE split != 'val'
         )
     ), train_grams AS (
         SELECT DISTINCT gram_h FROM grams WHERE split = 'train'
@@ -670,12 +651,12 @@ def decontam_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe-hit counts stay OUT of the hash — they are filter-layout
     specific (same audit discipline as `bloom_prefilter_stats`)."""
     d = table(spark, sf_dir, "documents")
-    h = _md5_bucket(F.concat(F.col("doc_id").cast("string"), F.lit("_split")), 100)
-    split = F.when(h < 90, "train").when(h >= 95, "test")
     assigned = d.select(
-        "doc_id", "lang", split.alias("split"),
+        "doc_id",
+        "lang",
+        split_of(F.col("doc_id")).alias("split"),
         F.split(F.col("text"), " ").alias("toks"),
-    ).where(F.col("split").isNotNull())
+    ).where(F.col("split") != "val")
     grams = assigned.select(
         "doc_id",
         "lang",
@@ -699,10 +680,7 @@ def decontam_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH assigned AS (
         SELECT doc_id, lang, string_split(text, ' ') AS toks,
-               CASE WHEN {_duck_bucket("CAST(doc_id AS VARCHAR) || '_split'", 100)} < 90
-                    THEN 'train'
-                    WHEN {_duck_bucket("CAST(doc_id AS VARCHAR) || '_split'", 100)} >= 95
-                    THEN 'test' END AS split
+               {duck_split("doc_id")} AS split
         FROM documents
     ), grams AS (
         SELECT doc_id, lang, split,
@@ -710,7 +688,7 @@ def decontam_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM (
             SELECT doc_id, lang, split, toks,
                    unnest(generate_series(0, len(toks) - {WORDGRAM_N})) AS i
-            FROM assigned WHERE split IS NOT NULL
+            FROM assigned WHERE split != 'val'
         )
     ), train_grams AS (
         SELECT DISTINCT gram FROM grams WHERE split = 'train'
@@ -776,13 +754,9 @@ def decontam_store_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import _wordgram_store
 
     d = table(spark, sf_dir, "documents")
-    h = _md5_bucket(
-        F.concat(F.col("doc_id").cast("string"), F.lit("_split")), 100
-    )
-    split = F.when(h < 90, "train").when(h >= 95, "test")
-    docs = d.select("doc_id", "lang", split.alias("split")).where(
-        F.col("split").isNotNull()
-    )
+    docs = d.select(
+        "doc_id", "lang", split_of(F.col("doc_id")).alias("split")
+    ).where(F.col("split") != "val")
     grams = (
         _wordgram_store(spark, sf_dir)
         .select("doc_id", "g")
@@ -805,11 +779,10 @@ def decontam_store_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "shard_rendezvous_stability",
-    oracle="""
+    oracle=f"""
     WITH sc AS (
         SELECT doc_id, CAST(t.s AS INTEGER) AS s,
-               ('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '_shard_'
-                                   || CAST(t.s AS VARCHAR)), 1, 10))::UBIGINT
+               {duck_h40("CAST(doc_id AS VARCHAR) || '_shard_' || CAST(t.s AS VARCHAR)")}
                    AS h
         FROM documents, UNNEST(range(9)) AS t(s)
     ), a8 AS (
@@ -981,7 +954,7 @@ def pii_scrub_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept AS (
         SELECT d.source, count(*) AS n_kept, sum(d.n_chars) AS toks_kept
         FROM documents d JOIN rates r ON d.source = r.source
-        WHERE {_duck_bucket("CAST(doc_id AS VARCHAR) || '_mix'", 1000000)} * 1.0 / 1000000
+        WHERE {duck_h40("CAST(doc_id AS VARCHAR) || '_mix'")} % 1000000 * 1.0 / 1000000
               < r.rate
         GROUP BY d.source
     )
@@ -1039,8 +1012,8 @@ def mixture_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0.5) * F.col("tok_total") * F.col("w") / F.col("w_total") / F.col("toks"),
         ),
     )
-    u = _md5_bucket(
-        F.concat(F.col("doc_id").cast("string"), F.lit("_mix")), 1_000_000
+    u = (
+        h40(F.concat(F.col("doc_id").cast("string"), F.lit("_mix"))) % 1_000_000
     ) / F.lit(1_000_000.0)
     kept = (
         d.join(F.broadcast(rates.select("source", "rate")), "source")
@@ -1059,12 +1032,12 @@ def mixture_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "fixed_size_group_sample",
-    oracle="""
+    oracle=f"""
     WITH ranked AS (
         SELECT lang, doc_id, n_chars,
                row_number() OVER (
                    PARTITION BY lang
-                   ORDER BY ('0x' || substr(md5('samp' || CAST(doc_id AS VARCHAR)), 1, 10))::UBIGINT,
+                   ORDER BY {duck_h40("'samp' || CAST(doc_id AS VARCHAR)")},
                             doc_id
                ) AS rn
         FROM documents
@@ -1089,11 +1062,7 @@ def fixed_size_group_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     that is reservoir sampling's merge property, expressed
     declaratively."""
     d = table(spark, sf_dir, "documents")
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.lit("samp"), F.col("doc_id").cast("string"))), 1, 10),
-        16,
-        10,
-    ).cast("bigint")
+    h = h40(F.concat(F.lit("samp"), F.col("doc_id").cast("string")))
     w = Window.partitionBy("lang").orderBy(h.asc(), F.col("doc_id").asc())
     ranked = d.withColumn("rn", F.row_number().over(w))
     return (
@@ -1107,23 +1076,6 @@ def fixed_size_group_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SPLIT_CASE_A = f"""CASE WHEN {_duck_bucket("CAST(doc_a AS VARCHAR) || '_split'", 100)} < 90 THEN 'train'
-                 WHEN {_duck_bucket("CAST(doc_a AS VARCHAR) || '_split'", 100)} < 95 THEN 'val'
-                 ELSE 'test' END"""
-_SPLIT_CASE_B = f"""CASE WHEN {_duck_bucket("CAST(doc_b AS VARCHAR) || '_split'", 100)} < 90 THEN 'train'
-                 WHEN {_duck_bucket("CAST(doc_b AS VARCHAR) || '_split'", 100)} < 95 THEN 'val'
-                 ELSE 'test' END"""
-
-
-def _split_of(col: Column) -> Column:
-    b = _md5_bucket(F.concat(col.cast("string"), F.lit("_split")), 100)
-    return (
-        F.when(b < 90, F.lit("train"))
-        .when(b < 95, F.lit("val"))
-        .otherwise(F.lit("test"))
-    )
-
-
 # dedup loads here as an import side effect (it registers its own
 # queries first; there is no cycle — dedup never imports curation)
 from .dedup import _lsh_pairs_store  # noqa: E402
@@ -1133,8 +1085,8 @@ from .dedup import _lsh_pairs_store  # noqa: E402
     "split_leakage_audit",
     oracle=f"""
     WITH {DUCK_PAIRS_CTES}
-    SELECT least({_SPLIT_CASE_A}, {_SPLIT_CASE_B}) AS split_lo,
-           greatest({_SPLIT_CASE_A}, {_SPLIT_CASE_B}) AS split_hi,
+    SELECT least({duck_split("doc_a")}, {duck_split("doc_b")}) AS split_lo,
+           greatest({duck_split("doc_a")}, {duck_split("doc_b")}) AS split_hi,
            count(*) AS n_pairs,
            round(sum(jaccard), 4) AS sum_jaccard
     FROM pairs GROUP BY split_lo, split_hi
@@ -1162,8 +1114,8 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     legitimately disagree (observed at sf0.01), while sums of 4dp
     multiples have no boundary to disagree on."""
     pairs = _lsh_pairs_store(spark, sf_dir)
-    sa = _split_of(F.col("doc_a"))
-    sb = _split_of(F.col("doc_b"))
+    sa = split_of(F.col("doc_a"))
+    sb = split_of(F.col("doc_b"))
     return (
         pairs.select(
             F.least(sa, sb).alias("split_lo"),
@@ -1176,11 +1128,6 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("jaccard"), 4).alias("sum_jaccard"),
         )
     )
-
-
-_SPLIT_CASE_GRP = """CASE WHEN (('0x' || substr(md5(CAST(grp AS VARCHAR) || '_split'), 1, 10))::UBIGINT % 100) < 90 THEN 'train'
-                 WHEN (('0x' || substr(md5(CAST(grp AS VARCHAR) || '_split'), 1, 10))::UBIGINT % 100) < 95 THEN 'val'
-                 ELSE 'test' END"""
 
 
 @query(
@@ -1202,7 +1149,7 @@ _SPLIT_CASE_GRP = """CASE WHEN (('0x' || substr(md5(CAST(grp AS VARCHAR) || '_sp
         FROM documents d LEFT JOIN comp c ON d.doc_id = c.node
     ),
     split_l AS (
-        SELECT doc_id, grp, {_SPLIT_CASE_GRP} AS split FROM labeled
+        SELECT doc_id, grp, {duck_split("grp")} AS split FROM labeled
     ),
     per_split AS (
         SELECT split, CAST(count(*) AS BIGINT) AS n_docs,
@@ -1213,7 +1160,7 @@ _SPLIT_CASE_GRP = """CASE WHEN (('0x' || substr(md5(CAST(grp AS VARCHAR) || '_sp
         SELECT CAST(coalesce(sum(CASE WHEN ca.split != cb.split
                                       THEN 1 ELSE 0 END), 0) AS BIGINT)
                    AS comp_cross_pairs,
-               CAST(coalesce(sum(CASE WHEN {_SPLIT_CASE_A} != {_SPLIT_CASE_B}
+               CAST(coalesce(sum(CASE WHEN {duck_split("doc_a")} != {duck_split("doc_b")}
                                       THEN 1 ELSE 0 END), 0) AS BIGINT)
                    AS naive_cross_pairs
         FROM pairs p
@@ -1262,7 +1209,7 @@ def component_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("doc_id"),
             grp.alias("grp"),
-            _split_of(grp).alias("split"),
+            split_of(grp).alias("split"),
         )
         .cache()
     )
@@ -1286,7 +1233,7 @@ def component_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(
                 F.sum(
                     (
-                        _split_of(F.col("doc_a")) != _split_of(F.col("doc_b"))
+                        split_of(F.col("doc_a")) != split_of(F.col("doc_b"))
                     ).cast("long")
                 ),
                 F.lit(0),
@@ -1304,8 +1251,7 @@ def component_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH h AS (
         SELECT doc_id,
-               ('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':42'), 1, 10))::UBIGINT
-                   AS hv
+               {duck_h40("CAST(doc_id AS VARCHAR) || ':42'")} AS hv
         FROM documents
     ), sharded AS (
         SELECT doc_id, hv, CAST(hv % 8 AS BIGINT) AS shard,
@@ -1336,15 +1282,7 @@ def epoch_shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     no RNG state to checkpoint — re-running any shard reproduces
     byte-identical order."""
     d = table(spark, sf_dir, "documents")
-    hv = F.conv(
-        F.substring(
-            F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":42"))),
-            1,
-            10,
-        ),
-        16,
-        10,
-    ).cast("bigint")
+    hv = h40(F.concat(F.col("doc_id").cast("string"), F.lit(":42")))
     h = d.select("doc_id", hv.alias("hv"), (hv % 8).alias("shard"))
     w = Window.partitionBy("shard").orderBy("hv", "doc_id")
     sharded = h.withColumn("rn", F.row_number().over(w))
@@ -1621,10 +1559,7 @@ _SEM_TAU = 0.4  # cosine flag threshold — BINDING at driver sf (the
     oracle=f"""
     WITH a AS (
         SELECT vec_id, label, embedding,
-               CASE WHEN {_duck_bucket("CAST(vec_id AS VARCHAR) || '_split'", 100)} < 90
-                    THEN 'train'
-                    WHEN {_duck_bucket("CAST(vec_id AS VARCHAR) || '_split'", 100)} >= 95
-                    THEN 'test' END AS split
+               {duck_split("vec_id")} AS split
         FROM embeddings
     ),
     tr AS (SELECT vec_id, embedding FROM a WHERE split = 'train'),
@@ -1651,10 +1586,11 @@ def decontam_semantic_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     training corpus — the leakage n-gram decontamination cannot see
     (paraphrase shares no 5-gram but keeps its neighborhood).
 
-    Uses the SAME md5 split coin as `decontam_ngram_overlap` /
-    `doc_split_stats` (vec_id aligns with doc_id, so the flagged eval
-    vectors are exactly the test DOCS the trainer would hold out — one
-    split function across the pipeline is the point).
+    Uses the SAME split as `decontam_ngram_overlap` /
+    `doc_split_stats`, ``split_of`` (functions/helpers.py; vec_id
+    aligns with doc_id, so the flagged eval vectors are exactly the
+    test DOCS the trainer would hold out — one split function across
+    the pipeline is the point).
 
     Scale: the eval side is what real audits broadcast — a benchmark
     suite is 1e3-1e5 vectors regardless of corpus size — so this is
@@ -1670,11 +1606,7 @@ def decontam_semantic_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", "embedding", norm(F.col("embedding")).alias("en")
     )
-    h = _md5_bucket(
-        F.concat(F.col("vec_id").cast("string"), F.lit("_split")), 100
-    )
-    split = F.when(h < 90, "train").when(h >= 95, "test")
-    a = e.withColumn("split", split).where(F.col("split").isNotNull())
+    a = e.withColumn("split", split_of(F.col("vec_id")))
     tr = a.where(F.col("split") == "train").select("embedding", "en")
     te = F.broadcast(
         a.where(F.col("split") == "test").select(

@@ -24,7 +24,7 @@ from ..core import fs
 from ..core.catalog import table
 from ..core.registry import prestaged, query
 from ..core.session import local_frame
-from ..functions.helpers import ordered_pairs
+from ..functions.helpers import duck_h40, h40, ordered_pairs
 from ..operators.neardup import (
     DUCK_BANDS_CTES,
     DUCK_PAIRS_CTES,
@@ -37,7 +37,6 @@ from ..operators.neardup import (
     duck_jaccard,
     duck_para_chunks,
     exact_jaccard,
-    h40,
     minhash_signatures,
     para_units_sql,
     shingle_sets,
@@ -405,7 +404,7 @@ def _simhash_bits_sql() -> str:
     for bit in range(16):
         terms.append(
             f"CASE WHEN list_sum(list_transform(toks, t -> "
-            f"2 * ((CAST(('0x' || substr(md5(t),1,10))::UBIGINT AS BIGINT) >> {bit}) & 1) - 1)) >= 0 "
+            f"2 * (({duck_h40('t')} >> {bit}) & 1) - 1)) >= 0 "
             f"THEN {1 << bit} ELSE 0 END"
         )
     return " + ".join(terms)
@@ -1295,14 +1294,14 @@ def sorted_neighbor_lcp(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "winnowing_fingerprints",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
         SELECT doc_id, lang, string_split(text, ' ') AS t FROM documents
         WHERE len(string_split(text, ' ')) >= 3
     ),
     sh AS (
         SELECT doc_id, lang, i AS pos,
-               CAST(('0x' || substr(md5(t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]), 1, 10))::UBIGINT AS BIGINT) AS h
+               {duck_h40("t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]")} AS h
         FROM toks, UNNEST(range(len(t) - 2)) AS u(i)
     ),
     selw AS (
@@ -1991,14 +1990,13 @@ def lsh_incremental_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "cdc_chunk_dedup",
-    oracle="""
+    oracle=f"""
     WITH d AS (
         SELECT doc_id, string_split(text, ' ') AS w FROM documents
     ), b AS (
         SELECT doc_id, w,
                list_filter(range(len(w)),
-                   i -> ('0x' || substr(md5(w[i+1]), 1, 10))::UBIGINT
-                        % 8 = 0) AS bp
+                   i -> {duck_h40("w[i+1]")} % 8 = 0) AS bp
         FROM d
     ), be AS (
         SELECT doc_id, w,
@@ -2103,7 +2101,7 @@ def cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "er_golden_record",
-    oracle="""
+    oracle=f"""
     WITH RECURSIVE dirty AS (
         SELECT p_partkey, p_retailprice,
                CASE WHEN p_partkey % 3 = 0
@@ -2125,8 +2123,7 @@ def cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM keys a JOIN keys b ON a.k = b.k AND a.nm < b.nm
     ),
     e0 AS (
-        SELECT CAST(('0x' || substr(md5(na), 1, 10))::UBIGINT AS BIGINT) AS ha,
-               CAST(('0x' || substr(md5(nb), 1, 10))::UBIGINT AS BIGINT) AS hb
+        SELECT {duck_h40("na")} AS ha, {duck_h40("nb")} AS hb
         FROM cand WHERE levenshtein(na, nb) <= 1
     ),
     edges AS (SELECT ha AS a, hb AS b FROM e0 UNION SELECT hb, ha FROM e0),
@@ -2138,13 +2135,9 @@ def cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     comp AS (SELECT node, min(reach) AS comp FROM walk GROUP BY node),
     labeled AS (
         SELECT d.p_partkey, d.p_retailprice, d.nm,
-               COALESCE(c.comp,
-                   CAST(('0x' || substr(md5(d.nm), 1, 10))::UBIGINT AS BIGINT))
-                   AS ent
+               COALESCE(c.comp, {duck_h40("d.nm")}) AS ent
         FROM dirty d
-        LEFT JOIN comp c
-          ON CAST(('0x' || substr(md5(d.nm), 1, 10))::UBIGINT AS BIGINT)
-             = c.node
+        LEFT JOIN comp c ON {duck_h40("d.nm")} = c.node
     ),
     g1 AS (
         SELECT ent, p_retailprice AS gp FROM (

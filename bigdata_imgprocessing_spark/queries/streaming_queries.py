@@ -12,6 +12,7 @@ from ..core import fs
 from ..core.catalog import table
 from ..core.registry import prestaged, query
 from ..core.session import ensure_utc, local_frame
+from ..functions.helpers import duck_split, split_of
 from ..operators.neardup import (
     DUCK_PAIRS_CTES,
     DUCK_SIMHASH64_CTES,
@@ -770,12 +771,12 @@ def streaming_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFr
     return run_to_memory(agg, mode="complete")
 
 
-def _doc_wave_feed(
-    spark: SparkSession, sf_dir: str, prefix: str, n_waves: int
-) -> str:
-    """Shared wave-feed staging for the document-ingest drains: the
-    corpus sliced doc_id % n_waves into mtime-ordered files."""
-    root = fs.store_root(spark, sf_dir, prefix)
+def _doc_wave_feed(spark: SparkSession, sf_dir: str, n_waves: int) -> str:
+    """The corpus sliced doc_id % n_waves into mtime-ordered files, staged
+    once per wave count and read by every document-ingest drain with that
+    count; each drain keeps its state and checkpoint under its own root."""
+    ensure_utc(spark)
+    root = fs.store_root(spark, sf_dir, f"bdip_docwaves{n_waves}")
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
     return _stage_feed(
         spark, root,
@@ -786,28 +787,12 @@ def _doc_wave_feed(
     )
 
 
-@prestaged("streaming_lsh_ingest")
-def _lsh_ingest_feed(spark: SparkSession, sf_dir: str) -> str:
-    ensure_utc(spark)
-    return _doc_wave_feed(spark, sf_dir, "bdip_lshing", 4)
-
-
-@prestaged("streaming_lsh_ingest_capped")
-def _lsh_capped_feed(spark: SparkSession, sf_dir: str) -> str:
-    ensure_utc(spark)
-    return _doc_wave_feed(spark, sf_dir, "bdip_lshcap", 4)
-
-
-@prestaged("streaming_simhash_ingest")
-def _simhash_ingest_feed(spark: SparkSession, sf_dir: str) -> str:
-    ensure_utc(spark)
-    return _doc_wave_feed(spark, sf_dir, "bdip_shing", 3)
-
-
-@prestaged("streaming_paragraph_ingest")
-def _paragraph_ingest_feed(spark: SparkSession, sf_dir: str) -> str:
-    ensure_utc(spark)
-    return _doc_wave_feed(spark, sf_dir, "bdip_paraing", 4)
+@prestaged("document_wave_feeds")
+def _doc_wave_feeds(spark: SparkSession, sf_dir: str) -> None:
+    """Stages the 4-wave feed (the LSH, capped LSH and paragraph drains)
+    and the 3-wave feed (the SimHash drain)."""
+    for n_waves in (4, 3):
+        _doc_wave_feed(spark, sf_dir, n_waves)
 
 
 @query(
@@ -855,7 +840,7 @@ def streaming_lsh_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_utc(spark)
     root = fs.store_root(spark, sf_dir, "bdip_lshing")
-    feed = _lsh_ingest_feed(spark, sf_dir)
+    feed = _doc_wave_feed(spark, sf_dir, 4)
     state = f"{root}/state"
     fs.delete(spark, state)
     stream = file_feed_stream(spark, feed)
@@ -972,7 +957,7 @@ def streaming_lsh_ingest_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_utc(spark)
     root = fs.store_root(spark, sf_dir, "bdip_lshcap")
-    feed = _lsh_capped_feed(spark, sf_dir)
+    feed = _doc_wave_feed(spark, sf_dir, 4)
     state = f"{root}/state"
     fs.delete(spark, state)
     stream = file_feed_stream(spark, feed)
@@ -1007,23 +992,18 @@ def streaming_lsh_ingest_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _decontam_ingest_feed(spark: SparkSession, sf_dir: str) -> str:
     """Stages BOTH decontam fixtures: the train-gram base index (the
     pinned pre-drain state) and the 3-wave test-doc feed."""
-
-    from .curation import _md5_bucket
-
     ensure_utc(spark)
     root = fs.store_root(spark, sf_dir, "bdip_dci")
     d = table(spark, sf_dir, "documents")
-    h = _md5_bucket(
-        F.concat(F.col("doc_id").cast("string"), F.lit("_split")), 100
-    )
+    split = split_of(F.col("doc_id"))
     base_idx = f"{root}/base_idx"
     if not fs.landed(spark, base_idx):
-        wordgram_5h(d.where(h < 90)).select(
+        wordgram_5h(d.where(split == "train")).select(
             "gram_h"
         ).distinct().repartition(4, "gram_h").write.mode("overwrite").parquet(
             base_idx
         )
-    test_docs = d.where(h >= 95).select("doc_id", "lang", "text")
+    test_docs = d.where(split == "test").select("doc_id", "lang", "text")
     return _stage_feed(
         spark, root,
         [
@@ -1039,10 +1019,7 @@ def _decontam_ingest_feed(spark: SparkSession, sf_dir: str) -> str:
     oracle=f"""
     WITH assigned AS (
         SELECT doc_id, lang, string_split(text, ' ') AS toks,
-               CASE WHEN (('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '_split'), 1, 10))::UBIGINT % 100) < 90
-                    THEN 'train'
-                    WHEN (('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '_split'), 1, 10))::UBIGINT % 100) >= 95
-                    THEN 'test' END AS split
+               {duck_split("doc_id")} AS split
         FROM documents
     ), grams AS (
         SELECT doc_id, split, CAST(doc_id % 3 AS BIGINT) AS wave,
@@ -1051,7 +1028,7 @@ def _decontam_ingest_feed(spark: SparkSession, sf_dir: str) -> str:
         FROM (
             SELECT doc_id, split, toks,
                    unnest(generate_series(0, len(toks) - {WORDGRAM_N})) AS i
-            FROM assigned WHERE split IS NOT NULL
+            FROM assigned WHERE split != 'val'
         )
     ), tr AS (SELECT DISTINCT gram_h FROM grams WHERE split = 'train'),
     tg AS (SELECT doc_id, wave, gram_h FROM grams WHERE split = 'test'),
@@ -1108,7 +1085,6 @@ def streaming_decontam_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     writes are idempotent overwrite-per-batch-id subdirs."""
 
     from ..streaming.decontam_ingest import read_results, run_decontam_ingest
-    from .curation import _md5_bucket
 
     ensure_utc(spark)
     root = fs.store_root(spark, sf_dir, "bdip_dci")
@@ -1287,7 +1263,7 @@ def streaming_simhash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_utc(spark)
     root = fs.store_root(spark, sf_dir, "bdip_shing")
-    feed = _simhash_ingest_feed(spark, sf_dir)
+    feed = _doc_wave_feed(spark, sf_dir, 3)
     state = f"{root}/state"
     fs.delete(spark, state)
     stream = file_feed_stream(spark, feed)
@@ -1429,7 +1405,7 @@ def streaming_paragraph_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_utc(spark)
     root = fs.store_root(spark, sf_dir, "bdip_paraing")
-    feed = _paragraph_ingest_feed(spark, sf_dir)
+    feed = _doc_wave_feed(spark, sf_dir, 4)
     state = f"{root}/state"
     fs.delete(spark, state)
     stream = file_feed_stream(spark, feed)

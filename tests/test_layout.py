@@ -330,7 +330,9 @@ def test_fixture_rules_live_in_one_module():
     root = pathlib.Path(pkg.__file__).parent
     rules = {
         "detector call": (r"\bdetect_udf\(", "images/detect.py"),
-        "md5 detection SQL": (r"substr\(md5\(img_id", "images/detect.py"),
+        "md5 detection SQL": (
+            r"(substr\(md5\(|duck_h40\(\s*[\"'])img_id", "images/detect.py"
+        ),
         "numpy pixel rule": (r"astype\(np\.int64\)\)\s*%\s*256", "images/codec.py"),
         "DuckDB pixel rule": (r"1000\)::BIGINT\)\s*%\s*256", "images/codec.py"),
     }
@@ -407,6 +409,36 @@ def test_near_dup_rules_live_in_one_module():
         for name, rx in rules.items()
     }
     assert found == {name: [home] for name in rules}
+
+
+def test_hash_rules_live_in_one_module():
+    """The 40-bit md5 key and the train/val/test split have one home,
+    functions/helpers.py, in Python, Spark and DuckDB form: no other
+    package module spells the key's 10-hex-char md5 prefix or the
+    split's salt. The SimHash second-half hash (``md5(t), 11, 10``)
+    and the 13-hex-char bootstrap draw are other rules."""
+    import pathlib
+    import re
+
+    import bigdata_imgprocessing_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    rules = {
+        "DuckDB key": r"substr\(md5\(.{0,120}?\),\s*1,\s*10\)",
+        "Spark key": r"conv\(\s*(F\.)?substring\(\s*(F\.)?md5\(.{0,200}?\),"
+        r"\s*1,\s*10,?\s*\),\s*16,\s*10",
+        "Python key": r"hexdigest\(\)\[:10\]",
+        "split salt": r"['\"]_split['\"]",
+    }
+    found = {
+        name: sorted(
+            p.relative_to(root).as_posix()
+            for p in root.rglob("*.py")
+            if re.search(rx, p.read_text(), re.S)
+        )
+        for name, rx in rules.items()
+    }
+    assert found == {name: ["functions/helpers.py"] for name in rules}
 
 
 def test_rank_switch_lives_in_one_module():

@@ -348,7 +348,7 @@ def test_simhash_matches_python(spark_prop, toks):
     # rebuild the exact Spark expression chain used by the query
     from pyspark.sql import functions as SF
 
-    from bigdata_imgprocessing_spark.operators.neardup import h40
+    from bigdata_imgprocessing_spark.functions import h40
 
     tok = d.select("doc_id", SF.explode(SF.split(SF.col("text"), " ")).alias("t"))
     h = tok.select("doc_id", h40(SF.col("t")).alias("h"))
@@ -989,3 +989,74 @@ def test_paragraph_units_match_python(spark_prop, toks):
         for c in chunks
     ]
     assert got == expected
+
+
+# ---------------------------------------------------------------------------
+# The deterministic hash rules (functions/helpers.py): the 40-bit md5 key
+# agrees in Python, Spark and DuckDB, and so does the train/val/test
+# split built on it — the agreement every md5-derived oracle relies on.
+# ---------------------------------------------------------------------------
+
+_H40_KEYS = [
+    "",
+    "0",
+    "9999",
+    "42_split",
+    "1234_shard_7",
+    "samp17",
+    "img_0003_s2",
+    "naïve café",
+    "日本語のテキスト",
+    "emoji \U0001F680 tail",
+    " padded ",
+]
+
+
+def test_h40_agrees_across_engines(spark_prop):
+    import hashlib
+
+    import duckdb
+
+    from bigdata_imgprocessing_spark.functions import duck_h40, h40, h40_of
+
+    ref = {k: int(hashlib.md5(k.encode()).hexdigest()[:10], 16) for k in _H40_KEYS}
+    assert {k: h40_of(k) for k in _H40_KEYS} == ref
+    spark_got = {
+        r.k: r.h
+        for r in spark_prop.createDataFrame([(k,) for k in _H40_KEYS], "k string")
+        .select("k", h40(F.col("k")).alias("h"))
+        .collect()
+    }
+    assert spark_got == ref
+    duck_got = dict(
+        duckdb.connect()
+        .execute(f"SELECT k, {duck_h40('k')} FROM (SELECT unnest(?) AS k)", [_H40_KEYS])
+        .fetchall()
+    )
+    assert duck_got == ref
+
+
+def test_split_agrees_across_engines(spark_prop):
+    import hashlib
+
+    import duckdb
+
+    from bigdata_imgprocessing_spark.functions import duck_split, split_of
+
+    def ref(i):
+        b = int(hashlib.md5(f"{i}_split".encode()).hexdigest()[:10], 16) % 100
+        return "train" if b < 90 else "val" if b < 95 else "test"
+
+    n = 10_000
+    spark_got = dict(
+        spark_prop.range(n)
+        .select("id", split_of(F.col("id")).alias("split"))
+        .collect()
+    )
+    duck_got = dict(
+        duckdb.connect()
+        .execute(f"SELECT doc_id, {duck_split('doc_id')} FROM range({n}) t(doc_id)")
+        .fetchall()
+    )
+    assert spark_got == duck_got == {i: ref(i) for i in range(n)}
+    assert set(spark_got.values()) == {"train", "val", "test"}
