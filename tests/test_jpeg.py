@@ -725,3 +725,73 @@ def test_encoder_bytes_are_pinned():
     got["lossless-rgb-p7-pt1"] = encode_jpeg_lossless(rgb, predictor=7, pt=1)
     digests = {k: hashlib.md5(v).hexdigest() for k, v in got.items()}
     assert digests == _ENCODER_MD5
+
+
+# md5 of decode_jpeg's output for seeded photos: the bench corpus shape
+# (4:2:0 at IJG quality 75) at 120×160 and 640×480, plus a 4:4:4
+# all-ones, a progressive and a 12-bit frame. Every decoded sample is a
+# rounding of float IDCT output, so a change in the decoder's arithmetic
+# that moves one sample across a rounding edge changes a digest.
+_DECODED_MD5 = {
+    "120x160-420-q75-0": "e107e4cd279a15fc2d3cd00e98c6d91f",
+    "120x160-420-q75-1": "08ce4b90f43f60443483c7860387bdd9",
+    "120x160-420-q75-2": "c87ab758edb0aa6532d60d3a78567b31",
+    "120x160-420-q75-3": "5597459b54fe0ef666de59e52ef8e043",
+    "120x160-420-q75-4": "029a31219682f36e53e2cdbc1bd3f704",
+    "120x160-420-q75-5": "69f5d0732c46d3d7647b3b518d56bf59",
+    "640x480-420-q75-0": "ce6c3069e3daf76d7166e7683f090ac9",
+    "640x480-420-q75-1": "165986e9665d089e52daa3fc010264b9",
+    "120x160-444-ones": "7ac8f4082a039bc9d7415462a40e43b8",
+    "120x160-progressive-420-q75": "9789ae47c4aad606ac6242968b4fa972",
+    "120x160-12bit": "d7ebf51ed790f5cf10e3fcb6ca69923d",
+}
+
+
+def _photo(rng, h: int, w: int) -> np.ndarray:
+    """Smooth gradient background, a few coloured discs, sensor noise."""
+    y, x = np.mgrid[0:h, 0:w]
+    img = np.stack([x * 255 / w, y * 255 / h, (x + y) * 127 / (w + h)], 2)
+    for _ in range(int(rng.integers(3, 8))):
+        cy, cx = rng.integers(0, h), rng.integers(0, w)
+        r = rng.integers(h // 10, h // 2)
+        disc = (y - cy) ** 2 + (x - cx) ** 2 < r * r
+        img[disc] = img[disc] * 0.3 + rng.integers(0, 256, 3) * 0.7
+    img += rng.normal(0, 12, img.shape)
+    return np.clip(img, 0, 255).astype(np.uint8)
+
+
+def test_decoded_arrays_are_pinned():
+    import hashlib
+
+    from bigdata_imgprocessing_spark.images.jpeg import encode_jpeg_12bit
+    from bigdata_imgprocessing_spark.images.jpeg_progressive import (
+        encode_jpeg_progressive,
+    )
+
+    # T.81 Annex K luminance table, IJG-scaled to quality 75
+    luma = np.array(
+        [16, 11, 10, 16, 24, 40, 51, 61, 12, 12, 14, 19, 26, 58, 60, 55,
+         14, 13, 16, 24, 40, 57, 69, 56, 14, 17, 22, 29, 51, 87, 80, 62,
+         18, 22, 37, 56, 68, 109, 103, 77, 24, 35, 55, 64, 81, 104, 113, 92,
+         49, 64, 78, 87, 103, 121, 120, 101, 72, 92, 95, 98, 112, 100, 103, 99]
+    )
+    q75 = np.clip((luma * 50 + 50) // 100, 1, 255).astype(np.uint16)
+    rng = np.random.default_rng(20261020)
+    streams = {}
+    for i in range(6):
+        streams[f"120x160-420-q75-{i}"] = encode_jpeg(
+            _photo(rng, 120, 160), quant=q75, subsampling="420")
+    for i in range(2):
+        streams[f"640x480-420-q75-{i}"] = encode_jpeg(
+            _photo(rng, 480, 640), quant=q75, subsampling="420")
+    p = _photo(rng, 120, 160)
+    streams["120x160-444-ones"] = encode_jpeg(p)
+    streams["120x160-progressive-420-q75"] = encode_jpeg_progressive(
+        p, quant=q75, subsampling="420")
+    streams["120x160-12bit"] = encode_jpeg_12bit(
+        p.astype(np.uint16) * 16 + 7, quant=q75)
+    digests = {
+        k: hashlib.md5(np.ascontiguousarray(decode_jpeg(v)).tobytes()).hexdigest()
+        for k, v in streams.items()
+    }
+    assert digests == _DECODED_MD5
