@@ -79,17 +79,22 @@ def local_frame(
 
 
 def cache_parallelism(spark: SparkSession) -> int:
-    """Partition count to coalesce to before cache()/localCheckpoint().
-
-    Cached/checkpointed frames FREEZE their partitioning: AQE never
-    re-coalesces them (spark.sql.optimizer.canChangeCachedPlanOutputPartitioning
-    defaults false), so a frame cached under a default-conf session
-    keeps 200 partitions and every downstream stage pays 200 tasks —
-    measured 14.5s vs ~2s for the ngram posting-list query at sf0.01.
-    defaultParallelism = total cores on any deployment, which is the
-    right materialization width locally AND on a cluster. coalesce() to
-    it is a no-op when the frame is already narrower."""
+    """The session's core count (defaultParallelism = total cores on any
+    deployment): the width of a materialized frame, locally AND on a
+    cluster."""
     return spark.sparkContext.defaultParallelism
+
+
+def cached(frame: DataFrame) -> DataFrame:
+    """``frame`` coalesced to ``cache_parallelism`` and cached.
+
+    A cached frame FREEZES its partitioning: AQE never re-coalesces it
+    (spark.sql.optimizer.canChangeCachedPlanOutputPartitioning defaults
+    false), so a frame cached under a default-conf session keeps 200
+    partitions and every downstream stage pays 200 tasks — measured
+    14.5s vs ~2s for the ngram posting-list query at sf0.01. coalesce()
+    is a no-op when the frame is already narrower."""
+    return frame.coalesce(cache_parallelism(frame.sparkSession)).cache()
 
 
 def scaled_width(spark: SparkSession, floor: int = 4) -> int:

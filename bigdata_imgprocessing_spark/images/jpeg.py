@@ -883,15 +883,15 @@ def _ac_refine(br, act, block, ss, se, al, eob) -> None:
 def _dct_pixels(coef: list[np.ndarray], qf: list[np.ndarray], lay: _Layout,
                 prec: int, adobe_transform: int) -> np.ndarray:
     """The tail of every DCT frame: dequantize, inverse-DCT all blocks in
-    one einsum per component, crop, upsample chroma and convert colour
-    (gray, YCbCr, Adobe CMYK/YCCK) → uint8, 12-bit frames via >>4."""
+    one batched matmul per component, crop, upsample chroma and convert
+    colour (gray, YCbCr, Adobe CMYK/YCCK) → uint8, 12-bit frames via >>4."""
     shift = float(1 << (prec - 1))  # level shift & chroma centre: 128 / 2048
     maxv = float((1 << prec) - 1)
     crops = []
     for c, (zz, q) in enumerate(zip(coef, qf)):
         nbv, nbh = zz.shape[:2]
         nat = zz[:, :, _UNZIGZAG].reshape(nbv, nbh, 8, 8) * q
-        spatial = np.einsum("ji,vhjk,kl->vhil", _T, nat, _T)
+        spatial = _T.T @ nat @ _T
         ch, cw = lay.dims(c)
         p = spatial.swapaxes(1, 2).reshape(nbv * 8, nbh * 8)[:ch, :cw] + shift
         hi, vi = lay.factors[c]

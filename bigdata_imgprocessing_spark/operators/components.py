@@ -90,6 +90,25 @@ def _symmetric_edges(
     return sym.coalesce(width), n_edges, width
 
 
+#: DuckDB twin of ``_symmetric_edges``: the CTE ``sym(a, b)``, the
+#: distinct symmetric edge set of a ``pairs(doc_a, doc_b)`` CTE
+DUCK_SYM_EDGES = """sym AS (
+        SELECT doc_a AS a, doc_b AS b FROM pairs
+        UNION SELECT doc_b, doc_a FROM pairs
+    )"""
+
+#: DuckDB twin of ``connected_components``: the CTEs ``walk(node,
+#: reach)``, every node reachable from each node of ``sym`` (a
+#: ``WITH RECURSIVE`` fixpoint), and ``comp(node, comp)``, each node's
+#: component labelled by its minimum node id
+DUCK_CLOSURE = """walk(node, reach) AS (
+        SELECT DISTINCT a, a FROM sym
+        UNION
+        SELECT w.node, e.b FROM walk w JOIN sym e ON w.reach = e.a
+    ),
+    comp AS (SELECT node, min(reach) AS comp FROM walk GROUP BY node)"""
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",

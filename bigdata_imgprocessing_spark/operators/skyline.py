@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..core.session import cached
+
 
 def pareto_front_2d(
     df: DataFrame, x: str, y: str, bucket: Column
@@ -34,17 +36,13 @@ def pareto_front_2d(
     changes parallelism, not output. ``y`` may be any orderable type
     (date, timestamp, numeric).
     """
-    from ..core.session import cache_parallelism
-
     # the candidate frame is domain-sized (distinct x) and feeds BOTH
     # the local skyline and the bucket-max prune — cache it so the
     # input is scanned once, not once per leg
-    cand = (
+    cand = cached(
         df.groupBy(x)
         .agg(F.max(y).alias("_bd"))
         .withColumn("_bkt", bucket)
-        .coalesce(cache_parallelism(df.sparkSession))
-        .cache()
     )
     # phase 2: local skyline per bucket
     wl = (

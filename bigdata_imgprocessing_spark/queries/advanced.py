@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from ..core.catalog import table
 from ..core.registry import query
-from ..core.session import local_frame
+from ..core.session import cached, local_frame
 from ..functions.helpers import h40_of
 from ..operators.similarity import duck_cosine, norm, rounded_cosine
 
@@ -256,15 +256,10 @@ def embedding_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # nrm is precomputed per VECTOR here — the pair stage would otherwise
     # recompute each side's norm per CANDIDATE PAIR (identical doubles:
     # norm is a pure function of the array, so oracle parity is unchanged).
-    # coalesce first: cached partitioning is frozen (see cache_parallelism).
-    from ..core.session import cache_parallelism
-
-    b = (
+    b = cached(
         e.select(
             "vec_id", "embedding", bucket.alias("bucket"), norm(F.col("embedding")).alias("nrm")
         )
-        .coalesce(cache_parallelism(spark))
-        .cache()
     )
 
     buckets = b.groupBy("bucket").agg(F.count("*").alias("k"))

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from ..core.catalog import table
 from ..core.registry import query
-from ..core.session import ensure_utc, local_frame
+from ..core.session import cached, ensure_utc, local_frame
 from ..functions.helpers import duck_h40, h40, ordered_fold_sum, ordered_pairs
 
 # ---------------------------------------------------------------------------
@@ -379,17 +379,13 @@ def _top2_length_counts(spark: SparkSession, sf_dir: str):
     name asc — a deterministic pick): ``pv`` holds each observed
     ``n_chars`` with its count in the first (``d1``) and the second
     (``d2``) source, ``tt`` the one row ``(src_a, src_b, n1, n2)``."""
-    from ..core.session import cache_parallelism
-
     d = table(spark, sf_dir, "documents").select("source", "n_chars")
     # ONE fact scan: collapse to the (source, length) contingency frame
     # and derive both the per-source totals and the per-length counts
     # from it (cached — it is domain-sized, |sources| × |lengths|).
-    base = (
+    base = cached(
         d.groupBy("source", "n_chars")
         .agg(F.count("*").alias("c"))
-        .coalesce(cache_parallelism(spark))
-        .cache()
     )
     sc = base.groupBy("source").agg(F.sum("c").alias("cnt"))
     wr = Window.orderBy(F.desc("cnt"), "source")  # tiny frame: one row/source
@@ -1321,11 +1317,9 @@ def cms_frequency_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(cache_parallelism(spark), "doc_id")
         .select(F.explode(grams).alias("g"))
     )
-    tc = (
+    tc = cached(
         tok.groupBy("g")
         .agg(F.count("*").alias("cnt"))
-        .coalesce(cache_parallelism(spark))
-        .cache()
     )
     n = tc.agg(F.sum("cnt").cast("bigint").alias("n_tok"))
     keys = tc.select(

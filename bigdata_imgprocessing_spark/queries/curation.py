@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..core.catalog import table
 from ..core.registry import query
+from ..core.session import cached
 from ..functions.helpers import (
     duck_h40,
     duck_split,
@@ -30,6 +31,7 @@ from ..functions.helpers import (
     ordered_fold_sum,
     split_of,
 )
+from ..operators.components import DUCK_CLOSURE, DUCK_SYM_EDGES
 from ..operators.neardup import (
     DUCK_PAIRS_CTES,
     WORDGRAM_N,
@@ -457,16 +459,12 @@ def _bitset_decontam_stats(
     one deployment path while the other drifts."""
     import math as _math
 
-    from ..core.session import cache_parallelism
-
     # train side: distinct-reduced once; feeds the size count, the
     # filter build, and the exact verification join
-    train = (
+    train = cached(
         grams.where(F.col("split") == "train")
         .select(gram_col)
         .distinct()
-        .coalesce(cache_parallelism(spark))
-        .cache()
     )
     n_train = train.count()  # 1-scalar job: real deployments size the
     # filter from the build side's cardinality exactly like this
@@ -521,7 +519,7 @@ def _bitset_decontam_stats(
     aud = probed.join(
         train.withColumn("m", F.lit(True)), gram_col, "left"
     ).withColumn("m", F.coalesce("m", F.lit(False)))
-    aud = aud.coalesce(cache_parallelism(spark)).cache()
+    aud = cached(aud)
     glob = aud.agg(
         (F.sum((F.col("m") & ~F.col("hit")).cast("long")) == 0).alias(
             "no_false_negatives"
@@ -1133,17 +1131,7 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "component_safe_split",
     oracle=f"""
-    WITH RECURSIVE {DUCK_PAIRS_CTES},
-    edges AS (
-        SELECT doc_a AS a, doc_b AS b FROM pairs
-        UNION SELECT doc_b, doc_a FROM pairs
-    ),
-    walk(node, reach) AS (
-        SELECT DISTINCT a, a FROM edges
-        UNION
-        SELECT w.node, e.b FROM walk w JOIN edges e ON w.reach = e.a
-    ),
-    comp AS (SELECT node, min(reach) AS comp FROM walk GROUP BY node),
+    WITH RECURSIVE {DUCK_PAIRS_CTES}, {DUCK_SYM_EDGES}, {DUCK_CLOSURE},
     labeled AS (
         SELECT d.doc_id, COALESCE(c.comp, d.doc_id) AS grp
         FROM documents d LEFT JOIN comp c ON d.doc_id = c.node

@@ -23,8 +23,9 @@ from pyspark.sql import functions as F
 from ..core import fs
 from ..core.catalog import table
 from ..core.registry import prestaged, query
-from ..core.session import local_frame
+from ..core.session import cached, local_frame
 from ..functions.helpers import duck_h40, h40, ordered_pairs
+from ..operators.components import DUCK_CLOSURE, DUCK_SYM_EDGES
 from ..operators.neardup import (
     DUCK_BANDS_CTES,
     DUCK_PAIRS_CTES,
@@ -111,11 +112,10 @@ def _lsh_exact_candidates(
     d = table(spark, sf_dir, "documents")
     # cache(): bands derives from sig, and the estimate-error audit
     # joins sig twice more for hash-agreement counts
-    sig = minhash_signatures(d).coalesce(cache_parallelism(spark)).cache()
+    sig = cached(minhash_signatures(d))
     # cache(): bands feeds BOTH sides of the candidate self-join (and
     # sig above is already cached, so the signature lineage runs once).
-    # coalesce first: cached partitioning is frozen (see cache_parallelism).
-    bands = band_frame(sig).coalesce(cache_parallelism(spark)).cache()
+    bands = cached(band_frame(sig))
     cand = candidate_pairs(bands, bands, cache_parallelism(spark))
     exact, _ = exact_jaccard(cand, d, cache_parallelism(spark), SHINGLE_SET)
     return sig, exact
@@ -360,13 +360,8 @@ def ngram_jaccard_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     # small grouped frame — a naive ex⋈ok + self-join re-executes the
     # shingle explode lineage 4x (DataFrame DAGs don't share subplans),
     # which benchmarked 27s vs ~8s for this shape at sf0.1.
-    from ..core.session import cache_parallelism
-
-    groups = (
-        _ngram_posting_lists(spark, sf_dir)
-        .coalesce(cache_parallelism(spark))  # cached partitioning is frozen
-        .cache()  # ≤ |vocab| rows; reused by sizes AND pair generation
-    )
+    # ≤ |vocab| rows; reused by sizes AND pair generation
+    groups = cached(_ngram_posting_lists(spark, sf_dir))
     sizes = groups.select(F.explode("ds").alias("doc_id")).groupBy("doc_id").agg(
         F.count("*").alias("sz")
     )
@@ -495,11 +490,10 @@ def hamming1_neighbor_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     s = _simhash_frame(table(spark, sf_dir, "documents"))
     fps = s.groupBy("simhash").agg(F.count("*").alias("n"))
-    from ..core.session import cache_parallelism
 
     # cached: feeds the pair index AND both count join-backs — the
     # uncached form re-plans the full simhash derivation three times
-    fps = fps.coalesce(cache_parallelism(s.sparkSession)).cache()
+    fps = cached(fps)
     pairs = hamming1_neighbor_join(fps, "simhash", bits=16)
     na = fps.select(F.col("simhash").cast("long").alias("fp_a"), F.col("n").alias("na"))
     nb = fps.select(F.col("simhash").cast("long").alias("fp_b"), F.col("n").alias("nb"))
@@ -533,11 +527,9 @@ def _simhash64_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(simhash64, n): the corpus' distinct 64-bit fingerprints with
     their document counts. Cached: it feeds the banded index, both
     count join-backs and the dist-0 bucket scan."""
-    from ..core.session import cache_parallelism
-
     s = simhash64_frame(table(spark, sf_dir, "documents"))
     fps = s.groupBy("simhash64").agg(F.count("*").alias("n"))
-    return fps.coalesce(cache_parallelism(s.sparkSession)).cache()
+    return cached(fps)
 
 
 def _simhash64_pair_counts(fps: DataFrame, pairs: DataFrame) -> DataFrame:
@@ -946,17 +938,7 @@ def fuzzy_match_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "neardup_component_dedup",
     oracle=f"""
-    WITH RECURSIVE {DUCK_PAIRS_CTES},
-    edges AS (
-        SELECT doc_a AS a, doc_b AS b FROM pairs
-        UNION SELECT doc_b, doc_a FROM pairs
-    ),
-    walk(node, reach) AS (
-        SELECT DISTINCT a, a FROM edges
-        UNION
-        SELECT w.node, e.b FROM walk w JOIN edges e ON w.reach = e.a
-    ),
-    comp AS (SELECT node, min(reach) AS comp FROM walk GROUP BY node)
+    WITH RECURSIVE {DUCK_PAIRS_CTES}, {DUCK_SYM_EDGES}, {DUCK_CLOSURE}
     SELECT d.lang,
            count(*) AS n_docs,
            CAST(sum(CASE WHEN c.node IS NULL OR c.comp = d.doc_id
@@ -1016,11 +998,7 @@ _DUCK_LPA_CHAIN = "".join(
 @query(
     "label_prop_communities",
     oracle=f"""
-    WITH {DUCK_PAIRS_CTES},
-    sym AS (
-        SELECT doc_a AS a, doc_b AS b FROM pairs
-        UNION SELECT doc_b, doc_a FROM pairs
-    ),
+    WITH {DUCK_PAIRS_CTES}, {DUCK_SYM_EDGES},
     l0 AS (SELECT DISTINCT a AS node, a AS lbl FROM sym){_DUCK_LPA_CHAIN},
     comm AS (
         SELECT lbl, count(*) AS comm_size FROM l{_LPA_ROUNDS} GROUP BY lbl
@@ -1086,11 +1064,7 @@ _DUCK_KCORE_ROWS = " UNION ALL ".join(
 @query(
     "kcore_neardup",
     oracle=f"""
-    WITH {DUCK_PAIRS_CTES},
-    sym AS (
-        SELECT doc_a AS a, doc_b AS b FROM pairs
-        UNION SELECT doc_b, doc_a FROM pairs
-    ),
+    WITH {DUCK_PAIRS_CTES}, {DUCK_SYM_EDGES},
     alive0 AS (SELECT DISTINCT a AS node FROM sym){_DUCK_KCORE_CHAIN}
     {_DUCK_KCORE_ROWS}
     """,
@@ -1150,11 +1124,7 @@ _DUCK_HB_ROWS = " UNION ALL ".join(
 @query(
     "hyperball_reach",
     oracle=f"""
-    WITH {DUCK_PAIRS_CTES},
-    sym AS (
-        SELECT doc_a AS a, doc_b AS b FROM pairs
-        UNION SELECT doc_b, doc_a FROM pairs
-    ),
+    WITH {DUCK_PAIRS_CTES}, {DUCK_SYM_EDGES},
     ball0 AS (SELECT DISTINCT a AS v, a AS u FROM sym){_DUCK_HB_CHAIN}
     {_DUCK_HB_ROWS}
     """,
@@ -1526,16 +1496,12 @@ def neardup_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     hits on skewed graphs (Schank/Wagner; Cohen's MapReduce form).
     Three joins over the SPARSE pair graph only — the corpus is
     touched exactly once, inside the shared LSH pair pipeline."""
-    from ..core.session import cache_parallelism
-
     # cache(): the pair graph feeds the edge count, both wedge sides,
     # and the closure join — without it the whole LSH pipeline re-runs
     # per consumer.
-    pairs = (
+    pairs = cached(
         _lsh_pairs_store(spark, sf_dir)
         .select("doc_a", "doc_b")
-        .coalesce(cache_parallelism(spark))
-        .cache()
     )
     p1, p2 = pairs.alias("p1"), pairs.alias("p2")
     wedges = p1.join(
@@ -1684,12 +1650,10 @@ def pagerank_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .coalesce(cache_parallelism(spark))
         .localCheckpoint()
     )
-    nodes = (
+    nodes = cached(
         edges.groupBy("src")
         .agg(F.count("*").alias("deg"))
         .select(F.col("src").alias("doc_id"), "deg")
-        .coalesce(cache_parallelism(spark))
-        .cache()
     )
     n = nodes.count()  # one scalar — the |V| every PR formulation needs
     pr = pagerank_fixed_point(edges, nodes, n, rounds=3)
@@ -1954,19 +1918,13 @@ def lsh_incremental_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-deriving signatures; `minhash_lsh_pairs`/`minhash_band_stats`
     # keep the fresh derivation benchmarked (r14, the
     # minhash_lsh_capped precedent)
-    bands = (
-        _minhash_bands_store(spark, sf_dir)
-        .coalesce(cache_parallelism(spark))
-        .cache()
-    )
+    bands = cached(_minhash_bands_store(spark, sf_dir))
     is_batch = F.col("doc_id") % 10 == 0
     cand = candidate_pairs(bands.where(is_batch), bands, cache_parallelism(spark))
     exact, _ = exact_jaccard(cand, d, cache_parallelism(spark), SHINGLE_SET)
-    inc = (
+    inc = cached(
         exact.where(F.col("inter") / F.col("uni") >= 0.5)
         .select("doc_a", "doc_b")
-        .coalesce(cache_parallelism(spark))
-        .cache()
     )
     batch_a = F.col("doc_a") % 10 == 0
     batch_b = F.col("doc_b") % 10 == 0
@@ -2126,13 +2084,8 @@ def cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT {duck_h40("na")} AS ha, {duck_h40("nb")} AS hb
         FROM cand WHERE levenshtein(na, nb) <= 1
     ),
-    edges AS (SELECT ha AS a, hb AS b FROM e0 UNION SELECT hb, ha FROM e0),
-    walk(node, reach) AS (
-        SELECT DISTINCT a, a FROM edges
-        UNION
-        SELECT w.node, e.b FROM walk w JOIN edges e ON w.reach = e.a
-    ),
-    comp AS (SELECT node, min(reach) AS comp FROM walk GROUP BY node),
+    sym AS (SELECT ha AS a, hb AS b FROM e0 UNION SELECT hb, ha FROM e0),
+    {DUCK_CLOSURE},
     labeled AS (
         SELECT d.p_partkey, d.p_retailprice, d.nm,
                COALESCE(c.comp, {duck_h40("d.nm")}) AS ent
@@ -2402,17 +2355,13 @@ def minhash_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys the join already shuffles on; survivors semi-join band-rows;
     candidate volume is bounded by n_buckets * cap^2 regardless of
     skew."""
-    from ..core.session import cache_parallelism, scaled_width
+    from ..core.session import scaled_width
 
     cap = 2
     d = table(spark, sf_dir, "documents")
-    bands = (
-        _minhash_bands_store(spark, sf_dir)
-        .coalesce(cache_parallelism(spark))
-        .cache()
-    )
+    bands = cached(_minhash_bands_store(spark, sf_dir))
     census = bands.groupBy("band", "bkey").agg(F.count("*").alias("k"))
-    census = census.coalesce(cache_parallelism(spark)).cache()
+    census = cached(census)
     surv = census.where(F.col("k") <= cap).select("band", "bkey")
     sbands = bands.join(surv, ["band", "bkey"])
     cand = candidate_pairs(sbands, sbands, scaled_width(spark))
@@ -2509,15 +2458,11 @@ def hot_bucket_rep_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     LINEAR in hot-bucket membership, cap-independent; docs are
     semi-join-pruned to members BEFORE shingling; the doc->lang join
     is a fact-side projection."""
-    from ..core.session import cache_parallelism, scaled_width
+    from ..core.session import scaled_width
 
     cap = 2
     d = table(spark, sf_dir, "documents")
-    bands = (
-        _minhash_bands_store(spark, sf_dir)
-        .coalesce(cache_parallelism(spark))
-        .cache()
-    )
+    bands = cached(_minhash_bands_store(spark, sf_dir))
     # census cached: hot feeds BOTH the member join and the accounting
     # count (the sibling minhash_lsh_capped caches the identical frame
     # for the same dual consumption - r12 review)

@@ -31,7 +31,7 @@ from pyspark.sql.types import ArrayType, BinaryType, DoubleType
 
 from ..core.catalog import table
 from ..core.registry import query
-from ..core.session import local_frame
+from ..core.session import cached, local_frame
 from ..images.codec import encode_image, fixture_pixels
 from ..images.codec import fixture_pixel_sql as _px
 from ..images.color import average_color_udf, dominant_color_udf
@@ -505,14 +505,11 @@ def image_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by true near-dup cluster sizes, not corpus size. The hash
     frame is cached: band explode + both join sides reuse one UDF pass
     over the corpus."""
-    from ..core.session import cache_parallelism
     from ..images.fingerprint import phash_udf
 
     imgs = _images(spark, sf_dir)
-    hashes = (
+    hashes = cached(
         imgs.select("img_id", phash_udf("content").alias("ph"))
-        .coalesce(cache_parallelism(spark))
-        .cache()
     )
     bands = hashes.select(
         "img_id", "ph", F.explode(F.array(*[F.lit(b) for b in range(3)])).alias("b")

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from ..core.catalog import table
 from ..core.registry import query
-from ..core.session import local_frame
+from ..core.session import cached, local_frame
 
 # ---------------------------------------------------------------------------
 # Quality-filter funnel: the per-rule rejection accounting every corpus
@@ -170,8 +170,6 @@ def unigram_logprob_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     run once — measured 26s vs 34s at the 100× stress corpus
     (SCALING.md); at toy scale the cache materialization costs ~0.5s
     more than it saves, the right side of that trade."""
-    from ..core.session import cache_parallelism
-
     d = table(spark, sf_dir, "documents")
     occ = d.select(
         "doc_id", "lang", F.explode(F.split("text", " ")).alias("word")
@@ -181,11 +179,9 @@ def unigram_logprob_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # once, not once per consumer — DataFrame DAGs don't share
     # subplans). occ is deliberately NOT cached: its two uses are
     # map-side re-derivations (explode), the scale-correct recompute.
-    vocab = (
+    vocab = cached(
         occ.groupBy("word")
         .agg(F.count("*").alias("cnt"))
-        .coalesce(cache_parallelism(spark))
-        .cache()
     )
     tot = vocab.agg(F.sum("cnt").alias("tot"))
     nl = vocab.crossJoin(F.broadcast(tot)).select(
@@ -196,15 +192,13 @@ def unigram_logprob_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # cache(): per-doc scores feed the percentile threshold AND the
     # final rollup; one row per doc, tiny next to the corpus.
-    pd = (
+    pd = cached(
         occ.join(nl, "word")
         .groupBy("doc_id", "lang")
         .agg(
             F.round(F.sum("nll"), 6).alias("s6"),
             F.count("*").alias("nw"),
         )
-        .coalesce(cache_parallelism(spark))
-        .cache()
     )
     score = F.col("s6") / F.col("nw")  # unrounded: bit-identical quotient
     thr = pd.agg(F.percentile(score, F.lit(0.75)).alias("thr"))
@@ -608,26 +602,20 @@ def dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta table joined back onto occurrences map-side, one doc-keyed
     shuffle, a 1-row percentile broadcast. At 100 TB the delta table is
     the only state that grows with vocabulary, not corpus."""
-    from ..core.session import cache_parallelism
-
     d = table(spark, sf_dir, "documents")
     occ = d.select(
         "doc_id", "source", F.explode(F.split("text", " ")).alias("word")
     )
     # cache(): vocab feeds tot_r, V, and the delta projection (one
     # wordcount shuffle, three consumers); tvocab likewise.
-    vocab = (
+    vocab = cached(
         occ.groupBy("word")
         .agg(F.count("*").alias("cnt_r"))
-        .coalesce(cache_parallelism(spark))
-        .cache()
     )
-    tvocab = (
+    tvocab = cached(
         occ.where(F.col("source") == "src0")
         .groupBy("word")
         .agg(F.count("*").alias("cnt_t"))
-        .coalesce(cache_parallelism(spark))
-        .cache()
     )
     consts = (
         vocab.agg(
@@ -659,12 +647,10 @@ def dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("d"),
         )
     )
-    pd = (
+    pd = cached(
         occ.join(delta, "word")
         .groupBy("doc_id", "source")
         .agg(F.round(F.sum("d"), 6).alias("s6"), F.count("*").alias("nw"))
-        .coalesce(cache_parallelism(spark))
-        .cache()
     )
     score = F.col("s6") / F.col("nw")  # unrounded: bit-identical quotient
     thr = pd.agg(F.percentile(score, F.lit(0.75)).alias("thr"))
@@ -727,8 +713,6 @@ def doc_entropy_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows per doc (bounded fan-out, unlike token explosion); per-doc and
     per-lang rollups are two narrow shuffles; threshold is a 1-row
     broadcast."""
-    from ..core.session import cache_parallelism
-
     d = table(spark, sf_dir, "documents")
     ch = (
         d.select("doc_id", "lang", F.explode(F.split("text", "")).alias("c"))
@@ -742,13 +726,15 @@ def doc_entropy_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("cnt") * F.round(F.log("cnt"), 6)), 6
         ).alias("s6"),
     )
-    h = pd.select(
-        "doc_id",
-        "lang",
-        F.round(
-            F.round(F.log("n"), 6) - F.col("s6") / F.col("n"), 6
-        ).alias("h6"),
-    ).coalesce(cache_parallelism(spark)).cache()  # feeds threshold + rollup
+    h = cached(  # feeds threshold + rollup
+        pd.select(
+            "doc_id",
+            "lang",
+            F.round(
+                F.round(F.log("n"), 6) - F.col("s6") / F.col("n"), 6
+            ).alias("h6"),
+        )
+    )
     thr = h.agg(F.percentile("h6", F.lit(0.25)).alias("thr"))
     return (
         h.crossJoin(F.broadcast(thr))

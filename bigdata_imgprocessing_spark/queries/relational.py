@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..core.catalog import table
 from ..core.registry import query
+from ..core.session import cached
 from ..functions import first_letter, length_bucket, zero_guard_div
 
 # --------------------------------------------------------------------------
@@ -767,8 +768,6 @@ def priority_multiset_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     bags from two years — the duplicate-preserving semantics
     union/except DISTINCT can't express (exceptAll keeps
     max(cnt_a - cnt_b, 0) copies; intersectAll keeps min counts)."""
-    from ..core.session import cache_parallelism
-
     # cached (r15): exceptAll and intersectAll each consume BOTH year
     # bags, so the uncached 2-column projection was scanned 4x (plan
     # audit); one scan now. r16 (ADVICE r15): filter to the two
@@ -776,12 +775,10 @@ def priority_multiset_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     # results, and the cached frame holds only the 1996/1997 slice
     # instead of every year of the fact (rule D: cache tiny shared
     # frames, never corpus-sized ones).
-    o = (
+    o = cached(
         table(spark, sf_dir, "orders")
         .select("o_orderpriority", F.year("o_orderdate").alias("yr"))
         .where(F.col("yr").isin(1996, 1997))
-        .coalesce(cache_parallelism(spark))
-        .cache()
     )
     a = o.where(F.col("yr") == 1996).select("o_orderpriority")
     b = o.where(F.col("yr") == 1997).select("o_orderpriority")

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from ..core.catalog import table
 from ..core.registry import query
-from ..core.session import local_frame
+from ..core.session import cached, local_frame
 from ..operators.similarity import (
     codebook,
     duck_codebook,
@@ -769,10 +769,10 @@ def pq_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # taken from UNIT-normalized vectors so ADC's L2 ranking is
     # monotone with the cosine baseline (L2² on unit vectors =
     # 2 − 2·cos) — unnormalized PQ-for-cosine conflates norm variance
-    # with angle and caps recall
-    from ..core.session import cache_parallelism
-
-    subs = (
+    # with angle and caps recall; cached: referenced by seed_cb, the
+    # Lloyd assignment, the coding pass, and qsub — four lineage replays
+    # otherwise
+    subs = cached(
         e.select(
             "vec_id",
             F.transform(
@@ -789,10 +789,6 @@ def pq_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sub",
             F.slice("ne", F.col("sub") * _PQ_D + 1, _PQ_D).alias("sv"),
         )
-        # cache(): referenced by seed_cb, the Lloyd assignment, the
-        # coding pass, and qsub — four lineage replays otherwise
-        .coalesce(cache_parallelism(spark))
-        .cache()
     )
     # k=16 hash-sampled seeds (TakeOrderedAndProject, not a global window)
     seed_order = [F.md5(F.col("vec_id").cast("string")).alias("h"), F.col("vec_id")]
@@ -850,14 +846,12 @@ def pq_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     pq_short = ranked.where(F.col("rn") <= _PQ_SHORTLIST).select(
         "query_id", "vec_id"
     )
-    # exact cosine (baseline top-5 AND the rerank scorer)
-    scored = (
+    # exact cosine (baseline top-5 AND the rerank scorer); cached: the
+    # exact-top5 baseline AND the shortlist rerank read it
+    scored = cached(
         e.crossJoin(F.broadcast(_query_side(e)))
         .where(F.col("vec_id") != F.col("query_id"))
         .select("query_id", "vec_id", rounded_cosine().alias("cos_sim"))
-        # cache(): the exact-top5 baseline AND the shortlist rerank read it
-        .coalesce(cache_parallelism(spark))
-        .cache()
     )
     exact = top_k_per_query(scored, 5)
     # deployed-PQ leg: exact-rerank the ADC shortlist (IVFADC shape —
@@ -1258,14 +1252,13 @@ def mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(k·queries), exactly like a real MMR reranker. Ties at every step
     break on vec_id (int8 dots tie often), so the greedy path is
     deterministic cross-engine."""
-    from ..core.session import cache_parallelism
-
     e = table(spark, sf_dir, "embeddings")
     emb = F.col("embedding")
     qz = e.select("vec_id", int8(emb, int8_scale(emb)).alias("qv"))
     q = F.broadcast(_query_side(qz, F.col("qv").alias("qqv")))
 
-    cand = (
+    # cached: the greedy loop probes this tiny frame k times
+    cand = cached(
         top_k_per_query(
             qz.crossJoin(q)
             .where(F.col("vec_id") != F.col("query_id"))
@@ -1274,10 +1267,7 @@ def mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 idot(F.col("qv"), F.col("qqv")).alias("rel"),
             ),
             10, "rel", rank="prn",
-        )
-        .drop("prn")
-        .coalesce(cache_parallelism(spark))
-        .cache()  # the greedy loop probes this tiny frame k times
+        ).drop("prn")
     )
     s1 = (
         cand.withColumn("rn", query_rank("rel"))

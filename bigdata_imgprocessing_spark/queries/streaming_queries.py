@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from ..core import fs
 from ..core.catalog import table
 from ..core.registry import prestaged, query
-from ..core.session import ensure_utc, local_frame
+from ..core.session import cached, ensure_utc, local_frame
 from ..functions.helpers import duck_split, split_of
 from ..operators.neardup import (
     DUCK_PAIRS_CTES,
@@ -26,13 +26,61 @@ from ..operators.similarity import duck_label_cells
 from ..streaming.jobs import event_stream, file_feed_stream, run_to_memory
 from ..streaming.stateful import THRESHOLD, running_user_totals
 
+# Oracles shared by more than one query. The batch twins in
+# queries/timeseries.py import the session and rolling-users strings
+# from here: this module registers first, so the import leaves the
+# registry's order as it is.
+
+#: per-event-type count and value sum over the original events: what
+#: every drain of the event stream that must neither lose nor repeat an
+#: event leaves behind
+EVENT_TYPE_STATS_ORACLE = """
+    SELECT event_type, count(*) AS n_events, round(sum(value), 2) AS sum_value
+    FROM events GROUP BY event_type
+    """
+
+#: per-user session and event counts under a 30-minute inactivity gap
+SESSION_COUNTS_ORACLE = """
+    WITH flagged AS (
+        SELECT user_id, ts,
+               CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
+                         >= INTERVAL 30 MINUTE
+                    THEN 1 ELSE 0 END AS new_s
+        FROM events
+    ), sess AS (
+        SELECT user_id,
+               sum(new_s) OVER (PARTITION BY user_id ORDER BY ts
+                                ROWS UNBOUNDED PRECEDING) AS sid
+        FROM flagged
+    )
+    SELECT user_id,
+           count(DISTINCT sid) AS n_sessions,
+           count(*) AS n_events
+    FROM sess GROUP BY user_id
+    """
+
+#: exact distinct users per rolling 7-day window, clipped at the last
+#: event day; the sketch estimate is audited, never emitted
+ROLLING_USERS_ORACLE = """
+    WITH ud AS (
+        SELECT DISTINCT user_id, date_trunc('day', ts) AS d FROM events
+    ), b AS (
+        SELECT max(date_trunc('day', ts)) AS mx FROM events
+    ), fan AS (
+        SELECT DISTINCT user_id,
+               d + to_days(CAST(i AS INTEGER)) AS we
+        FROM ud, UNNEST(range(7)) AS t(i), b
+        WHERE d + to_days(CAST(i AS INTEGER)) <= b.mx
+    )
+    SELECT strftime(we, '%Y-%m-%d') AS day, count(*) AS n_exact,
+           TRUE AS within_tol
+    FROM fan GROUP BY we
+    """
+
 
 @query(
     "streaming_event_counts",
-    oracle="""
-    SELECT event_type, count(*) AS n_events, round(sum(value), 2) AS sum_value
-    FROM events GROUP BY event_type
-    """,
+    oracle=EVENT_TYPE_STATS_ORACLE,
 )
 def streaming_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous-counting job drained over the static corpus: the
@@ -90,24 +138,7 @@ def streaming_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "streaming_session_windows",
-    oracle="""
-    WITH flagged AS (
-        SELECT user_id, ts,
-               CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                         >= INTERVAL 30 MINUTE
-                    THEN 1 ELSE 0 END AS new_s
-        FROM events
-    ), sess AS (
-        SELECT user_id,
-               sum(new_s) OVER (PARTITION BY user_id ORDER BY ts
-                                ROWS UNBOUNDED PRECEDING) AS sid
-        FROM flagged
-    )
-    SELECT user_id,
-           count(DISTINCT sid) AS n_sessions,
-           count(*) AS n_events
-    FROM sess GROUP BY user_id
-    """,
+    oracle=SESSION_COUNTS_ORACLE,
 )
 def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateful session windows under streaming: the stream sessionizes
@@ -369,10 +400,7 @@ def streaming_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "streaming_replay_dedup",
-    oracle="""
-    SELECT event_type, count(*) AS n_events, round(sum(value), 2) AS sum_value
-    FROM events GROUP BY event_type
-    """,
+    oracle=EVENT_TYPE_STATS_ORACLE,
 )
 def streaming_replay_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """At-least-once replay healed by ``dropDuplicatesWithinWatermark``:
@@ -510,21 +538,7 @@ def _sketch_rollup_feed(spark: SparkSession, sf_dir: str) -> str:
 @query(
     "streaming_sketch_rollup",
     contract_batches=3,
-    oracle="""
-    WITH ud AS (
-        SELECT DISTINCT user_id, date_trunc('day', ts) AS d FROM events
-    ), b AS (
-        SELECT max(date_trunc('day', ts)) AS mx FROM events
-    ), fan AS (
-        SELECT DISTINCT user_id,
-               d + to_days(CAST(i AS INTEGER)) AS we
-        FROM ud, UNNEST(range(7)) AS t(i), b
-        WHERE d + to_days(CAST(i AS INTEGER)) <= b.mx
-    )
-    SELECT strftime(we, '%Y-%m-%d') AS day, count(*) AS n_exact,
-           TRUE AS within_tol
-    FROM fan GROUP BY we
-    """,
+    oracle=ROLLING_USERS_ORACLE,
 )
 def streaming_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incrementally-maintained sketch state under a STREAM: the event
@@ -562,17 +576,14 @@ def streaming_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     run_sketch_maintenance(stream, state)
     sk = read_final_sketches(spark, state)
 
-    from ..core.session import cache_parallelism
     from ..queries.timeseries import _rolling_sketch_audit
 
     e = table(spark, sf_dir, "events")
     # cache(): ud feeds the max-day bound and the exact fan — same
     # dual-use rule as the batch twin
-    ud = (
+    ud = cached(
         e.select("user_id", F.date_trunc("day", "ts").alias("d"))
         .distinct()
-        .coalesce(cache_parallelism(spark))
-        .cache()
     )
     return _rolling_sketch_audit(ud, sk)
 
@@ -682,11 +693,7 @@ def streaming_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "streaming_pysource_counts",
-    oracle="""
-    SELECT event_type, count(*) AS n_events,
-           round(sum(value), 2) AS sum_value
-    FROM events GROUP BY event_type
-    """,
+    oracle=EVENT_TYPE_STATS_ORACLE,
 )
 def streaming_pysource_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The custom Python STREAMING data source end-to-end
@@ -738,11 +745,7 @@ def _ddww_feed(spark: SparkSession, sf_dir: str) -> str:
 @query(
     "streaming_dedup_within_watermark",
     contract_batches=2,
-    oracle="""
-    SELECT event_type, count(*) AS n_events,
-           round(sum(value), 2) AS sum_value
-    FROM events GROUP BY event_type
-    """,
+    oracle=EVENT_TYPE_STATS_ORACLE,
 )
 def streaming_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``dropDuplicatesWithinWatermark`` — the state-BOUNDED streaming

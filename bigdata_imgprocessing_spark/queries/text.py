@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from ..core.catalog import table
 from ..core.registry import query
-from ..core.session import local_frame
+from ..core.session import cached, local_frame
 
 # ---------------------------------------------------------------------------
 
@@ -530,20 +530,16 @@ def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     take — no global sort. Fully tie-broken (score desc, doc_id) and
     rounded to 4dp for cross-engine ln() parity (same contract as
     tfidf_top_terms)."""
-    from ..core.session import cache_parallelism
-
     d = table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     tok = d.select("doc_id", F.size(toks).alias("dl"), F.explode(toks).alias("term"))
     # cache(): tf feeds BOTH document-frequency and scoring — without it
     # the tokenize/explode corpus scan runs twice (DataFrame DAGs don't
     # share subplans). The frame is ≤ |docs|·|terms| rows.
-    tf = (
+    tf = cached(
         tok.where(F.col("term").isin(*_BM25_TERMS))
         .groupBy("doc_id", "term")
         .agg(F.count("*").alias("tf"), F.min("dl").alias("dl"))
-        .coalesce(cache_parallelism(spark))
-        .cache()
     )
     stats = d.agg(
         F.count("*").alias("n"), F.avg(F.size(toks)).alias("avgdl")
@@ -762,11 +758,9 @@ def bm25_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows each. Evaluation cost is retrieval cost + O(k)."""
     from pyspark.sql import Window
 
-    from ..core.session import cache_parallelism
-
     d = table(spark, sf_dir, "documents")
     # cache(): relevance feeds the retrieved join AND the ideal top-10
-    rel = (
+    rel = cached(
         d.select(
             "doc_id",
             F.size(
@@ -776,8 +770,6 @@ def bm25_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("rel"),
         )
-        .coalesce(cache_parallelism(spark))
-        .cache()
     )
     top10 = bm25_search(spark, sf_dir)
     wq = Window.orderBy(F.col("bm25").desc(), "doc_id")
@@ -865,12 +857,10 @@ def bpe_merge_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("w")
         .agg(F.count("*").alias("c"))
     )
-    from ..core.session import cache_parallelism
 
     # dual-use across both rounds: cache so the corpus wordcount shuffle
-    # runs once (the trainer keeps vocab resident between merge rounds);
-    # coalesce first — cached partitioning is frozen (cache_parallelism).
-    words = words.coalesce(cache_parallelism(spark)).cache()
+    # runs once (the trainer keeps vocab resident between merge rounds)
+    words = cached(words)
 
     def pair_counts(wdf: DataFrame) -> DataFrame:
         return (
@@ -890,7 +880,7 @@ def bpe_merge_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum("c").cast("bigint").alias("n_occ"))
         )
 
-    r1 = pair_counts(words).coalesce(cache_parallelism(spark)).cache()
+    r1 = cached(pair_counts(words))
     best = r1.orderBy(F.col("n_occ").desc(), "pair").limit(1).collect()[0].pair
     merged = words.select(F.replace("w", F.lit(best), F.lit("A")).alias("w"), "c")
     r2 = pair_counts(merged)
@@ -952,16 +942,12 @@ def bpe_apply_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     |vocab|-row frame, and each learned merge ships to executors as a
     driver literal (the merge table IS driver state, like broadcast
     centroids). All-integer output — exact parity."""
-    from ..core.session import cache_parallelism
-
     docs = table(spark, sf_dir, "documents")
-    words = (
+    words = cached(
         docs.select(F.explode(F.split("text", " ")).alias("w"))
         .where(F.col("w") != "")
         .groupBy("w")
         .agg(F.count("*").alias("c"))
-        .coalesce(cache_parallelism(spark))
-        .cache()
     )
 
     def pair_counts(wdf: DataFrame) -> DataFrame:
@@ -990,9 +976,7 @@ def bpe_apply_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     b1 = best(words)
-    m1 = words.select(
-        F.replace("w", F.lit(b1), F.lit("A")).alias("w"), "c"
-    ).coalesce(cache_parallelism(spark)).cache()
+    m1 = cached(words.select(F.replace("w", F.lit(b1), F.lit("A")).alias("w"), "c"))
     b2 = best(m1)
     m2 = m1.select(F.replace("w", F.lit(b2), F.lit("B")).alias("w"), "c")
 

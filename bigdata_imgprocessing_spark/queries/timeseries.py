@@ -21,9 +21,10 @@ from pyspark.sql import functions as F
 
 from ..core.catalog import table
 from ..core.registry import query
-from ..core.session import ensure_utc, local_frame
+from ..core.session import cached, ensure_utc, local_frame
 from ..functions.helpers import ordered_fold_sum
 from ..operators.asof import asof_join
+from .streaming_queries import ROLLING_USERS_ORACLE, SESSION_COUNTS_ORACLE
 
 
 @query(
@@ -85,24 +86,7 @@ def sliding_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "session_windows",
-    oracle="""
-    WITH flagged AS (
-        SELECT user_id, ts,
-               CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                         >= INTERVAL 30 MINUTE
-                    THEN 1 ELSE 0 END AS new_s
-        FROM events
-    ), sess AS (
-        SELECT user_id,
-               sum(new_s) OVER (PARTITION BY user_id ORDER BY ts
-                                ROWS UNBOUNDED PRECEDING) AS sid
-        FROM flagged
-    )
-    SELECT user_id,
-           count(DISTINCT sid) AS n_sessions,
-           count(*) AS n_events
-    FROM sess GROUP BY user_id
-    """,
+    oracle=SESSION_COUNTS_ORACLE,
 )
 def session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user sessionization with a 30-minute inactivity gap via native
@@ -548,17 +532,13 @@ def sliding_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     Trailing partial windows past max(day) are clipped (1-row
     broadcast bound); leading windows are naturally partial, as the
     metric's consumers expect."""
-    from ..core.session import cache_parallelism
-
     ensure_utc(spark)
     e = table(spark, sf_dir, "events")
     # cache(): the distinct pairs feed the fan-out AND the max-day bound
     # (derived from the pairs, not a second corpus scan).
-    ud = (
+    ud = cached(
         e.select("user_id", F.date_trunc("day", "ts").alias("d"))
         .distinct()
-        .coalesce(cache_parallelism(spark))
-        .cache()
     )
     mx = ud.agg(F.max("d").alias("mx"))
     fan = _fan_7day_windows(ud, mx).distinct()
@@ -662,21 +642,7 @@ def _rolling_sketch_audit(ud, daily_sk):
 
 @query(
     "sliding_users_sketch",
-    oracle="""
-    WITH ud AS (
-        SELECT DISTINCT user_id, date_trunc('day', ts) AS d FROM events
-    ), b AS (
-        SELECT max(date_trunc('day', ts)) AS mx FROM events
-    ), fan AS (
-        SELECT DISTINCT user_id,
-               d + to_days(CAST(i AS INTEGER)) AS we
-        FROM ud, UNNEST(range(7)) AS t(i), b
-        WHERE d + to_days(CAST(i AS INTEGER)) <= b.mx
-    )
-    SELECT strftime(we, '%Y-%m-%d') AS day, count(*) AS n_exact,
-           TRUE AS within_tol
-    FROM fan GROUP BY we
-    """,
+    oracle=ROLLING_USERS_ORACLE,
 )
 def sliding_users_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The MERGEABLE-SKETCH form of the rolling 7-day distinct-users
@@ -691,17 +657,13 @@ def sliding_users_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     above HLL lgk=12's ~1.6% rse) to TRUE per window — same
     audit-the-sketch contract as ``approx_sketch_stats``; the raw
     estimate itself is engine-specific and deliberately not emitted."""
-    from ..core.session import cache_parallelism
-
     ensure_utc(spark)
     e = table(spark, sf_dir, "events")
     # cache(): the pairs feed the sketch path, the exact path, and the
     # max-day bound — one corpus scan instead of three.
-    ud = (
+    ud = cached(
         e.select("user_id", F.date_trunc("day", "ts").alias("d"))
         .distinct()
-        .coalesce(cache_parallelism(spark))
-        .cache()
     )
     daily_sk = ud.groupBy("d").agg(
         F.hll_sketch_agg("user_id").alias("sk")

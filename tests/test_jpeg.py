@@ -617,7 +617,7 @@ def test_bit_reader_keeps_only_live_bits(monkeypatch):
 
 def test_batched_idct_matches_per_block_reference():
     """The decoder's tail inverse-transforms every block of a component
-    in one einsum; each pixel must be the rounding of the per-block
+    in one batched matmul; each pixel must be the rounding of the per-block
     ``_T.T @ coeff @ _T`` reference, up to float noise."""
     from bigdata_imgprocessing_spark.images.jpeg import (
         _UNZIGZAG,

@@ -441,6 +441,27 @@ def test_hash_rules_live_in_one_module():
     assert found == {name: ["functions/helpers.py"] for name in rules}
 
 
+def test_cache_width_rule_lives_in_one_module():
+    """A reused frame is cached at the core-count width through one
+    helper, core/session.cached: no other package module coalesces to
+    ``cache_parallelism`` and then calls ``.cache()`` itself."""
+    import pathlib
+    import re
+
+    import bigdata_imgprocessing_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    pair = re.compile(
+        r"\.coalesce\(\s*cache_parallelism\([^()]*\)\s*\)\s*(#[^\n]*\s*)*\.cache\(\)"
+    )
+    found = sorted(
+        p.relative_to(root).as_posix()
+        for p in root.rglob("*.py")
+        if pair.search(p.read_text())
+    )
+    assert found == ["core/session.py"]
+
+
 def test_rank_switch_lives_in_one_module():
     """The rank size switch and both rank forms have one home,
     operators/ranks.py: no other package module names
@@ -614,7 +635,7 @@ def test_repo_root_keeps_only_the_doc_generator_tools():
 
     root = pathlib.Path(__file__).resolve().parent.parent
     tools = sorted(p.name for p in root.glob("tools_*.py"))
-    assert tools == ["tools_gen_plans.py", "tools_gen_querydoc.py"]
+    assert tools == ["tools_gen_querydoc.py"]
 
 
 def test_registry_derives_bench_query_sets():

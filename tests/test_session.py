@@ -7,7 +7,7 @@ import os
 import subprocess
 import sys
 
-from bigdata_imgprocessing_spark.core.session import local_frame
+from bigdata_imgprocessing_spark.core.session import cached, local_frame
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -64,3 +64,17 @@ def test_local_frame_is_a_local_relation(spark):
     assert df._jdf.queryExecution().optimizedPlan().toString().startswith("LocalRelation")
     empty = local_frame(spark, [], df.schema)
     assert empty.schema == df.schema and empty.collect() == []
+
+
+def test_cached_frame_is_cached_at_most_core_width(spark):
+    """``cached`` caches its frame at min(input partitions, cores): a wide
+    frame narrows to defaultParallelism, a narrow one keeps its width."""
+    cores = spark.sparkContext.defaultParallelism
+    for parts in (1, 3 * cores):
+        df = cached(spark.range(0, 1000, 1, parts))
+        try:
+            assert df.is_cached
+            assert df.rdd.getNumPartitions() == min(parts, cores)
+            assert df.count() == 1000
+        finally:
+            df.unpersist()
